@@ -88,15 +88,12 @@ private[graft] object BenchKernel {
     // help the join-heavy queries even at bench scale); env knob for
     // A/B measurement only.
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    // GRAFT_BUCKETED_WH points the session at a bucketed warehouse
-    // (metastore + sort-trust configs); unset = no-op, plain parquet
-    val spark = graft.sources.BucketedWarehouse.configureFromEnv(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", aqe)
-        .config("spark.ui.enabled", "false"))
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", aqe)
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -265,7 +262,7 @@ private[graft] object BenchKernel {
     * — the r10 suite-state-tax fix: a GC only ENQUEUES the
     * ContextCleaner's disk deletes, and if a predecessor left tens of
     * GB of aborted shuffle/spill files the deletes would otherwise
-    * run CONCURRENTLY with the next timing's IO (ProbeSuiteTax: r9's
+    * run CONCURRENTLY with the next timing's IO (SUITETAX_r10.json: r9's
     * failed uncapped q106 left 74 GB on a 100%-full disk, still
     * 73.6 GB at q107's start, and q107 ran 2.1× slow while they
     * drained mid-query). A no-op (one directory walk) whenever
@@ -328,20 +325,12 @@ private[graft] object BenchKernel {
     cpuInflated || hostAnomaly
   }
 
-  /** Which table layout this session's scans resolve for `sfDir` —
-    * artifact self-description (r16 verdict item 6: all three r16 wins
-    * live on the bucketed/twin path, invisible to a plain-parquet
-    * bench, and cross-round artifacts must never be compared across
-    * layouts silently). "plain" = no warehouse resolves (the driver's
-    * own runs), "bucketed" = warehouse resolves but twin preferences
-    * are disabled (`GRAFT_NO_TWINS=1` A/B control), "twins" = the full
-    * layout incl. foreign-key fact twins.
+  /** The table layout every artifact measured: plain parquet, the
+    * only layout the suite reads. Stamped on the stdout line so
+    * artifacts from older runs over the removed bucketed/twin
+    * warehouse (stamped "bucketed"/"twins") never compare silently.
     */
-  def layoutName(spark: SparkSession, sfDir: String): String =
-    if (graft.sources.BucketedWarehouse.resolve(spark, sfDir, "lineitem").isEmpty)
-      "plain"
-    else if (sys.env.get("GRAFT_NO_TWINS").contains("1")) "bucketed"
-    else "twins"
+  val layoutName: String = "plain"
 
   def timeOnce(
       spark: SparkSession,
@@ -398,8 +387,10 @@ private[graft] object BenchKernel {
     val ok = try { exec(spark, sfDir, name); true } catch { case _: Throwable => false }
     val dt = (System.nanoTime() - t0) / 1e9
     // the listener bus is async: drain it so the window's last tasks'
-    // shuffle/spill bytes land in THIS query's row, not the next one's
-    org.apache.spark.graft.SparkStateProbe.drainListenerBus(spark.sparkContext)
+    // shuffle/spill bytes land in THIS query's row, not the next one's;
+    // a timeout only blurs one regime row, so the timing goes on
+    try org.apache.spark.graft.SparkStateProbe.waitUntilEmpty(spark.sparkContext)
+    catch { case _: java.util.concurrent.TimeoutException => () }
     val cpu1 = graft.tools.JvmProbe.cpuTimes.toMap
     val gc1 = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
@@ -560,7 +551,7 @@ object Bench {
     // the driver's stdout-tail parse budget
     // layout: which table layout the artifact measured (r16 verdict
     // item 6) — cross-round comparisons must not silently span layouts
-    val layout = BenchKernel.layoutName(spark, sfDir)
+    val layout = BenchKernel.layoutName
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"queries":$qs,"base_runs":$runs,"extra_samples":"$es","regime_all_runs":${regime.json},"layout":"$layout","sf":"$sfDir"}"""
     // Durable copy for humans/tools that miss the stdout tail.
     try java.nio.file.Files.write(

@@ -19,42 +19,12 @@ final case class QueryDef(
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
     scanBudgets: Map[String, Int] = Map.empty,
-    buildActionScans: Map[String, Int] = Map.empty,
-    plainLayout: Boolean = false,
-    layoutTwins: Map[String, String] = Map.empty) {
+    buildActionScans: Map[String, Int] = Map.empty) {
 
-  /** Build this query with its layout preference applied: a
-    * `plainLayout` query skips bucketed-warehouse resolution for the
-    * duration of the build (per-workload layout dispatch, r14 — the
-    * env-global toggle forced one layout on a suite that wants both),
-    * and declared `layoutTwins` route a table to its foreign-key twin
-    * (r15). All entry points (Bench, Verify, SparkEntry.queries) go
-    * through here; `run` stays the raw implementation.
+  /** Build this query: the one entry point Bench, Verify and
+    * SparkEntry.queries go through.
     */
-  def build(spark: SparkSession, dir: String): DataFrame =
-    if (plainLayout) graft.sources.LayoutPreference.withPlain(run(spark, dir))
-    else if (layoutTwins.nonEmpty)
-      graft.sources.LayoutPreference.withTwins(layoutTwins)(run(spark, dir))
-    else run(spark, dir)
-
-  /** Pin this query to the plain parquet layout even when a bucketed
-    * warehouse is toggled on. For queries whose plans want the
-    * SPLITTABLE scan — iterative loops sized off the source shape, or
-    * heads where the 64-file bucketed scan caps parallelism below the
-    * machine. Each call site carries the measured justification.
-    */
-  def withPlainLayout: QueryDef = copy(plainLayout = true)
-
-  /** Route a table to a foreign-key twin of the bucketed warehouse
-    * ([[graft.sources.BucketedWarehouse.twins]]) while this query
-    * builds: `withTwinLayout("lineitem" -> "lineitem_pk")` makes the
-    * lineitem read resolve the l_partkey-bucketed projection, so a
-    * partkey join planes exchange-free against `bk_part`. Falls back
-    * primary → plain when the twin isn't built. Each call site carries
-    * the measured justification, like [[withPlainLayout]].
-    */
-  def withTwinLayout(twins: (String, String)*): QueryDef =
-    copy(layoutTwins = layoutTwins ++ twins)
+  def build(spark: SparkSession, dir: String): DataFrame = run(spark, dir)
 
   /** Declare this query's per-table file-scan budget where it
     * legitimately exceeds the suite default of 1 (PlanQualitySpec's
@@ -66,26 +36,8 @@ final case class QueryDef(
   def withScanBudget(budgets: (String, Int)*): QueryDef =
     copy(scanBudgets = scanBudgets ++ budgets)
 
-  /** Default: every table is scanned at most once per execution.
-    * Census names from the bucketed warehouse (`bk_lineitem`,
-    * twin `bk_lineitem_pk`) map to their logical table's budget — the
-    * budget is a property of the QUERY PLAN, not of which layout
-    * served the scan.
-    */
-  def scanBudget(table: String): Int =
-    scanBudgets.getOrElse(graft.sources.BucketedWarehouse.logicalName(table), 1)
-
-  /** Census counts folded to logical tables, so a plan that read one
-    * logical table through two layouts (e.g. `lineitem` + a cached
-    * `bk_lineitem` subtree) is checked as ONE table against ONE budget
-    * rather than each raw name earning the full budget (r14 ADVICE).
-    * All budget guards (Verify, PlanQualitySpec, the audit tools)
-    * compare through this.
-    */
-  def byLogicalTable(counts: Map[String, Int]): Map[String, Int] =
-    counts.groupMapReduce {
-      case (t, _) => graft.sources.BucketedWarehouse.logicalName(t)
-    }(_._2)(_ + _)
+  /** Default: every table is scanned at most once per execution. */
+  def scanBudget(table: String): Int = scanBudgets.getOrElse(table, 1)
 
   /** Declare file scans this query runs at BUILD time via its own
     * driver actions (rank/offset jobs, pre-counts) — on top of the
@@ -100,8 +52,7 @@ final case class QueryDef(
     * job-level: the plan budget plus declared build-time actions.
     */
   def ledgerBudget(table: String): Int =
-    scanBudget(table) + buildActionScans.getOrElse(
-      graft.sources.BucketedWarehouse.logicalName(table), 0)
+    scanBudget(table) + buildActionScans.getOrElse(table, 0)
 }
 
 object QueryDef {

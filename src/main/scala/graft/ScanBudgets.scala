@@ -63,8 +63,9 @@ object ScanBudgets {
     "q98_fuzzy_entity_match" -> Map("part" -> 2),
     // per-column profiler: three pruned single-column scans read no
     // more bytes than one 3-column scan and beat every fused form
-    // (ProbeQ81 A/B at 100×, r13 — the one-scan typed-slot explode
-    // was a measured negative result)
+    // (ProbeQ81 A/B at 100×, r13, a probe main last present at commit
+    // 9aaeeb6 — the one-scan typed-slot explode was a measured
+    // negative result)
     "q81_profile_columns" -> Map("lineitem" -> 3),
     // SemDeDup: cell assignment side vs in-cell comparison side
     "q102_semdedup" -> Map("embeddings" -> 2),

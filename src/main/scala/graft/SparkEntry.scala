@@ -28,9 +28,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q05_region_revenue")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. Routed
-    * through [[QueryDef.build]] so per-query layout preferences
-    * (plain-vs-bucketed, r14) apply on every entry point.
+  /** One entry per implemented operator from SURVEY.md §2, built
+    * through [[QueryDef.build]].
     */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     defs.map(d => d.name -> ((s: SparkSession, dir: String) => d.build(s, dir))).toMap

@@ -17,25 +17,13 @@ final class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Join tables prefer the bucketed warehouse when one is toggled on
-    * (`GRAFT_BUCKETED_WH`, r13 — see
-    * [[graft.sources.BucketedWarehouse]]): same rows, same schema,
-    * but the scan carries a bucket spec, so orderkey joins/aggs skip
-    * their exchange. Resolution is guarded three ways (env set,
-    * warehouse built from exactly this `dir`, catalog visible) and
-    * falls back to the plain parquet scan otherwise — the driver's
-    * runs never set the env.
-    */
-  private def bucketedOr(name: String): DataFrame =
-    graft.sources.BucketedWarehouse.resolve(spark, dir, name).getOrElse(t(name))
-
   def region: DataFrame     = t("region")     // 5 rows, fixed
   def nation: DataFrame     = t("nation")     // 25 rows, fixed
-  def customer: DataFrame   = bucketedOr("customer")
+  def customer: DataFrame   = t("customer")
   def supplier: DataFrame   = t("supplier")
-  def part: DataFrame       = bucketedOr("part")
-  def orders: DataFrame     = bucketedOr("orders")
-  def lineitem: DataFrame   = bucketedOr("lineitem")
+  def part: DataFrame       = t("part")
+  def orders: DataFrame     = t("orders")
+  def lineitem: DataFrame   = t("lineitem")
   /** The driver's `events.parquet` carries TIMESTAMP(NANOS), which
     * Spark 4 rejects outright; read nanos as long and rebuild a micros
     * TimestampType (integer `div` keeps it exact — the data is

@@ -7,15 +7,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // optional bucketed-warehouse resolution (GRAFT_BUCKETED_WH; the
-    // driver never sets it) — lets the full correctness dump run over
-    // the bucketed layout for the byte-identity A/B
-    val spark = sources.BucketedWarehouse.configureFromEnv(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -47,10 +43,7 @@ object Verify {
           d.build(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         }
-        // fold both layouts of a table into one budget check (raw
-        // counts stay in the artifact as bk_* ledger evidence)
-        val over = d.byLogicalTable(counts)
-          .filter { case (t, c) => c > d.ledgerBudget(t) }
+        val over = counts.filter { case (t, c) => c > d.ledgerBudget(t) }
         ledgers(name) = (counts, over)
         over.foreach { case (t, c) =>
           System.err.println(

@@ -63,19 +63,29 @@ object FlightIo {
   /** Newest-snapshot resolution (`answers.py:197-203`): list files
     * recursively, keep dirs containing parquet, lexicographic max —
     * same semantics as the reference's object listing, via Hadoop FS.
+    * Only COMMITTED snapshots count: the dir's `_SUCCESS` marker is in
+    * the same listing, and no dir below `base` starts with `_` — a
+    * killed or in-flight write leaves its part files under
+    * `_temporary/0/task_*` with no marker, and must never be read as
+    * the newest gold.
     */
   def newestSnapshotDir(spark: SparkSession, base: String): Option[String] = {
     val path = new Path(base)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return None
+    val baseDepth = fs.makeQualified(path).depth()
+    def underScratch(dir: Path): Boolean =
+      Iterator.iterate(dir)(_.getParent).takeWhile(_.depth() > baseDepth)
+        .exists(_.getName.startsWith("_"))
     val it = fs.listFiles(path, true)
-    var dirs = List.empty[String]
+    val dataDirs = scala.collection.mutable.Set.empty[Path]
+    val committed = scala.collection.mutable.Set.empty[Path]
     while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        dirs = f.getPath.getParent.toString :: dirs
+      val f = it.next().getPath
+      if (f.getName == "_SUCCESS") committed += f.getParent
+      else if (f.getName.endsWith(".parquet")) dataDirs += f.getParent
     }
-    dirs.sorted.lastOption
+    dataDirs.intersect(committed).filterNot(underScratch).map(_.toString).maxOption
   }
 
   /** Storage bootstrap (`ensure_bucket_exists`, reference

@@ -60,7 +60,8 @@ object FlightExtract {
     * reference pages every zone through the driver ([[allFlights]],
     * `extract.py:73-83`), which at 3M rows costs ~18 s just shipping
     * driver-resident rows into tasks (single-threaded encode + slice
-    * serialization, measured in ProbeBronze — the write layout was
+    * serialization, measured by ProbeBronze, a probe main last
+    * present at commit 9aaeeb6 — the write layout was
     * innocent); at 1000× the driver is THE bottleneck. Here the
     * recursion runs level-synchronous on the cluster: each round
     * fetches the current zone frontier inside tasks (pages never

@@ -67,12 +67,7 @@ object AnalyticsQueries {
         lag(col("o_totalprice"), 1).over(w).as("prev_price"),
         lead(col("o_totalprice"), 1).over(w).as("next_price"))
         .orderBy(col("o_orderkey"))
-      // Twin layout (r15): the window clusters on o_custkey — the
-      // primary (orderkey) bucketed layout paid the custkey exchange
-      // AND capped the scan at 64 single-file tasks (calm-pair A/B:
-      // bucketed 3.70 s vs plain 2.90 at 100×, ISOLATED100_r15_pinsB/P);
-      // the o_custkey twin removes the window exchange instead.
-    }.withTwinLayout("orders" -> "orders_ck"),
+    },
 
     // ------------------------------------------------------------------
     // q46 — ntile quartiles over a GLOBAL order. A literal global
@@ -121,13 +116,7 @@ object AnalyticsQueries {
         ranked.select(col("o_orderkey"), quartile.cast(IntegerType).as("quartile"))
           .orderBy(col("o_orderkey"))
       }
-      // plain-layout pin (r14, measured): the boundary path re-reads
-      // orders through count-table + apply passes, and over the
-      // bucketed warehouse those scans floor at 10.08 s calm vs ~2 s
-      // plain at 100× (ISOLATED100_r14_bucketed) — the 64-file
-      // catalog scan shape taxes every extra pass; nothing here joins
-      // on the bucket key, so the warehouse has nothing to offer
-    }.withPlainLayout,
+    },
 
     // ------------------------------------------------------------------
     // q63 — the scale-safe distribution window q46's scaladoc points
@@ -628,7 +617,7 @@ object AnalyticsQueries {
     // the two-scan join-back form.
     // A sketch regression (wrong merge, bad accuracy plumbing) flips
     // a boolean and breaks the hash. Exact companion: q84.
-    // r15 gap probe (verdict item 5, ProbeQ89 + PROBE_q89_r15.json,
+    // r15 gap probe (verdict item 5, PROBE_q89_r15.json,
     // calm at 100×): warm split = count-table 2.47 s / sketch 1.39 /
     // fold 0.14. The DuckDB "0.13 s" this was graded against times the
     // ORACLE — a 6-row COUNT(*) GROUP BY — not sketch work; the honest
@@ -1042,72 +1031,6 @@ object AnalyticsQueries {
         |CROSS JOIN n
         |WHERE cab >= 2
         |ORDER BY lift DESC, pa, pb LIMIT 20""".stripMargin) { (s, dir) =>
-      // TWO layout-dispatched forms (r16 suite-tax fix). The
-      // collect_set basket aggregation is a TypedImperativeAggregate:
-      // its per-row work runs through INTERPRETED eval
-      // (BoundReference/getAccessor), and those call sites are shared
-      // by every interpreted expression in the process — late in a
-      // 132-query suite they run megamorphic/deoptimized and the slot
-      // pays 2.4× task-CPU for identical input (in-suite 19–24 s vs
-      // 11–13 isolated in EVERY pass; probe-mode stack histograms
-      // show SortBasedAggregator.findNextSortedGroup + getAccessor
-      // hot in-suite and absent isolated; code-cache size, execution-
-      // memory leaks, storage blocks, and host weather measured and
-      // refuted — PROBE_suitetax_r16.json). On the bucketed layout
-      // the fix is structural: dedup + co-bucketed SELF-JOIN
-      // generates pairs entirely inside whole-stage codegen (hash
-      // agg + SMJ own their generated classes — immune to profile
-      // pollution) and is exchange-free on hash(l_orderkey). On
-      // plain parquet the join form would shuffle the fact three
-      // times (the r7–r10 lesson), so plain keeps the collect_set +
-      // OrderedLongPairs kernel form, whose one grouped shuffle is
-      // optimal there.
-      // shared scoring tail: item-count joins hint-free (AQE
-      // broadcasts the item catalog while it fits, shuffles when the
-      // domain outgrows an executor), lift as one double division.
-      def score(pr: org.apache.spark.sql.DataFrame, ic: org.apache.spark.sql.DataFrame,
-          n: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        pr.join(ic.withColumnRenamed("l_partkey", "pa")
-            .withColumnRenamed("c", "ca"), "pa")
-          .join(ic.withColumnRenamed("l_partkey", "pb")
-            .withColumnRenamed("c", "cb"), "pb")
-          .crossJoin(broadcast(n))
-          .select(col("pa"), col("pb"), col("cab").as("support"),
-            ((col("cab") * col("n_orders")).cast(DoubleType) /
-              (col("ca") * col("cb"))).as("lift"))
-          .orderBy(col("lift").desc, col("pa"), col("pb"))
-          .limit(20)
-      if (graft.sources.BucketedWarehouse.bucketedActive(s, dir, "lineitem")) {
-        // Each consumer re-scans + re-dedups instead of sharing a
-        // persist: an InMemoryRelation HIDES the scan's bucketed
-        // outputPartitioning (measured: every cached consumer,
-        // including both self-join legs, re-exchanged on l_orderkey),
-        // while fresh pruned scans keep hash(l_orderkey, 64) visible
-        // to EnsureRequirements — the dedup rides the bucket
-        // partitioning (hash on a subset of the group keys satisfies
-        // the clustering) and the self-join is exchange-free. Four
-        // pruned 2-column scans are map-side-cheap at any SF; the
-        // shuffles they avoid are fact-scale (budget declared below).
-        def b = Tables(s, dir).lineitem
-          .select(col("l_orderkey"), col("l_partkey")).dropDuplicates()
-        val n = Tables(s, dir).lineitem
-          .agg(count_distinct(col("l_orderkey")).as("n_orders"))
-        // ic is catalog-sized (~|part| rows) and consumed twice by the
-        // scoring tail — persist THIS one (unlike the fact-scale join
-        // legs, its partitioning is irrelevant downstream: the tail
-        // re-keys on pa/pb either way, and the cache saves a fourth
-        // dedup pass plus a fifth scan)
-        val ic = graft.CacheScope.scoped(
-          b.groupBy(col("l_partkey")).agg(count(lit(1)).as("c")))
-        val pr = b.as("a")
-          .join(b.as("b2"),
-            col("a.l_orderkey") === col("b2.l_orderkey") &&
-              col("a.l_partkey") < col("b2.l_partkey"))
-          .select(col("a.l_partkey").as("pa"), col("b2.l_partkey").as("pb"))
-          .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("cab"))
-          .filter(col("cab") >= 2)
-        score(pr, ic, n)
-      } else {
       // the basket table feeds THREE consumers (n, ic, pairs) — the
       // persist keeps the one grouped shuffle's result instead of
       // re-scanning lineitem per consumer (r7 plan-audit lesson,
@@ -1134,12 +1057,16 @@ object AnalyticsQueries {
         .select(col("p.pa").as("pa"), col("p.pb").as("pb"))
         .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("cab"))
         .filter(col("cab") >= 2)
-      score(pr, ic, n)
-      }
-      // budget 4 covers the BUCKETED join form only (n + ic + two
-      // self-join legs, each a 2-column pruned scan kept uncached so
-      // the bucket partitioning stays visible — see the in-code
-      // measurement); the plain collect_set form still scans once.
-    }.withScanBudget("lineitem" -> 4)
+      pr.join(ic.withColumnRenamed("l_partkey", "pa")
+          .withColumnRenamed("c", "ca"), "pa")
+        .join(ic.withColumnRenamed("l_partkey", "pb")
+          .withColumnRenamed("c", "cb"), "pb")
+        .crossJoin(broadcast(n))
+        .select(col("pa"), col("pb"), col("cab").as("support"),
+          ((col("cab") * col("n_orders")).cast(DoubleType) /
+            (col("ca") * col("cb"))).as("lift"))
+        .orderBy(col("lift").desc, col("pa"), col("pb"))
+        .limit(20)
+    }
   )
 }

@@ -386,7 +386,8 @@ object ConnectedComponents {
     // encoder emit, ids ascending (= node order): the tuple encoder
     // codegen-serializes the driver array where the Row path paid a
     // per-row CatalystTypeConverters walk — measured ~2× on the
-    // 150k-label sf0.1 emit (ProbeQ91)
+    // 150k-label sf0.1 emit (ProbeQ91, a probe main last present at
+    // commit 9aaeeb6)
     val out = new Array[(Long, Long)](n)
     var x = 0
     while (x < n) { out(x) = (ids(x), ids(find(x))); x += 1 }

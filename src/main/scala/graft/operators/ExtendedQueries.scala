@@ -235,19 +235,7 @@ object ExtendedQueries {
       // satisfies the (o_custkey, o_orderdate) groupBy clustering AND
       // the window's partitioning, so the daily rollup and the
       // history windows all run inside the same exchange.
-      // On the o_custkey twin (r16) the SCAN already arrives hashed
-      // on the key, so the manual repartition — which
-      // EnsureRequirements never removes, being user-demanded — would
-      // shuffle the fact for nothing: skip it and let the rollup and
-      // windows ride the bucketed partitioning, zero exchanges.
-      // Measured (r16, same-day 100× floors): 1.779 s calm pair on
-      // the twin vs ~2.05–2.5 primary (no calm pair landed on the
-      // noisier baseline attempts) — kept.
-      val src = Tables(s, dir).orders
-      val clustered =
-        if (graft.sources.BucketedWarehouse.twinActive(s, dir, "orders")) src
-        else src.repartition(col("o_custkey"))
-      val daily = clustered
+      val daily = Tables(s, dir).orders.repartition(col("o_custkey"))
         .groupBy(col("o_custkey"), col("o_orderdate"))
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast(DecimalType(18, 2))).as("spend"))
@@ -264,13 +252,14 @@ object ExtendedQueries {
         dbl(sum(col("spend")).over(cum)).as("spend_to_date"),
         lead(col("o_orderdate"), 1).over(w).isNull.cast(IntegerType).as("is_current"))
         .orderBy(col("o_custkey"), col("effective_from"))
-    }.withTwinLayout("orders" -> "orders_ck"),
+    },
 
     // ------------------------------------------------------------------
     // q81 — column profiler: the data-quality primitive a pipeline
     // runs before training (null counts, cardinality, min/max).
     // Per-column pruned scan + COUNT-TABLE two-level aggregate — the
-    // form the r13 A/B at 100× picked (tools/ProbeQ81: count-table
+    // form the r13 A/B at 100× picked (ProbeQ81, a probe main last
+    // present at commit 9aaeeb6: count-table
     // 3.18 s vs 9.61 for the r8 mixed-distinct aggs, whose single
     // countDistinct alongside plain aggs still makes the planner
     // Expand ×2, and 3.63 for the one-scan typed-slot explode that
@@ -375,9 +364,7 @@ object ExtendedQueries {
     // exists, so right-side duplicates are irrelevant and the old
     // distinct() was a wasted exchange+dedup. Dim-sized parents
     // broadcast into a map-side anti; the fact-sized parent (orders)
-    // shuffles unique keys once — and over the bucketed warehouse
-    // (GRAFT_BUCKETED_WH) lineitem⋈orders is co-bucketed on the
-    // orderkey, so BOTH exchanges vanish. NULL child keys form the
+    // shuffles unique keys once. NULL child keys form the
     // null-key group, which an anti join always keeps (null matches
     // nothing) — the same NOT EXISTS semantics on both engines.
     // NEGATIVE RESULT (r13, kept for the record): the q99-style bloom
@@ -388,16 +375,9 @@ object ExtendedQueries {
     // build; a prefilter pays only on orphan-heavy data, the case an
     // integrity audit cannot assume. RefIntegritySpec pins the
     // collapsed form against orphans + NULLs on both legs.
-    // BAR SETTLED (r14, closes the r13 weak mark): the audit's heavy
-    // leg is lineitem⋈orders on the orderkey — exactly what the
-    // bucketed warehouse co-locates — and on that production layout
-    // the same-day calm floor reads 2.75 s at 100×
-    // (ISOLATED100_r14_bucketed), meeting the ≤2.5 bar within box
-    // variance on a host 30-50% slower than the bar's. The plain
-    // layout pays the two collapsed exchanges by construction (~4 s);
-    // with both prescribed alternatives measured worse and recorded,
-    // that is the plan's cost on a layout a deployment would not run
-    // this audit on.
+    // The plain parquet layout pays the two collapsed exchanges by
+    // construction (~4 s at 100×); co-bucketing lineitem⋈orders on the
+    // orderkey removed both (2.75 s calm, ISOLATED100_r14_bucketed).
     QueryDef.sql(
       "q108_ref_integrity",
       """SELECT * FROM (

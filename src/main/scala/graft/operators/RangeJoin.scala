@@ -36,7 +36,8 @@ object RangeJoin {
     * trades replication volume (2K+1 copies) against false-candidate
     * volume (pairs within gap + width survive to the exact filter).
     * Width = gap is the MEASURED optimum on the q67 shape at 100×
-    * density (ProbeQ67 sweep, 10M events / 1500 users / 517.5M true
+    * density (ProbeQ67 sweep — a probe main last present at commit
+    * 9aaeeb6 — 10M events / 1500 users / 517.5M true
     * pairs — join+filter wall and pre-filter candidates per width:
     * gap/4 17.2 s / 1.051e9 (×9 replication); gap/2 7.8 s / 1.057e9
     * (×5); gap 3.7 s / 1.068e9 (×3); 2·gap 3.7 s / 1.138e9 (×3)).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{CacheScope, QueryDef, Tables}
+import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -196,21 +196,6 @@ object RelationalQueries {
         .groupBy(col("n_name"))
         .agg(dbl(sum(dec2(col("l_extendedprice")) * (lit(1) - rate(col("l_discount"))))).as("revenue"))
         .orderBy(col("revenue").desc, col("n_name"))
-      // Twin layout — MEASURED NEGATIVE RESULT, primary kept (r16
-      // ledger sweep, r15 verdict item 5). Hypothesis: the
-      // customer⋈orders leg runs on o_custkey, so the o_custkey twin
-      // should remove its exchange. The 100× plan refutes the premise:
-      // customer BROADCASTS into orders (no custkey shuffle exists on
-      // any layout), while on the primary layout the downstream
-      // orders⋈lineitem SMJ is exchange-free (both bucketed on the
-      // order key) — twin routing would trade that zero for a
-      // fact-scale Exchange(o_orderkey) above the broadcast join.
-      // Same-day floors at 100×: primary 2.675 calm
-      // (ISOLATED100_r16_base) vs twin 4.416 calm
-      // (ISOLATED100_r16_twins) — the twin loses 1.65×. Lesson for
-      // future sweeps: a foreign-key join leg only wants the twin when
-      // the DIM side is too big to broadcast AND no downstream join
-      // rides the primary bucketing.
     },
 
     // ------------------------------------------------------------------
@@ -271,11 +256,7 @@ object RelationalQueries {
       pr.withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 3)
         .orderBy(col("p_brand"), col("rnk"))
-      // Twin layout: the l_partkey twin makes the pushed-down
-      // aggregation exchange-free (scan partitioning already clusters
-      // the group key) and co-locates the join with bk_part (r15; r14
-      // verdict weak mark #1).
-    }.withTwinLayout("lineitem" -> "lineitem_pk"),
+    },
 
     // ------------------------------------------------------------------
     // q08 — deterministic "most active per group" (A3 reborn as window
@@ -402,63 +383,24 @@ object RelationalQueries {
         |GROUP BY c_custkey, c_name
         |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       val t = Tables(s, dir)
-      // Join-then-aggregate, deliberately: the pre-aggregate-orders
-      // rewrite MEASURED WORSE on the twin layout (same-day calm
-      // floors at 100×: pre-agg 3.50 s / 55–74 s task-CPU vs this
-      // form 1.79 s / 23 s — ISOLATED100_r15_twinagg vs _twin). With
-      // both sides bucketed+sorted on the custkey the outer join is
-      // one streaming exchange-free SMJ fused in whole-stage codegen;
-      // splitting the aggregate out breaks the fusion for no shuffle
-      // saved. Spend sums on the q01 scaled-long path (cents ≤ 5.5e7
-      // per row → single long sum binds at ~1.7e11 orders per
-      // customer; TPC-H holds ~10).
+      // Spend sums on the q01 scaled-long path (cents ≤ 5.5e7 per row
+      // → single long sum binds at ~1.7e11 orders per customer; TPC-H
+      // holds ~10).
       val spCents = round(col("o_totalprice") * 100).cast(LongType)
-      val grouped = t.customer
+      // No persist before the final order-by: the join's own shuffle is
+      // the materialization barrier the range sort's bounds-sampling
+      // job re-reads, so a persist here buys nothing and cost ~0.5 s
+      // inside the timed window at sf0.1 (0.43 s without it vs ~0.9 s
+      // with it, isolated fresh-JVM ×3).
+      t.customer
         .join(t.orders, col("o_custkey") === col("c_custkey"), "left")
         .groupBy(col("c_custkey"), col("c_name"))
         .agg(
           count(col("o_orderkey")).as("n_orders"),
           dbl(coalesce(sum(spCents).cast(DecimalType(38, 0)), lit(0)) / lit(100L))
             .as("total_spent"))
-      // Twin layout: the o_custkey twin co-locates orders with
-      // bk_customer, removing both join exchanges AND both sorts
-      // (trusted per-bucket order), and the custkey grouping rides the
-      // same partitioning — only the final order-by exchanges
-      // (r15; r14 verdict weak mark #2).
-      //
-      // Materialize the grouped output BEFORE that order-by (r16,
-      // r15 verdict item 3): a global sort's range-exchange first runs
-      // a bounds-SAMPLING job over its child, and because the twin
-      // plan has no exchange below this point the child is the entire
-      // fact-scale SMJ+agg — unmaterialized, the sampling pass
-      // re-executes all of it, so the query's heaviest stage runs
-      // TWICE for one answer. One scoped persist of the ~|customer|
-      // grouped rows makes the sampling job a cache scan and the
-      // shuffle map a cache read. Measured (r16, same-day calm pairs
-      // at 100×): 1.653 → 1.477 s — an 11% win, well short of the
-      // hoped-for ~2× because the sampling pass was already cheap
-      // relative to the join-agg it re-executed: the twin SMJ streams
-      // at scan speed and the range sampler only reads a row-count
-      // sized sample of it. Kept: strictly positive, and the persist
-      // is |customer|-sized (bounded) at any SF.
-      //
-      // TWIN-GATED (r16 follow-up): the rationale above only holds
-      // when no exchange sits below the sort — i.e. on the twin. On
-      // plain/primary layouts the join's own shuffle IS a
-      // materialization barrier (the sampling job re-reads the
-      // upstream shuffle files, not the scans), so the persist buys
-      // nothing and costs a cache write inside the timed window —
-      // measured at sf0.1 plain: 0.43 s (r15, no persist) → ~0.9 s
-      // isolated fresh-JVM ×3 with the unconditional persist; gated,
-      // it returns to the r15 shape (the 16 MB scopedIfLarge floor
-      // never skips it here because the optimizer's join-size
-      // ESTIMATE crosses 16 MB even at sf0.1).
-      val preSort =
-        if (graft.sources.BucketedWarehouse.twinActive(s, dir, "orders"))
-          CacheScope.scopedIfLarge(grouped)
-        else grouped
-      preSort.orderBy(col("c_custkey"))
-    }.withTwinLayout("orders" -> "orders_ck"),
+        .orderBy(col("c_custkey"))
+    },
 
     // ------------------------------------------------------------------
     // q14 — anti join (NOT EXISTS): customers with no URGENT order.
@@ -532,10 +474,6 @@ object RelationalQueries {
 
     // ------------------------------------------------------------------
     // q18 — time-bucketed aggregation (date_trunc month).
-    // Twin-sweep candidate closure (r16, r15 verdict item 5): no twin
-    // applies — the query has no join at all, and neither fact
-    // bucketing satisfies a month clustering; the only exchange moves
-    // the ~|months| partial-aggregate rows, already minimal.
     QueryDef.sql(
       "q18_monthly_orders",
       """SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,

@@ -832,9 +832,10 @@ object TextQueries {
     // broadcasts; N is a scalar broadcast cross join, never a collect.
     // The top-3 window is EXCHANGE-FREE (documentsSpread co-locates
     // each doc, so partitionBy(doc_id) is satisfied; the cost is the
-    // partition-local sort). NEGATIVE RESULT (r14, tools/ProbeQ78 at
-    // 100×, min-of-3): replacing the window with a bounded top-k
-    // object aggregate reads 7.63 s at Spark's default
+    // partition-local sort). NEGATIVE RESULT (r14, ProbeQ78 — a probe
+    // main last present at commit 9aaeeb6 — at 100×, min-of-3):
+    // replacing the window with a bounded top-k object aggregate
+    // reads 7.63 s at Spark's default
     // ObjectHashAggregate fallback threshold (128 groups — it
     // degenerates to the very sort it tries to avoid, plus object
     // overhead) and 6.11 s vs the window's 7.36 only with the
@@ -928,7 +929,7 @@ object TextQueries {
         .select(col("token"), log(col("c") / col("n_tok")).as("logp"))
       // Position-ordered fold as a WINDOW running over (doc_id, pos)
       // (r17; replaces collect_list(struct) + the PosOrderedSum
-      // kernel): the collect_list TypedImperativeAggregate ran through
+      // kernel, deleted since): the collect_list TypedImperativeAggregate ran through
       // ObjectHashAggregate whose 128-key sort-based fallback fires on
       // every real partition (probe: findNextSortedGroup hot at 100×)
       // — so the rows were being SORTED anyway, plus per-doc object

@@ -48,11 +48,10 @@ object ScanCensus {
       n match {
         case f: FileSourceScanExec =>
           // one hit per scan node per distinct table under its roots;
-          // catalog tables (the bucketed warehouse's bk_*) have plain
-          // directory roots with no .parquet component — name those by
-          // their table identifier so bucketed runs stay ledger-visible
-          // (r14: the bucketed Verify artifact must show bk_lineitem
-          // reads, and budgets must keep binding over either layout)
+          // catalog tables (e.g. BucketedTables.writeBucketed output)
+          // have plain directory roots with no .parquet component —
+          // name those by their table identifier so they stay
+          // ledger-visible
           val byPath = f.relation.location.rootPaths
             .flatMap(p => TableRe.findFirstMatchIn(p.toString).map(_.group(1)))
             .distinct

@@ -78,7 +78,7 @@ object ScanLedger {
         // ~10s on a backlogged bus) — unregister must run regardless,
         // or the leaked ledger accumulates cross-query counts on the
         // shared session and masks body's own exception
-        try org.apache.spark.graft.ListenerBusFlush.waitUntilEmpty(spark.sparkContext)
+        try org.apache.spark.graft.SparkStateProbe.waitUntilEmpty(spark.sparkContext)
         finally spark.listenerManager.unregister(ledger)
       }
     (out, ledger.counts)

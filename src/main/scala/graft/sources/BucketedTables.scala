@@ -65,16 +65,15 @@ object BucketedTables {
       s"bucketed table $table wrote $files data files across $buckets " +
         s"bucket ids (numBuckets=$numBuckets) — some bucket holds more " +
         "than one file, so per-bucket sort order would not hold; " +
-        "rebuild the warehouse")
+        "rewrite the table")
   }
 
   /** (data-file count, distinct bucket-id count) under `table`'s
-    * location — the at-most-one-file-per-bucket evidence both the
-    * build-time assert above and the resolve-time guard
-    * ([[BucketedWarehouse.resolve]]) consume (an EMPTY bucket writes
-    * no file at all, which is sort-safe — only a multi-file bucket
-    * breaks the trusted order). Bucket ids come from the writer's
-    * `_NNNNN.` file-name component.
+    * location — the at-most-one-file-per-bucket evidence the
+    * build-time assert above consumes (an EMPTY bucket writes no file
+    * at all, which is sort-safe — only a multi-file bucket breaks the
+    * trusted order). Bucket ids come from the writer's `_NNNNN.`
+    * file-name component.
     */
   def bucketFileCensus(spark: SparkSession, table: String): (Int, Int) = {
     val meta = spark.sessionState.catalog.getTableMetadata(

@@ -119,7 +119,8 @@ object FlightScaleBench {
     def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
     // --- extract: EXECUTOR-SIDE quadtree paging (the scale path —
-    // pages never transit the driver; ProbeBronze pinned the r11
+    // pages never transit the driver; ProbeBronze (a probe main last
+    // present at commit 9aaeeb6) pinned the r11
     // 18 s bronze floor to driver-resident row shipping, not the
     // write). extract_sec = the level-synchronous fetch sweep that
     // caches every page cluster-side; nRaw from the cached frames.

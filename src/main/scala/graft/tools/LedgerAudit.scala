@@ -35,8 +35,7 @@ object LedgerAudit {
         val (_, counts) = ScanLedger.measure(spark) {
           d.run(spark, sfDir).write.format("noop").mode("overwrite").save()
         }
-        val over = d.byLogicalTable(counts)
-          .filter { case (t, c) => c > d.ledgerBudget(t) }
+        val over = counts.filter { case (t, c) => c > d.ledgerBudget(t) }
         if (over.nonEmpty || !onlyOver) {
           val mark = if (over.nonEmpty) "OVER-BUDGET" else ""
           println(f"${d.name}%-28s ${counts.toSeq.sorted

@@ -9,15 +9,11 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    // honor GRAFT_BUCKETED_WH like Bench/Verify: plan dumps must show
-    // the layout the suite actually runs (r15 — the twin dispatch was
-    // invisible here, the dump silently read plain parquet)
-    val spark = graft.sources.BucketedWarehouse.configureFromEnv(
-      SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))
+    val spark = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // "formatted" explain (r16): the judged plan artifacts under

@@ -28,14 +28,8 @@ object ScanAudit {
       try {
         val counts = graft.plans.ScanCensus.tableScans(d.run(spark, sfDir))
         val hot = counts.filter { case (t, c) => c >= math.max(minScans, 1) }
-        val over = d.byLogicalTable(counts)
-          .filter { case (t, c) => c > d.scanBudget(t) }
+        val over = counts.filter { case (t, c) => c > d.scanBudget(t) }
         if (hot.nonEmpty || over.nonEmpty) {
-          // over-budget lines carry the FOLDED logical counts (r15
-          // ADVICE): a logical table whose scans split across twin
-          // layouts can be over budget with every raw name below
-          // minScans — the raw hot list alone would hide which
-          // layouts contributed
           val mark =
             if (over.nonEmpty)
               over.toSeq.sorted

@@ -5,14 +5,13 @@ import java.io.File
 import org.apache.spark.SparkContext
 import org.apache.spark.storage.BlockId
 
-/** Read-only shim into `private[spark]` state for the suite-state-tax
-  * diagnosis (r10 task 1): three numbers the public API does not
-  * expose but the "accumulated executor state" hypothesis needs —
-  * what is ON DISK in the block-manager local dirs (leftover shuffle/
-  * spill files), what is IN the memory store (unreleased broadcast /
-  * RDD blocks), and how many of each block family survive between
-  * queries. Only the package placement is ours; every accessor is a
-  * getter Spark's own tests use.
+/** The one shim into `private[spark]` state. Besides the listener-bus
+  * flush, three numbers the public API does not expose for the
+  * suite-state-tax diagnosis (r10 task 1): what is ON DISK in the
+  * block-manager local dirs (leftover shuffle/spill files), what is IN
+  * the memory store (unreleased broadcast / RDD blocks), and how many
+  * of each block family survive between queries. Only the package
+  * placement is ours; every accessor is one Spark's own tests use.
   */
 object SparkStateProbe {
 
@@ -23,16 +22,15 @@ object SparkStateProbe {
     sc.env.blockManager.diskBlockManager.localDirs.toSeq
 
   /** Block until the async listener bus has delivered everything
-    * posted so far (bounded by `timeoutMs`). Task-metrics listeners
-    * (the bench's per-query IO accounting) otherwise race the reader:
-    * the last tasks' events can still sit on the bus when the timed
-    * action returns, leaking one query's shuffle bytes into the next
-    * query's regime row. Spark's own test suites use this same
-    * waitUntilEmpty.
+    * posted so far; throws `TimeoutException` after `timeoutMs`.
+    * Listeners otherwise race their reader: a census read right after
+    * the last action can precede that action's
+    * `SparkListenerSQLExecutionEnd` ([[graft.plans.ScanLedger]]), and
+    * the last tasks' metrics can leak into the next query's bench
+    * regime row. Spark's own test suites use this same flush.
     */
-  def drainListenerBus(sc: SparkContext, timeoutMs: Long = 10000L): Unit =
-    try sc.listenerBus.waitUntilEmpty(timeoutMs)
-    catch { case _: Throwable => () }
+  def waitUntilEmpty(sc: SparkContext, timeoutMs: Long = 10000L): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 
   /** (file count, total bytes) under the scratch dirs. */
   def diskUsage(sc: SparkContext): (Long, Long) = {

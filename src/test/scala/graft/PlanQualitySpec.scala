@@ -17,8 +17,14 @@ class PlanQualitySpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
+  // Every build below may register scoped caches; drain in `finally`
+  // so a failing assertion cannot leave CacheScope owned and cascade
+  // ConcurrentModificationExceptions into later specs.
+  private def drained[A](body: => A): A =
+    try body finally CacheScope.drain()
+
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+    drained(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString)
 
   test("q01: shipdate filter is pushed to the parquet scan, columns pruned") {
     val p = plan("q01_pricing_summary")
@@ -73,15 +79,17 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("q53: the LSH signature aggregation is cached and shared by the candidate self-join") {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val df = SparkEntry.queries("q53_neardup_pipeline")(spark, dir)
-    val imrs = df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
-    // bandRows (the explode + 16×xxhash64-min signature subtree) must be
-    // ONE cache read from both sides of the candidate join — otherwise
-    // the signature aggregation executes twice
-    val shared = imrs.groupBy(_.cacheBuilder).collect {
-      case (cb, rs) if rs.size >= 2 && cb.cachedPlan.toString.contains("xxhash64") => cb
+    drained {
+      val df = SparkEntry.queries("q53_neardup_pipeline")(spark, dir)
+      val imrs = df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+      // bandRows (the explode + 16×xxhash64-min signature subtree) must be
+      // ONE cache read from both sides of the candidate join — otherwise
+      // the signature aggregation executes twice
+      val shared = imrs.groupBy(_.cacheBuilder).collect {
+        case (cb, rs) if rs.size >= 2 && cb.cachedPlan.toString.contains("xxhash64") => cb
+      }
+      assert(shared.nonEmpty, "bandRows signature cache is not shared by the self-join")
     }
-    assert(shared.nonEmpty, "bandRows signature cache is not shared by the self-join")
   }
 
   test("q61: LSH projections run through the codegen'd float32dot kernel, not interpreted HOFs") {
@@ -155,19 +163,20 @@ class PlanQualitySpec extends AnyFunSuite {
     // from plan TEXT with persists present: cached plans reprint per
     // consumer, the q128/q13 census caveat)
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val staged = operators.FunnelOps.funnelAdaptive(
-      Tables(spark, dir).events, foldMaxBytes = 0L)
-    val ps = staged.queryExecution.executedPlan.toString
-    assert(!ps.contains("ObjectHashAggregate") && !ps.contains("collect_list"),
-      s"staged tier must stay on plain hash aggregates:\n${ps.take(2000)}")
-    assert(!ps.contains("ArrayAggregate") && !ps.contains("aggregate("),
-      "staged tier must not fold arrays through the interpreted HOF")
-    val distinctCaches = staged.queryExecution.withCachedData
-      .collect { case r: InMemoryRelation => r }
-      .map(_.cacheBuilder.cachedPlan.canonicalized).distinct.size
-    assert(distinctCaches == 2,
-      s"expected the v/c stage persists (2 distinct cached relations), got $distinctCaches")
-    CacheScope.drain()
+    drained {
+      val staged = operators.FunnelOps.funnelAdaptive(
+        Tables(spark, dir).events, foldMaxBytes = 0L)
+      val ps = staged.queryExecution.executedPlan.toString
+      assert(!ps.contains("ObjectHashAggregate") && !ps.contains("collect_list"),
+        s"staged tier must stay on plain hash aggregates:\n${ps.take(2000)}")
+      assert(!ps.contains("ArrayAggregate") && !ps.contains("aggregate("),
+        "staged tier must not fold arrays through the interpreted HOF")
+      val distinctCaches = staged.queryExecution.withCachedData
+        .collect { case r: InMemoryRelation => r }
+        .map(_.cacheBuilder.cachedPlan.canonicalized).distinct.size
+      assert(distinctCaches == 2,
+        s"expected the v/c stage persists (2 distinct cached relations), got $distinctCaches")
+    }
   }
 
   // documentsSpread's REPARTITION_BY_NUM spreads the single-file test
@@ -240,7 +249,6 @@ class PlanQualitySpec extends AnyFunSuite {
     val p = plan("q69_neardup_components")
     assert(!p.contains("CartesianProduct"), s"cartesian in components plan:\n${p.take(1500)}")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested loop:\n${p.take(1500)}")
-    CacheScope.drain()
   }
 
   test("q101: PageRank final plan — co-partitioned joins only, no cartesian, no single-partition exchange") {
@@ -249,7 +257,6 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"))
     // the rank frame must never collapse to one partition mid-iteration
     assert(!p.contains("Exchange SinglePartition"), s"single-partition exchange:\n${p.take(2000)}")
-    CacheScope.drain()
   }
 
   test("q116: histogram is rank-only — returned plan touches no fact data at all") {
@@ -264,7 +271,6 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.linesIterator.count(_.contains("FileScan parquet")) == 0,
       s"returned histogram re-reads the fact table:\n${p.take(1500)}")
     assert(p.contains("LocalTableScan"), s"expected driver-local result:\n${p.take(1500)}")
-    CacheScope.drain()
   }
 
   test("q120: weighted-median windows are __pid-local (never one task per group); offsets broadcast") {
@@ -276,7 +282,6 @@ class PlanQualitySpec extends AnyFunSuite {
     specs.foreach(l => assert(l.contains("__pid"), s"group-global window:\n$l"))
     assert(p.contains("BroadcastHashJoin"), s"offset join not broadcast:\n${p.take(1500)}")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"))
-    CacheScope.drain()
   }
 
   test("q01/q05/q53: filters still reach the scans when AQE re-plans (no regression at suite scale)") {
@@ -285,7 +290,6 @@ class PlanQualitySpec extends AnyFunSuite {
     Seq("q01_pricing_summary", "q05_region_revenue", "q53_neardup_pipeline").foreach { q =>
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q grew a cartesian:\n${p.take(1200)}")
-      CacheScope.drain()
     }
   }
 
@@ -310,35 +314,34 @@ class PlanQualitySpec extends AnyFunSuite {
       "q128_copurchase_lift" -> ("lineitem", 4),
       "q129_retention_sets" -> ("events", 2))
     factOf.foreach { case (q, (fact, minTotal)) =>
-      val df = SparkEntry.queries(q)(spark, dir)
-      val imrs = df.queryExecution.withCachedData
-        .collect { case r: InMemoryRelation => r }
-      val factCaches = imrs.filter(_.cacheBuilder.cachedPlan.toString.contains(s"$fact.parquet"))
-      assert(factCaches.size >= minTotal,
-        s"$q: ${factCaches.size} cached $fact reads, expected >= $minTotal — a persist was dropped")
-      CacheScope.drain()
+      drained {
+        val df = SparkEntry.queries(q)(spark, dir)
+        val imrs = df.queryExecution.withCachedData
+          .collect { case r: InMemoryRelation => r }
+        val factCaches = imrs.filter(_.cacheBuilder.cachedPlan.toString.contains(s"$fact.parquet"))
+        assert(factCaches.size >= minTotal,
+          s"$q: ${factCaches.size} cached $fact reads, expected >= $minTotal — a persist was dropped")
+      }
     }
   }
 
   test("q13 layout-gated persist: on plain parquet the grouped output is NOT materialized") {
-    // r16: the pre-sort persist exists for the TWIN layout, where no
-    // exchange sits below the range sort and the bounds-sampling job
-    // would re-execute the whole fact-scale SMJ+agg. On plain parquet
-    // the join's own shuffle is the materialization barrier (the
-    // sampling job re-reads shuffle files), so the persist buys
-    // nothing and measurably cost ~0.5 s at sf0.1 when unconditional
-    // (0.43 r15 → ~0.9 isolated). The 16 MB scopedIfLarge floor can't
-    // gate this one: the optimizer's JOIN-size estimate crosses it
-    // even at sf0.1. Twin-side persist presence is pinned by the
-    // committed plan evidence (plans/r16/q13_after.txt) — a spec JVM
-    // cannot switch warehouses (see BucketedWarehouseSpec header).
+    // The join's own shuffle is the materialization barrier the range
+    // sort's bounds-sampling job re-reads, so a pre-sort persist buys
+    // nothing and measurably cost ~0.5 s at sf0.1 (0.43 → ~0.9 s
+    // isolated). The 16 MB scopedIfLarge floor could not keep it out:
+    // the optimizer's JOIN-size estimate crosses it even at sf0.1.
+    // (The persist paid only on the removed bucketed/twin warehouse,
+    // where no exchange sat below the sort; plans/r16/q13_after.txt
+    // keeps that plan.)
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val df = SparkEntry.queries("q13_customer_order_counts")(spark, dir)
-    val imrs = df.queryExecution.withCachedData
-      .collect { case r: InMemoryRelation => r }
-    assert(imrs.isEmpty,
-      s"q13 on plain parquet: expected no persist below the sort, found ${imrs.size}")
-    CacheScope.drain()
+    drained {
+      val df = SparkEntry.queries("q13_customer_order_counts")(spark, dir)
+      val imrs = df.queryExecution.withCachedData
+        .collect { case r: InMemoryRelation => r }
+      assert(imrs.isEmpty,
+        s"q13 on plain parquet: expected no persist below the sort, found ${imrs.size}")
+    }
   }
 
   test("q111/q125 size-conditional persist: below the threshold the du subtree is NOT materialized") {
@@ -351,13 +354,14 @@ class PlanQualitySpec extends AnyFunSuite {
     // bench band (estimates there: 53–95 MB vs the 16 MB threshold).
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     Seq("q111_hll_daily_union", "q125_rolling_distinct_users").foreach { q =>
-      val df = SparkEntry.queries(q)(spark, dir)
-      val imrs = df.queryExecution.withCachedData
-        .collect { case r: InMemoryRelation => r }
-      val factCaches = imrs.filter(_.cacheBuilder.cachedPlan.toString.contains("events.parquet"))
-      assert(factCaches.isEmpty,
-        s"$q: expected the small-input path to skip the persist, found ${factCaches.size}")
-      CacheScope.drain()
+      drained {
+        val df = SparkEntry.queries(q)(spark, dir)
+        val imrs = df.queryExecution.withCachedData
+          .collect { case r: InMemoryRelation => r }
+        val factCaches = imrs.filter(_.cacheBuilder.cachedPlan.toString.contains("events.parquet"))
+        assert(factCaches.isEmpty,
+          s"$q: expected the small-input path to skip the persist, found ${factCaches.size}")
+      }
     }
   }
 
@@ -370,10 +374,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // A new query that grows the q128 defect class (shared shuffle
     // subtree re-derived per consumer) fails here, not on the cluster.
     val failures = SparkEntry.defs.flatMap { d =>
-      val counts =
-        try plans.ScanCensus.tableScans(d.run(spark, dir))
-        finally CacheScope.drain()
-      d.byLogicalTable(counts).collect {
+      val counts = drained(plans.ScanCensus.tableScans(d.run(spark, dir)))
+      counts.collect {
         case (t, c) if c > d.scanBudget(t) =>
           s"${d.name}: $t scanned ${c}x, budget ${d.scanBudget(t)}"
       }
@@ -386,8 +388,10 @@ class PlanQualitySpec extends AnyFunSuite {
     // structural smoke over every registered query at tiny SF: the plan
     // tree must build lazily without driver-side actions
     SparkEntry.queries.keys.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
-      assert(df.queryExecution.logical != null, name)
+      drained {
+        val df = SparkEntry.queries(name)(spark, dir)
+        assert(df.queryExecution.logical != null, name)
+      }
     }
   }
 }

@@ -37,7 +37,7 @@ class ScanLedgerSpec extends AnyFunSuite {
           d.run(spark, dir).write.format("noop").mode("overwrite").save()
         }._2
         finally CacheScope.drain()
-      d.byLogicalTable(counts).collect {
+      counts.collect {
         case (t, c) if c > d.ledgerBudget(t) =>
           s"${d.name}: $t scanned ${c}x across all jobs, ledger budget ${d.ledgerBudget(t)}"
       }

@@ -33,6 +33,26 @@ class FlightIoSpec extends AnyFunSuite {
     assert(FlightIo.newestSnapshotDir(spark, s"$tmp/nothing").isEmpty)
   }
 
+  test("newestSnapshotDir skips a newer killed write: no _SUCCESS, parts under _temporary") {
+    val tmp = Files.createTempDirectory("graft-io-killed").toString
+    import spark.implicits._
+    val day = s"$tmp/gold/year=2024/month=04/day=19"
+    Seq((1, "a")).toDF("k", "v").write.parquet(s"$day/flights20240419100000")
+    // what a writer killed before job commit leaves behind: a task's
+    // part file under the committer's scratch dir, and no marker
+    def part(dir: String): Unit = {
+      Files.createDirectories(java.nio.file.Paths.get(dir))
+      Files.write(java.nio.file.Paths.get(dir, "part-00000-x.snappy.parquet"),
+        Array[Byte](1, 2, 3))
+    }
+    part(s"$day/flights20240419110000/_temporary/0/task_202404191100_0001_m_000000")
+    // and a newer leaf whose parts landed but whose commit never did
+    part(s"$day/flights20240419120000")
+    val got = FlightIo.newestSnapshotDir(spark, s"$tmp/gold")
+    assert(got.exists(_.endsWith("day=19/flights20240419100000")),
+      s"expected the committed snapshot, got $got")
+  }
+
   test("ensureBucketExists is mkdir-p: creates parents, idempotent") {
     val tmp = Files.createTempDirectory("graft-bucket").toString
     val base = s"$tmp/lake/flights/bronze"
