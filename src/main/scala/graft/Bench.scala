@@ -83,18 +83,7 @@ private[graft] object BenchKernel {
 
   def buildSession(): SparkSession = {
     HeapPin.engage()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // AQE stays on (runtime broadcast conversion + partition coalescing
-    // help the join-heavy queries even at bench scale); env knob for
-    // A/B measurement only.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -108,62 +97,12 @@ private[graft] object BenchKernel {
       .write.format("noop").mode("overwrite").save()
     finally CacheScope.drain()
 
-  // SPARK_GRAFT_PROBE=1: append a JvmProbe snapshot per timing to
-  // bench_probe.jsonl — the r10 suite-state-tax instrumentation
-  // (heap/GC/classes/scratch-disk/block counts before and after
-  // each query, so in-suite inflation can be attributed to the
-  // counter that actually grew)
-  val probe: Boolean = sys.env.get("SPARK_GRAFT_PROBE").contains("1")
-
-  /** In-process stack sampler (r16, probe mode only): every ~100 ms
-    * record the top frame of each RUNNABLE "Executor task launch
-    * worker" thread via ThreadMXBean. Per-slot histograms go into the
-    * probe line, so a taxed in-suite slot can be diffed against its
-    * isolated run by WHERE the task cycles went (external jstack
-    * attach proved unreliable mid-suite, and JFR perturbs the JIT
-    * enough to erase the very tax under investigation — measured:
-    * in-prefix q128 19.9→14.8 s under JFR while isolated ROSE
-    * 11.2→16.6). Sampling reads stack depth 1 of ≤32 threads at
-    * 10 Hz — overhead is noise against 32 busy cores.
-    */
-  private object StackSampler {
-    private val tmx = java.lang.management.ManagementFactory.getThreadMXBean
-    private val hist = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    @volatile private var on = false
-    private val t = new Thread("graft-stack-sampler") {
-      override def run(): Unit = while (true) {
-        if (on) {
-          val infos = tmx.getThreadInfo(tmx.getAllThreadIds, 2)
-          infos.foreach { ti =>
-            if (ti != null && ti.getThreadState == Thread.State.RUNNABLE &&
-              ti.getThreadName.startsWith("Executor task launch") &&
-              ti.getStackTrace.nonEmpty) {
-              val st = ti.getStackTrace
-              // skip the Unsafe/native leaf to land on the Spark frame
-              val f = st.find(e => !e.getClassName.startsWith("jdk.internal") &&
-                !e.getClassName.startsWith("sun.")).getOrElse(st(0))
-              hist.merge(s"${f.getClassName}.${f.getMethodName}", 1L, (a, b) => a + b)
-            }
-          }
-        }
-        Thread.sleep(100)
-      }
-    }
-    t.setDaemon(true)
-    def start(): Unit = { hist.clear(); on = true; if (!t.isAlive) t.start() }
-    /** Stop and return the top-k (frame, samples) pairs. */
-    def stopTop(k: Int): Seq[(String, Long)] = {
-      on = false
-      import scala.jdk.CollectionConverters._
-      hist.asScala.toSeq.map { case (f, n) => (f, n.longValue) }
-        .sortBy(-_._2).take(k)
-    }
-  }
-
   /** Per-query IO accounting (r11 regime fields): shuffle bytes
     * written + spill across the tasks of a timing window. Registered
     * once per session; [[timeOnce]] snapshots the monotone totals
-    * before and after each timed run.
+    * before and after each timed run. `unreported` counts task-end
+    * events that arrived without metrics: when it moves inside a
+    * window, that window's input/CPU totals are incomplete.
     */
   private final class TaskIoListener extends org.apache.spark.scheduler.SparkListener {
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
@@ -176,10 +115,12 @@ private[graft] object BenchKernel {
     val bytesRead = new java.util.concurrent.atomic.AtomicLong()
     val taskRunMs = new java.util.concurrent.atomic.AtomicLong()
     val taskCpuMs = new java.util.concurrent.atomic.AtomicLong()
+    val unreported = new java.util.concurrent.atomic.AtomicLong()
     override def onTaskEnd(
         t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
-      if (m != null) {
+      if (m == null) unreported.incrementAndGet(): Unit
+      else {
         shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
         bytesRead.addAndGet(m.inputMetrics.bytesRead)
@@ -250,13 +191,43 @@ private[graft] object BenchKernel {
       java.nio.file.Paths.get("bench_regime.jsonl")): Unit
     catch { case _: Throwable => () }
 
-  private def probeLine(line: String): Unit =
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_probe.jsonl"),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: Throwable => () }
+  /** Process user/system CPU and host iowait/steal/total — the regime
+    * counters (r10 verdict item: the measurement regime lived in
+    * prose; now each bench row carries the sys-time share and iowait
+    * share of its own window). Ticks are converted at the canonical
+    * USER_HZ=100; consumers only ever use deltas and RATIOS of these,
+    * so the constant cancels even where a kernel deviates. A counter
+    * that cannot be read is −1.
+    */
+  private def cpuTimes: Map[String, Long] = {
+    val self = try {
+      val stat = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("/proc/self/stat")))
+      val rest = stat.substring(stat.lastIndexOf(')') + 2).split(" ")
+      // fields 14/15 (utime/stime) land at rest(11)/rest(12): rest(0)
+      // is field 3
+      Seq("proc_utime_ms" -> rest(11).toLong * 10,
+        "proc_stime_ms" -> rest(12).toLong * 10)
+    } catch { case _: Throwable => Seq("proc_utime_ms" -> -1L, "proc_stime_ms" -> -1L) }
+    val host = try {
+      // first 8 fields only (user..steal): guest/guest_nice are
+      // already included inside user/nice, and summing them would
+      // double-count VM time and bias the iowait share low
+      val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
+        .next().trim.split("\\s+").drop(1).take(8).map(_.toLong)
+      // steal (field 8) = cycles the HYPERVISOR ran someone else while
+      // this guest's vCPU was runnable. Invisible to thread-CPU
+      // accounting (the guest books stolen time as if the thread ran),
+      // so it is the only direct witness for the 3-30× single-slot
+      // storms measured r13: wall and "CPU" inflate together, iowait
+      // stays 0, and no in-process counter moves.
+      Seq("host_iowait_ticks" -> cpu(4), "host_total_ticks" -> cpu.sum,
+        "host_steal_ticks" -> cpu(7))
+    } catch { case _: Throwable =>
+      Seq("host_iowait_ticks" -> -1L, "host_total_ticks" -> -1L,
+        "host_steal_ticks" -> -1L) }
+    (self ++ host).toMap
+  }
 
   /** Bounded wait until the block-manager scratch dirs stop shrinking
     * — the r10 suite-state-tax fix: a GC only ENQUEUES the
@@ -283,7 +254,9 @@ private[graft] object BenchKernel {
   /** One sample's storm-relevant regime fields, alongside the wall
     * time (r15, verdict item 3): enough for [[stormSignature]] to
     * decide in-process whether a PAIR of timings hides a storm even
-    * when their wall clocks agree.
+    * when their wall clocks agree. `taskCpuMs` and `inputMb` read −1
+    * when the window's IO accounting went unreported (a task-end
+    * event without metrics, or a listener-bus flush that timed out).
     */
   final case class Timing(
       sec: Double, taskCpuMs: Long, inputMb: Long,
@@ -300,18 +273,19 @@ private[graft] object BenchKernel {
     */
   def stormSignature(fast: Timing, slow: Timing): Boolean = {
     // the cpu-inflation arm needs BOTH input counts actually present
-    // (r15 ADVICE): a sample whose IO metrics failed to report —
-    // a listener miss — must not default to "flat input" and buy
-    // extra samples on ordinary CPU jitter; such samples fall back to
-    // the hostAnomaly arm and the caller's >1.5× wall-spread rule.
+    // (r15 ADVICE): a sample whose IO metrics failed to report reads
+    // −1 (unreported, never a measured 0) and must not default to
+    // "flat input" and buy extra samples on ordinary CPU jitter; such
+    // samples fall back to the hostAnomaly arm and the caller's >1.5×
+    // wall-spread rule.
     // r16 verdict gap: queries whose scans round to 0 MB on BOTH
     // samples (q92/q93 class) thereby lost cpu-inflation protection
     // entirely, and the r16 driver pass published a 6× phantom
     // regression on q93. A CONSISTENT double-zero is a genuinely
-    // sub-MB scan, not a miss (a listener miss zeroes one side,
-    // leaving a 0-vs-positive mismatch that stays excluded); the fast
-    // side's 100 ms task-CPU floor keeps trivial-work jitter from
-    // buying samples where CPU inflation is meaningless anyway.
+    // sub-MB scan, not a miss (a miss reads −1, which neither input
+    // clause admits); the fast side's 100 ms task-CPU floor keeps
+    // trivial-work jitter from buying samples where CPU inflation is
+    // meaningless anyway.
     val flatInput =
       (fast.inputMb > 0 && slow.inputMb > 0 &&
         math.abs(fast.inputMb - slow.inputMb).toDouble <=
@@ -364,9 +338,7 @@ private[graft] object BenchKernel {
     // the timed window (no-op when the MaxHeapFreeRatio pin held)
     HeapPin.regrow()
     settleScratch(spark)
-    val before = if (probe) graft.tools.JvmProbe.snapshot(spark) else Nil
-    if (probe) StackSampler.start()
-    val cpu0 = graft.tools.JvmProbe.cpuTimes.toMap
+    val cpu0 = cpuTimes
     val gc0 = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
     // r16 (suite-tax attribution): JIT compilation time and loaded-class
@@ -383,15 +355,19 @@ private[graft] object BenchKernel {
     val br0 = ioListener.bytesRead.get()
     val tr0 = ioListener.taskRunMs.get()
     val tc0 = ioListener.taskCpuMs.get()
+    val ur0 = ioListener.unreported.get()
     val t0 = System.nanoTime()
     val ok = try { exec(spark, sfDir, name); true } catch { case _: Throwable => false }
     val dt = (System.nanoTime() - t0) / 1e9
     // the listener bus is async: drain it so the window's last tasks'
     // shuffle/spill bytes land in THIS query's row, not the next one's;
-    // a timeout only blurs one regime row, so the timing goes on
-    try org.apache.spark.graft.SparkStateProbe.waitUntilEmpty(spark.sparkContext)
-    catch { case _: java.util.concurrent.TimeoutException => () }
-    val cpu1 = graft.tools.JvmProbe.cpuTimes.toMap
+    // a timeout leaves the window's IO totals incomplete, so the
+    // timing goes on with input/CPU marked unreported
+    val flushed =
+      try { org.apache.spark.graft.SparkStateProbe.waitUntilEmpty(spark.sparkContext); true }
+      catch { case _: java.util.concurrent.TimeoutException => false }
+    val reported = flushed && ioListener.unreported.get() == ur0
+    val cpu1 = cpuTimes
     val gc1 = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
     val jit1 = Option(java.lang.management.ManagementFactory.getCompilationMXBean)
@@ -417,9 +393,9 @@ private[graft] object BenchKernel {
     val sysShare = if (du + ds <= 0) -1.0 else ds.toDouble / (du + ds)
     val ioShare = if (dtot <= 0) -1.0 else dio.toDouble / dtot
     val stealShare = if (dtot <= 0 || dsteal < 0) -1.0 else dsteal.toDouble / dtot
-    val brMb = (ioListener.bytesRead.get() - br0) / (1 << 20)
+    val brMb = if (reported) (ioListener.bytesRead.get() - br0) / (1 << 20) else -1L
     val trMs = ioListener.taskRunMs.get() - tr0
-    val tcMs = ioListener.taskCpuMs.get() - tc0
+    val tcMs = if (reported) ioListener.taskCpuMs.get() - tc0 else -1L
     regimeLine(s"""{"q":"$name","ok":$ok,"sec":${f"$dt%.3f"},""" +
       s""""shuffle_write_mb":$swMb,"spill_mb":$spMb,""" +
       f""""sys_share":$sysShare%.3f,"host_iowait_share":$ioShare%.3f,""" +
@@ -435,15 +411,6 @@ private[graft] object BenchKernel {
       if (du >= 0) { totals.utimeMs += du; totals.stimeMs += ds }
       if (dtot >= 0) { totals.iowaitTicks += dio; totals.hostTicks += dtot }
       totals.gcMs += gc1 - gc0
-    }
-    if (probe) {
-      val after = graft.tools.JvmProbe.snapshot(spark)
-      val frames = StackSampler.stopTop(10)
-        .map { case (f, n) => s""""$f":$n""" }.mkString("{", ",", "}")
-      probeLine(s"""{"q":"$name","ok":$ok,"sec":${f"$dt%.3f"},""" +
-        s""""before":${graft.tools.JvmProbe.jsonObject(before)},""" +
-        s""""after":${graft.tools.JvmProbe.jsonObject(after)},""" +
-        s""""hot_frames":$frames}""")
     }
     Timing(if (ok) dt else -1.0, tcMs, brMb, sysShare, stealShare)
   }

@@ -3,7 +3,8 @@ package graft
 /** Per-query file-scan budgets above the suite default of ONE scan per
   * table per execution — the annotated-exception list behind
   * PlanQualitySpec's suite-wide [[graft.plans.ScanCensus]] guard (r8,
-  * promoting the r7 ScanAudit from a dev sweep to CI). Every entry
+  * promoting the r7 ScanAudit sweep, a dev main last present at
+  * commit fba91a5, to CI). Every entry
   * says WHY the extra scan is the designed plan and not the q128
   * defect class (a shared shuffle subtree whose persist was dropped).
   *
@@ -174,7 +175,9 @@ object ScanBudgets {
   /** File scans run at BUILD time via a query's own driver actions —
     * the [[graft.plans.ScanLedger]] counts the plan census cannot see
     * (the actions finish before the returned plan exists). Sized by
-    * `graft.tools.LedgerAudit` at sf0.001 (r9); ScanLedgerSpec
+    * a LedgerAudit sweep at sf0.001 (r9; a dev main last present at
+    * commit fba91a5 — Verify's `scan_ledger.json` now carries the
+    * same counts); ScanLedgerSpec
     * enforces ledger ≤ plan budget + these, suite-wide. Justifications:
     *
     *  - ADJACENCY-MATERIALIZE (components queries): the persisted

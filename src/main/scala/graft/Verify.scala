@@ -1,18 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for local iteration (same knob
@@ -28,7 +21,7 @@ object Verify {
     // name -> (counts, over-budget subset); the over-budget map makes
     // the artifact self-describing (r9 nit: the WARN went only to
     // stderr, so the committed json could not show whether a budget
-    // fired). LedgerAudit can re-check a committed artifact offline.
+    // fired). tools/oracle_check.py re-checks it offline.
     val ledgers = scala.collection.mutable.TreeMap[String, (Map[String, Int], Map[String, Int])]()
     SparkEntry.defs
       .filter(d => only.forall(_.contains(d.name)))

@@ -680,7 +680,8 @@ object AdvancedQueries {
     // Oversized cells are SUB-BUCKETED (r9): within-cell comparison is
     // |cell|² by definition, and at 100× replication the max cell
     // reaches 17,687 vectors — 1.31e9 in-cell pairs (measured,
-    // `graft.tools.BandProfile q102`), the suite's worst remaining
+    // BandProfile's q102 mode, a scale main last present at commit
+    // fba91a5), the suite's worst remaining
     // cliff. Cells over [[SemDedupCellCap]] (256; measured max cell is
     // 42 at sf0.01 and 148 at sf0.1, so the condition CANNOT fire at
     // certification scales and the oracle hash is unchanged) compare

@@ -178,8 +178,9 @@ object ConnectedComponents {
 
   /** Edge-count bound for the driver union-find tier of
     * [[runAdaptive]] — a MEASURED crossover, not a memory guess.
-    * ComponentsScale tier sweep on this box (broken-chain graphs,
-    * driver vs the contraction+alternating loop, same JVM per pair):
+    * ComponentsScale tier sweep at local[32] (a scale main last
+    * present at commit fba91a5; broken-chain graphs, driver vs the
+    * contraction+alternating loop, same JVM per pair):
     * 0.13M edges driver 3.8 s vs loop 5.6; 0.5M: 3.0 vs 3.2 (the
     * tie); 1M: 5.1 vs 2.6; 2M/4M loop wins outright (pre-contraction
     * the driver won to ~1M — 4.4 vs 4.8 — but the local-contraction

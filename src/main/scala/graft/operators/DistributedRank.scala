@@ -133,8 +133,9 @@ object DistributedRank {
   /** Measured window/distributed crossover for FULL ranking (every
     * row keeps its rank, unlike the ≤2-rows-per-group selection
     * shapes whose crossover is [[SortSelectionMaxRows]]):
-    * `graft.tools.RankKernelScale` global row_number sweep on this
-    * box — 1M: window 1.1 s vs kernel 1.9 s; 2M: 2.3 vs 2.0; 5M:
+    * global row_number sweep of RankKernelScale (a scale main last
+    * present at commit fba91a5; its table is in README) — 1M:
+    * window 1.1 s vs kernel 1.9 s; 2M: 2.3 vs 2.0; 5M:
     * 7.5 vs 3.3; 10M: 11.2 vs 6.8 (grouped/3-task crosses later,
     * ~5–7M, so the GLOBAL crossover is the binding one). Set AT the
     * measured tie: a misjudgment costs only performance (both paths
@@ -1093,7 +1094,8 @@ object DistributedRank {
     * frames inherit their child's size estimate, so a large FACT
     * behind a small aggregate errs toward the kernel — the direction
     * that only costs constant overhead, never the one-task cliff).
-    * Sized from the RankKernelScale global prefix-sum sweep — 1M
+    * Sized from the global prefix-sum sweep of RankKernelScale (a
+    * scale main last present at commit fba91a5) — 1M
     * rows: window 2.6 s vs kernel 5.3 s; 2M: 3.0 vs 5.0; 5M: 6.3 vs
     * 5.4 (crossover ≈ 3–4M rows ≈ 60 MB at the ~18 B/row measured
     * fact width) — 32 MB sits ~2× under the crossover.

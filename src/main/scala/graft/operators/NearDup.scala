@@ -78,7 +78,8 @@ import org.apache.spark.sql.types.{BinaryType, DoubleType}
   *     policy loses those buckets' connectivity entirely), and at
   *     100× the cap turns the ~70 GB-of-shuffle job that out-spills
   *     one box into a 2.4 GB / ~48 s run that avoids 1.89e9 candidate
-  *     pairs (`NearDupScale /tmp/sf100 -1 64`). Reduced volume is
+  *     pairs (NearDupScale at cap 64, a scale main last present at
+  *     commit fba91a5; numbers in README). Reduced volume is
   *     observable, not silent: [[NearDup.overCapBandBuckets]] lists
   *     every over-cap bucket with its size and
   *     [[NearDup.capReport]] aggregates the saved pair counts for

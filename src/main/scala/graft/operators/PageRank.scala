@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Why decimal, not long: a hub with h in-neighbors accumulates
   * S ≈ h·Unit before damping, and the 85·S intermediate overflows
-  * Long at h ≈ 10^5 (found by the PageRankScale star probe — the
+  * Long at h ≈ 10^5 (found by the star graph of PageRankScale, a
+  * scale main last present at commit fba91a5 — the
   * q01 scaled-long overflow lesson, one operator later). DECIMAL(38)
   * holds 10^38 — no realizable graph reaches it.
   *

@@ -61,14 +61,6 @@ object TextQueries {
       (2 to 4).map(j => min(substring(col("hx"), (j - 1) * 8 + 1, 8)).as(s"mh$j")): _*)
   }
 
-  /** Probe access for `graft.tools.BandProfile` (cap sizing). */
-  def minhashSigProbe(s: org.apache.spark.sql.SparkSession, dir: String) =
-    minhashSig(s, dir)
-
-  /** Probe access for `graft.tools.BandProfile` (q66 cap sizing). */
-  def simhashSigProbe(s: org.apache.spark.sql.SparkSession, dir: String, nBits: Int) =
-    simhashSig(s, dir, nBits)
-
   private val simhashBits = 16
   private val hiHex = Seq("8", "9", "a", "b", "c", "d", "e", "f")
 
@@ -216,7 +208,8 @@ object TextQueries {
     * downstream transitive closure, volume linear). The cap is part
     * of the DEFINED semantics, mirrored in [[lshCandSql]], and sized
     * so it cannot bind at certification scales: measured max bucket
-    * is 3 at sf0.01 and 8 at sf0.1 (`graft.tools.BandProfile`), so
+    * is 3 at sf0.01 and 8 at sf0.1 (BandProfile, a scale main last
+    * present at commit fba91a5), so
     * every certification-scale bucket enumerates all pairs and the
     * oracle hash is unchanged — while at 100× replication, where the
     * LSH gray zone drives the max bucket to 569 and candidate volume
@@ -229,7 +222,7 @@ object TextQueries {
 
   /** Hub-star cap for q66's 16-bit simhash-half buckets — the same
     * defined-semantics policy as [[LshBucketCap]], but sized to its
-    * own measured collision profile (`BandProfile <dir> q66`): 16-bit
+    * own measured collision profile (BandProfile's q66 mode): 16-bit
     * halves collide far more than 32-bit minhash bands, with max
     * buckets of 41 at sf0.01 and 404 at sf0.1 — so the cap sits at
     * 512 (> 404: provably non-binding at certification scales, the
@@ -464,8 +457,9 @@ object TextQueries {
     // more than a 32-bit minhash band (measured max bucket: 41 at
     // sf0.01, 404 at sf0.1, 32,646 at 100× replication where the
     // uncapped join's candidate volume reaches 2.60e9 pairs and the
-    // r9 suite spent 99.1 s on it — `graft.tools.BandProfile <dir>
-    // q66`). Buckets over the cap emit only their hub (min doc_id)
+    // r9 suite spent 99.1 s on it — BandProfile's q66 mode, a scale
+    // main last present at commit fba91a5). Buckets over the cap emit
+    // only their hub (min doc_id)
     // star — hub connectivity preserved, per-bucket volume linear,
     // 100× candidate volume 29.2M (90× down). The cap cannot bind at
     // certification scales (512 > 404), so the oracle answer there is

@@ -60,10 +60,7 @@ object TightLoop {
   def partsFor(df: DataFrame, bytesPerPartition: Long = 8L << 20): Int = {
     val cap = df.sparkSession.sessionState.conf.numShufflePartitions
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val parts = (bytes / bytesPerPartition).min(BigInt(cap)).max(BigInt(1)).toInt
-    if (sys.env.contains("SPARK_GRAFT_LOOP_DEBUG"))
-      println(s"TightLoop.partsFor: est=$bytes bytes -> $parts parts (cap $cap)")
-    parts
+    (bytes / bytesPerPartition).min(BigInt(cap)).max(BigInt(1)).toInt
   }
 
   /** Partition count from an EXACT row count (preferred when the loop
@@ -82,11 +79,8 @@ object TightLoop {
       rows: Long,
       rowsPerPartition: Long = 120000L): Int = {
     val cap = spark.sessionState.conf.numShufflePartitions
-    val parts = ((rows + rowsPerPartition - 1) / rowsPerPartition)
+    ((rows + rowsPerPartition - 1) / rowsPerPartition)
       .min(cap.toLong).max(1L).toInt
-    if (sys.env.contains("SPARK_GRAFT_LOOP_DEBUG"))
-      println(s"TightLoop.partsForRows: rows=$rows -> $parts parts (cap $cap)")
-    parts
   }
 
   def scoped[A](spark: SparkSession, parts: Int)(body: => A): A = {

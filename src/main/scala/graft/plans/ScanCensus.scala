@@ -8,8 +8,9 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import scala.collection.mutable
 
 /** Structural per-table FileScan census of a query plan — the r7
-  * ScanAudit promoted from a text-grep dev tool to a library both the
-  * audit tool and the suite-wide PlanQualitySpec budget guard share.
+  * ScanAudit promoted from a text-grep dev tool to a library (that
+  * tool, a dev main last present at commit fba91a5, is gone; the
+  * suite-wide PlanQualitySpec budget guard is its consumer).
   *
   * Counts every `FileSourceScanExec` one *execution* of the frame
   * would run: walks the executed plan tree, descends through the AQE

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev utility: print the executed plan of one registered query.
   * Usage: runMain graft.tools.PlanDump <queryName> [sfDir]
@@ -9,12 +9,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cores = 4)
     spark.sparkContext.setLogLevel("ERROR")
     // "formatted" explain (r16): the judged plan artifacts under
     // plans/ must carry the numbered operator list with PushedFilters

@@ -3,15 +3,13 @@ package org.apache.spark.graft
 import java.io.File
 
 import org.apache.spark.SparkContext
-import org.apache.spark.storage.BlockId
 
-/** The one shim into `private[spark]` state. Besides the listener-bus
-  * flush, three numbers the public API does not expose for the
-  * suite-state-tax diagnosis (r10 task 1): what is ON DISK in the
-  * block-manager local dirs (leftover shuffle/spill files), what is IN
-  * the memory store (unreleased broadcast / RDD blocks), and how many
-  * of each block family survive between queries. Only the package
-  * placement is ours; every accessor is one Spark's own tests use.
+/** The one shim into `private[spark]` state: the listener-bus flush,
+  * and what is ON DISK in the block-manager local dirs (leftover
+  * shuffle/spill files), which the public API does not expose and
+  * `graft.BenchKernel.settleScratch` waits on between timings. Only
+  * the package placement is ours; every accessor is one Spark's own
+  * tests use.
   */
 object SparkStateProbe {
 
@@ -45,32 +43,5 @@ object SparkStateProbe {
     }
     localDirs(sc).foreach(walk)
     (files, bytes)
-  }
-
-  /** Bytes of storage memory in use (cached RDDs, broadcast values,
-    * unrolled blocks) as the unified memory manager accounts them.
-    */
-  def memoryStoreBytes(sc: SparkContext): Long =
-    sc.env.memoryManager.storageMemoryUsed
-
-  /** Bytes of EXECUTION memory the unified manager still counts as
-    * acquired (r16 suite-tax hunt). Between queries this must read
-    * zero — every task releases its consumers on completion. A
-    * non-zero reading at a slot boundary means leaked task-memory
-    * bookkeeping, which silently shrinks every later task's fair
-    * share (pool / 2·activeTasks floor) until hash aggregates fail
-    * to grow and drop to the sort-based + interpreted-projection
-    * fallback — the q128 suite-tax signature (same input, same
-    * shuffle, 2.4× task-CPU, sort frames hot in the JFR profile).
-    */
-  def executionMemoryBytes(sc: SparkContext): Long =
-    sc.env.memoryManager.executionMemoryUsed
-
-  /** Live block counts by family: (rdd, broadcast, other). */
-  def blockCounts(sc: SparkContext): (Int, Int, Int) = {
-    val ids = sc.env.blockManager.getMatchingBlockIds((_: BlockId) => true)
-    val rdd = ids.count(_.isRDD)
-    val bc = ids.count(_.isBroadcast)
-    (rdd, bc, ids.size - rdd - bc)
   }
 }

@@ -366,7 +366,8 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("suite-wide scan budget: no query file-scans any table beyond its declared budget") {
-    // the r7 ScanAudit promoted to CI (r8): a structural FileScan
+    // the r7 ScanAudit sweep (a dev main last present at commit
+    // fba91a5) promoted to CI (r8): a structural FileScan
     // census (graft.plans.ScanCensus — AQE-unwrapped, subquery-aware,
     // each distinct cached build plan counted once) over EVERY
     // registered query, checked against the default budget of 1 scan

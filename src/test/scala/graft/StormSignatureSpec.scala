@@ -44,6 +44,16 @@ class StormSignatureSpec extends AnyFunSuite {
       t(0.31, 60, 0), t(0.40, 120, 0)))
   }
 
+  test("unreported input (-1) on both samples keeps the cpu arm silent") {
+    // a window whose IO accounting went unreported reads -1, never a
+    // measured 0: a 1.5x task-CPU step must not buy samples through
+    // the consistent-zero fallback, while host steal still does
+    assert(!BenchKernel.stormSignature(
+      t(1.0, 1000, -1), t(1.4, 1500, -1)))
+    assert(BenchKernel.stormSignature(
+      t(1.0, 1000, -1), t(1.4, 1500, -1, steal = 0.05)))
+  }
+
   test("host anomaly arm is independent of input accounting") {
     assert(BenchKernel.stormSignature(
       t(1.0, 1000, 0, sys = 0.1), t(1.4, 1100, 0, sys = 0.1, steal = 0.05)))

@@ -74,7 +74,10 @@ def storm_signature(fast, slow):
     present and flat (r15 ADVICE: missing IO metrics must not default
     to 'flat input'), with the r17 zero-input fallback — a CONSISTENT
     0 MB on both sides is a genuinely sub-MB scan (q92/q93 class) and
-    keeps cpu-inflation protection above a 100 ms task-CPU floor."""
+    keeps cpu-inflation protection above a 100 ms task-CPU floor.
+    `input_mb` / `task_cpu_ms` of -1 mean "unreported" (the window's
+    IO accounting was incomplete, or the row predates the field); no
+    clause of the cpu arm admits -1."""
     if fast is None or slow is None:
         return False
     fi, si = fast["input_mb"], slow["input_mb"]

@@ -4,8 +4,10 @@
 Usage: oracle_check.py [sf_dir] [verify_out_dir]
 Mimics the driver: run each oracle SQL in DuckDB over the same parquet
 tables, sort columns by name, compare row count / schema / values.
+Then re-checks Verify's scan_ledger.json, when present: every query
+with a non-empty `over_budget` object is listed, followed by a count.
 """
-import sys, json, math
+import os, sys, json, math
 import duckdb
 import pandas as pd
 
@@ -61,4 +63,15 @@ for name in sorted(oracle):
     else:
         n_ok += 1
         print(f'{name}: OK ({len(exp)} rows)')
+
+ledger_path = f'{out_dir}/scan_ledger.json'
+if os.path.exists(ledger_path):
+    ledger = json.load(open(ledger_path))
+    flagged = 0
+    for name in sorted(ledger):
+        over = ledger[name].get('over_budget', {})
+        if over:
+            flagged += 1
+            print(f'{name:<28} OVER-BUDGET {json.dumps(over, sort_keys=True)}')
+    print(f"{flagged} over-budget quer{'y' if flagged == 1 else 'ies'} in {ledger_path}")
 print(f'== {n_ok}/{len(oracle)} OK ==')
