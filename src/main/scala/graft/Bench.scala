@@ -243,11 +243,11 @@ private[graft] object BenchKernel {
     val sc = spark.sparkContext
     val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
     var prev = Long.MaxValue
-    var bytes = org.apache.spark.graft.SparkStateProbe.diskUsage(sc)._2
+    var bytes = org.apache.spark.sql.graftbridge.SparkBridge.diskUsage(sc)._2
     while (bytes > (1L << 30) && bytes < prev && System.nanoTime() < deadline) {
       prev = bytes
       Thread.sleep(500)
-      bytes = org.apache.spark.graft.SparkStateProbe.diskUsage(sc)._2
+      bytes = org.apache.spark.sql.graftbridge.SparkBridge.diskUsage(sc)._2
     }
   }
 
@@ -364,7 +364,7 @@ private[graft] object BenchKernel {
     // a timeout leaves the window's IO totals incomplete, so the
     // timing goes on with input/CPU marked unreported
     val flushed =
-      try { org.apache.spark.graft.SparkStateProbe.waitUntilEmpty(spark.sparkContext); true }
+      try { org.apache.spark.sql.graftbridge.SparkBridge.waitUntilEmpty(spark.sparkContext); true }
       catch { case _: java.util.concurrent.TimeoutException => false }
     val reported = flushed && ioListener.unreported.get() == ur0
     val cpu1 = cpuTimes

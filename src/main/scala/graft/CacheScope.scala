@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.execution.CachedData
 
 /** Cleanup registry for intermediates persisted inside a query lambda.
   *
@@ -8,51 +11,45 @@ import org.apache.spark.sql.DataFrame
   * sub-distance table) cannot unpersist it before returning — the
   * returned DataFrame is lazy and the cache is only populated (and
   * read) when the CALLER runs an action. Routing those persists
-  * through [[scoped]] records them here so the caller can release
-  * every block with one [[drain]] after its action completes.
+  * through [[scoped]] records them so the caller can release every
+  * block with one [[drain]] after its action completes.
   * `graft.Verify` and `graft.Bench` drain after each query; library
   * callers embedding a query in a longer-lived session should do the
   * same (or accept LRU eviction pressure).
   *
-  * CONTRACT — single-threaded, one action per query, then drain. The
-  * registry is process-global by design (one registry, one drain
-  * point, zero plumbing through query signatures), which means:
-  *   - concurrent query builds would interleave registrations, and a
-  *     drain by one caller unpersists the other's in-flight caches —
-  *     build and run queries sequentially per process;
-  *   - after drain, re-running an action on a returned frame
+  * CONTRACT — per thread: build a query, run one action, then drain,
+  * all on one thread. Registrations belong to the thread that made
+  * them, and [[drain]] releases only the calling thread's, so queries
+  * on other threads of the same session keep their caches.
+  *   - Two queries may persist the same plan (q27 and q103 both build
+  *     `TextQueries.lshCandidates`), which Spark stores as ONE cache
+  *     entry. Each entry counts its undrained registrations across
+  *     threads, and only the drain that releases the last one
+  *     unpersists it.
+  *   - After drain, re-running an action on a returned frame
   *     recomputes scoped sub-plans uncached; for the
   *     [[graft.operators.DistributedRank]] kernels specifically the
   *     recomputed range partitioning may sample differently than the
   *     driver-frozen offsets, so collect results BEFORE draining and
   *     treat returned frames as single-action.
-  * Callers needing concurrent queries should hold their own persists
-  * instead of [[scoped]] and release them per-query.
-  *
-  * The contract is ENFORCED, not just documented: the first [[scoped]]
-  * call after a drain records the owning thread, and a registration
-  * from any other thread before the next [[drain]] throws — loudly,
-  * at build time — instead of letting a second session's drain
-  * silently unpersist the first's in-flight caches (which would not
-  * corrupt results, lazy frames recompute, but would corrupt the
-  * drain accounting and every timing built on it).
   */
 object CacheScope {
-  private val registry = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private val owner = new java.util.concurrent.atomic.AtomicReference[Thread](null)
+  /** This thread's registrations since its last [[drain]]. */
+  private val mine = ThreadLocal.withInitial(() => mutable.ArrayBuffer[(DataFrame, CachedData)]())
+  /** Undrained registrations per cache entry, over all threads; guarded
+    * by `holders` itself, which also orders a persist against a
+    * concurrent last-holder unpersist of the same entry.
+    */
+  private val holders = mutable.Map[CachedData, Int]()
 
-  /** Persist `df` and register it for the next [[drain]]. */
-  def scoped(df: DataFrame): DataFrame = {
-    val me = Thread.currentThread()
-    val prev = owner.compareAndExchange(null, me)
-    if (prev != null && (prev ne me))
-      throw new java.util.ConcurrentModificationException(
-        s"CacheScope: thread '${me.getName}' registered a scoped cache while " +
-          s"thread '${prev.getName}' has undrained registrations — the registry " +
-          "is single-owner between drains (see the class contract); run queries " +
-          "sequentially or hold persists privately for concurrent work")
+  /** Persist `df` and register it for this thread's next [[drain]]. */
+  def scoped(df: DataFrame): DataFrame = holders.synchronized {
     val p = df.persist()
-    registry.add(p)
+    val cache = p.sparkSession.sharedState.cacheManager
+    cache.lookupCachedData(p.asInstanceOf[classic.Dataset[_]]).foreach { entry =>
+      holders(entry) = holders.getOrElse(entry, 0) + 1
+      mine.get += (p -> entry)
+    }
     p
   }
 
@@ -80,28 +77,24 @@ object CacheScope {
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes >= minInputBytes) scoped(df)
     else df
 
-  /** Unpersist (non-blocking) everything registered since the last
-    * drain. Safe to call with nothing registered, and safe to call
+  /** Release (non-blocking) every registration this thread made since
+    * its last drain, unpersisting each entry no other thread still
+    * holds. Safe to call with nothing registered, and safe to call
     * after `catalog.clearCache()` (unpersist of an evicted frame is a
-    * no-op). Enforced symmetrically with [[scoped]]: a drain from a
-    * thread that is not the recorded owner while registrations are
-    * outstanding throws instead of silently unpersisting the owner's
-    * in-flight caches. */
+    * no-op).
+    */
   def drain(): Unit = {
-    val o = owner.get()
-    if (o != null && (o ne Thread.currentThread()) && !registry.isEmpty)
-      throw new java.util.ConcurrentModificationException(
-        s"CacheScope: thread '${Thread.currentThread().getName}' drained while " +
-          s"thread '${o.getName}' has undrained registrations — the registry is " +
-          "single-owner between drains (see the class contract)")
-    var df = registry.poll()
-    while (df != null) {
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      df = registry.poll()
+    val regs = mine.get
+    mine.remove()
+    holders.synchronized {
+      regs.foreach { case (df, entry) =>
+        val left = holders(entry) - 1
+        if (left > 0) holders(entry) = left
+        else {
+          holders.remove(entry)
+          try df.unpersist(blocking = false) catch { case _: Throwable => () }
+        }
+      }
     }
-    // release ownership last: a racing scoped() between the final poll
-    // and this point re-claims for its own thread, which is the
-    // sequential hand-off the contract allows
-    owner.set(null)
   }
 }

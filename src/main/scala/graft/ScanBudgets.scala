@@ -73,16 +73,15 @@ object ScanBudgets {
     // dominance self-join (skyline): candidate vs challenger sides
     "q127_skyline_parts" -> Map("part" -> 2),
 
-    // size-adaptive funnel (r17): the staged tier (≥64 MB estimated
-    // events) pays one pruned type-filtered scan per stage —
-    // view/click/purchase minima cascade, each min-aggregated map-side
-    // before its |users|-sized exchange — where the one-scan fold tier
-    // ships EVERY funnel event through collect_list + an interpreted
-    // HOF (the q128-class in-suite tax; see EventQueries q87). The
-    // census at tiny SF resolves the fold tier (1 scan, under budget);
-    // 3 covers the staged tier's per-stage scans, with the v/c stage
-    // persists bounding the would-be re-derivations.
-    "q87_funnel_conversion" -> Map("events" -> 3),
+    // size-adaptive funnel (r17): the census and the ledger resolve
+    // the one-scan fold tier, so its budget stays at 1. The staged
+    // tier (≥64 MB estimated events) pays one pruned type-filtered
+    // scan per stage — view/click/purchase minima cascade, each
+    // min-aggregated map-side before its |users|-sized exchange —
+    // where the fold tier ships EVERY funnel event through
+    // collect_list + an interpreted HOF (the q128-class in-suite tax;
+    // see EventQueries q87); PlanQualitySpec's q87 test pins its count.
+    "q87_funnel_conversion" -> Map("events" -> 1),
 
     // MODEL+APPLY class ----------------------------------------------
     // histogram boundaries derived, then rows bucketed

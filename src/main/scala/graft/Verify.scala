@@ -32,8 +32,8 @@ object Verify {
       // entries across all ~132 dumps — bound each query to its own
       spark.catalog.clearCache()
       try {
-        val (_, counts) = plans.ScanLedger.measure(spark) {
-          d.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        val (_, counts) = plans.ScanLedger.measure(spark) { s =>
+          d.build(s, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         }
         val over = counts.filter { case (t, c) => c > d.ledgerBudget(t) }

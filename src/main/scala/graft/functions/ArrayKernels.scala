@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -173,7 +173,7 @@ case class CharNgramHashesSorted(child: Expression, n: Int)
 
 object CharNgramHashesSorted {
   def apply(text: Column, n: Int): Column =
-    ColumnBridge.column(CharNgramHashesSorted(ColumnBridge.expression(text), n))
+    SparkBridge.column(CharNgramHashesSorted(SparkBridge.expression(text), n))
 }
 
 /** See [[ArrayKernels.orderedLongPairs]]. */
@@ -204,7 +204,7 @@ case class OrderedLongPairs(child: Expression)
 
 object OrderedLongPairs {
   def apply(arr: Column): Column =
-    ColumnBridge.column(OrderedLongPairs(ColumnBridge.expression(arr)))
+    SparkBridge.column(OrderedLongPairs(SparkBridge.expression(arr)))
 }
 
 /** See [[ArrayKernels.sortedLongIntersectCount]]. */
@@ -233,8 +233,8 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
 
 object SortedLongIntersectCount {
   def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      SortedLongIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    SparkBridge.column(
+      SortedLongIntersectCount(SparkBridge.expression(a), SparkBridge.expression(b)))
 }
 
 /** See [[ArrayKernels.longPosAgreeCount]]. */
@@ -263,6 +263,6 @@ case class LongPosAgreeCount(left: Expression, right: Expression)
 
 object LongPosAgreeCount {
   def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      LongPosAgreeCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    SparkBridge.column(
+      LongPosAgreeCount(SparkBridge.expression(a), SparkBridge.expression(b)))
 }

@@ -54,8 +54,8 @@ case class BloomMightContain(child: Expression, bloom: Broadcast[BloomFilter])
 }
 
 object BloomMightContain {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
+  import org.apache.spark.sql.graftbridge.SparkBridge
 
   def apply(c: Column, bloom: Broadcast[BloomFilter]): Column =
-    ColumnBridge.column(BloomMightContain(ColumnBridge.expression(c), bloom))
+    SparkBridge.column(BloomMightContain(SparkBridge.expression(c), bloom))
 }

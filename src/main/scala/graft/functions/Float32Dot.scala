@@ -71,9 +71,9 @@ case class Float32Dot(left: Expression, right: Expression)
 }
 
 object Float32Dot {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
+  import org.apache.spark.sql.graftbridge.SparkBridge
   /** Column-facing constructor (Spark 4 classic Column↔Expression bridge). */
   def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      Float32Dot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    SparkBridge.column(
+      Float32Dot(SparkBridge.expression(a), SparkBridge.expression(b)))
 }

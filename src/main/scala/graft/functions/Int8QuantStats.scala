@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.types._
 
 /** Int8 symmetric quantization statistics over one `array<float>`
@@ -101,5 +101,5 @@ object Int8QuantStats {
 
   /** Column-facing constructor (Spark 4 classic Column↔Expression bridge). */
   def apply(a: Column): Column =
-    ColumnBridge.column(Int8QuantStats(ColumnBridge.expression(a)))
+    SparkBridge.column(Int8QuantStats(SparkBridge.expression(a)))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -236,5 +236,5 @@ object PiiStats {
 
   /** Column-facing constructor (Spark 4 classic Column↔Expression bridge). */
   def apply(a: Column): Column =
-    ColumnBridge.column(PiiStats(ColumnBridge.expression(a)))
+    SparkBridge.column(PiiStats(SparkBridge.expression(a)))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -305,30 +305,30 @@ case class SpaceTokenCount(child: Expression) extends IntTextKernelExpression {
 
 object SubwordCount {
   def apply(text: Column): Column =
-    ColumnBridge.column(SubwordCount(ColumnBridge.expression(text)))
+    SparkBridge.column(SubwordCount(SparkBridge.expression(text)))
 }
 
 object SpaceTokenCount {
   def apply(text: Column): Column =
-    ColumnBridge.column(SpaceTokenCount(ColumnBridge.expression(text)))
+    SparkBridge.column(SpaceTokenCount(SparkBridge.expression(text)))
 }
 
 object CharNgramsDistinct {
   def apply(text: Column, n: Int): Column =
-    ColumnBridge.column(CharNgramsDistinct(ColumnBridge.expression(text), n))
+    SparkBridge.column(CharNgramsDistinct(SparkBridge.expression(text), n))
 }
 
 object RollingHash64 {
   def apply(text: Column): Column =
-    ColumnBridge.column(RollingHash64(ColumnBridge.expression(text)))
+    SparkBridge.column(RollingHash64(SparkBridge.expression(text)))
 }
 
 object StopwordHits {
   def apply(text: Column, words: Seq[String]): Column =
-    ColumnBridge.column(StopwordHits(ColumnBridge.expression(text), words))
+    SparkBridge.column(StopwordHits(SparkBridge.expression(text), words))
 }
 
 object WordShingles {
   def apply(text: Column, n: Int): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n))
+    SparkBridge.column(WordShingles(SparkBridge.expression(text), n))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** 2-D Morton (Z-order) interleave — the clustering key behind
@@ -61,5 +61,5 @@ case class ZOrder64(left: Expression, right: Expression)
 
 object ZOrder64 {
   def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(ZOrder64(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    SparkBridge.column(ZOrder64(SparkBridge.expression(a), SparkBridge.expression(b)))
 }

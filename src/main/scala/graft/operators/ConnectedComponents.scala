@@ -66,8 +66,8 @@ object ConnectedComponents {
     // count-sized partitions): each round's checkpoint is ONE job of
     // few right-sized tasks instead of AQE's per-exchange scheduling
     // round-trips — the measured iterative floor (see TightLoop).
-    TightLoop.scoped(
-      sel.sparkSession, TightLoop.partsForRows(sel.sparkSession, symCount)) {
+    // The body's `sym` is the adjacency rebound into the loop session.
+    TightLoop.scoped(sym, TightLoop.partsForRows(sel.sparkSession, symCount)) { sym =>
 
     // Lineage: each round's plan references the previous round's, so
     // raw lineage compounds per iteration and blows the heap by round
@@ -631,9 +631,10 @@ object ConnectedComponents {
     // per-exchange scheduling round-trips — the measured iterative
     // floor (see TightLoop). The symmetric closure doubles rows,
     // hence 2× the checkpointed count.
+    // The body's `raw` is the edge checkpoint rebound into the loop
+    // session; `e` comes back bound to the caller's.
     val loopState = if (certified) (raw, 0) else TightLoop.scoped(
-      raw.sparkSession,
-      TightLoop.partsForRows(raw.sparkSession, 2L * rawCount)) {
+      raw, TightLoop.partsForRows(raw.sparkSession, 2L * rawCount)) { raw =>
       // the distinct canonicalizes duplicate edges (cross-partition
       // duplicate forest edges on the contracted path, caller
       // duplicates on the raw path) and lays the loop input out at

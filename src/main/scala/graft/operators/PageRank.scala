@@ -111,7 +111,7 @@ object PageRank {
     // previous round's groupBy hash-split exactly like the cached edge
     // layout — so the per-round cost is the single destination-sum
     // exchange.
-    TightLoop.scoped(cp.sparkSession, parts) {
+    TightLoop.scoped(cp, parts) { cp =>
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("a"))
       val e = graft.CacheScope.scoped(
         cp.repartition(col("a")).withColumn("d", count(lit(1)).over(w)))
@@ -164,7 +164,7 @@ object PageRank {
       // the caller drops the frame (Bench GCs between queries); the
       // cached edge frame is CacheScope-registered for the caller's
       // post-action drain()
-      out
-    }
+      (out, ())
+    }._1
   }
 }

@@ -1,10 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SparkBridge
 
 /** Execution scope for driver-driven iterative loops (components,
   * PageRank): AQE off + a data-sized shuffle-partition count for the
-  * duration of the loop's internal actions, restored on exit.
+  * loop's internal actions, and for nothing else.
   *
   * Why: a star/propagation round at moderate data is a 2-3-exchange
   * plan over a few hundred thousand rows. Under AQE every exchange
@@ -27,28 +28,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * co-partitioned round joins must NOT be broadcast-converted (that
   * is the q101 "nothing node-count-sized broadcast" discipline).
   *
-  * Contract: same single-owner threading rule as [[graft.CacheScope]]
-  * — session conf is process-global, so a concurrent query planned
-  * while a loop holds the scope would pick up the loop's settings
-  * (AQE off + a loop-sized partition count) without asking for them.
-  * Build and run queries sequentially per session.
-  *
-  * The contract is ENFORCED, not just documented (the same CAS-owner
-  * pattern [[graft.CacheScope]] uses): [[scoped]] records the owning
-  * thread on entry, a second thread opening a scope while one is held
-  * throws loudly instead of stacking conf mutations whose unwind
-  * order would restore the WRONG previous values, and same-thread
-  * re-entry (a loop inside a loop) is rejected for the same reason —
-  * the inner restore would reinstate the outer loop's settings as if
-  * they were the session's. Exit always releases ownership, even when
-  * the body throws.
+  * Contract: the scope is the loop's own session. [[scoped]] runs
+  * the body on a clone of the input frame's session (the clone shares
+  * the SparkContext and the cache, and inherits the session's conf,
+  * functions and `QueryExecutionListener`s), sets the two loop knobs
+  * on the clone only, and hands the body its input rebound into the
+  * clone. The caller's session conf is never written, so queries
+  * planned concurrently on other threads keep their own settings, and
+  * a loop inside a loop is a clone of a clone. The body must derive
+  * every frame it plans from the input it is handed: a frame of the
+  * caller's session would plan with AQE on.
   */
 object TightLoop {
-
-  /** Owning thread of the currently open scope, or null. One scope per
-    * process at a time: the conf being mutated is process-global.
-    */
-  private val owner = new java.util.concurrent.atomic.AtomicReference[Thread](null)
 
   /** Partition count for the loop's exchanges: linear in the
     * optimizer's size estimate for the loop's input (no extra job),
@@ -83,28 +74,18 @@ object TightLoop {
       .min(cap.toLong).max(1L).toInt
   }
 
-  def scoped[A](spark: SparkSession, parts: Int)(body: => A): A = {
-    val me = Thread.currentThread()
-    val prev = owner.compareAndExchange(null, me)
-    if (prev != null)
-      throw new java.util.ConcurrentModificationException(
-        s"TightLoop: thread '${me.getName}' tried to open a loop scope while " +
-          s"thread '${prev.getName}' holds one — the scope mutates process-global " +
-          "session conf (AQE off, loop-sized shuffle partitions), so a second " +
-          "scope would plan with the first's settings and restore them in the " +
-          "wrong order (see the object contract); run loops sequentially")
-    val conf = spark.conf
-    val prevAqe = conf.getOption("spark.sql.adaptive.enabled")
-    val prevParts = conf.getOption("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body
-    finally {
-      prevAqe.fold(conf.unset("spark.sql.adaptive.enabled"))(
-        conf.set("spark.sql.adaptive.enabled", _))
-      prevParts.fold(conf.unset("spark.sql.shuffle.partitions"))(
-        conf.set("spark.sql.shuffle.partitions", _))
-      owner.set(null)
-    }
+  /** Run `body` on `input` rebound into a clone of its session with
+    * AQE off and `parts` shuffle partitions. The frame the body returns
+    * (the loop's result, normally an eager checkpoint) is rebound to
+    * `input`'s session before it leaves the scope, so downstream
+    * plans get the caller's conf; `A` carries anything else the loop
+    * reports, such as its round count.
+    */
+  def scoped[A](input: DataFrame, parts: Int)(body: DataFrame => (DataFrame, A)): (DataFrame, A) = {
+    val loop = SparkBridge.cloneSession(input.sparkSession)
+    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    loop.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    val (out, extra) = body(SparkBridge.rebind(loop, input))
+    (SparkBridge.rebind(input.sparkSession, out), extra)
   }
 }

@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.collection.mutable
@@ -27,10 +28,11 @@ import scala.collection.mutable
   * truncates lineage to materialized RDD blocks, so round N's plan
   * contains no file scan of round N−1 at all.
   *
-  * Single-owner, like every process-global scope in this engine
-  * ([[graft.CacheScope]], [[graft.operators.TightLoop]]): one ledger
-  * measures one query at a time. Listener callbacks themselves arrive
-  * on the bus thread and are synchronized.
+  * One ledger measures one query: [[ScanLedger.measure]] registers
+  * it on a clone of the session that only that query builds on, so
+  * queries on other threads of the same session are never counted.
+  * Listener callbacks themselves arrive on the bus thread and are
+  * synchronized.
   */
 final class ScanLedger extends QueryExecutionListener {
   private val seenCaches = mutable.Set[AnyRef]()
@@ -62,25 +64,21 @@ final class ScanLedger extends QueryExecutionListener {
 
 object ScanLedger {
 
-  /** Run `body` with a registered ledger; returns (body result,
-    * table -> scans run across every action body fired). Flushes the
+  /** Run `body` on a clone of `spark` that carries a registered
+    * ledger; returns (body result, table -> scans run across every
+    * action body fired). The body must build its query on the session
+    * it is handed. Loops it opens ([[graft.operators.TightLoop]]) clone
+    * that session in turn and so inherit the ledger. Flushes the
     * listener bus before reading — `QueryExecutionListener` events are
     * asynchronous, and without the flush a fast query's census races
     * its own delivery.
     */
-  def measure[A](spark: SparkSession)(body: => A): (A, Map[String, Int]) = {
+  def measure[A](spark: SparkSession)(body: SparkSession => A): (A, Map[String, Int]) = {
     val ledger = new ScanLedger
-    spark.listenerManager.register(ledger)
-    val out =
-      try body
-      finally {
-        // the flush can throw (Spark's waitUntilEmpty times out after
-        // ~10s on a backlogged bus) — unregister must run regardless,
-        // or the leaked ledger accumulates cross-query counts on the
-        // shared session and masks body's own exception
-        try org.apache.spark.graft.SparkStateProbe.waitUntilEmpty(spark.sparkContext)
-        finally spark.listenerManager.unregister(ledger)
-      }
+    val session = SparkBridge.cloneSession(spark)
+    session.listenerManager.register(ledger)
+    val out = body(session)
+    SparkBridge.waitUntilEmpty(spark.sparkContext)
     (out, ledger.counts)
   }
 }

@@ -2,11 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The CacheScope single-owner contract is enforced, not just
-  * documented: interleaved registration from a second thread before
-  * the owner drains must throw (a second session's drain would
-  * otherwise silently unpersist the first's in-flight caches and
-  * corrupt the drain accounting).
+/** CacheScope is per thread: a drain releases only the calling
+  * thread's registrations, and a cache entry two threads registered
+  * stays persisted until the last of them drains.
   */
 class CacheScopeSpec extends AnyFunSuite {
 
@@ -15,34 +13,39 @@ class CacheScopeSpec extends AnyFunSuite {
 
   private def df = Seq(1, 2, 3).toDF("v")
 
+  private def onThread(body: => Unit): Unit = {
+    @volatile var failure: Throwable = null
+    val t = new Thread(() => try body catch { case e: Throwable => failure = e })
+    t.start(); t.join()
+    if (failure != null) throw failure
+  }
+
   test("sequential scope-drain-scope hands ownership over cleanly") {
     CacheScope.drain() // isolate from any prior suite state
     val a = CacheScope.scoped(df)
     assert(a.count() == 3)
     CacheScope.drain()
-    // a different thread may own the next scope once drained — and
-    // must drain its own registrations (the r8 symmetric guard makes
-    // a cross-thread cleanup drain an error, not a courtesy)
     var ok = false
-    val t = new Thread(() => { CacheScope.scoped(df); ok = true; CacheScope.drain() })
-    t.start(); t.join()
+    onThread { CacheScope.scoped(df); ok = true; CacheScope.drain() }
     assert(ok)
     CacheScope.drain()
   }
 
-  test("interleaved registration from a second thread throws") {
+  test("a shared entry survives until its last holder drains") {
     CacheScope.drain()
-    CacheScope.scoped(df) // this thread now owns the scope
-    @volatile var caught: Throwable = null
-    val t = new Thread(() => {
-      try CacheScope.scoped(df)
-      catch { case e: Throwable => caught = e }
-    })
-    t.start(); t.join()
-    assert(caught != null, "second-thread registration should have thrown")
-    assert(caught.isInstanceOf[java.util.ConcurrentModificationException])
-    assert(caught.getMessage.contains("single-owner"))
+    spark.catalog.clearCache()
+    val p = CacheScope.scoped(Seq(7, 8, 9).toDF("s"))
+    // a second thread persists the same plan (one cache entry) and
+    // drains first: this thread still holds the entry
+    onThread {
+      val q = CacheScope.scoped(Seq(7, 8, 9).toDF("s"))
+      assert(q.count() == 3)
+      CacheScope.drain()
+    }
+    assert(p.storageLevel.useMemory, "the second thread's drain unpersisted a held entry")
     CacheScope.drain()
+    assert(p.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the last holder's drain should unpersist the entry")
   }
 
   test("the owning thread may register repeatedly before draining") {
@@ -56,24 +59,23 @@ class CacheScopeSpec extends AnyFunSuite {
   test("drain with nothing registered is a no-op and releases ownership") {
     CacheScope.drain()
     CacheScope.drain()
-    val t = new Thread(() => { CacheScope.scoped(df); CacheScope.drain() })
-    t.start(); t.join()
+    onThread { CacheScope.scoped(df); CacheScope.drain() }
     CacheScope.drain()
   }
 
-  test("a non-owner drain with undrained registrations throws; the owner's caches survive") {
+  test("a second thread's drain leaves this thread's caches persisted") {
     CacheScope.drain()
-    val p = CacheScope.scoped(df)
-    @volatile var caught: Throwable = null
-    val t = new Thread(() => {
-      try CacheScope.drain()
-      catch { case e: Throwable => caught = e }
-    })
-    t.start(); t.join()
-    assert(caught != null, "non-owner drain should have thrown")
-    assert(caught.isInstanceOf[java.util.ConcurrentModificationException])
-    assert(p.storageLevel.useMemory, "owner's cache was unpersisted by the stranger")
+    val p = CacheScope.scoped(Seq(4, 5, 6).toDF("w"))
+    var other: org.apache.spark.sql.DataFrame = null
+    onThread {
+      other = CacheScope.scoped(Seq(10, 11).toDF("x"))
+      CacheScope.drain()
+    }
+    assert(p.storageLevel.useMemory, "this thread's cache was unpersisted by another thread's drain")
+    assert(other.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the second thread's drain should release its own cache")
     CacheScope.drain()
+    assert(p.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
   test("scopedIfLarge persists above the size estimate threshold and skips below it") {

@@ -18,8 +18,8 @@ class PlanQualitySpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   // Every build below may register scoped caches; drain in `finally`
-  // so a failing assertion cannot leave CacheScope owned and cascade
-  // ConcurrentModificationExceptions into later specs.
+  // so a failing assertion cannot leave this thread's caches persisted
+  // into later specs.
   private def drained[A](body: => A): A =
     try body finally CacheScope.drain()
 
@@ -176,6 +176,11 @@ class PlanQualitySpec extends AnyFunSuite {
         .map(_.cacheBuilder.cachedPlan.canonicalized).distinct.size
       assert(distinctCaches == 2,
         s"expected the v/c stage persists (2 distinct cached relations), got $distinctCaches")
+      // the staged tier's events scans, pinned here because the census
+      // and the ledger only ever resolve the fold tier (budget 1): one
+      // pruned type-filtered scan per stage
+      val stagedScans = plans.ScanCensus.tableScans(staged)
+      assert(stagedScans == Map("events" -> 3), s"staged tier scans: $stagedScans")
     }
   }
 

@@ -23,8 +23,8 @@ class ScanLedgerSpec extends AnyFunSuite {
   private def ledgerCounts(name: String): Map[String, Int] = {
     val d = SparkEntry.defs.find(_.name == name).get
     spark.catalog.clearCache()
-    try ScanLedger.measure(spark) {
-      d.run(spark, dir).write.format("noop").mode("overwrite").save()
+    try ScanLedger.measure(spark) { s =>
+      d.run(s, dir).write.format("noop").mode("overwrite").save()
     }._2
     finally CacheScope.drain()
   }
@@ -33,8 +33,8 @@ class ScanLedgerSpec extends AnyFunSuite {
     val failures = SparkEntry.defs.flatMap { d =>
       spark.catalog.clearCache()
       val counts =
-        try ScanLedger.measure(spark) {
-          d.run(spark, dir).write.format("noop").mode("overwrite").save()
+        try ScanLedger.measure(spark) { s =>
+          d.run(s, dir).write.format("noop").mode("overwrite").save()
         }._2
         finally CacheScope.drain()
       counts.collect {
@@ -67,8 +67,8 @@ class ScanLedgerSpec extends AnyFunSuite {
   test("the ledger dedups a cached relation across the actions that read it") {
     import org.apache.spark.sql.functions._
     spark.catalog.clearCache()
-    val (_, counts) = ScanLedger.measure(spark) {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val (_, counts) = ScanLedger.measure(spark) { s =>
+      val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), length(col("text")).as("len")).persist()
       docs.count() // materializes: ONE real file scan
       docs.agg(sum(col("len"))).collect() // cache read, no scan
@@ -77,5 +77,31 @@ class ScanLedgerSpec extends AnyFunSuite {
     }
     assert(counts.getOrElse("documents", 0) == 1,
       s"three actions over one cached scan must ledger as 1, saw $counts")
+  }
+
+  test("a ledger open around a loop counts the loop's actions") {
+    import org.apache.spark.sql.functions._
+    spark.catalog.clearCache()
+    val (rounds, counts) = ScanLedger.measure(spark) { s =>
+      val docs = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"))
+      // the loop session is a clone of the ledger's: its checkpoint
+      // job (the documents scan) must land in this ledger
+      val (out, n) = operators.TightLoop.scoped(docs, 2) { in =>
+        (in.distinct().localCheckpoint(), 1)
+      }
+      assert(out.count() > 0)
+      n
+    }
+    assert(rounds == 1)
+    assert(counts.getOrElse("documents", 0) == 1,
+      s"the loop's checkpoint scan should ledger as 1, saw $counts")
+  }
+
+  test("a ledger counts only its own session's actions") {
+    val (_, counts) = ScanLedger.measure(spark) { _ =>
+      // an action on the shared session is another query's, not this one's
+      spark.read.parquet(s"$dir/part.parquet").count()
+    }
+    assert(counts.isEmpty, s"the shared session's scan leaked into the ledger: $counts")
   }
 }

@@ -1,77 +1,103 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The TightLoop single-owner contract is enforced, not just
-  * documented (round-9 hardening, same CAS pattern as CacheScope): a
-  * second thread opening a loop scope while one is held — i.e. a
-  * concurrent iterative query that would otherwise silently plan with
-  * the first loop's AQE-off + tiny-partition settings — throws at
-  * scope entry, and the restore path always reinstates the session's
-  * own conf even when the body throws.
+/** A TightLoop scope is the loop's own session: a clone of the input's
+  * session with AQE off and the loop's partition count. The caller's
+  * conf is never written, so a concurrent query, a second thread's
+  * loop and a nested loop each plan with their own settings.
   */
 class TightLoopSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def aqe = spark.conf.getOption("spark.sql.adaptive.enabled")
+  private def aqe = spark.conf.get("spark.sql.adaptive.enabled")
   private def parts = spark.conf.get("spark.sql.shuffle.partitions")
+  private def input: DataFrame = spark.range(100).toDF("a")
+
+  private def confOf(df: DataFrame): (String, String) =
+    (df.sparkSession.conf.get("spark.sql.adaptive.enabled"),
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
   test("scoped sets loop conf inside, restores session conf after") {
     val (aqe0, parts0) = (aqe, parts)
-    TightLoop.scoped(spark, 3) {
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
-      assert(parts == "3")
+    assert(aqe0 == "true")
+    TightLoop.scoped(input, 3) { in =>
+      assert(confOf(in) == ("false", "3"))
+      // the caller's session reads its own settings while the loop is open
+      assert(aqe == aqe0 && parts == parts0)
+      (in, ())
     }
     assert(aqe == aqe0 && parts == parts0)
+  }
+
+  test("the loop's internal plans are not adaptive and run at the loop's partitions") {
+    TightLoop.scoped(input, 3) { in =>
+      val plan = in.groupBy((col("a") % 7).as("k")).count().queryExecution.executedPlan
+      assert(!plan.isInstanceOf[AdaptiveSparkPlanExec], plan.toString)
+      val exchanges = plan.collect { case e: ShuffleExchangeExec => e.numPartitions }
+      assert(exchanges == Seq(3), plan.toString)
+      (in, ())
+    }
+  }
+
+  test("the returned frame belongs to the caller's session and plans adaptively") {
+    val (out, rounds) = TightLoop.scoped(input, 2) { in => (in.filter(col("a") < 10), 4) }
+    assert(rounds == 4)
+    assert(out.sparkSession eq spark)
+    val plan = out.groupBy((col("a") % 3).as("k")).count().queryExecution.executedPlan
+    assert(plan.isInstanceOf[AdaptiveSparkPlanExec], plan.toString)
+    assert(out.count() == 10)
   }
 
   test("restore runs even when the loop body throws") {
     val (aqe0, parts0) = (aqe, parts)
     intercept[RuntimeException] {
-      TightLoop.scoped(spark, 2) { throw new RuntimeException("loop body died") }
+      TightLoop.scoped(input, 2) { _ => throw new RuntimeException("loop body died") }
     }
     assert(aqe == aqe0 && parts == parts0)
   }
 
-  test("a second thread's loop inside an open scope fails loudly") {
-    @volatile var caught: Throwable = null
-    @volatile var innerRan = false
-    TightLoop.scoped(spark, 2) {
-      val t = new Thread(() => {
-        try TightLoop.scoped(spark, 5) { innerRan = true }
-        catch { case e: Throwable => caught = e }
+  test("a second thread's loop runs inside an open scope under its own conf") {
+    @volatile var inner: (String, String) = null
+    TightLoop.scoped(input, 2) { in =>
+      val t = new Thread(() => TightLoop.scoped(input, 5) { in2 =>
+        inner = confOf(in2)
+        (in2, ())
       })
       t.start(); t.join()
+      assert(confOf(in) == ("false", "2"), "the second loop changed this loop's conf")
+      (in, ())
     }
-    assert(caught != null, "second-thread scope entry should have thrown")
-    assert(caught.isInstanceOf[java.util.ConcurrentModificationException])
-    assert(caught.getMessage.contains("process-global"))
-    assert(!innerRan, "the second loop body must not run under the first's conf")
-    // and the failed entry must not have disturbed the open scope's
-    // restore: conf is back to the session's own settings here
-    assert(parts != "2")
+    assert(inner == ("false", "5"))
+    assert(parts != "2" && parts != "5")
   }
 
-  test("same-thread re-entry is rejected (nested restore would resurrect loop conf)") {
-    @volatile var innerRan = false
-    val caught = intercept[java.util.ConcurrentModificationException] {
-      TightLoop.scoped(spark, 2) {
-        TightLoop.scoped(spark, 5) { innerRan = true }
+  test("a nested loop runs on a clone of the loop's session") {
+    TightLoop.scoped(input, 3) { in =>
+      val (back, _) = TightLoop.scoped(in, 5) { in2 =>
+        assert(confOf(in2) == ("false", "5"))
+        (in2, ())
       }
+      assert(back.sparkSession eq in.sparkSession)
+      assert(confOf(in) == ("false", "3"))
+      (in, ())
     }
-    assert(caught.getMessage.contains("TightLoop"))
-    assert(!innerRan)
+    assert(aqe == "true")
   }
 
   test("sequential scopes hand ownership over cleanly across threads") {
-    TightLoop.scoped(spark, 2) { () }
+    TightLoop.scoped(input, 2) { in => (in, ()) }
     @volatile var ok = false
-    val t = new Thread(() => TightLoop.scoped(spark, 3) { ok = true })
+    val t = new Thread(() => TightLoop.scoped(input, 3) { in => ok = true; (in, ()) })
     t.start(); t.join()
     assert(ok)
-    TightLoop.scoped(spark, 4) { () } // and back to this thread
+    TightLoop.scoped(input, 4) { in => (in, ()) } // and back to this thread
   }
 }
