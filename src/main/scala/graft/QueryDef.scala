@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One engine query: a Spark-first implementation plus (when
-  * SQL-expressible) an equivalent ANSI-SQL oracle the driver runs in
-  * DuckDB over the same parquet tables.
+/** One engine query: a Spark-first implementation plus an equivalent
+  * ANSI-SQL oracle the driver runs in DuckDB over the same parquet
+  * tables.
   *
   * Determinism contract (so Spark output hash-matches the oracle):
   *   - every output is fully ordered with explicit tiebreaks;
@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
+    oracle: String,
     scanBudgets: Map[String, Int] = Map.empty,
     buildActionScans: Map[String, Int] = Map.empty) {
 
@@ -58,9 +58,5 @@ final case class QueryDef(
 object QueryDef {
   def sql(name: String, oracleSql: String)(
       run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, Some(oracleSql))
-
-  /** Non-SQL-expressible op: driver records a weaker rows-only check. */
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, None)
+    QueryDef(name, run, oracleSql)
 }

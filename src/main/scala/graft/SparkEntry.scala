@@ -35,7 +35,7 @@ object SparkEntry {
     defs.map(d => d.name -> ((s: SparkSession, dir: String) => d.build(s, dir))).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   lazy val oracleSql: Map[String, String] =
-    defs.flatMap(d => d.oracle.map(sql => d.name -> sql)).toMap
+    defs.map(d => d.name -> d.oracle).toMap
 }

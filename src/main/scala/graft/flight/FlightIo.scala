@@ -14,9 +14,7 @@ import java.time.format.DateTimeFormatter
   *
   * The `year=/month=/day=` segments mirror the reference's hand-built
   * layout (one leaf dir per run, NOT Hive `partitionBy` —
-  * `load.py:43,75`); [[writeParquetPartitioned]] offers the real
-  * partitioned layout as the scale-path option, which turns newest-
-  * snapshot reads into partition-pruned scans.
+  * `load.py:43,75`).
   */
 object FlightIo {
 
@@ -47,17 +45,6 @@ object FlightIo {
     val path = timestampedPath(base, now)
     df.write.mode("overwrite").parquet(path)
     path
-  }
-
-  /** Scale-path alternative: real Hive partitioning so downstream
-    * readers get partition pruning for free.
-    */
-  def writeParquetPartitioned(df: DataFrame, base: String): Unit = {
-    import org.apache.spark.sql.functions._
-    df.withColumn("year", year(current_date()))
-      .withColumn("month", month(current_date()))
-      .withColumn("day", dayofmonth(current_date()))
-      .write.partitionBy("year", "month", "day").mode("append").parquet(base)
   }
 
   /** Newest-snapshot resolution (`answers.py:197-203`): list files

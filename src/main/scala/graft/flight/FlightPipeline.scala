@@ -9,8 +9,7 @@ import java.time.ZonedDateTime
   * `/root/reference/src/main.py:105-153`), batch-first: one run = one
   * timestamped snapshot of each layer. Scheduling (the reference's
   * hourly Prefect deployment, `main.py:156`) is out of engine scope —
-  * call [[run]] from cron/Airflow/etc., or use
-  * [[graft.streaming.StreamOps]] for the continuous variant.
+  * call [[run]] from cron/Airflow/etc. or [[FlightScheduler]].
   */
 final class FlightPipeline(
     spark: SparkSession,

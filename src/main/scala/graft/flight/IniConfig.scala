@@ -25,8 +25,6 @@ final class IniConfig private (
     sections = sections.updated(section, s.updated(key.toLowerCase, value))
   }
 
-  def sectionNames: Seq[String] = sections.keys.toSeq
-
   def save(path: Path): Unit = {
     val text = sections.map { case (name, kvs) =>
       s"[$name]\n" + kvs.map { case (k, v) => s"$k = $v" }.mkString("\n")

@@ -64,19 +64,6 @@ object TextFunctions {
     "de" -> Seq("der", "die", "das", "und", "ist", "ein", "eine", "mit", "von", "zu"),
     "fr" -> Seq("le", "les", "et", "une", "est", "dans", "pour", "sur", "au", "ce"))
 
-  /** Heuristic language-ID: argmax of stopword hits with fixed
-    * priority tiebreak; zero hits everywhere → "und" (undetermined).
-    */
-  def langId(text: Column): Column = {
-    val hits = langStopwords.map { case (lang, words) => lang -> stopwordHits(text, words) }
-    val best = hits.tail.foldLeft(when(lit(true), hits.head._2)) { case (acc, (_, h)) => when(h > acc, h).otherwise(acc) }
-    val zero = hits.map(_._2).reduce(_ + _) === 0
-    val pick = hits.reverse.foldLeft(lit("und")) { case (acc, (lang, h)) =>
-      when(h === best, lit(lang)).otherwise(acc)
-    }
-    when(zero, lit("und")).otherwise(pick)
-  }
-
   /** Mean token length over single-space-joined text, exact-integer
     * numerator with one final double division (oracle-stable).
     */

@@ -40,13 +40,4 @@ object VectorFunctions {
     */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / sqrt(normSq(a) * normSq(b))
-
-  /** Euclidean (L2) distance in double. */
-  def l2(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = (x - y).cast(DoubleType); d * d
-      }),
-      lit(0.0),
-      (acc, x) => acc + x))
 }

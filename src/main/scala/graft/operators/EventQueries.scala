@@ -5,10 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Event-stream analytics in batch form over the `events` table. The
-  * same logic runs incrementally in [[graft.streaming.StreamOps]] via
-  * Structured Streaming (watermark + windows / stateful sessionization);
-  * the batch forms here are the oracle-checkable equivalents.
+/** Event-stream analytics in batch form over the `events` table, each
+  * query oracle-checkable.
   *
   * Scale design: sessionization is a single shuffle on `user_id`
   * followed by two window passes over the same partitioning (Spark

@@ -114,7 +114,7 @@ object NearDup {
     * signature cache. At 100 TB these are the tables a production
     * dedup service keeps on disk between crawl batches: the corpus
     * TEXT is read once at build time, and every later operation
-    * (full pair listing, incremental batch, index merge) runs at
+    * (full pair listing, incremental batch) runs at
     * canonical scale from the stored gram hashes.
     */
   final case class Index(
@@ -125,9 +125,6 @@ object NearDup {
     /** Exploded LSH band keys (band, bk, canon_id) — block columns
       * folded into the key hash. */
     def bandRows: DataFrame = bandRowsOf(sigs, blockCols)
-
-    /** Release both persisted tables (streaming epoch rotation). */
-    def unpersist(): Unit = { clusters.unpersist(); sigs.unpersist() }
   }
 
   /** Near-dup pairs with exact Jaccard ≥ `threshold`, blocked by
@@ -173,14 +170,6 @@ object NearDup {
       .persist()
     Index(clusters, sigsOf(clusters, blockCols), blockCols)
   }
-
-  /** Re-derive an index from a clusters table (e.g. one reloaded from
-    * disk or localCheckpointed to cut cross-batch lineage) — the
-    * signature aggregation reads the stored gram hashes, no text
-    * involved.
-    */
-  def indexFromClusters(clusters: DataFrame, blockCols: Seq[String]): Index =
-    Index(clusters, sigsOf(clusters, blockCols), blockCols)
 
   /** The 16-long MinHash signature table of a clusters table — no
     * text scan: one projection explodes the STORED gram hashes and
@@ -352,20 +341,8 @@ object NearDup {
       newDocs: DataFrame,
       threshold: Double = 0.6,
       agreeFloor: Int = -1,
-      maxBandBucket: Int = Int.MaxValue): DataFrame =
-    incrementalPairsIndexed(index, buildIndex(newDocs, index.blockCols),
-      threshold, agreeFloor, maxBandBucket)
-
-  /** [[incrementalPairs]] with the batch already indexed — callers
-    * that both list pairs AND merge (the streaming service) index the
-    * batch once and share it.
-    */
-  def incrementalPairsIndexed(
-      index: Index,
-      fresh: Index,
-      threshold: Double,
-      agreeFloor: Int = -1,
       maxBandBucket: Int = Int.MaxValue): DataFrame = {
+    val fresh = buildIndex(newDocs, index.blockCols)
     // the cap reduces the CORPUS side (where replica-inflated buckets
     // live — batch buckets are batch-sized): new docs meet an
     // oversized corpus bucket through its hub
@@ -378,27 +355,5 @@ object NearDup {
         fresh, fresh, threshold, agreeFloor))
       .unionAll(withinCluster(fresh.clusters))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** Fold a new batch into the index for the next round: clusters with
-    * the same (block, fingerprint) merge (members concatenate, canon =
-    * min doc id), and the signature/band tables are re-derived from
-    * the merged clusters' STORED hashes — the corpus text is never
-    * re-read.
-    */
-  def mergeIndex(index: Index, newDocs: DataFrame): Index =
-    mergeIndex(index, buildIndex(newDocs, index.blockCols))
-
-  /** [[mergeIndex]] with the batch already indexed. */
-  def mergeIndex(index: Index, fresh: Index): Index = {
-    val blocks = index.blockCols.map(col)
-    val merged = index.clusters.unionByName(fresh.clusters)
-      .groupBy(col("fp") +: blocks: _*)
-      .agg(
-        min(col("canon_id")).as("canon_id"),
-        flatten(collect_list(col("members"))).as("members"),
-        first(col("hashes")).as("hashes"))
-      .persist()
-    Index(merged, sigsOf(merged, index.blockCols), index.blockCols)
   }
 }

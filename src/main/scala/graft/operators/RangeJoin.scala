@@ -93,22 +93,17 @@ object RangeJoin {
     * decompression allowance keeps the collect itself under the
     * driver's own limit; default 1g/4 = 256 MB, still above the
     * shipped 100× events stats), capped at 1 GB however large the
-    * driver. `graft.rangeJoin.broadcastStatsMaxBytes` overrides for
-    * deployments that know their data. Misdispatch is performance,
-    * not correctness — both tiers are exact — but the conservative
-    * bound keeps the chosen plan RUNNABLE, never one that dies on
-    * the driver mid-collect.
+    * driver. Misdispatch is performance, not correctness — both tiers
+    * are exact — but the conservative bound keeps the chosen plan
+    * RUNNABLE, never one that dies on the driver mid-collect.
     */
-  def broadcastStatsMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.rangeJoin.broadcastStatsMaxBytes")
-      .map(_.toLong)
-      .getOrElse {
-        val maxResult = spark.sparkContext.getConf
-          .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-        // maxResultSize = 0 means "unlimited" — fall back to the cap
-        if (maxResult <= 0) BroadcastStatsMaxBytes
-        else math.min(BroadcastStatsMaxBytes, maxResult / 4)
-      }
+  def broadcastStatsMaxBytes(spark: org.apache.spark.sql.SparkSession): Long = {
+    val maxResult = spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    // maxResultSize = 0 means "unlimited" — fall back to the cap
+    if (maxResult <= 0) BroadcastStatsMaxBytes
+    else math.min(BroadcastStatsMaxBytes, maxResult / 4)
+  }
 
   /** [[withinGap]] with the sides FLIPPED onto a broadcast hash join:
     * the right side is broadcast compact (one row, exact bucket), and

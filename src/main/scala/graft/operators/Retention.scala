@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
@@ -40,9 +40,4 @@ object Retention {
         col(scoreCol))
       .withColumn("keep", (row_number().over(w) === 1).cast(IntegerType))
   }
-
-  /** Convenience: just the kept rows (the deduplicated corpus ids). */
-  def keptIds(pairs: DataFrame, scored: DataFrame, idCol: String, scoreCol: String): DataFrame =
-    retainBest(pairs, scored, idCol, scoreCol)
-      .filter(col("keep") === 1).select(col(idCol), col("component"))
 }

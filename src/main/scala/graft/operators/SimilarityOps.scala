@@ -121,71 +121,6 @@ object SimilarityOps {
     */
   private val Dim = 64
 
-  /** Full Lloyd's k-means fit over (vec_id, embedding): start from
-    * the deterministic [[ivfCentroids]] seed, repeat (assign to
-    * nearest centroid by cosine, recompute centroid = per-dimension
-    * member mean) until the total assignment similarity stops
-    * improving or `maxIter`. One oracled refinement STEP is q79; this
-    * is the driver loop around it — the "train the IVF index" op.
-    *
-    * Scale shape per round: assignment is a broadcast cross join
-    * against k centroids (k×dim doubles — the model is tiny by
-    * definition, collecting it to the driver each round is the
-    * broadcast-the-model pattern, not a data collect); the update is
-    * one partial+final aggregation of (cell, dim) groups.
-    *
-    * Returns (centroids, inertia-per-round). Inertia = Σ (1 − cos to
-    * own centroid); non-increasing per round (monotonicity is
-    * spec-asserted in SimilaritySpec).
-    */
-  def kmeansFit(
-      embeddings: DataFrame,
-      k: Int,
-      maxIter: Int = 5,
-      tol: Double = 1e-4): (Array[(Long, Array[Float])], Seq[Double]) = {
-    var centroids = ivfCentroids(embeddings, k)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val inertias = scala.collection.mutable.ArrayBuffer[Double]()
-    var improved = true
-    var iter = 0
-    while (improved && iter < maxIter) {
-      val centDf = embeddings.sparkSession.createDataFrame(
-        embeddings.sparkSession.sparkContext.parallelize(centroids.toSeq.map {
-          case (cid, cv) => org.apache.spark.sql.Row(cid, cv.toSeq)
-        }, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("cid", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cv",
-            org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cid"))
-      val assigned = embeddings
-        .withColumn("nsq", normSq(col("embedding")))
-        .crossJoin(broadcast(centDf.withColumn("cnsq", normSq(col("cv")))))
-        .withColumn("sim", cosF(col("embedding"), col("cv"), col("nsq"), col("cnsq")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("embedding"), col("cid").as("cell"), col("sim"))
-        .persist()
-      val inertia = assigned.agg(sum(lit(1.0) - col("sim"))).head().getDouble(0)
-      improved = inertias.lastOption.forall(prev => prev - inertia > tol)
-      inertias += inertia
-      if (improved && iter < maxIter - 1) {
-        centroids = assigned
-          .select(col("cell"), posexplode(col("embedding")).as(Seq("d", "v")))
-          .groupBy(col("cell"), col("d"))
-          .agg(avg(col("v")).as("m"))
-          .groupBy(col("cell"))
-          .agg(sort_array(collect_list(struct(col("d"), col("m")))).as("ms"))
-          .collect()
-          .map(r => (r.getLong(0),
-            r.getSeq[org.apache.spark.sql.Row](1).map(_.getDouble(1).toFloat).toArray))
-      }
-      assigned.unpersist()
-      iter += 1
-    }
-    (centroids, inertias.toSeq)
-  }
-
   /** Hyperplane h_j: components cos(i*(j+1)+j) over coordinates i —
     * fixed, dense, no RNG, reproducible across runs AND engines (the
     * q61 oracle embeds these exact float32 values as SQL literals).

@@ -381,7 +381,7 @@ object TextQueries {
          |FROM h ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // One kernel pass per language over bound hit columns; the argmax
       // CASE chain reads the columns instead of re-running the scorers
-      // (the composable langId recomputes every hit count per branch).
+      // (a scorer inlined per branch recomputes every hit count).
       val d = Tables(s, dir).documentsSpread
       val withHits = langStopwords.foldLeft(d) { case (df, (lang, words)) =>
         df.withColumn(s"h_$lang", graft.functions.StopwordHits(col("text"), words))

@@ -17,10 +17,10 @@ import org.apache.spark.sql.graftbridge.SparkBridge
   * SLOWER (10.7 s measured). The loop wants BOTH knobs at once: one
   * job per round (AQE off) AND few, right-sized partitions — which is
   * exactly what this scope sets, replicating AQE's coalescing
-  * statically from the optimizer's size estimate.
+  * statically from the loop input's row count.
   *
-  * At scale nothing is lost: [[partsFor]] grows partitions linearly
-  * with the input estimate and caps at the session's configured
+  * At scale nothing is lost: [[partsForRows]] grows partitions
+  * linearly with that count and caps at the session's configured
   * shuffle parallelism (the cluster-sized setting), and the AQE
   * features that matter to these loops' plans do not apply inside a
   * round anyway — window/aggregate exchanges get no skew mitigation
@@ -41,22 +41,10 @@ import org.apache.spark.sql.graftbridge.SparkBridge
   */
 object TightLoop {
 
-  /** Partition count for the loop's exchanges: linear in the
-    * optimizer's size estimate for the loop's input (no extra job),
-    * one partition per ~8 MB of estimated input, capped at the
-    * session's shuffle parallelism. Only for inputs whose estimate is
-    * scan-derived and sane (q101's orders window) — pair pipelines
-    * need [[partsForRows]].
-    */
-  def partsFor(df: DataFrame, bytesPerPartition: Long = 8L << 20): Int = {
-    val cap = df.sparkSession.sessionState.conf.numShufflePartitions
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    (bytes / bytesPerPartition).min(BigInt(cap)).max(BigInt(1)).toInt
-  }
-
-  /** Partition count from an EXACT row count (preferred when the loop
-    * input is materialized anyway and a count is free — an observe on
-    * an existing checkpoint, or a cache-warming count): optimizer
+  /** Partition count for the loop's exchanges from an EXACT row
+    * count (the loop input is materialized anyway and a count is
+    * free — an observe on an existing checkpoint, or a cache-warming
+    * count), capped at the session's shuffle parallelism. Optimizer
     * byte estimates through explode/join-heavy pair pipelines inflate
     * by orders of magnitude (q77's LSH pair plan estimated 41 GB for
     * a ~20k-row edge list, driving the loop to the slow

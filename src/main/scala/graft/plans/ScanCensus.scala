@@ -49,10 +49,10 @@ object ScanCensus {
       n match {
         case f: FileSourceScanExec =>
           // one hit per scan node per distinct table under its roots;
-          // catalog tables (e.g. BucketedTables.writeBucketed output)
-          // have plain directory roots with no .parquet component —
-          // name those by their table identifier so they stay
-          // ledger-visible
+          // catalog tables (`saveAsTable` output, read through
+          // `spark.table`) have plain directory roots with no .parquet
+          // component — name those by their table identifier so they
+          // stay ledger-visible
           val byPath = f.relation.location.rootPaths
             .flatMap(p => TableRe.findFirstMatchIn(p.toString).map(_.group(1)))
             .distinct

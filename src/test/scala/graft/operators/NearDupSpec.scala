@@ -115,21 +115,6 @@ class NearDupSpec extends AnyFunSuite {
     assert(incremental == fullTouchingNew)
   }
 
-  test("mergeIndex(corpus, batch) lists the same pairs as a full rebuild") {
-    import org.apache.spark.sql.functions.col
-    val docs = graft.Tables(spark, dir).documentsSpread
-    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    val batch = docs.filter(col("doc_id") % 5 === 0)
-
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-
-    val rebuilt = pairSet(NearDup.indexPairs(NearDup.buildIndex(docs)))
-    val merged = pairSet(NearDup.indexPairs(
-      NearDup.mergeIndex(NearDup.buildIndex(corpus), batch)))
-    assert(merged == rebuilt)
-  }
-
   test("q97 triangle counts equal a brute-force enumeration of the pair graph") {
     val pairs = SparkEntry.queries("q29_ngram_jaccard_pairs")(spark, dir)
       .select("lang", "source", "doc_a", "doc_b")

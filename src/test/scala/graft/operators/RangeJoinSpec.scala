@@ -84,6 +84,12 @@ class RangeJoinSpec extends AnyFunSuite {
       "partition concatenation + local sort must equal the global order")
   }
 
+  test("broadcast ceiling is a quarter of maxResultSize: 256 MiB under the default 1g") {
+    // q67 dispatches between the broadcast and shuffled tiers on this
+    assert(RangeJoin.broadcastStatsMaxBytes(spark) == 256L * 1024 * 1024)
+    assert(RangeJoin.broadcastStatsMaxBytes(spark) < RangeJoin.BroadcastStatsMaxBytes)
+  }
+
   test("boundary exactness: a pair exactly gap apart is included") {
     import spark.implicits._
     val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")

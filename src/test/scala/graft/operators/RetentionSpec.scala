@@ -39,10 +39,10 @@ class RetentionSpec extends AnyFunSuite {
     // multi-member clusters exist in this corpus (the test is not vacuous)
     assert(perComp.filter(col("n") > 1).count() > 0)
 
-    // kept corpus = total docs − collapsed duplicates
+    // kept corpus = total docs − collapsed duplicates, on a fresh build
     val collapsed = out.filter(col("keep") === 0).count()
-    assert(Retention.keptIds(pairs, scored, "doc_id", "quality").count()
-      == scored.count() - collapsed)
+    assert(Retention.retainBest(pairs, scored, "doc_id", "quality")
+      .filter(col("keep") === 1).count() == scored.count() - collapsed)
     out.unpersist(); pairs.unpersist()
   }
 

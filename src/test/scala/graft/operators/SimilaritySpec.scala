@@ -84,20 +84,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall(hits(k)) == 1.0)
   }
 
-  test("kmeansFit: inertia non-increasing per round, centroids keep shape") {
-    val (cents, inertias) = SimilarityOps.kmeansFit(emb, k = 8, maxIter = 4)
-    assert(cents.length == 8)
-    assert(cents.forall(_._2.length == 64))
-    assert(inertias.nonEmpty)
-    // Lloyd monotonicity (allowing float32-assignment jitter at the margin)
-    inertias.sliding(2).foreach {
-      case Seq(a, b) => assert(b <= a + 1e-6, s"inertia increased: $inertias")
-      case _ => ()
-    }
-    // refinement beats the raw seed
-    assert(inertias.last <= inertias.head)
-  }
-
   test("LSH buckets: signature deterministic, near-dup pairs verified above threshold") {
     val sig1 = SimilarityOps.lshSignature(emb, bits = 8).select("vec_id", "lsh_bucket")
     val sig2 = SimilarityOps.lshSignature(emb, bits = 8).select("vec_id", "lsh_bucket")
