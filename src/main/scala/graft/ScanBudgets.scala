@@ -11,11 +11,11 @@ package graft
   * The recurring justifications, named once:
   *
   *  - SELF-JOIN: the query joins the table against itself (pair
-  *    scoring, gap detection, set ops, both directions of an
-  *    imbalance). Both sides read the pruned columnar scan directly;
-  *    persisting the scan would move the same bytes through the cache
-  *    for zero saved work (no shuffle/dedup in the shared subtree —
-  *    the measured r7 persist rule).
+  *    scoring, gap detection, set ops). Both sides read the pruned
+  *    columnar scan directly; persisting the scan would move the
+  *    same bytes through the cache for zero saved work (no
+  *    shuffle/dedup in the shared subtree — the measured r7 persist
+  *    rule).
   *  - MODEL+APPLY: scan 1 derives a broadcast-size model (codebook,
   *    centroid set, vocabulary, bloom filter, histogram boundaries,
   *    document frequencies, corpus totals); scan 2 applies it row-wise.
@@ -38,8 +38,6 @@ object ScanBudgets {
 
   val budgets: Map[String, Map[String, Int]] = Map(
     // SELF-JOIN class -------------------------------------------------
-    // in-degree vs out-degree aggregates of the same gold table joined
-    "flight_q6_inout_imbalance" -> Map("flight_gold_fixture" -> 2),
     // INTERSECT + EXCEPT legs over the same dim
     "q15_setops_nations" -> Map("nation" -> 2),
     // doc-pair scoring: both sides of the gram-profile join

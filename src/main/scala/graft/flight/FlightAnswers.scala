@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 /** The six analytical queries over the gold table
   * (reference `/root/reference/src/answers.py`), in the reference's
   * collect-to-driver result shapes. The DataFrame-level plans live in
-  * [[graft.operators.FlightQueries]]; this wrapper only collects.
+  * [[graft.operators.FlightQueries]]; this wrapper only collects. The
+  * answers that end as a `Map` collect the unordered forms: a `Map`
+  * drops row order, so the final global sort would be pure cost.
   *
   * Determinism: the reference's order-dependent `first`-after-sort and
   * unordered `collect_list` idioms (SURVEY.md §2.11.2/5) are replaced
@@ -25,7 +27,7 @@ object FlightAnswers {
     * counting only intra-continent flights.
     */
   def mostActiveAirlinePerContinent(gold: DataFrame): Map[String, String] =
-    FlightQueries.mostActivePerContinent(gold)
+    FlightQueries.mostActivePerContinentUnordered(gold)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
   /** Q3 (`answers.py:53-64`): flight with the longest trajectory. */
@@ -37,19 +39,20 @@ object FlightAnswers {
     * `round`, `answers.py:84` — `bround` in the plan).
     */
   def averageFlightLengthPerContinent(gold: DataFrame): Map[String, Double] =
-    FlightQueries.avgFlightLengthPerContinent(gold)
+    FlightQueries.avgFlightLengthPerContinentUnordered(gold)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
   /** Q5 (`answers.py:86-105`): top-3 aircraft models per origin
     * country, comma-joined in descending-count order.
     */
   def topThreeAircraftPerCountry(gold: DataFrame): Map[String, String] =
-    FlightQueries.topThreeAircraftPerCountry(gold)
+    FlightQueries.topThreeAircraftPerCountryUnordered(gold)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
   /** Q6 (`answers.py:110-130`, untested in the reference): airport
-    * with the largest |outgoing − incoming| flight count; inner join
-    * of the two aggregate sides (reference semantics).
+    * with the largest |outgoing − incoming| flight count, among
+    * airports with both outgoing and incoming flights (the reference's
+    * inner join of the two aggregate sides).
     */
   def airportWithMostDiffInOutFlight(gold: DataFrame): Row =
     FlightQueries.inOutImbalance(gold).first()

@@ -44,10 +44,8 @@ object FlightCli {
     * parquet) or a base dir whose newest timestamped snapshot is taken
     * (reference S5 semantics, answers.py:197-203).
     */
-  def resolveGold(spark: SparkSession, path: String): DataFrame = {
-    val snapshot = FlightIo.newestSnapshotDir(spark, path).getOrElse(path)
-    spark.read.parquet(snapshot)
-  }
+  def resolveGold(spark: SparkSession, path: String): DataFrame =
+    FlightIo.readGold(spark, FlightIo.newestSnapshotDir(spark, path).getOrElse(path))
 
   def run(spark: SparkSession, path: String, question: String): String = {
     val name = question.replace('-', '_')

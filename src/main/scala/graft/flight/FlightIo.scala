@@ -47,6 +47,13 @@ object FlightIo {
     path
   }
 
+  /** A gold snapshot (or the fixture) read with the declared
+    * [[FlightModel.goldSchema]]: no footer-reading inference job, so a
+    * lookup fires no Spark job at all.
+    */
+  def readGold(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(FlightModel.goldSchema).parquet(path)
+
   /** Newest-snapshot resolution (`answers.py:197-203`): list files
     * recursively, keep dirs containing parquet, lexicographic max —
     * same semantics as the reference's object listing, via Hadoop FS.

@@ -77,4 +77,17 @@ object FlightModel {
     "destination_airport_name", "destination_latitude", "destination_longitude",
     "destination_continent", "destination_country",
     "airline_name", "distance")
+
+  /** Gold schema as written and as in the fixture: every column
+    * nullable, float32 lat/lon/distance, int `on_ground`, string for
+    * the rest. Reading a snapshot with it skips parquet's
+    * schema-inference job.
+    */
+  val goldSchema: StructType = StructType(goldColumns.map { c =>
+    val t =
+      if (c.endsWith("latitude") || c.endsWith("longitude") || c == "distance") FloatType
+      else if (c == "on_ground") IntegerType
+      else StringType
+    StructField(c, t, nullable = true)
+  })
 }

@@ -46,7 +46,11 @@ object FlightQueries {
     gold.groupBy("airline_name").count()
       .orderBy(col("count").desc, col("airline_name"))
 
-  def mostActivePerContinent(gold: DataFrame): DataFrame = {
+  /** Q2 without its final sort: [[graft.flight.FlightAnswers]]
+    * collects it into a `Map`, where row order is lost anyway, and the
+    * global sort would cost a range-sampling job and an exchange.
+    */
+  def mostActivePerContinentUnordered(gold: DataFrame): DataFrame = {
     val counted = gold
       .filter(col("origin_continent") === col("destination_continent"))
       .groupBy("airline_name", "origin_continent").count()
@@ -54,8 +58,10 @@ object FlightQueries {
       .orderBy(col("count").desc, col("airline_name"))
     counted.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("origin_continent"), col("airline_name").as("most_active_airline"), col("count"))
-      .orderBy(col("origin_continent"))
   }
+
+  def mostActivePerContinent(gold: DataFrame): DataFrame =
+    mostActivePerContinentUnordered(gold).orderBy(col("origin_continent"))
 
   def longestTrajectories(gold: DataFrame, k: Int = 1): DataFrame =
     gold.orderBy(col("distance").desc_nulls_last, col("id")).limit(k)
@@ -66,15 +72,17 @@ object FlightQueries {
     * one IEEE double division — bit-identical in any partition order and
     * in DuckDB.
     */
-  def avgFlightLengthPerContinent(gold: DataFrame): DataFrame =
+  def avgFlightLengthPerContinentUnordered(gold: DataFrame): DataFrame =
     gold.filter(col("origin_continent") === col("destination_continent"))
       .groupBy("origin_continent")
       .agg(bround(
         sum(col("distance").cast("decimal(20,7)")).cast("double") / count(lit(1)),
         2).as("average_distance"))
-      .orderBy(col("origin_continent"))
 
-  def topThreeAircraftPerCountry(gold: DataFrame): DataFrame = {
+  def avgFlightLengthPerContinent(gold: DataFrame): DataFrame =
+    avgFlightLengthPerContinentUnordered(gold).orderBy(col("origin_continent"))
+
+  def topThreeAircraftPerCountryUnordered(gold: DataFrame): DataFrame = {
     val counted = gold.groupBy("aircraft_code", "origin_country").count()
     val w = Window.partitionBy(col("origin_country"))
       .orderBy(col("count").desc, col("aircraft_code"))
@@ -84,19 +92,29 @@ object FlightQueries {
         transform(array_sort(collect_list(struct(col("rank"), col("aircraft_code")))),
           x => x.getField("aircraft_code")),
         ", ").as("top_three_aircraft_model"))
-      .orderBy(col("origin_country"))
   }
 
-  def inOutImbalance(gold: DataFrame): DataFrame = {
-    val out = gold.groupBy("origin_airport_name").count()
-      .withColumnRenamed("count", "outgoing_count")
-    val in = gold.groupBy("destination_airport_name").count()
-      .withColumnRenamed("count", "incoming_count")
-    out.join(in, col("origin_airport_name") === col("destination_airport_name"))
+  def topThreeAircraftPerCountry(gold: DataFrame): DataFrame =
+    topThreeAircraftPerCountryUnordered(gold).orderBy(col("origin_country"))
+
+  /** Q6 in one scan and one aggregate: each gold row counts once at
+    * its origin end (outgoing) and once at its destination end
+    * (incoming). Null names are dropped, and a name is kept only when
+    * both of its counts are positive: exactly the reference's inner
+    * join of the outgoing and incoming aggregates (the oracle SQL keeps
+    * that join form). `count` of a `when` keeps both counts non-null
+    * longs, as `count()` made them.
+    */
+  def inOutImbalance(gold: DataFrame): DataFrame =
+    gold.select(posexplode(array(col("origin_airport_name"), col("destination_airport_name")))
+        .as(Seq("side", "origin_airport_name")))
+      .filter(col("origin_airport_name").isNotNull)
+      .groupBy("origin_airport_name")
+      .agg(count(when(col("side") === 0, 1)).as("outgoing_count"),
+        count(when(col("side") === 1, 1)).as("incoming_count"))
+      .filter(col("outgoing_count") > 0 && col("incoming_count") > 0)
       .withColumn("diff", abs(col("outgoing_count") - col("incoming_count")))
-      .select("origin_airport_name", "outgoing_count", "incoming_count", "diff")
       .orderBy(col("diff").desc, col("origin_airport_name"))
-  }
 
   val all: Seq[QueryDef] = Seq(
     QueryDef.sql("flight_q1_airline_counts",

@@ -1,11 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
 import java.io.File
+import java.util.concurrent.{CompletableFuture, ExecutorService}
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
 
 /** The one shim into Spark's `private[spark]` and `private[sql]`
   * members. Only the package placement is ours; every accessor is one
@@ -16,6 +18,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *     session, which give a query its own conf and listeners while it
   *     shares the SparkContext, the cache and the registered functions
   *     ([[graft.operators.TightLoop]], [[graft.plans.ScanLedger]]);
+  *   - running a body on a pool thread with the caller's active
+  *     session and local properties, as Spark's broadcast futures do
+  *     ([[graft.flight.FlightPipeline]]'s concurrent layer writes);
   *   - the listener-bus flush, and what is ON DISK in the
   *     block-manager local dirs (leftover shuffle/spill files), which
   *     `graft.BenchKernel.settleScratch` waits on between timings.
@@ -38,6 +43,15 @@ object SparkBridge {
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[_]].logicalPlan)
+
+  /** `body` submitted to `exec` under the caller's active session and
+    * a copy of its local properties (job group, description, scheduler
+    * pool), so cancelling the caller's job group also cancels the jobs
+    * `body` starts. The pool thread's own session and properties are
+    * restored after a body that returns.
+    */
+  def submitCaptured[T](spark: SparkSession, exec: ExecutorService)(body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], exec)(body)
 
   /** The block-manager scratch dirs (shuffle data/index files, spills,
     * temp blocks live under these).

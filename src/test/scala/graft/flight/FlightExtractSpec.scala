@@ -42,28 +42,6 @@ class FlightExtractSpec extends AnyFunSuite {
     assert(calls.size == 5)           // root + 4 children
   }
 
-  test("distributed extract returns the same flight multiset as the driver recursion") {
-    val spark = graft.TestSpark.spark
-    def multiset(fl: Seq[Flight]) = fl.groupBy(identity).map { case (k, v) => (k, v.size) }
-    val viaDriver = FlightExtract.allFlights(FlightExtractSpec.QuadSrc, limit = 10)
-    val viaCluster = FlightExtract
-      .allFlightsDistributed(spark, FlightExtractSpec.QuadSrc, limit = 10)
-      .collect().toSeq
-    graft.CacheScope.drain()
-    assert(viaCluster.size == viaDriver.size)
-    assert(multiset(viaCluster) == multiset(viaDriver))
-  }
-
-  test("distributed extract refuses a source that never converges") {
-    val spark = graft.TestSpark.spark
-    val ex = intercept[IllegalArgumentException] {
-      FlightExtract.allFlightsDistributed(
-        spark, FlightExtractSpec.Bottomless, limit = 5, maxDepth = 3)
-    }
-    graft.CacheScope.drain()
-    assert(ex.getMessage.contains("still truncated"))
-  }
-
   test("fetch below the limit does not split") {
     val root = Zone(90, -180, -90, 180)
     val src = new FlightSource {
@@ -73,39 +51,5 @@ class FlightExtractSpec extends AnyFunSuite {
       def airports: Seq[Airport] = Seq.empty
     }
     assert(FlightExtract.allFlights(src, limit = 10).size == 9)
-  }
-}
-
-/** Serializable fakes for the distributed-extract tests: top-level (no
-  * `$outer` to the suite — the closure ships to tasks).
-  */
-object FlightExtractSpec {
-  private def mk(i: Int) =
-    Flight(s"f$i", "A320", Some(0), Some(0f), Some(0f), "AAA", "BBB", s"N$i", Some(0), "AL1")
-
-  /** Root and its NW child truncate (two quadtree levels); every other
-    * zone returns zone-seeded rows.
-    */
-  object QuadSrc extends FlightSource {
-    private val root = Zone(90, -180, -90, 180)
-    def zones: Seq[Zone] = Seq(root)
-    def flightsInZone(zone: Zone, limit: Int): Seq[Flight] = {
-      val truncates = zone == root || zone == Zone(90, -180, 0, 0)
-      if (truncates) (1 to limit).map(mk)
-      else {
-        val seed = ((zone.tlY + 90) * 1000 + (zone.tlX + 180)).toInt
-        (1 to 1 + math.abs(seed) % 4).map(i => mk(seed + i))
-      }
-    }
-    def airlines: Seq[Airline] = Seq.empty
-    def airports: Seq[Airport] = Seq.empty
-  }
-
-  /** Always truncated — the maxDepth guard must fire. */
-  object Bottomless extends FlightSource {
-    def zones: Seq[Zone] = Seq(Zone(90, -180, -90, 180))
-    def flightsInZone(zone: Zone, limit: Int): Seq[Flight] = (1 to limit).map(mk)
-    def airlines: Seq[Airline] = Seq.empty
-    def airports: Seq[Airport] = Seq.empty
   }
 }
