@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -173,41 +173,4 @@ object MultimodalOps {
         .cast("int") + 1
       payload.substr(pos, lit(width))
     })
-
-  /** STUB — "resize": a real implementation decodes, rescales pixels,
-    * re-encodes. Deterministic fake with the real op's contract: fixed
-    * `targetLen` output regardless of input size, order-preserving
-    * even-stride byte sample (content shorter than the target is
-    * cycled). Runs in the same partition-local tier as [[decodeStub]].
-    */
-  def resizeStub(payload: Array[Byte], targetLen: Int): Array[Byte] = {
-    if (payload == null || payload.isEmpty) return new Array[Byte](targetLen)
-    val out = new Array[Byte](targetLen)
-    var j = 0
-    while (j < targetLen) {
-      out(j) = payload((j.toLong * payload.length / targetLen).toInt % payload.length)
-      j += 1
-    }
-    out
-  }
-
-  /** Partition-local resize over media rows: payload replaced by its
-    * fixed-size form, metadata re-derived. Same no-shuffle contract as
-    * [[featurize]] — blobs never cross an exchange.
-    */
-  def resize(spark: SparkSession, media: DataFrame, targetLen: Int): DataFrame = {
-    import spark.implicits._
-    val resized = media
-      .select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, p) => (id, resizeStub(p, targetLen)) })
-      .toDF("media_id", "payload")
-    resized.select(
-      col("media_id"),
-      col("payload"),
-      struct(
-        length(col("payload")).as("byte_len"),
-        sha2(col("payload"), 256).as("sha"),
-        lit("application/octet-stream").as("mime")).as("meta"))
-  }
 }

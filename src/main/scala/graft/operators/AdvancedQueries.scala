@@ -507,10 +507,11 @@ object AdvancedQueries {
     // ------------------------------------------------------------------
     // q91 — connected components on a CHAIN-shaped graph (each
     // customer's orders linked consecutively by date): the worst case
-    // for hash-min propagation (rounds = chain length), run through
-    // [[ConnectedComponents.runAdaptive]] — driver union-find below
-    // the bounded-collect tier, else the small-star/large-star
-    // variant whose round count is O(log n) regardless of diameter. The oracle exploits that the chains are per-customer
+    // for min-label propagation (rounds = chain length), run through
+    // [[ConnectedComponents.run]] — driver union-find below the
+    // bounded-collect tier, else the small-star/large-star variant
+    // whose round count is O(log n) regardless of diameter. The
+    // oracle exploits that the chains are per-customer
     // by construction, so the transitive closure collapses to a
     // min-over-customer window — the generic graph algorithm must
     // agree with the closed form exactly.
@@ -529,7 +530,7 @@ object AdvancedQueries {
         .withColumn("nxt", lead(col("o_orderkey"), 1).over(w))
         .filter(col("nxt").isNotNull)
         .select(col("o_orderkey").as("a"), col("nxt").as("b"))
-      ConnectedComponents.runAdaptive(edges)
+      ConnectedComponents.run(edges)
         .select(col("node"), col("label").as("component"))
         .orderBy(col("node"))
     },
@@ -646,7 +647,7 @@ object AdvancedQueries {
       // two projections of the same subtree duplicates it — Catalyst
       // shares nothing across union children, so the r8 scan census
       // counted the orders scan AND the lead-window shuffle twice per
-      // edge materialization (the ConnectedComponents.runAlternating
+      // edge materialization (the ConnectedComponents star loop's
       // lesson, applied here)
       val e = Tables(s, dir).orders
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))

@@ -937,19 +937,10 @@ object AnalyticsQueries {
       val a = Tables(s, dir).lineitem
         .groupBy(col("l_returnflag"), col("l_extendedprice").as("v"))
         .agg(sum(round(col("l_quantity") * 100).cast(LongType)).as("w"))
-      // weightedMedian kernel, pinned to its DISTRIBUTED tier
-      // (driverTier = false, so not even the probe runs — a failed
-      // probe recomputes this unpersisted aggregate, measured 4.1 s):
-      // prices are near-unique (583k distinct among 600k sf0.1
-      // lines), so this weight table is ~fact-row-sized and the
-      // driver tier's single-threaded collect+walk measured a
-      // REGRESSION — sf0.1 2.32 → 2.80 s, 100× ~equal (6.18 at sys
-      // 0.44 vs the 5.25 distributed floor) — unlike the count-table
-      // kernels (q95/q41/q84), whose driver tiers replace several
-      // jobs. The driver tier stays for genuinely bounded weight
-      // tables (spec-pinned equal).
-      DistributedRank.weightedMedian(a, Seq("l_returnflag"), "v", "w",
-        driverTier = false)
+      // weightedMedian kernel: the distributed prefix sum + crossing
+      // filter (prices are near-unique, so this weight table is
+      // ~fact-row-sized; see DistributedRank.weightedMedian)
+      DistributedRank.weightedMedian(a, Seq("l_returnflag"), "v", "w")
         .orderBy(col("l_returnflag"))
     },
 

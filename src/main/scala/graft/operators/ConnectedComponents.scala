@@ -2,182 +2,35 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType, ShortType}
 
 /** Connected components over an undirected edge list — the cluster-
   * assignment step a dedup pipeline runs after pair generation
   * (near-dup PAIRS say "a ~ b"; retention policy needs "which CLUSTER
   * does every doc belong to", i.e. the transitive closure).
   *
-  * Algorithm: hash-min label propagation. Every node starts labeled
-  * with itself; each round every node takes the min label among itself
-  * and its neighbors; fixpoint = min node id per component. Expressed
-  * as DataFrame joins per round with a driver-side convergence loop —
-  * the same shape GraphX/GraphFrames use underneath, and the idiomatic
-  * Spark form for iterative algorithms (each round is one shuffle; the
-  * adjacency list is persisted once and reused). Rounds needed = max
-  * component diameter; near-dup graphs are dense little cliques, so
-  * this converges in 2-3 rounds. For web-scale graphs with long chains
-  * use [[runAlternating]] — the small-star/large-star variant whose
-  * round count is O(log n) regardless of diameter. [[runAdaptive]]
-  * dispatches by exact edge count: a bounded pair table (the dedup
-  * norm — pairs are pipeline OUTPUT, far smaller than the corpus)
-  * labels via driver union-find in one collect, everything else runs
-  * the alternating loop.
+  * [[run]] is the one entry point, size-adaptive in the
+  * [[DistributedRank]] dispatch pattern: a bounded pair table (the
+  * dedup norm — pairs are pipeline OUTPUT, far smaller than the
+  * corpus) labels via driver union-find in one collect; everything
+  * else runs a local-contraction pre-pass and then the alternating
+  * small-star / large-star loop, whose round count is O(log n)
+  * regardless of component diameter (Kiveris et al., "Connected
+  * Components in MapReduce and Beyond", SoCC'14 — public algorithm,
+  * re-derived here as DataFrame plans). Min-label propagation needs
+  * rounds = diameter, so one long chain defeats it; the alternation
+  * contracts paths multiplicatively.
+  *
+  * Node ids must be integral (tinyint, smallint, int or bigint): both
+  * tiers widen them through LongType, which is lossless only for
+  * integral types, so [[run]] rejects any other id type up front.
   *
   * Determinism: min over node ids — no accumulation-order dependence.
   */
 object ConnectedComponents {
 
-  /** `edges` must have two columns naming node ids (any integral
-    * type); returns (node, component) for every node incident to an
-    * edge, component = min node id reachable.
-    */
-  def run(edges: DataFrame, maxIter: Int = 25): DataFrame =
-    runWithRounds(edges, maxIter)._1
-
-  /** [[run]] plus the number of propagation rounds executed (the
-    * scale-test observable: rounds = component diameter for hash-min).
-    */
-  def runWithRounds(edges: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
-    val Seq(ca, cb) = edges.columns.toSeq.take(2)
-    val sel = edges.select(col(ca).as("src"), col(cb).as("dst"))
-    // Persisted pre-partitioned on the per-round join key: the cached
-    // scan keeps its hash partitioning, so each round's offers join
-    // shuffles only the (small) labels side, never the adjacency.
-    // Symmetrized via explode, not self-union — a union of two
-    // projections of the same subtree would derive (and scan) the
-    // caller's pair pipeline twice at materialization (the q101
-    // lesson).
-    val sym = sel
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"))
-      .distinct()
-      .repartition(col("src"))
-      .persist()
-    // Materialize the adjacency cache up front, under the caller's
-    // session conf (AQE coalesces its layout sensibly): the exact row
-    // count sizes the loop's partitions — byte estimates through the
-    // callers' pair pipelines inflate wildly (see partsForRows).
-    val symCount = sym.count()
-    // The propagation loop runs inside a TightLoop scope (AQE off +
-    // count-sized partitions): each round's checkpoint is ONE job of
-    // few right-sized tasks instead of AQE's per-exchange scheduling
-    // round-trips — the measured iterative floor (see TightLoop).
-    // The body's `sym` is the adjacency rebound into the loop session.
-    TightLoop.scoped(sym, TightLoop.partsForRows(sel.sparkSession, symCount)) { sym =>
-
-    // Lineage: each round's plan references the previous round's, so
-    // raw lineage compounds per iteration and blows the heap by round
-    // ~10. localCheckpoint (eager) truncates the plan to the
-    // materialized RDD every round, keeping iteration N's plan
-    // constant-size — the standard Spark shape for iterative
-    // algorithms.
-    //
-    // Seeding: labels start at min(self, neighbors) — round 1 fused
-    // into initialization, so clique-shaped components (the near-dup
-    // norm) are already at fixpoint when the loop begins.
-    // Convergence via the label-sum invariant: labels only ever
-    // decrease, so the total is strictly monotone and stalls exactly
-    // at fixpoint. DECIMAL(38,0): n × maxId cannot overflow. The sum
-    // rides the checkpoint materialization itself via observe()
-    // (CollectMetrics in the checkpointed plan, reported when the
-    // eager-checkpoint action's execution ends) — ONE job per round
-    // where r7 ran two (checkpoint, then a separate aggregate scan of
-    // the materialized blocks); measured ~25% off q69/q77 wall.
-    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val cp = df.observe(obs,
-        coalesce(sum(col("label").cast(DecimalType(38, 0))),
-          lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 0))).as("s"))
-        .localCheckpoint()
-      (cp, obs.get("s").asInstanceOf[java.math.BigDecimal])
-    }
-
-    val seeded = checkpointWithSum(
-      sym.groupBy("src").agg(min("dst").as("mn"))
-        .select(col("src").as("node"), least(col("src"), col("mn")).as("label")))
-    var labels = seeded._1
-    var prevSum = seeded._2
-
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // each neighbor offers its label; nodes keep the min seen
-      val offers = sym.join(labels, sym("src") === labels("node"))
-        .select(col("dst").as("node"), col("label"))
-      val (next, s) = checkpointWithSum(
-        labels.unionAll(offers)
-          .groupBy("node").agg(min("label").as("label")))
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels.unpersist()
-      labels = next
-      iter += 1
-    }
-    sym.unpersist()
-    (labels, iter)
-    }
-  }
-
-  /** Alternating small-star / large-star connected components — the
-    * scale path for graphs with long chains, where hash-min's
-    * rounds-=-diameter cost is the killer (a 100k-link chain would
-    * need 100k shuffles). Alternation contracts path lengths
-    * multiplicatively, converging in O(log n) rounds regardless of
-    * diameter (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14 — public algorithm, re-derived here as DataFrame
-    * plans).
-    *
-    * One round = large-star then small-star, each a groupBy-min plus
-    * an equi-join — two shuffles, same per-round plan shape as
-    * hash-min. The edge set only shrinks toward a star forest (every
-    * node pointing at its component min), so convergence is detected
-    * by an (edge-count, xxhash64-sum) fingerprint going stable — one
-    * tiny aggregate per round, no join-based set comparison.
-    *
-    * Same output contract as [[run]]: (node, component) for every node
-    * incident to an input edge, component = min reachable id.
-    * [[ConnectedComponentsSpec]] pins equality with [[run]] on chains,
-    * cliques, and random graphs.
-    */
-  def runAlternating(edges: DataFrame, maxIter: Int = 50): DataFrame =
-    runAlternatingWithRounds(edges, maxIter)._1
-
-  /** Materialize the raw pairs ONCE before any self-union: the input
-    * is scanned a single time, and the checkpoint cuts the caller's
-    * plan constraints — self-unions over a constraint-carrying plan
-    * (e.g. an upstream filter whose column is pruned on one branch)
-    * trip UnionBase.rewriteConstraints ("key not found: <attr>").
-    * The checkpoint's materialization also yields the exact edge
-    * count (via observe, no extra job) — the loop-partition sizing
-    * AND tier-dispatch input; byte estimates through pair pipelines
-    * inflate wildly (see TightLoop.partsForRows), so the exact count
-    * that materialization gives for free is strictly better than the
-    * stats-first probe the rank kernels use.
-    */
-  private def materializeEdges(edges: DataFrame): (DataFrame, Long, Long) = {
-    val Seq(ca, cb) = edges.columns.toSeq.take(2)
-    val rawObs = org.apache.spark.sql.Observation()
-    val raw = edges
-      .select(col(ca).as("a"), col(cb).as("b"))
-      .observe(rawObs,
-        count(lit(1)).as("n"),
-        // self-loop census rides the same materialization (observed on
-        // the RENAMED frame — "a"/"b" are this select's columns): the
-        // join-free label emit below covers every node incident to a
-        // NON-self edge; a self-loop-only node is only labeled by the
-        // nodes-frame path, so its presence (rare; zero on every
-        // shipped pipeline) picks the emit strategy
-        coalesce(sum(when(col("a") === col("b"), 1L)), lit(0L)).as("sl"))
-      .localCheckpoint()
-    (raw, rawObs.get("n").asInstanceOf[Long], rawObs.get("sl").asInstanceOf[Long])
-  }
-
   /** Edge-count bound for the driver union-find tier of
-    * [[runAdaptive]] — a MEASURED crossover, not a memory guess.
+    * [[run]] — a MEASURED crossover, not a memory guess.
     * ComponentsScale tier sweep at local[32] (a scale main last
     * present at commit fba91a5; broken-chain graphs, driver vs the
     * contraction+alternating loop, same JVM per pair):
@@ -194,7 +47,7 @@ object ConnectedComponents {
     */
   val MaxDriverEdges: Long = 500000L
 
-  /** Plan-stats ceiling under which [[runAdaptive]] skips the
+  /** Plan-stats ceiling under which [[run]] skips the
     * checkpoint entirely and probes with a bounded limit-collect (ONE
     * job — the sf0.1 q91 shape, where the checkpoint materialization
     * was ~1/3 of the query's wall). Above it — or when pair-pipeline
@@ -204,45 +57,32 @@ object ConnectedComponents {
     */
   val SmallEdgeStatsBytes: Long = 64L << 20
 
-  /** Size-adaptive connected components — the [[DistributedRank]]
-    * dispatch pattern applied to the transitive closure. Dispatch is
-    * stats-first: an edge plan the optimizer already proves under
-    * [[SmallEdgeStatsBytes]] is limit-collected directly (one job, no
-    * checkpoint); otherwise the list is materialized once (checkpoint
-    * + observed exact count, one scan) and dispatched on the exact
-    * count. Below [[MaxDriverEdges]] the closure runs as driver-side
-    * union-find over the collected pair table (a dedup graph's edge
-    * set is pair-pipeline output — orders of magnitude smaller than
-    * the corpus — so at certification scales this is the common case),
-    * above it as the O(log n)-round alternating-star loop. All tiers
-    * emit the IDENTICAL (node, component-min) labels in the identical
-    * column types ([[ConnectedComponentsSpec]] pins equality on
-    * chains, cliques, random graphs, and both sides of the bound), so
-    * a misjudged bound costs only constants, never bytes.
+  /** Size-adaptive connected components: `edges` must have two
+    * integral columns naming node ids; returns (node, label) for every
+    * node incident to an edge, label = min node id reachable, in the
+    * endpoints' wider id type. Dispatch is stats-first: an edge plan
+    * the optimizer already proves under [[SmallEdgeStatsBytes]] is
+    * limit-collected directly (one job, no checkpoint); otherwise the
+    * list is materialized once through the local-contraction pre-pass
+    * (checkpoint + observed exact count, one scan) and dispatched on
+    * the contracted count. Below [[MaxDriverEdges]] the closure runs as
+    * driver-side union-find over the collected pair table (a dedup
+    * graph's edge set is pair-pipeline output — orders of magnitude
+    * smaller than the corpus — so at certification scales this is the
+    * common case), above it as the O(log n)-round alternating-star
+    * loop. Both tiers emit the IDENTICAL (node, component-min) labels
+    * in the identical column types ([[ConnectedComponentsSpec]] pins
+    * equality on chains, cliques, random graphs, and both sides of the
+    * bound), so a misjudged bound costs only constants, never bytes.
     */
-  /** Both fast tiers (driver union-find, local contraction) widen ids
-    * through LongType, which is only lossless for integral id types;
-    * exotic id types (the contract is merely "orderable with min")
-    * must stay on the generic star loop rather than be silently
-    * corrupted by the cast.
-    */
-  private def integralIds(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.types._
-    df.schema.fields.take(2).forall(f => f.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })
-  }
-
-  def runAdaptive(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val Seq(ca, cb) = edges.columns.toSeq.take(2)
-    val sel = edges.select(col(ca).as("a"), col(cb).as("b"))
-    if (!integralIds(sel)) return runAlternating(edges, maxIter)
+  def run(edges: DataFrame): DataFrame = {
+    val sel = endpoints(edges)
+    val idType = nodeIdType(sel)
     val statsBytes = sel.queryExecution.optimizedPlan.stats.sizeInBytes
     val probed =
       if (statsBytes <= SmallEdgeStatsBytes) {
         val rows = sel.limit(MaxDriverEdges.toInt + 1).collect()
-        if (rows.length <= MaxDriverEdges) Some(unionFindRows(sel, rows))
+        if (rows.length <= MaxDriverEdges) Some(unionFindRows(sel, rows, idType))
         else None // stats under-estimated: fall through, pay one re-scan
       } else None
     probed.getOrElse {
@@ -253,9 +93,9 @@ object ConnectedComponents {
       // CONTRACTED count (≤ min(edges, nodes)): the driver tier
       // collects star edges the cluster already forested, so the
       // bound stays a driver-memory bound while more graphs qualify.
-      val (canon0, cCount) = materializeContracted(sel)
+      val (canon0, cCount) = materializeContracted(sel, idType)
       if (cCount <= MaxDriverEdges) driverUnionFind(canon0, cCount)
-      else alternatingFromContracted(canon0, cCount, maxIter)._1
+      else alternatingFrom(canon0, cCount)._1
     }
   }
 
@@ -265,28 +105,45 @@ object ConnectedComponents {
   private[graft] def driverUnionFind(raw: DataFrame, edgeCount: Long): DataFrame = {
     require(edgeCount <= Int.MaxValue,
       s"driverUnionFind: $edgeCount edges cannot index an int array")
-    unionFindRows(raw, raw.collect())
+    unionFindRows(raw, raw.collect(), nodeIdType(raw))
   }
 
-  /** The distributed tiers' output id type without running the
-    * analyzer over an explode plan: the common integral supertype of
-    * the two endpoint columns (what the explode(array(a, b)) coercion
-    * picks); non-integral or exotic pairs fall back to asking the
-    * analyzer.
+  /** The distributed tier of [[run]] whatever the edge count —
+    * contraction pre-pass, then the alternating loop — plus the star
+    * rounds it ran (0 when the contracted edges are already a star
+    * forest). Specs pin it against the driver tier and count its
+    * rounds; no query calls it.
     */
-  private def nodeIdType(src: DataFrame): org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    val ta = src.schema.fields(0).dataType
-    val tb = src.schema.fields(1).dataType
-    val rank = Map[DataType, Int](
-      ByteType -> 0, ShortType -> 1, IntegerType -> 2, LongType -> 3)
-    if (ta == tb) ta
-    else (rank.get(ta), rank.get(tb)) match {
-      case (Some(x), Some(y)) => if (x >= y) ta else tb
-      case _ => src
-        .select(explode(array(col(src.columns(0)), col(src.columns(1)))))
-        .schema.head.dataType
-    }
+  private[graft] def starLoop(edges: DataFrame): (DataFrame, Int) = {
+    val sel = endpoints(edges)
+    val (canon0, cCount) = materializeContracted(sel, nodeIdType(sel))
+    alternatingFrom(canon0, cCount)
+  }
+
+  private def endpoints(edges: DataFrame): DataFrame = {
+    val Seq(ca, cb) = edges.columns.toSeq.take(2)
+    edges.select(col(ca).as("a"), col(cb).as("b"))
+  }
+
+  /** Round cap of the star loop, well above its measured round counts
+    * (O(log n): 18 for a 10⁵-node chain).
+    */
+  private val MaxStarRounds = 50
+
+  private val IdTypes: Seq[DataType] = Seq(ByteType, ShortType, IntegerType, LongType)
+
+  /** The output id type without running the analyzer over an explode
+    * plan: the wider of the two integral endpoint types (what the
+    * explode(array(a, b)) coercion picks). Any other id type is
+    * rejected here, before a job runs: both tiers widen ids through
+    * LongType, which would silently corrupt fractional or exotic ids.
+    */
+  private def nodeIdType(src: DataFrame): DataType = {
+    val types = src.schema.fields.take(2).map(_.dataType).toSeq
+    require(types.forall(IdTypes.contains),
+      "ConnectedComponents: node ids must be integral (tinyint, smallint, " +
+        s"int or bigint); got ${types.map(_.simpleString).mkString(", ")}")
+    types.maxBy(t => IdTypes.indexOf(t))
   }
 
   /** One partition's spanning forest by union-find with path halving:
@@ -339,11 +196,11 @@ object ConnectedComponents {
     * root is its component's minimum — the same fixpoint the
     * distributed tiers converge to. Node ids are widened to long for
     * the driver pass and cast back to the common input id type on
-    * emit, so the output is byte-identical to [[runAlternating]]'s.
+    * emit, so the output is byte-identical to the star loop's.
     */
-  private def unionFindRows(src: DataFrame, collected: Array[Row]): DataFrame = {
+  private def unionFindRows(
+      src: DataFrame, collected: Array[Row], nodeType: DataType): DataFrame = {
     val spark = src.sparkSession
-    val nodeType = nodeIdType(src)
     val m = collected.length
     val as = new Array[Long](m)
     val bs = new Array[Long](m)
@@ -399,19 +256,6 @@ object ConnectedComponents {
         col("label").cast(nodeType).as("label"))
   }
 
-  /** [[runAlternating]] plus rounds executed (expected O(log n)). */
-  def runAlternatingWithRounds(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
-    val Seq(ca, cb) = edges.columns.toSeq.take(2)
-    val sel = edges.select(col(ca).as("a"), col(cb).as("b"))
-    if (integralIds(sel)) {
-      val (canon0, cCount) = materializeContracted(sel)
-      alternatingFromContracted(canon0, cCount, maxIter)
-    } else {
-      val (raw, rawCount, selfLoops) = materializeEdges(sel)
-      alternatingFrom(raw, rawCount, selfLoops, maxIter)
-    }
-  }
-
   /** Materialize the caller's pair plan STRAIGHT INTO the local-
     * contraction pre-pass — one job, one scan of the (possibly
     * expensive) pair pipeline, and the checkpoint holds the
@@ -423,12 +267,11 @@ object ConnectedComponents {
     * exactly (a spanning forest of each partition's edge subset keeps
     * the union's components) and self-loop-only nodes survive as
     * explicit (x, x) marker rows (see [[partitionForest]]), so no
-    * raw-list consumer remains. Integral ids only — the long widening
-    * inside the contraction would corrupt exotic id types.
+    * raw-list consumer remains.
     */
-  private def materializeContracted(sel: DataFrame): (DataFrame, Long) = {
+  private def materializeContracted(sel: DataFrame, nodeType: DataType): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()
-    val canon0 = localContract(sel)
+    val canon0 = localContract(sel, nodeType)
       .observe(obs, count(lit(1)).as("n"))
       .localCheckpoint()
     (canon0, obs.get("n").asInstanceOf[Long])
@@ -448,10 +291,9 @@ object ConnectedComponents {
     * MapReduce-CC literature runs before alternation (Kiveris et al.
     * §6 "optimizations").
     */
-  private def localContract(e: DataFrame): DataFrame = {
+  private def localContract(e: DataFrame, nodeType: DataType): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val nodeType = nodeIdType(e)
     e.select(col("a").cast(LongType).as("a"), col("b").cast(LongType).as("b"))
       .as[(Long, Long)]
       .mapPartitions(partitionForest _)
@@ -462,37 +304,13 @@ object ConnectedComponents {
   /** The alternating loop over an already-contracted, checkpointed
     * star-edge set (self-loop markers included): certify-or-iterate.
     */
-  private def alternatingFromContracted(
-      canon0: DataFrame, cCount: Long, maxIter: Int): (DataFrame, Int) =
-    alternatingFrom(canon0, cCount, selfLoops = 0L, maxIter, contracted = true)
-
-  private def alternatingFrom(
-      raw: DataFrame, rawCount: Long, selfLoops: Long, maxIter: Int,
-      contracted: Boolean = false): (DataFrame, Int) = {
-    // NO Union operators anywhere below: a Union whose children share
-    // lineage (self-union) or sit over a checkpointed plan with
+  private def alternatingFrom(canon0: DataFrame, cCount: Long): (DataFrame, Int) = {
+    // NO Union operators anywhere in the loop: a Union whose children
+    // share lineage (self-union) or sit over a checkpointed plan with
     // preserved constraints trips Catalyst's
     // UnionBase.rewriteConstraints ("key not found: <attr>") on
     // real-world input plans. explode(array(struct…)) emits the same
     // rows with identical shuffle volume and no constraint rewrite.
-
-    // All incident nodes — built ONLY on the uncontracted (exotic-id)
-    // path when the input carries self-loops (observed free at
-    // materialization): the star loop drops self-loops, so a node
-    // whose only edge is a self-loop must be labeled from the RAW
-    // list via this frame. The contracted path carries (x, x) marker
-    // rows instead, and self-loop-free inputs (every shipped
-    // pipeline) take the join-free emit at the bottom — the nodes
-    // frame was a full explode+distinct exchange over 2× the edges,
-    // paid only to re-derive node ids the fixpoint star forest
-    // already carries (r12 round-constant cut).
-    val nodes =
-      if (!contracted && selfLoops > 0)
-        Some(raw
-          .select(explode(array(col("a"), col("b"))).as("node"))
-          .distinct()
-          .persist())
-      else None
 
     // Each star needs min-over-neighborhood joined back onto every
     // edge of the neighborhood. A groupBy+join does that in two
@@ -500,7 +318,7 @@ object ConnectedComponents {
     // partition) does it in ONE — the rows are already co-located by
     // the partition key, so the min rides along without a second
     // exchange. Measured on q91's chain graph: ~35% less wall per
-    // round, identical output (spec pins equality with hash-min).
+    // round, identical output (spec pins equality with the driver tier).
 
     // large-star: every neighbor v > u gets pointed at
     // min(Γ(u) ∪ {u}); processing each undirected edge from its
@@ -616,7 +434,7 @@ object ConnectedComponents {
         BigDecimal(m("h").asInstanceOf[java.math.BigDecimal])))
     }
 
-    // Certify-first (contracted path): co-partitioned edge sets come
+    // Certify-first: co-partitioned edge sets come
     // out of local contraction ALREADY at fixpoint, and the direct
     // star-forest test proves it in one hash-aggregate exchange —
     // where the loop's fingerprint could only certify by paying a
@@ -624,34 +442,34 @@ object ConnectedComponents {
     // test runs on the marker-stripped view; markers rejoin at the
     // emit. Scattered inputs fail the test, pay this one cheap
     // exchange, and take the normal fingerprint loop.
-    val certified =
-      contracted && isStarForest(raw.filter(col("a") =!= col("b")))
+    val certified = isStarForest(canon0.filter(col("a") =!= col("b")))
     // The star loop runs inside a TightLoop scope (AQE off +
     // count-sized partitions): one job per round instead of AQE's
     // per-exchange scheduling round-trips — the measured iterative
     // floor (see TightLoop). The symmetric closure doubles rows,
     // hence 2× the checkpointed count.
-    // The body's `raw` is the edge checkpoint rebound into the loop
+    // The body's `canon0` is the edge checkpoint rebound into the loop
     // session; `e` comes back bound to the caller's.
-    val loopState = if (certified) (raw, 0) else TightLoop.scoped(
-      raw, TightLoop.partsForRows(raw.sparkSession, 2L * rawCount)) { raw =>
+    val loopState = if (certified) (canon0, 0) else TightLoop.scoped(
+      canon0, TightLoop.partsForRows(canon0.sparkSession, 2L * cCount)) { canon0 =>
       // the distinct canonicalizes duplicate edges (cross-partition
-      // duplicate forest edges on the contracted path, caller
-      // duplicates on the raw path) and lays the loop input out at
-      // the TightLoop partition count
+      // duplicate forest edges) and lays the loop input out at the
+      // TightLoop partition count
       val canon = checkpointWithFingerprint(
-        raw.filter(col("a") =!= col("b")).distinct())
+        canon0.filter(col("a") =!= col("b")).distinct())
       var e = canon._1
       var prev = canon._2
       var converged = prev._1 == 0L
       var iter = 0
-      while (!converged && iter < maxIter) {
+      while (!converged && iter < MaxStarRounds) {
         // ONE star pair per checkpoint/fingerprint. (Measured: composing
         // two pairs per probe to halve the fixed costs made q91 ~30%
         // SLOWER — the star work itself dominates, and the extra
         // confirmation iteration then costs two rounds, not one.)
-        // localCheckpoint per round: same lineage-truncation rationale
-        // as the hash-min loop above.
+        // localCheckpoint per round: each round's plan references the
+        // previous round's, so raw lineage would compound per
+        // iteration; the eager checkpoint truncates it to the
+        // materialized RDD, keeping round N's plan constant-size.
         val (next, fp) = checkpointWithFingerprint(smallStar(largeStar(e)))
         converged = fp == prev
         prev = fp
@@ -667,39 +485,27 @@ object ConnectedComponents {
     // labels fall out of `e` alone: explode each edge to (child,
     // parent) + (parent, parent) and take min(label) per node (one
     // partial-aggregated exchange; roots label themselves, duplicates
-    // and the pathological maxIter exit collapse under the min). The
-    // r11 form re-derived the node set from RAW via a second
+    // and the pathological MaxStarRounds exit collapse under the min). The
+    // r11 form re-derived the node set from the raw edges via a second
     // explode+distinct exchange and joined it back — two exchanges
     // plus a join to recompute information the star forest already
-    // holds. Self-loop-carrying inputs keep the nodes-frame join: a
-    // self-loop-only node is on no fixpoint edge.
-    val labels = nodes match {
-      case Some(nd) =>
-        val stars = e.select(col("a").as("node"), col("b").as("label"))
-          .groupBy("node").agg(min("label").as("label"))
-        val l = nd.join(stars, Seq("node"), "left")
-          .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-        nd.unpersist()
-        l
-      case None =>
-        val pairs = e.select(explode(array(
-            struct(col("a").as("node"), col("b").as("label")),
-            struct(col("b").as("node"), col("b").as("label")))).as("p"))
-          .select(col("p.node").as("node"), col("p.label").as("label"))
-        // contracted path after a LOOP run: the loop stripped the
-        // (x, x) self-loop markers — rejoin them from the (still
-        // persisted) contraction checkpoint so self-loop-only nodes
-        // keep their self-label; min() folds nodes present on both
-        // sides. (When certified, e IS the checkpoint — markers are
-        // already aboard.) unionAll of two independent checkpointed
-        // frames is the hash-min loop's own proven shape.
-        val withMarkers =
-          if (contracted && !certified)
-            pairs.unionAll(raw.filter(col("a") === col("b"))
-              .select(col("a").as("node"), col("b").as("label")))
-          else pairs
-        withMarkers.groupBy("node").agg(min("label").as("label"))
-    }
-    (labels, iter)
+    // holds.
+    val pairs = e.select(explode(array(
+        struct(col("a").as("node"), col("b").as("label")),
+        struct(col("b").as("node"), col("b").as("label")))).as("p"))
+      .select(col("p.node").as("node"), col("p.label").as("label"))
+    // after a LOOP run: the loop stripped the (x, x) self-loop markers
+    // — rejoin them from the (still persisted) contraction checkpoint
+    // so self-loop-only nodes keep their self-label; min() folds nodes
+    // present on both sides. (When certified, e IS the checkpoint —
+    // markers are already aboard.) A unionAll of two independent
+    // checkpointed frames shares no lineage, so the constraint rewrite
+    // above cannot trip.
+    val withMarkers =
+      if (!certified)
+        pairs.unionAll(canon0.filter(col("a") === col("b"))
+          .select(col("a").as("node"), col("b").as("label")))
+      else pairs
+    (withMarkers.groupBy("node").agg(min("label").as("label")), iter)
   }
 }

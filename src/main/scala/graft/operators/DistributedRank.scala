@@ -638,104 +638,35 @@ object DistributedRank {
     * smallest value whose inclusive cumulative weight reaches half
     * the group total (min v with 2·cum(w) ≥ total(w)) — the q120
     * shape. Weights must sum exactly (long or decimal, the
-    * [[runningSum]] contract). Same two tiers as
-    * [[valuesAtRanksFromCounts]]: a bounded limit-collect runs the
-    * sort + cumulative walk on the driver in ONE job (exact
-    * BigDecimal accumulation — bit-identical to the decimal prefix
-    * sum); wider tables take the distributed prefix-sum + crossing
-    * filter. Null weights contribute nothing; null values rank first
-    * and the emitted value is the first NON-NULL value at or past the
-    * crossing (the distributed form's `min(v)` ignores nulls the same
-    * way).
+    * [[runningSum]] contract). One form: the distributed prefix sum
+    * plus a crossing filter. A driver-side collect-and-walk tier would
+    * only pay off for a bounded weight table, and q120's is not one:
+    * its prices are near-unique (583k distinct among 600k sf0.1
+    * lines), so the table is ~fact-row-sized and a driver walk
+    * measured a regression there (sf0.1 2.32 → 2.80 s). Null weights
+    * contribute nothing; null values rank first and the emitted value
+    * is the first NON-NULL value at or past the crossing (`min(v)`
+    * ignores nulls), so a group whose values are all NULL emits
+    * (group, NULL) — `DistributedRankSpec`'s weightedMedian case pins
+    * it against the plain window form.
     */
   def weightedMedian(
       wTable: DataFrame,
       groupCols: Seq[String],
       valueCol: String,
       weightCol: String,
-      out: String = "wmedian",
-      maxDriverRows: Int = DefaultMaxDriverRows,
-      driverTier: Boolean = true): DataFrame = {
-    val spark = wTable.sparkSession
+      out: String = "wmedian"): DataFrame = {
     import org.apache.spark.sql.types._
     val wType = wTable.schema(weightCol).dataType
     require(wType == LongType || wType == IntegerType ||
       wType.isInstanceOf[DecimalType],
       s"weightedMedian needs an exactly-summable weight (long or decimal); " +
         s"$weightCol is $wType")
-    // driverTier = false skips the probe entirely: a FAILED probe has
-    // computed (and discarded) the caller's aggregate once, so a
-    // caller that KNOWS the value domain is fact-sized (near-unique
-    // values — q120's prices) must not pay it
-    val ordOpt = driverValueOrdering(wTable.schema(valueCol).dataType)
-    val probed =
-      if (!driverTier || ordOpt.isEmpty) None
-      else {
-        val rows = wTable.limit(maxDriverRows + 1).collect()
-        if (rows.length > maxDriverRows) None
-        else {
-          val ord = ordOpt.get
-          val schema = wTable.schema
-          val gIdx = groupCols.map(schema.fieldIndex)
-          val vI = schema.fieldIndex(valueCol)
-          val wI = schema.fieldIndex(weightCol)
-          def weightOf(r: Row): java.math.BigDecimal =
-            if (r.isNullAt(wI)) java.math.BigDecimal.ZERO
-            else r.get(wI) match {
-              case d: java.math.BigDecimal => d
-              case n: Number => java.math.BigDecimal.valueOf(n.longValue())
-            }
-          val rowOrd = new Ordering[Row] {
-            def compare(a: Row, b: Row): Int = {
-              val an = a.isNullAt(vI); val bn = b.isNullAt(vI)
-              if (an && bn) 0 else if (an) -1 else if (bn) 1
-              else ord.compare(a.get(vI), b.get(vI))
-            }
-          }
-          val outRows = rows
-            .groupBy(r => gIdx.map(i => r.get(i)))
-            .valuesIterator
-            .flatMap { rs =>
-              val sorted = rs.sorted(rowOrd)
-              val tot = sorted.foldLeft(java.math.BigDecimal.ZERO)(
-                (acc, r) => acc.add(weightOf(r)))
-              var cum = java.math.BigDecimal.ZERO
-              var crossed = false
-              var hit: Option[Row] = None
-              var i = 0
-              while (hit.isEmpty && i < sorted.length) {
-                val r = sorted(i)
-                cum = cum.add(weightOf(r))
-                if (!crossed)
-                  crossed =
-                    cum.multiply(java.math.BigDecimal.valueOf(2)).compareTo(tot) >= 0
-                if (crossed && !r.isNullAt(vI)) hit = Some(r)
-                i += 1
-              }
-              // all-NULL-value group: the crossing is reached but no
-              // non-null value exists — emit (group, NULL), exactly
-              // what the distributed tier's min(value) over the
-              // crossing rows returns (tiers stay bit-identical on
-              // degenerate input; WeightedMedianSpec pins it)
-              hit.map(r => Row.fromSeq(gIdx.map(r.get) :+ r.get(vI)))
-                .orElse(sorted.headOption.map(r =>
-                  Row.fromSeq(gIdx.map(r.get) :+ null)))
-            }
-            .toSeq
-          val outSchema = StructType(
-            gIdx.map(wTable.schema.fields) :+
-              wTable.schema.fields(vI).copy(name = out))
-          Some(spark.createDataFrame(
-            java.util.Arrays.asList(outRows: _*), outSchema))
-        }
-      }
-    probed.getOrElse {
-      runningSum(wTable, groupCols, Seq(valueCol), weightCol, "__cw",
-        outTotal = "__tw", maxDriverRows = maxDriverRows)
-        .filter(col("__cw") * 2 >= col("__tw"))
-        .groupBy(groupCols.map(col): _*)
-        .agg(min(col(valueCol)).as(out))
-    }
+    runningSum(wTable, groupCols, Seq(valueCol), weightCol, "__cw",
+      outTotal = "__tw")
+      .filter(col("__cw") * 2 >= col("__tw"))
+      .groupBy(groupCols.map(col): _*)
+      .agg(min(col(valueCol)).as(out))
   }
 
   /** Plan-size ceiling under which dispatch skips the count job

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryDef
-import graft.flight.FlightModel
+import graft.flight.FlightIo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,14 +27,17 @@ object FlightQueries {
     * Hadoop filesystem — local, s3a, …), otherwise the bundled fixture.
     * The driver's sf dirs carry no gold table, so the fixture is the
     * effective source there; a user pointing the engine at their own
-    * lakehouse layout gets their data.
+    * lakehouse layout gets their data. Read with the declared
+    * [[graft.flight.FlightModel.goldSchema]] ([[FlightIo.readGold]],
+    * the one gold reader), so resolving it runs no schema-inference
+    * job.
     */
   private def gold(s: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     val candidate = new Path(dir, "gold.parquet")
     val fs = candidate.getFileSystem(s.sparkContext.hadoopConfiguration)
     val path = if (fs.exists(candidate)) candidate.toString else FixturePath
-    s.read.parquet(path)
+    FlightIo.readGold(s, path)
   }
 
   /** DuckDB-side mirror of [[gold]]: the fixture path inlined as a CTE
@@ -167,7 +170,4 @@ object FlightQueries {
          |FROM outc JOIN inc ON origin_airport_name = destination_airport_name
          |ORDER BY diff DESC, origin_airport_name""".stripMargin)(
       (s, d) => inOutImbalance(gold(s, d))))
-
-  // FlightModel referenced to bind the module dependency explicitly
-  locally { FlightModel.goldColumns: Unit }
 }

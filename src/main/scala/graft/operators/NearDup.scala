@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.Tables
 import graft.functions.{CharNgramHashesSorted, LongPosAgreeCount, SortedLongIntersectCount}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DoubleType}
 
@@ -42,49 +41,24 @@ import org.apache.spark.sql.types.{BinaryType, DoubleType}
   * j = 0.6, →1 as j→1; precision 1.0 by construction. Band keys are
   * single longs, so the candidate self-join shuffles narrow rows.
   *
-  * **Candidate-stage scale knobs** (both verify-volume controls for
-  * the LSH gray zone — j just below threshold passes 8×2 banding with
-  * high probability, so candidate volume can grow quadratically in
-  * sub-threshold twin multiplicity while staying exactly-verified):
-  *
-  *   - **signature-agreement pre-screen** (`agreeFloor`): candidate
-  *     pairs first join the persisted 16-long MinHash signatures
-  *     (~130 B/side) and pairs agreeing on fewer than `agreeFloor`
-  *     positions are dropped before the multi-KB gram arrays ship.
-  *     Position agreement is Bernoulli(j) per hash, so agreement ~
-  *     Binomial(16, j); the default floor sits 3σ below the expected
-  *     agreement AT the verify threshold
-  *     ([[NearDup.defaultAgreeFloor]]: 16·t − 3·√(16·t·(1−t)), = 4 at
-  *     t = 0.6), and a banding candidate already carries 2 agreeing
-  *     positions from its matched band, so the per-true-pair drop
-  *     probability is P[≤1 of the other 14 agree | j ≥ 0.6] ≈ 6e-5 —
-  *     recall is unchanged in expectation even over millions of true
-  *     pairs. The floor is deliberately a tail guard, not a
-  *     classifier: 16 hashes cannot separate j = 0.5 from j = 0.6
-  *     (the distributions overlap by >2σ), so sharper pruning of the
-  *     gray zone belongs to the bucket cap below.
-  *   - **band-bucket cap with hub-star fallback** (`maxBandBucket`):
-  *     an oversized bucket is the quadratic failure shape — k docs
-  *     sharing one band key contribute k²/2 candidate pairs. Buckets
-  *     over the cap are not dropped but REDUCED TO A STAR through
-  *     their minimum member ([[NearDup.capToHub]]): k−1 hub pairs
-  *     instead of k²/2, so a true dup cluster filling the bucket
-  *     stays CONNECTED and the transitive closure downstream
-  *     (components, retention, SemDeDup) recovers the same clusters.
-  *     Measured at 10× replica scale (cap=64): 96.9% of cluster
-  *     partitions bit-identical to the uncapped run (2957 → 2969
-  *     clusters; the splits are gray-zone buckets whose hub fails the
-  *     exact verify that some member–member pairs pass — a drop
-  *     policy loses those buckets' connectivity entirely), and at
-  *     100× the cap turns the ~70 GB-of-shuffle job that out-spills
-  *     one box into a 2.4 GB / ~48 s run that avoids 1.89e9 candidate
-  *     pairs (NearDupScale at cap 64, a scale main last present at
-  *     commit fba91a5; numbers in README). Reduced volume is
-  *     observable, not silent: [[NearDup.overCapBandBuckets]] lists
-  *     every over-cap bucket with its size and
-  *     [[NearDup.capReport]] aggregates the saved pair counts for
-  *     logging. Default `Int.MaxValue` (off — exact candidate
-  *     generation); the 100× probe uses 64.
+  * **Signature-agreement pre-screen** (`agreeFloor`), the candidate-
+  * stage verify-volume control for the LSH gray zone (j just below
+  * threshold passes 8×2 banding with high probability, so candidate
+  * volume can grow quadratically in sub-threshold twin multiplicity
+  * while staying exactly-verified): candidate pairs first join the
+  * persisted 16-long MinHash signatures (~130 B/side) and pairs
+  * agreeing on fewer than `agreeFloor` positions are dropped before
+  * the multi-KB gram arrays ship. Position agreement is Bernoulli(j)
+  * per hash, so agreement ~ Binomial(16, j); the default floor sits 3σ
+  * below the expected agreement AT the verify threshold
+  * ([[NearDup.defaultAgreeFloor]]: 16·t − 3·√(16·t·(1−t)), = 4 at
+  * t = 0.6), and a banding candidate already carries 2 agreeing
+  * positions from its matched band, so the per-true-pair drop
+  * probability is P[≤1 of the other 14 agree | j ≥ 0.6] ≈ 6e-5 —
+  * recall is unchanged in expectation even over millions of true
+  * pairs. The floor is deliberately a tail guard, not a classifier:
+  * 16 hashes cannot separate j = 0.5 from j = 0.6 (the distributions
+  * overlap by >2σ).
   */
 object NearDup {
 
@@ -127,27 +101,13 @@ object NearDup {
     def bandRows: DataFrame = bandRowsOf(sigs, blockCols)
   }
 
-  /** Near-dup pairs with exact Jaccard ≥ `threshold`, blocked by
-    * `blockCols` (pairs are only sought within a block — the standard
-    * entity-resolution guard that keeps candidate volume proportional
-    * to true duplicates; this template-heavy corpus has ~8M unblocked
-    * near-dup pairs among 5k documents vs ~10² within blocks). Pass
-    * `Nil` for global cross-block search. `agreeFloor` -1 = derive
-    * from the threshold ([[defaultAgreeFloor]]); 0 disables the
-    * pre-screen.
-    */
-  def nearDupPairs(
-      spark: SparkSession,
-      dir: String,
-      threshold: Double = 0.6,
-      blockCols: Seq[String] = Seq("lang", "source"),
-      agreeFloor: Int = -1,
-      maxBandBucket: Int = Int.MaxValue): DataFrame =
-    indexPairs(buildIndex(Tables(spark, dir).documentsSpread, blockCols),
-      threshold, agreeFloor, maxBandBucket)
-
   /** Build the index from a documents frame (`doc_id`, `text`,
-    * blockCols…). Tier 1 + feature extraction in ONE pass over the
+    * blockCols…). Pairs are only sought within a block of `blockCols`
+    * — the standard entity-resolution guard that keeps candidate
+    * volume proportional to true duplicates; this template-heavy
+    * corpus has ~8M unblocked near-dup pairs among 5k documents vs
+    * ~10² within blocks. Pass `Nil` for global cross-block search.
+    * Tier 1 + feature extraction in ONE pass over the
     * corpus: fingerprint and hashed-sorted gram set per doc, collapsed
     * to canonical clusters (hashes are identical within a cluster —
     * identical text — so `first()` carries them without a
@@ -200,56 +160,10 @@ object NearDup {
       .as(Seq("band", "bk")))
   }
 
-  /** Over-cap band buckets of an index: (band, bk, bucket_n) for every
-    * bucket larger than `cap` — the audit view of which buckets a
-    * capped run reduces to hub-stars. Empty ⇒ the cap changes nothing
-    * for this corpus.
-    */
-  def overCapBandBuckets(index: Index, cap: Int): DataFrame =
-    index.bandRows.groupBy("band", "bk").agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > cap)
-
-  /** One-row aggregate of [[overCapBandBuckets]]: buckets capped to
-    * hub-stars, band rows inside them, and the candidate pairs the
-    * star form saves (`Σ (n·(n−1)/2 − (n−1))`) — the numbers a capped
-    * production run logs alongside its output.
-    */
-  def capReport(index: Index, cap: Int): DataFrame =
-    overCapBandBuckets(index, cap).agg(
-      count(lit(1)).as("buckets_capped"),
-      coalesce(sum(col("bucket_n")), lit(0L)).as("rows_in_capped"),
-      coalesce(sum(col("bucket_n") * (col("bucket_n") - 1) / 2
-        - (col("bucket_n") - 1)), lit(0L)).as("pairs_reduced"))
-
-  /** Band rows with every over-cap bucket REPLACED BY ITS HUB (the
-    * minimum canon_id): joining the other side against this frame
-    * turns an oversized bucket's k²/2 candidate pairs into a k−1
-    * hub-star — within-bucket CONNECTIVITY survives (a true dup
-    * cluster filling the bucket stays connected through the hub, so
-    * the transitive closure downstream recovers the same clusters)
-    * while candidate volume goes linear. Pairs lost are exactly
-    * member-member pairs of mixed oversized buckets whose docs do not
-    * near-dup the hub — each such pair has the 7 other bands to
-    * reappear in. The bucket-size aggregation and back-join are
-    * canonical-scale and narrow — paid only when a cap is set.
-    */
-  private def capToHub(bandRows: DataFrame, maxBandBucket: Int): DataFrame =
-    if (maxBandBucket == Int.MaxValue) bandRows
-    else {
-      val sizes = bandRows.groupBy("band", "bk")
-        .agg(count(lit(1)).as("bucket_n"), min(col("canon_id")).as("hub"))
-      val small = bandRows.join(
-        sizes.filter(col("bucket_n") <= maxBandBucket).select("band", "bk"),
-        Seq("band", "bk"))
-      val hubs = sizes.filter(col("bucket_n") > maxBandBucket)
-        .select(col("band"), col("bk"), col("hub").as("canon_id"))
-      small.unionByName(hubs)
-    }
-
   /** Candidate (ca < cb for self) pairs from banded rows — the join on
     * (band, bk), distinct over pairs. Self pairs are normalized with
-    * least/greatest so a one-sided reduction of the right frame (the
-    * hub-star cap) still emits its pairs in canonical order.
+    * least/greatest: the symmetric self-join meets each pair in both
+    * orders, and the distinct keeps one.
     */
   private def candidatesOf(aRows: DataFrame, bRows: DataFrame, selfPairs: Boolean): DataFrame = {
     val joined = aRows.select(col("band"), col("bk"), col("canon_id").as("ca"))
@@ -309,15 +223,16 @@ object NearDup {
       .filter(col("da") < col("db"))
       .select(col("da").as("doc_a"), col("db").as("doc_b"), lit(1.0).as("jaccard"))
 
-  /** All near-dup pairs in an index (the full-corpus listing). */
+  /** All near-dup pairs in an index (the full-corpus listing), exact
+    * Jaccard ≥ `threshold`. `agreeFloor` -1 = derive from the
+    * threshold ([[defaultAgreeFloor]]); 0 disables the pre-screen.
+    */
   def indexPairs(
       index: Index,
       threshold: Double = 0.6,
-      agreeFloor: Int = -1,
-      maxBandBucket: Int = Int.MaxValue): DataFrame = {
+      agreeFloor: Int = -1): DataFrame = {
     val rows = index.bandRows
-    verifyExpand(
-      candidatesOf(rows, capToHub(rows, maxBandBucket), selfPairs = true),
+    verifyExpand(candidatesOf(rows, rows, selfPairs = true),
       index, index, threshold, agreeFloor)
       .unionAll(withinCluster(index.clusters))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -340,18 +255,12 @@ object NearDup {
       index: Index,
       newDocs: DataFrame,
       threshold: Double = 0.6,
-      agreeFloor: Int = -1,
-      maxBandBucket: Int = Int.MaxValue): DataFrame = {
+      agreeFloor: Int = -1): DataFrame = {
     val fresh = buildIndex(newDocs, index.blockCols)
-    // the cap reduces the CORPUS side (where replica-inflated buckets
-    // live — batch buckets are batch-sized): new docs meet an
-    // oversized corpus bucket through its hub
     val nb = fresh.bandRows
-    val ob = capToHub(index.bandRows, maxBandBucket)
-    verifyExpand(candidatesOf(nb, ob, selfPairs = false),
+    verifyExpand(candidatesOf(nb, index.bandRows, selfPairs = false),
       fresh, index, threshold, agreeFloor)
-      .unionAll(verifyExpand(
-        candidatesOf(nb, capToHub(nb, maxBandBucket), selfPairs = true),
+      .unionAll(verifyExpand(candidatesOf(nb, nb, selfPairs = true),
         fresh, fresh, threshold, agreeFloor))
       .unionAll(withinCluster(fresh.clusters))
       .orderBy(col("doc_a"), col("doc_b"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.IntegerType
 
 /** Cluster retention: collapse near-dup PAIRS into a kept corpus.
   * Components via the size-adaptive closure
-  * ([[ConnectedComponents.runAdaptive]] — driver union-find under the
+  * ([[ConnectedComponents.run]] — driver union-find under the
   * bounded-collect tier, alternating stars above it), then each
   * cluster keeps exactly one
   * member — the best `scoreCol` (id tiebreak); docs in no pair keep
@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Pair-source agnostic: q77 drives it with the exact blocked-Jaccard
   * pairs (oracle-expressible), the 100 TB path composes it over
-  * [[NearDup.nearDupPairs]] — LSH-bucketed candidates, linear-ish in
+  * [[NearDup.indexPairs]] — LSH-bucketed candidates, linear-ish in
   * corpus size where exact enumeration is quadratic per block
   * (measured: 6.2× time at 10× data for the exact pairs vs 1.7× for
   * the LSH pipeline). RetentionSpec pins that composition.
@@ -31,7 +31,7 @@ object Retention {
     * (idCol, component, scoreCol, keep 0/1), one row per scored id.
     */
   def retainBest(pairs: DataFrame, scored: DataFrame, idCol: String, scoreCol: String): DataFrame = {
-    val comp = ConnectedComponents.runAdaptive(pairs)
+    val comp = ConnectedComponents.run(pairs)
     val w = Window.partitionBy(col("component"))
       .orderBy(col(scoreCol).desc, col(idCol))
     scored.join(comp, scored(idCol) === comp("node"), "left")

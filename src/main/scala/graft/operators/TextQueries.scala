@@ -215,8 +215,7 @@ object TextQueries {
     * LSH gray zone drives the max bucket to 569 and candidate volume
     * to 10.5M pairs (6.1M of them from buckets >64), the capped
     * listing collapses to ~0.4M pairs and the gram-array verify stays
-    * one-box-sized. This is the same hub-star policy as
-    * [[NearDup.capToHub]], here at the 2-band tier.
+    * one-box-sized.
     */
   private[operators] val LshBucketCap = 16
 
@@ -545,7 +544,7 @@ object TextQueries {
     // ------------------------------------------------------------------
     // q69 — dedup cluster assignment: connected components over the
     // q29 near-dup pair graph (size-adaptive — see
-    // [[ConnectedComponents.runAdaptive]]; a pair table this side of
+    // [[ConnectedComponents.run]]; a pair table this side of
     // the bounded-collect tier labels via driver union-find in one
     // pass). Pairs say "a ~ b"; retention policy
     // needs the transitive closure. The oracle computes the same
@@ -562,7 +561,7 @@ object TextQueries {
          |SELECT node AS doc_id, MIN(label) AS component
          |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val edges = jaccardPairs(s, dir).select(col("doc_a"), col("doc_b"))
-      ConnectedComponents.runAdaptive(edges)
+      ConnectedComponents.run(edges)
         .select(col("node").as("doc_id"), col("label").as("component"))
         .orderBy(col("doc_id"))
     },

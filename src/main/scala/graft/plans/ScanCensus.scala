@@ -45,19 +45,33 @@ object ScanCensus {
       root: SparkPlan,
       seenCaches: mutable.Set[AnyRef]): Map[String, Int] = {
     val hits = mutable.Buffer[String]()
+    foreachNode(root, seenCaches) {
+      case f: FileSourceScanExec =>
+        // one hit per scan node per distinct table under its roots;
+        // catalog tables (`saveAsTable` output, read through
+        // `spark.table`) have plain directory roots with no .parquet
+        // component — name those by their table identifier so they
+        // stay ledger-visible
+        val byPath = f.relation.location.rootPaths
+          .flatMap(p => TableRe.findFirstMatchIn(p.toString).map(_.group(1)))
+          .distinct
+        hits ++= (if (byPath.nonEmpty) byPath
+                  else f.tableIdentifier.map(_.table).toSeq)
+      case _ => ()
+    }
+    hits.groupBy(identity).view.mapValues(_.size).toMap
+  }
+
+  /** Visits every node one execution of `root` would run: descends
+    * through the AQE wrapper and subquery plans, and into each
+    * distinct cached relation's build plan once (`seenCaches`
+    * remembers the ones already walked).
+    */
+  def foreachNode(root: SparkPlan, seenCaches: mutable.Set[AnyRef])(
+      visit: SparkPlan => Unit): Unit = {
     def walk(n: SparkPlan): Unit = {
+      visit(n)
       n match {
-        case f: FileSourceScanExec =>
-          // one hit per scan node per distinct table under its roots;
-          // catalog tables (`saveAsTable` output, read through
-          // `spark.table`) have plain directory roots with no .parquet
-          // component — name those by their table identifier so they
-          // stay ledger-visible
-          val byPath = f.relation.location.rootPaths
-            .flatMap(p => TableRe.findFirstMatchIn(p.toString).map(_.group(1)))
-            .distinct
-          hits ++= (if (byPath.nonEmpty) byPath
-                    else f.tableIdentifier.map(_.table).toSeq)
         case a: AdaptiveSparkPlanExec =>
           walk(a.inputPlan)
         case im: InMemoryTableScanExec =>
@@ -69,6 +83,5 @@ object ScanCensus {
       n.subqueries.foreach(walk)
     }
     walk(root)
-    hits.groupBy(identity).view.mapValues(_.size).toMap
   }
 }

@@ -23,6 +23,13 @@ class PlanQualitySpec extends AnyFunSuite {
   private def drained[A](body: => A): A =
     try body finally CacheScope.drain()
 
+  /** Queries whose final plan runs a window with no partitionSpec
+    * (one task over the window's whole input) at this suite's scale.
+    */
+  private val UnpartitionedWindowQueries = Seq(
+    "q112_mixture_waterfill", "q115_zorder_layout", "q118_auc_purchase",
+    "q119_gini_spend", "q127_skyline_parts", "q46_ntile_quartile")
+
   private def plan(name: String): String =
     drained(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString)
 
@@ -379,8 +386,23 @@ class PlanQualitySpec extends AnyFunSuite {
     // per table with the annotated exceptions in graft.ScanBudgets.
     // A new query that grows the q128 defect class (shared shuffle
     // subtree re-derived per consumer) fails here, not on the cluster.
+    // The same pass names the queries whose final plan holds a
+    // WindowExec with no partitionSpec (Spark's "No Partition Defined"
+    // warning: all rows through one task), walked the census's way.
+    // Windows a kernel runs at build time are in no final plan.
+    val unpartitioned = Seq.newBuilder[String]
     val failures = SparkEntry.defs.flatMap { d =>
-      val counts = drained(plans.ScanCensus.tableScans(d.run(spark, dir)))
+      val (counts, globalWindow) = drained {
+        val plan = d.run(spark, dir).queryExecution.executedPlan
+        var global = false
+        plans.ScanCensus.foreachNode(plan, scala.collection.mutable.Set[AnyRef]()) {
+          case w: org.apache.spark.sql.execution.window.WindowExec
+              if w.partitionSpec.isEmpty => global = true
+          case _ => ()
+        }
+        (plans.ScanCensus.tableScans(plan, scala.collection.mutable.Set[AnyRef]()), global)
+      }
+      if (globalWindow) unpartitioned += d.name
       counts.collect {
         case (t, c) if c > d.scanBudget(t) =>
           s"${d.name}: $t scanned ${c}x, budget ${d.scanBudget(t)}"
@@ -388,6 +410,7 @@ class PlanQualitySpec extends AnyFunSuite {
     }
     assert(failures.isEmpty,
       s"over-budget scans (fix the plan or justify in ScanBudgets):\n${failures.mkString("\n")}")
+    assert(unpartitioned.result().sorted == UnpartitionedWindowQueries)
   }
 
   test("no query plan contains a collect-driven loop (Exchange-only shuffles)") {

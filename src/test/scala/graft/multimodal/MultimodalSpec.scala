@@ -77,21 +77,4 @@ class MultimodalSpec extends AnyFunSuite {
     assert(frames.length == 4)
     assert(frames.forall(_.length <= 8))
   }
-
-  test("resize: fixed target length, deterministic under repartition, metadata re-derived") {
-    val media = MultimodalOps.asMedia(docs)
-    val r1 = MultimodalOps.resize(spark, media, targetLen = 64).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    val r2 = MultimodalOps.resize(spark, media.repartition(7), targetLen = 64).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(r1.size == 50)
-    assert(r1.values.forall(_.length == 64))
-    assert(r1 == r2)
-    // metadata describes the RESIZED payload
-    val meta = MultimodalOps.resize(spark, media, 64).select("meta.byte_len").head()
-    assert(meta.getInt(0) == 64)
-    // schema contract preserved end-to-end: resized media still feeds featurize
-    val feats = MultimodalOps.featurize(spark, MultimodalOps.resize(spark, media, 64)).collect()
-    assert(feats.length == 50 && feats.forall(_.features.length == 8))
-  }
 }

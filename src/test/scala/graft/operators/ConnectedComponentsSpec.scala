@@ -3,8 +3,12 @@ package graft.operators
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Hash-min label propagation must produce the exact transitive
-  * closure: min reachable id per node, every incident node labeled.
+/** Both tiers of [[ConnectedComponents.run]] — driver union-find and
+  * the contraction + alternating star loop (forced through
+  * `starLoop`) — must produce the exact transitive closure: min
+  * reachable id per node, every incident node labeled. Each tier is
+  * checked against literal expected labels and against the other, an
+  * independent exact algorithm.
   */
 class ConnectedComponentsSpec extends AnyFunSuite {
 
@@ -17,49 +21,53 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       (2L, 1L), (2L, 3L), (4L, 3L),          // chain 1-2-3-4
       (10L, 11L), (11L, 12L), (10L, 12L),    // triangle
       (21L, 20L)).toDF("a", "b")
-    val got = ConnectedComponents.run(edges)
-      .as[(Long, Long)].collect().toMap
     val want = Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L,
       20L -> 20L, 21L -> 20L)
-    assert(got == want)
+    assert(ConnectedComponents.run(edges).as[(Long, Long)].collect().toMap == want)
+    assert(ConnectedComponents.starLoop(edges)._1.as[(Long, Long)].collect().toMap == want)
   }
 
   test("long chain converges within the iteration budget (diameter > 2 rounds)") {
     val n = 12L
     val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
-    val got = ConnectedComponents.run(edges)
-      .as[(Long, Long)].collect().toMap
-    assert(got == (1L to n).map(_ -> 1L).toMap)
+    val want = (1L to n).map(_ -> 1L).toMap
+    assert(ConnectedComponents.run(edges).as[(Long, Long)].collect().toMap == want)
+    assert(ConnectedComponents.starLoop(edges)._1.as[(Long, Long)].collect().toMap == want)
   }
 
   test("empty edge list yields empty labeling") {
     val edges = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(ConnectedComponents.run(edges).count() == 0L)
-    assert(ConnectedComponents.runAlternating(edges).count() == 0L)
+    assert(ConnectedComponents.starLoop(edges)._1.count() == 0L)
   }
 
   test("alternating matches hash-min on chain, clique, and pair") {
+    // hash-min's fixpoint is the min reachable id per node: the literal
+    // labels below, which the driver tier must give too
     val edges = Seq(
       (2L, 1L), (2L, 3L), (4L, 3L),
       (10L, 11L), (11L, 12L), (10L, 12L),
       (21L, 20L), (30L, 30L)).toDF("a", "b")
-    val viaMin = ConnectedComponents.run(edges)
+    val want = Map(
+      1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L,
+      20L -> 20L, 21L -> 20L,
+      30L -> 30L) // self-loop-only node still labeled
+    val viaDriver = ConnectedComponents.run(edges)
       .as[(Long, Long)].collect().toMap
-    val viaStar = ConnectedComponents.runAlternating(edges)
+    val viaStar = ConnectedComponents.starLoop(edges)._1
       .as[(Long, Long)].collect().toMap
-    assert(viaStar == viaMin)
-    assert(viaStar(30L) == 30L) // self-loop-only node still labeled
+    assert(viaStar == want)
+    assert(viaDriver == want)
   }
 
   test("alternating labels a 512-link chain in O(log n) rounds") {
-    // Worst case for hash-min (rounds = diameter = 511); the
-    // star-alternation must stay logarithmic AND exact.
+    // Worst case for min-label propagation (rounds = diameter = 511);
+    // the star-alternation must stay logarithmic AND exact.
     val n = 512L
     val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
-    val (labels, rounds) =
-      ConnectedComponents.runAlternatingWithRounds(edges)
+    val (labels, rounds) = ConnectedComponents.starLoop(edges)
     assert(labels.as[(Long, Long)].collect().toMap ==
       (1L to n).map(_ -> 1L).toMap)
     assert(rounds <= 15, s"expected O(log n) rounds, got $rounds")
@@ -72,8 +80,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // join-free label emit must still cover every incident node
     val n = 64L
     val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b").coalesce(1)
-    val (labels, rounds) =
-      ConnectedComponents.runAlternatingWithRounds(edges)
+    val (labels, rounds) = ConnectedComponents.starLoop(edges)
     assert(labels.as[(Long, Long)].collect().toMap ==
       (1L to n).map(_ -> 1L).toMap)
     assert(rounds == 0,
@@ -81,15 +88,19 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("alternating matches hash-min on a seeded random graph") {
+    // hash-min's fixpoint (min reachable id per node) is what the
+    // driver union-find tier computes, independently of the star loop
     val rnd = new scala.util.Random(42)
     val edges = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter { case (a, b) => a != b }
       .toDF("a", "b")
-    val viaMin = ConnectedComponents.run(edges)
+    // 300 edges < MaxDriverEdges → run takes the driver union-find tier
+    val viaDriver = ConnectedComponents.run(edges)
       .as[(Long, Long)].collect().toMap
-    val viaStar = ConnectedComponents.runAlternating(edges)
+    val viaStar = ConnectedComponents.starLoop(edges)._1
       .as[(Long, Long)].collect().toMap
-    assert(viaStar == viaMin)
+    assert(viaDriver.nonEmpty)
+    assert(viaStar == viaDriver)
   }
 
   // --- adaptive dispatch: both tiers must be byte-identical ---------
@@ -102,10 +113,10 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   ).toDF("a", "b")
 
   test("adaptive (driver tier) matches alternating on the mixed graph") {
-    val viaStar = ConnectedComponents.runAlternating(mixedGraph)
+    val viaStar = ConnectedComponents.starLoop(mixedGraph)._1
       .as[(Long, Long)].collect().toMap
     // 11 edges < MaxDriverEdges → driver union-find tier
-    val viaDriver = ConnectedComponents.runAdaptive(mixedGraph)
+    val viaDriver = ConnectedComponents.run(mixedGraph)
       .as[(Long, Long)].collect().toMap
     assert(viaDriver == viaStar)
     assert(viaDriver(30L) == 30L)
@@ -113,8 +124,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("driver tier output schema matches the distributed tier's types") {
     val intEdges = Seq((2, 1), (3, 2)).toDF("a", "b")
-    val driverTier = ConnectedComponents.runAdaptive(intEdges)
-    val starTier = ConnectedComponents.runAlternating(intEdges)
+    val driverTier = ConnectedComponents.run(intEdges)
+    val starTier = ConnectedComponents.starLoop(intEdges)._1
     assert(driverTier.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
       starTier.schema.fields.map(f => (f.name, f.dataType)).toSeq)
     assert(driverTier.as[(Int, Int)].collect().toMap ==
@@ -126,7 +137,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
     val want = (1L to n).map(_ -> 1L).toMap
     // force each tier regardless of the bound: the driver tier
-    // directly, the distributed tier via runAlternating
+    // directly, the distributed tier via starLoop
     val (raw, cnt) = {
       val obs = org.apache.spark.sql.Observation()
       val r = edges.select($"a", $"b")
@@ -137,33 +148,33 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
     val viaDriver = ConnectedComponents.driverUnionFind(raw, cnt)
       .as[(Long, Long)].collect().toMap
-    val viaStar = ConnectedComponents.runAlternating(edges)
+    val viaStar = ConnectedComponents.starLoop(edges)._1
       .as[(Long, Long)].collect().toMap
     assert(viaDriver == want)
     assert(viaStar == want)
   }
 
-  test("non-integral ids skip the long-widening tiers and stay exact") {
-    // the driver tier and the contraction pre-pass widen through
-    // LongType; fractional ids must route around both, not truncate
+  test("non-integral ids are rejected with their type named") {
+    // both tiers widen through LongType; fractional ids must fail
+    // loudly before any job runs, not truncate
     val edges = Seq((1.5, 2.5), (2.5, 3.5), (10.25, 10.25)).toDF("a", "b")
-    val want = Map(1.5 -> 1.5, 2.5 -> 1.5, 3.5 -> 1.5, 10.25 -> 10.25)
-    assert(ConnectedComponents.runAdaptive(edges)
-      .as[(Double, Double)].collect().toMap == want)
-    assert(ConnectedComponents.runAlternating(edges)
-      .as[(Double, Double)].collect().toMap == want)
+    val ex = intercept[IllegalArgumentException] {
+      ConnectedComponents.run(edges)
+    }
+    assert(ex.getMessage.contains("double"), ex.getMessage)
+    intercept[IllegalArgumentException] { ConnectedComponents.starLoop(edges) }
   }
 
   test("adaptive on empty edges yields empty labeling") {
     val edges = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(ConnectedComponents.runAdaptive(edges).count() == 0L)
+    assert(ConnectedComponents.run(edges).count() == 0L)
   }
 
   test("driver tier rejects null node ids loudly") {
     val edges = Seq((Some(1L), Some(2L)), (Some(3L), None))
       .toDF("a", "b")
     val ex = intercept[Exception] {
-      ConnectedComponents.runAdaptive(edges).collect()
+      ConnectedComponents.run(edges).collect()
     }
     assert(ex.getMessage.contains("null node id") ||
       Option(ex.getCause).exists(_.getMessage.contains("null node id")))

@@ -489,11 +489,15 @@ class DistributedRankSpec extends AnyFunSuite {
     assert(viaDriver == viaDist)
   }
 
-  test("weightedMedian: driver tier == distributed tier == window form (decimal weights, ties)") {
+  test("weightedMedian: distributed tier == window form (decimal weights, ties, all-NULL group)") {
     import spark.implicits._
     val rng = new scala.util.Random(5)
     val rows = Seq.tabulate(400) { i =>
-      (i % 3, (rng.nextInt(50) * 0.5), BigDecimal(rng.nextInt(9) + 1).setScale(2))
+      (i % 3, Option(rng.nextInt(50) * 0.5), BigDecimal(rng.nextInt(9) + 1).setScale(2))
+    } ++ Seq.tabulate(5) { i =>
+      // group 3: every value NULL — the crossing is reached, but no
+      // non-null value exists at or past it
+      (3, Option.empty[Double], BigDecimal(i + 1).setScale(2))
     }
     val w = rows.toDF("g", "v", "q")
       .groupBy(col("g"), col("v"))
@@ -507,19 +511,14 @@ class DistributedRankSpec extends AnyFunSuite {
       .join(tot, "g")
       .filter(col("cw") * 2 >= col("tw"))
       .groupBy("g").agg(min("v").as("wmedian"))
-      .as[(Int, Double)].collect().toSet
-    val viaDriver = DistributedRank.weightedMedian(w, Seq("g"), "v", "w")
-      .as[(Int, Double)].collect().toSet
-    // bound chosen to overflow the ~150-row table probe while every
-    // internal collect of the distributed tier (≤ 96 per-partition
-    // offset rows, 3 totals) stays under it
-    val viaDist = DistributedRank.weightedMedian(w, Seq("g"), "v", "w",
-      maxDriverRows = 100)
-      .as[(Int, Double)].collect().toSet
+      .as[(Int, Option[Double])].collect().toSet
+    val got = DistributedRank.weightedMedian(w, Seq("g"), "v", "w")
+      .as[(Int, Option[Double])].collect().toSet
     w.unpersist()
     graft.CacheScope.drain()
-    assert(viaDriver == want)
-    assert(viaDist == want)
+    assert(want.contains((3, None)))
+    assert(want.count(_._2.isDefined) == 3)
+    assert(got == want)
   }
 
   test("medianMad driver tier: null values rank first, null group is its own group") {

@@ -18,7 +18,8 @@ class NearDupSpec extends AnyFunSuite {
       .select("doc_a", "doc_b", "jaccard")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
-    val lsh = NearDup.nearDupPairs(spark, dir, 0.6)
+    val lsh = NearDup.indexPairs(
+        NearDup.buildIndex(graft.Tables(spark, dir).documentsSpread), 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
     assert(exhaustive.nonEmpty, "corpus should contain near-dups")
@@ -44,50 +45,6 @@ class NearDupSpec extends AnyFunSuite {
     // per-pair drop probability is ~6e-5 — zero drops expected here
     assert(NearDup.defaultAgreeFloor(0.6) == 4)
     assert(screened == unscreened, "pre-screen changed the verified pair set")
-  }
-
-  test("band-bucket cap is lossless at corpus scale and star-reduces synthetic skew") {
-    val index = NearDup.buildIndex(graft.Tables(spark, dir).documentsSpread)
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-
-    // corpus buckets are small (tier-1 collapse): a cap of 64 changes nothing
-    assert(NearDup.overCapBandBuckets(index, 64).isEmpty)
-    assert(pairSet(NearDup.indexPairs(index, 0.6, maxBandBucket = 64)) ==
-      pairSet(NearDup.indexPairs(index, 0.6)))
-
-    // 40 distinct docs sharing a 60-char template + tiny unique tails:
-    // pairwise Jaccard ≈ 1, so every band bucket holds ~40 canonicals —
-    // the quadratic shape the cap exists to bound
-    import spark.implicits._
-    val base = "the quick brown fox jumps over the lazy dog again and again "
-    val skew = (1L to 40L).map(i => (i, base + s"tail$i", "en", "web"))
-      .toDF("doc_id", "text", "lang", "source")
-    val skewIdx = NearDup.buildIndex(skew)
-    val report = NearDup.capReport(skewIdx, 8).collect().head
-    assert(report.getLong(0) > 0, "no buckets over cap on the skew corpus")
-    assert(report.getAs[Number]("pairs_reduced").longValue() > 0)
-    val uncapped = pairSet(NearDup.indexPairs(skewIdx, 0.6))
-    val capped = pairSet(NearDup.indexPairs(skewIdx, 0.6, maxBandBucket = 8))
-    // star pairs are a subset of the full bucket pairs with identical
-    // verified Jaccard — the cap reduces, never invents or distorts
-    assert(capped.keySet.subsetOf(uncapped.keySet))
-    assert(capped.size < uncapped.size, "cap should visibly reduce the skew pair set")
-    capped.foreach { case (k, j) => assert(uncapped(k) == j) }
-    // the semantic consumers read CLUSTERS: the hub-star keeps the
-    // oversized bucket connected, so the transitive closure over the
-    // reduced pair set still yields the one 40-doc cluster
-    def clusters(pairs: Map[(Long, Long), Double]): Set[Set[Long]] = {
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      pairs.keys.foreach { case (a, b) => parent(find(a)) = find(b) }
-      parent.keys.groupBy(find).values.map(_.toSet).toSet
-    }
-    assert(clusters(capped) == clusters(uncapped))
-    assert(clusters(capped) == Set((1L to 40L).toSet))
   }
 
   test("incremental batch equals the full run restricted to new docs") {

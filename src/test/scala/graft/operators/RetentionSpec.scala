@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Retention composed over the PRODUCTION pair source
-  * ([[NearDup.nearDupPairs]] — LSH-bucketed, the 100 TB path); the
+  * ([[NearDup.indexPairs]] — LSH-bucketed, the 100 TB path); the
   * oracle-checked exact-pairs composition is q77.
   */
 class RetentionSpec extends AnyFunSuite {
@@ -15,7 +15,8 @@ class RetentionSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("retainBest over LSH near-dup pairs: one keeper per cluster, keeper has max quality") {
-    val pairs = NearDup.nearDupPairs(spark, dir, 0.6)
+    val pairs = NearDup.indexPairs(
+        NearDup.buildIndex(graft.Tables(spark, dir).documentsSpread), 0.6)
       .select(col("doc_a"), col("doc_b")).cache()
     val scored = graft.Tables(spark, dir).documents
       .select(col("doc_id"), TextFunctions.qualityScore(col("text")).as("quality"))
