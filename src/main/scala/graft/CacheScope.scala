@@ -29,9 +29,10 @@ import org.apache.spark.sql.execution.CachedData
   *   - After drain, re-running an action on a returned frame
   *     recomputes scoped sub-plans uncached; for the
   *     [[graft.operators.DistributedRank]] kernels specifically the
-  *     recomputed range partitioning may sample differently than the
-  *     driver-frozen offsets, so collect results BEFORE draining and
-  *     treat returned frames as single-action.
+  *     offsets and the rows they reattach to then come from two range
+  *     exchanges that agree only if ReuseExchange merges them, so
+  *     collect results BEFORE draining and treat returned frames as
+  *     single-action.
   */
 object CacheScope {
   /** This thread's registrations since its last [[drain]]. */

@@ -183,9 +183,10 @@ object ScanBudgets {
     *    so the one-time materialization charges both sides' scans.
     *    Rounds read the cache; the returned labels read checkpoints.
     *  - RANK-PASS (q116): the scale-adaptive histogram runs its fact
-    *    scans as build actions — the row-count pre-pass that picks the
-    *    sort-selection vs value-domain path, then ONE data pass for
-    *    the rank selection — and returns a driver-local table.
+    *    scans as build actions — the row-count pre-pass that sizes
+    *    the buckets, then ONE data pass for the rank selection (the
+    *    window tier's group-count collect reads the persisted input
+    *    its window then re-reads) — and returns a driver-local table.
     *  - MODEL-ACTION (q99): `stat.bloomFilter` is a driver-side
     *    aggregate action — the bloom model's eval-gram scan runs at
     *    build, on top of the returned plan's three budgeted scans.

@@ -376,10 +376,8 @@ object AdvancedQueries {
     },
 
     // ------------------------------------------------------------------
-    // q55 — GROUPING SETS through the engine's SQL surface: the Spark
-    // side runs the IDENTICAL SQL text as the DuckDB oracle over a
-    // registered temp view (spark.sql is a first-class entry point,
-    // not just the DataFrame API).
+    // q55 — GROUPING SETS ((rf), (ls), ()) over lineitem, with the
+    // SQL's empty-input row for the () set.
     QueryDef.sql(
       "q55_grouping_sets",
       """SELECT COALESCE(l_returnflag,'ALL') AS rf, COALESCE(l_linestatus,'ALL') AS ls,
@@ -391,61 +389,36 @@ object AdvancedQueries {
       // Roll the sets up from the FINEST common grouping instead of
       // letting GROUPING SETS plan an Expand (×|sets| on every fact
       // row before the shuffle): one map-side-combined aggregate to
-      // the (rf, ls) table — single-digit rows — then the (rf), (ls)
-      // and () sets derive on the driver by exact merges (COUNT adds;
-      // SUM of decimal partial-sums is the same exact decimal, so the
-      // final double cast is bit-identical). ONE job over the fact
-      // where the Expand form shuffled 3× the rows. Data-null group
-      // values keep grouping-set semantics: they fold to 'ALL' within
-      // their set exactly like the SQL's COALESCE.
-      import org.apache.spark.sql.Row
+      // the (rf, ls) table — single-digit rows, persisted so the fact
+      // is scanned once — then each set aggregates that table (COUNT
+      // adds; SUM of decimal partial sums is the same exact decimal,
+      // and the decimal→double cast is BigDecimal.doubleValue, so the
+      // double is bit-identical). The table is one partition, so the
+      // sets' aggregates and the final sort need no further exchange.
+      // One lazy plan: building it runs no job. The () set is a global
+      // aggregate, so it keeps its one row on empty input, which a
+      // grouped GROUPING SETS aggregate drops. Data-null group values
+      // keep grouping-set semantics: they become 'ALL' within their
+      // set exactly like the SQL's COALESCE.
       import org.apache.spark.sql.types._
-      // bounded probe (r13, ADVICE): the finest grouping is expected
-      // single-digit rows, but a hostile/high-cardinality pair must
-      // not OOM the driver — limit(N+1) like every other driver tier;
-      // overflow falls back to the planned GROUPING SETS form below
-      // (Expand ×|sets|, the price of a catalog-sized grouping pair).
-      val maxRows = DistributedRank.DefaultMaxDriverRows
-      val baseDf = Tables(s, dir).lineitem
+      val base = CacheScope.scoped(Tables(s, dir).lineitem
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast(DecimalType(18, 2))).as("qty"))
-      val base = baseDf.limit(maxRows + 1).collect()
-      if (base.length > maxRows) {
-        Tables(s, dir).lineitem
-          .groupingSets(
-            Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq.empty),
-            col("l_returnflag"), col("l_linestatus"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("l_quantity").cast(DecimalType(18, 2))).as("qd"))
-          .select(
-            coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
-            coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-            col("n"), col("qd").cast(DoubleType).as("qty"))
-          .orderBy(col("rf"), col("ls"))
-      } else {
-      def all(x: Any): String = if (x == null) "ALL" else x.toString
-      def roll(key: Row => (String, String)): Seq[Row] = base
-        .groupBy(key)
-        .map { case ((rf, ls), rs) =>
-          val n = rs.map(_.getLong(2)).sum
-          val qtys = rs.map(_.getDecimal(3)).filter(_ != null)
-          val qty =
-            if (qtys.isEmpty) null else qtys.reduce(_.add(_)).doubleValue()
-          Row(rf, ls, n, qty)
-        }.toSeq
-      val rows =
-        roll(r => (all(r.get(0)), "ALL")) ++
-        roll(r => ("ALL", all(r.get(1)))) ++
-        (if (base.isEmpty) Seq(Row("ALL", "ALL", 0L, null)) // SQL's () set
-         else roll(_ => ("ALL", "ALL")))
-      val schema = StructType(Seq(
-        StructField("rf", StringType), StructField("ls", StringType),
-        StructField("n", LongType, nullable = false),
-        StructField("qty", DoubleType)))
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy(col("rf"), col("ls"))
+          sum(col("l_quantity").cast(DecimalType(18, 2))).as("qd"))
+        .coalesce(1))
+      def set(rf: Option[String], ls: Option[String]) = {
+        def label(key: Option[String]) =
+          key.fold(lit("ALL"))(k => coalesce(col(k), lit("ALL")))
+        base.groupBy((rf ++ ls).toSeq.map(col): _*)
+          .agg(coalesce(sum(col("n")), lit(0L)).as("n"), sum(col("qd")).as("qd"))
+          .select(label(rf).as("rf"), label(ls).as("ls"), col("n"),
+            col("qd").cast(DoubleType).as("qty"))
       }
+      set(Some("l_returnflag"), None)
+        .unionByName(set(None, Some("l_linestatus")))
+        .unionByName(set(None, None))
+        .coalesce(1)
+        .orderBy(col("rf"), col("ls"))
     },
 
     // ------------------------------------------------------------------

@@ -92,15 +92,13 @@ object AnalyticsQueries {
       // exchange. Wide price domains (probe > 1M distinct), NULLs,
       // degenerate inputs, and duplicated-full-key cut blocks fall
       // back to the exact rank form below (the kernel returns None).
-      // stats gate: below the 64 MB plan-stats ceiling the window-rank
+      // DistributedRank's one stats gate: under it the window-rank
       // fallback is already one cheap job (sf0.1 measured 0.55 s vs
       // the boundary path's 1.2 — the count-table collect is pure
       // overhead at sizes a single window sorts instantly); the
       // boundary path is for data that has outgrown that
-      val statsSmall = o.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        DistributedRank.SmallStatsBytes
       val driverPath =
-        if (statsSmall) None
+        if (DistributedRank.windowSized(o)) None
         else DistributedRank.ntileByCuts(o, "o_totalprice", "o_orderkey", k, "quartile")
       driverPath.getOrElse {
         val nRow = o.agg(count(lit(1)).as("n"))
@@ -479,8 +477,8 @@ object AnalyticsQueries {
           col("l_orderkey"), col("l_linenumber"))
       // the adaptive rank selection surfaces ONLY the ≤2 rows each
       // percentile interpolates between (plus the group count as `n`):
-      // sort-selection (one full exchange) below the measured
-      // crossover, the distinct-value-domain form (shuffle bounded by
+      // a plain window under the kernel's stats gate, the
+      // distinct-value-domain form (shuffle bounded by
       // distinct prices — ~flat under replica scaling, measured
       // 21.1 → ~7 s at 100×) above it; identical values either side.
       val hits = DistributedRank.valuesAtRanksAdaptive(li,
@@ -776,12 +774,13 @@ object AnalyticsQueries {
     // counts are ntile's closed-form q+1/q split), so the tiebreak
     // columns the rank order carries are irrelevant — the value at
     // rank t is the same whichever tied row ntile puts at the edge.
-    // That licenses two single-scan plans, chosen by a metadata-cheap
-    // count(*) pre-pass (parquet answers it from row-group stats, no
-    // column pages read):
-    //   - sort-selection (small): [[DistributedRank.valuesAtRanks]]
-    //     over the single projected column — one balanced range
-    //     exchange + per-partition sorts. Measured 1.9 s at sf0.1.
+    // That licenses two single-scan plans, chosen by
+    // [[DistributedRank.valuesAtRanksAdaptive]]'s plan-stats gate; a
+    // metadata-cheap count(*) pre-pass (parquet answers it from
+    // row-group stats, no column pages read) sizes the buckets:
+    //   - window (small): [[DistributedRank.valuesAtRanksWindow]]
+    //     over the single projected column — one group-count job and
+    //     one plain window. Measured 1.08–1.31 s at sf0.1.
     //   - value-domain (large): map-side-combined groupBy(v) (shuffle
     //     carries one row per distinct value per map partition, not
     //     one per row), exact prefix sum over the distinct-value table
@@ -790,8 +789,10 @@ object AnalyticsQueries {
     //     found by a broadcast range-join against the 31-row target
     //     table (an OR-chain predicate of 31 branches measured 9×
     //     slower than the join — it defeats codegen).
-    // Measured crossover ≈ 25M rows (sort-selection 1.9 s→15.9 s from
-    // 0.6M→60M; value-domain flat 6.5→8.4 s); threshold 20M. The r7
+    // r8 measured the row-level path against the value domain
+    // (sort-selection 1.9 s→15.9 s from 0.6M→60M rows; value-domain
+    // flat 6.5→8.4 s); the 32 MB gate (≈ 1.8M rows) keeps sf0.1 on
+    // the window and 100× (60M rows) on the value domain. The r7
     // audit flagged the original two-scan form (boundary pass +
     // bucket-assign pass, 14.6× at 100×); the hybrid runs 100× of
     // sf0.1 at ~8.4 s vs sf0.1's 1.9 s — a ~4.4× factor, and at a
@@ -832,12 +833,11 @@ object AnalyticsQueries {
       val n0 = fact.count() // row-group-stats count, no column pages
       if (n0 == 0L) Seq.empty[(Int, Long, Double, Double)].toDF("bucket", "n", "lo", "hi")
       else {
-        // both histogram paths (sort-selection small, value-domain
-        // large — this query's r8 measurements set the shared
-        // crossover) now route through the generalized dispatcher;
-        // ≤2k−1 rank-rows come back, bounded by k, not n
+        // both histogram paths (window small, value-domain large)
+        // route through the kernel's stats gate; ≤2k−1 rank-rows come
+        // back, bounded by k, not n
         val hits = DistributedRank.valuesAtRanksAdaptive(
-            fact, Nil, "v", Nil, ranksOf, "rn", totalRows = n0)
+            fact, Nil, "v", Nil, ranksOf, "rn")
           .select(col("rn"), col("v"))
           .collect()
         val byRank = hits.map(h => h.getAs[Long]("rn") -> h.getAs[Double]("v")).toMap

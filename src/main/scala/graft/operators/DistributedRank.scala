@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructField, StructType}
 
 /** Distributed exact ranking for LOW-CARDINALITY groups.
   *
@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   *   1. range-partition on (group, order) — each partition holds a
   *      contiguous slice of one (or a few) group's order;
-  *   2. count rows per (partition, group) — a tiny aggregate;
-  *   3. cumulative offsets per group computed ON THE DRIVER over that
-  *      ≤ numPartitions × #groups row table, broadcast back as a local
-  *      relation (no WindowExec, no extra broadcast subplan job);
+  *   2. aggregate rows per (partition, group) — a tiny table of ≤
+  *      numPartitions × #groups rows;
+  *   3. cumulative offsets per group: a window over that table,
+  *      ordered by partition id, broadcast-joined back — all in the
+  *      plan, so building the frame runs no Spark job;
   *   4. local row_number within (partition, group) + offset = exact
   *      global rank.
   *
@@ -30,45 +31,59 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * reattach joins are null-safe `<=>`, not equi-joins that would
   * silently drop NULL-keyed rows).
   *
-  * The range-partitioned frame is persisted before the counts action:
-  * both the offsets table and the final join must observe the SAME
-  * partition assignment, and RangePartitioner's sample seed varies
-  * with RDD identity — relying on ReuseExchange to fire (it usually
-  * does, but is not guaranteed across recomputation/executor loss)
-  * would make exactness a plan-cache accident. The persist is
-  * populated by the counts action and reused by the join; it is
+  * The range-partitioned frame is persisted: both the offsets table
+  * and the final join must observe the SAME partition assignment, and
+  * RangePartitioner's sample seed varies with RDD identity — relying
+  * on ReuseExchange to fire (it usually does, but is not guaranteed
+  * across recomputation/executor loss) would make exactness a
+  * plan-cache accident. Both consumers read the one cached RDD; it is
   * registered with [[graft.CacheScope]] so the caller's post-action
   * `drain()` reclaims it (Verify/Bench drain after every query).
+  *
+  * Each adaptive kernel has two tiers behind ONE plan-statistics gate,
+  * [[WindowMaxBytes]]: the plain window form below it, the distributed
+  * form above it. Both emit identical bytes; DistributedRankSpec calls
+  * each tier directly and pins them equal.
   */
 object DistributedRank {
 
-  /** Hard bound on rows any kernel pulls to the driver (the
-    * per-(partition, group) count tables). ≈ numPartitions × #groups
-    * stays orders of magnitude below this under the low-cardinality
-    * contract; crossing it means the caller grouped by a
-    * high-cardinality key and the driver-offset construction is the
-    * wrong tool — fail fast and point at the plain window. The
-    * limit(+1) keeps the driver safe even on the failing path: at
-    * most `maxDriverRows + 1` small rows ever materialize.
+  /** Hard bound on rows a kernel pulls to the driver: the probe that
+    * decides [[valuesAtRanksFromCounts]]' and [[medianMad]]'s driver
+    * tiers, and the per-group totals that driver-side `ranksOf`
+    * closures need. The limit(+1) keeps the driver safe even on the
+    * failing path: at most `maxDriverRows + 1` small rows ever
+    * materialize.
     */
   val DefaultMaxDriverRows: Int = 1 << 20
 
-  private def collectBounded(
-      countsDf: DataFrame, bound: Int, kernel: String): Array[Row] = {
-    val rows = countsDf.limit(bound + 1).collect()
-    require(rows.length <= bound,
-      s"DistributedRank.$kernel: per-(partition, group) table exceeds $bound " +
-        "driver rows — group cardinality too high for the driver-offset " +
-        "construction; use a plain window_col over partitionBy instead, or " +
-        "raise maxDriverRows deliberately")
-    rows
-  }
+  /** The one size gate: inputs whose optimized-plan `sizeInBytes` is
+    * at most this take each adaptive kernel's plain window tier, larger
+    * ones its distributed tier. Reading plan statistics runs no job.
+    * Sized from the global sweeps of RankKernelScale (a scale main last
+    * present at commit fba91a5; its table is in README): row_number
+    * 1M rows window 1.1 s vs kernel 1.9 s, 2M 2.3 vs 2.0, 5M 7.5 vs
+    * 3.3; running sum 1M 2.6 vs 5.3, 2M 3.0 vs 5.0, 5M 6.3 vs 5.4. At
+    * the measured ~18 B/row fact width 32 MB is ≈ 1.8M rows, at or
+    * under both crossovers. Derived frames inherit their child's size
+    * estimate, so a large fact behind a small aggregate errs toward
+    * the distributed tier — the direction that costs only constant
+    * overhead, never the one-task sort cliff. A misjudgment costs
+    * performance only: both tiers emit identical bytes.
+    */
+  val WindowMaxBytes: Long = 32L << 20
+
+  /** Whether `df`'s plan statistics put it under [[WindowMaxBytes]]. */
+  private[graft] def windowSized(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= WindowMaxBytes
+
+  private def over(partCols: Seq[String], orderCols: Seq[String]): WindowSpec =
+    Window.partitionBy(partCols.map(col): _*).orderBy(orderCols.map(col): _*)
 
   /** Join on `keys` with NULL-SAFE equality — SQL window PARTITION BY
     * treats NULL as a group of its own, and the offset tables (built
     * by groupBy, which also keeps the NULL group) must reattach to
     * those rows rather than equi-join-drop them. The right side is
-    * broadcast (all offset/target tables here are driver-small);
+    * broadcast (all offset/target tables here are small);
     * `<=>` keys still hash-join (Catalyst folds null-safe equality
     * into join keys via coalesce), so the plan shape matches the
     * usingColumns join this replaces. Right key columns are renamed
@@ -85,218 +100,190 @@ object DistributedRank {
     if (joinType == "left_semi") j else j.drop(keys.map("__r_" + _): _*)
   }
 
+  /** The offset construction every distributed kernel shares (steps
+    * 1–3 of the header): `df` range-partitioned on (group, order) into
+    * `numPartitions` (0 = the session's shuffle partitions), tagged
+    * with its partition id `__pid` and persisted; `aggs` per
+    * (`__pid`, group); then `offsets(byPid)` evaluated over that small
+    * table, where `byPid` is the window over one group's partitions in
+    * partition order; the result broadcast-joined back null-safe on
+    * (`__pid`, groupCols…). Output: `df`'s columns, `__pid`, and the
+    * offset columns.
+    */
+  private def withPartitionOffsets(
+      df: DataFrame,
+      groupCols: Seq[String],
+      orderCols: Seq[String],
+      numPartitions: Int,
+      aggs: Seq[Column])(offsets: WindowSpec => Seq[Column]): DataFrame = {
+    val spark = df.sparkSession
+    val n = if (numPartitions > 0) numPartitions
+      else spark.sessionState.conf.numShufflePartitions
+    val ranged = graft.CacheScope.scoped(
+      df.repartitionByRange(n, (groupCols ++ orderCols).map(col): _*)
+        .withColumn("__pid", spark_partition_id()))
+    val keys = "__pid" +: groupCols
+    val table = ranged.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val offs = table.select(keys.map(col) ++ offsets(over(groupCols, Seq("__pid"))): _*)
+    joinNullSafe(ranged, offs, keys)
+  }
+
+  /** Rows of the group's earlier partitions, for an exclusive prefix. */
+  private def prior(byPid: WindowSpec): WindowSpec =
+    byPid.rowsBetween(Window.unboundedPreceding, -1)
+
+  /** The distributed tier of [[rowNumberAdaptive]]: the header's
+    * construction over `numPartitions` range partitions (0 = the
+    * session's shuffle partitions).
+    */
   def rowNumber(
       df: DataFrame,
       groupCols: Seq[String],
       orderCols: Seq[String],
       out: String = "rn",
-      numPartitions: Int = 0,
-      maxDriverRows: Int = DefaultMaxDriverRows): DataFrame = {
-    val spark = df.sparkSession
-    val sortCols = (groupCols ++ orderCols).map(col)
-    val n = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val ranged = graft.CacheScope.scoped(
-      df.repartitionByRange(n, sortCols: _*)
-        .withColumn("__pid", spark_partition_id()))
-    val countsDf = ranged
-      .groupBy(col("__pid") +: groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__cnt"))
-    val counts = collectBounded(countsDf, maxDriverRows, "rowNumber")
-    // Running offset of each (group, partition): plain scan over the
-    // collected rows — (__pid, groupCols..., __cnt) column order.
-    val offRows = counts
-      .groupBy(r => groupCols.map(g => r.getAs[Any](g)))
-      .valuesIterator
-      .flatMap { rows =>
-        var acc = 0L
-        rows.sortBy(_.getAs[Int]("__pid")).map { r =>
-          val off = acc
-          acc += r.getAs[Long]("__cnt")
-          Row.fromSeq(r.toSeq.dropRight(1) :+ off)
-        }
-      }
-      .toSeq
-    val offSchema = StructType(
-      countsDf.schema.fields.dropRight(1) :+
-        StructField("__off", LongType, nullable = false))
-    val offsets = spark.createDataFrame(
-      java.util.Arrays.asList(offRows: _*), offSchema)
-    val wLocal = Window
-      .partitionBy(col("__pid") +: groupCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-    joinNullSafe(ranged, offsets, "__pid" +: groupCols)
-      .withColumn(out, row_number().over(wLocal).cast(LongType) + col("__off"))
+      numPartitions: Int = 0): DataFrame = {
+    val withOffsets = withPartitionOffsets(df, groupCols, orderCols, numPartitions,
+      Seq(count(lit(1)).as("__cnt"))) { byPid =>
+      Seq(coalesce(sum(col("__cnt")).over(prior(byPid)), lit(0L)).as("__off"))
+    }
+    withOffsets
+      .withColumn(out, row_number().over(over("__pid" +: groupCols, orderCols))
+        .cast(LongType) + col("__off"))
       .drop("__pid", "__off")
   }
 
-  /** Measured window/distributed crossover for FULL ranking (every
-    * row keeps its rank, unlike the ≤2-rows-per-group selection
-    * shapes whose crossover is [[SortSelectionMaxRows]]):
-    * global row_number sweep of RankKernelScale (a scale main last
-    * present at commit fba91a5; its table is in README) — 1M:
-    * window 1.1 s vs kernel 1.9 s; 2M: 2.3 vs 2.0; 5M:
-    * 7.5 vs 3.3; 10M: 11.2 vs 6.8 (grouped/3-task crosses later,
-    * ~5–7M, so the GLOBAL crossover is the binding one). Set AT the
-    * measured tie: a misjudgment costs only performance (both paths
-    * emit identical ranks), and the window side's cliff (ONE task
-    * sorts everything) is the expensive direction to err toward.
+  /** The window tier of [[rowNumberAdaptive]]. The result is
+    * [[graft.CacheScope]]-scoped like the distributed tier's internal
+    * persist: multi-consumer callers (q59 derives stats from the ranks
+    * AND joins them back) must not re-scan the source per consumer;
+    * the gate bounds the cached frame.
     */
-  val WindowRankMaxRows: Long = 2000000L
+  private[graft] def rowNumberWindow(
+      df: DataFrame,
+      groupCols: Seq[String],
+      orderCols: Seq[String],
+      out: String = "rn"): DataFrame =
+    graft.CacheScope.scoped(
+      df.withColumn(out, row_number().over(over(groupCols, orderCols)).cast(LongType)))
 
   /** Size-adaptive full ranking: the plain window `row_number()`
-    * below [[WindowRankMaxRows]] (one sort, no offset machinery —
-    * at small inputs [[rowNumber]]'s two exchanges plus driver
-    * offset join cost ~2× the degenerate sort they avoid), the
-    * distributed kernel above it. Both sides emit the IDENTICAL
-    * LongType rank under the caller's total order, so consumers are
-    * byte-identical either side of the threshold — the
-    * [[valuesAtRanksAdaptive]] dispatch applied to the ranking
-    * shapes that keep every row (q46's global ntile, q59's window
-    * family, q115's z-order buckets). `totalRows` defaults to
-    * [[dispatchRows]] (plan statistics first, one count job only
-    * when the input is past the stats ceiling).
+    * under [[WindowMaxBytes]] (one sort, no offset machinery — at
+    * small inputs [[rowNumber]]'s two exchanges plus the offsets join
+    * cost ~2× the degenerate sort they avoid), the distributed kernel
+    * above it. Both tiers emit the IDENTICAL LongType rank under the
+    * caller's total order — the ranking shapes that keep every row
+    * (q46's global ntile, q59's window family, q115's z-order
+    * buckets).
     */
   def rowNumberAdaptive(
       df: DataFrame,
       groupCols: Seq[String],
       orderCols: Seq[String],
-      out: String = "rn",
-      totalRows: Long = -1L,
-      thresholdRows: Long = WindowRankMaxRows,
-      maxDriverRows: Int = DefaultMaxDriverRows): DataFrame = {
-    val n0 = if (totalRows >= 0L) totalRows else dispatchRows(df)
-    // n0 == 0 from dispatchRows proves only "stats ≤ 64 MB" — sized
-    // for the 20M-row selection crossover, which at the measured
-    // ~18 B/row admits ~3.7M rows, PAST this kernel's 2M window
-    // crossover. The window branch therefore needs the tighter proof:
-    // stats under [[WindowPrefixMaxBytes]] (32 MB ≈ 1.8M rows).
-    // Between the two ceilings fall through to the distributed kernel
-    // — a misjudgment there costs constant overhead, never the
-    // one-task sort cliff (the same err-direction as
-    // [[valuesAtRanksAdaptive]]'s n0 > 0L guard).
-    val windowSized =
-      if (totalRows >= 0L || n0 > 0L) n0 <= thresholdRows
-      else df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        WindowPrefixMaxBytes
-    if (windowSized) {
-      val w = Window
-        .partitionBy(groupCols.map(col): _*)
-        .orderBy(orderCols.map(col): _*)
-      // scoped like the distributed branch's internal persist: multi-
-      // consumer callers (q59 derives stats from the ranks AND joins
-      // them back) must not re-scan the source per consumer; the
-      // cached frame is bounded by thresholdRows rows (counted case)
-      // or WindowPrefixMaxBytes stats (stats-proven case)
-      graft.CacheScope.scoped(
-        df.withColumn(out, row_number().over(w).cast(LongType)))
-    } else
-      rowNumber(df, groupCols, orderCols, out, maxDriverRows = maxDriverRows)
+      out: String = "rn"): DataFrame =
+    if (windowSized(df)) rowNumberWindow(df, groupCols, orderCols, out)
+    else rowNumber(df, groupCols, orderCols, out)
+
+  /** The (groupCols…, `__t`, `__tt`) target table: each group's
+    * in-range target ranks `ranksOf(total)`, with the total, from
+    * `totals` = (groupCols…, total: long). `ranksOf` is driver code, so
+    * the totals are collected — bounded by `maxDriverRows`, which
+    * fails fast on a high-cardinality grouping.
+    */
+  private def targetTable(
+      totals: DataFrame,
+      ranksOf: Long => Seq[Long],
+      maxDriverRows: Int): DataFrame = {
+    val tots = totals.limit(maxDriverRows + 1).collect()
+    require(tots.length <= maxDriverRows,
+      s"DistributedRank: more than $maxDriverRows groups — group cardinality " +
+        "too high for driver-side target ranks; use a plain window over " +
+        "partitionBy instead")
+    val rows = tots.toSeq.flatMap { r =>
+      val total = r.getLong(r.length - 1)
+      ranksOf(total).filter(k => k >= 1 && k <= total).distinct.sorted
+        .map(k => Row.fromSeq(r.toSeq.dropRight(1) ++ Seq(k, total)))
+    }
+    val schema = StructType(
+      totals.schema.fields.dropRight(1) ++ Seq(
+        StructField("__t", LongType, nullable = false),
+        StructField("__tt", LongType, nullable = false)))
+    totals.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Rows at driver-computed TARGET ranks only — the percentile/median
-    * shape. [[rowNumber]] ranks every row, which costs a second full
-    * exchange (the window's clustering); but a quantile touches ≤2
-    * rows per probe point, and the per-(partition, group) count table
-    * — already on the driver — says exactly which range partition
-    * carries each target rank. So: filter the persisted range-
-    * partitioned frame down to the carrier (partition, group) pairs
-    * (a broadcast semi-join over ≤ groups × ranks keys), window-rank
-    * only that ~1/numPartitions sliver, and join the target list to
-    * pick the hit rows. One full exchange over the data instead of
-    * two; measured q95's cascaded medians 4.3 → 3.6 s and q84's
-    * four percentiles 2.2 → 2.0 s at sf0.1 (isolated runs).
-    *
-    * `ranksOf` maps a group's row count n to its 1-based target
-    * ranks (out-of-range targets are dropped). Output = the input
-    * columns plus `out` = the row's global rank within its group —
-    * plus, when `outTotal` is non-empty, the group's total row count
-    * under that name (callers interpolating percentiles need n and
-    * this spares them a separate counting scan over the input);
-    * exactly one row per surviving (group, target). Same total-order
-    * contract on `orderCols` as [[rowNumber]].
+  /** The window tier of [[valuesAtRanksAdaptive]]: rank everything in
+    * a plain window (degenerate tasks are fine under the gate) and keep
+    * the rows at the driver-built target ranks — one group-count job
+    * plus one window job. `ranksOf` maps a group's row count n to its
+    * 1-based target ranks (out-of-range targets are dropped). Output =
+    * the input columns plus `out` = the row's rank within its group —
+    * plus, when `outTotal` is non-empty, the group's row count under
+    * that name; exactly one row per surviving (group, target). NULL
+    * group keys form a group of their own; same total-order contract
+    * on `orderCols` as [[rowNumber]].
     */
-  def valuesAtRanks(
+  private[graft] def valuesAtRanksWindow(
       df: DataFrame,
       groupCols: Seq[String],
       orderCols: Seq[String],
       ranksOf: Long => Seq[Long],
       out: String = "rn",
-      numPartitions: Int = 0,
-      outTotal: String = "",
-      maxDriverRows: Int = DefaultMaxDriverRows): DataFrame = {
-    val spark = df.sparkSession
-    val sortCols = (groupCols ++ orderCols).map(col)
-    val n = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val ranged = graft.CacheScope.scoped(
-      df.repartitionByRange(n, sortCols: _*)
-        .withColumn("__pid", spark_partition_id()))
-    val countsDf = ranged
-      .groupBy(col("__pid") +: groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__cnt"))
-    val counts = collectBounded(countsDf, maxDriverRows, "valuesAtRanks")
-    // Per group: walk partitions in order, place each target rank in
-    // the partition whose [offset, offset+cnt] window contains it.
-    val targetRows = counts
-      .groupBy(r => groupCols.map(g => r.getAs[Any](g)))
-      .valuesIterator
-      .flatMap { rows =>
-        val sorted = rows.sortBy(_.getAs[Int]("__pid"))
-        val total = sorted.iterator.map(_.getAs[Long]("__cnt")).sum
-        val targets = ranksOf(total).filter(k => k >= 1 && k <= total).distinct.sorted
-        var acc = 0L
-        val it = sorted.iterator
-        val outRows = Seq.newBuilder[Row]
-        var remaining = targets
-        while (remaining.nonEmpty && it.hasNext) {
-          val r = it.next()
-          val cnt = r.getAs[Long]("__cnt")
-          val (here, later) = remaining.span(k => k <= acc + cnt)
-          here.foreach { k =>
-            outRows += Row.fromSeq(r.toSeq.dropRight(1) ++ Seq(k - acc, k, total))
-          }
-          remaining = later
-          acc += cnt
-        }
-        outRows.result()
-      }
-      .toSeq
-    val targetSchema = StructType(
-      countsDf.schema.fields.dropRight(1) ++ Seq(
-        StructField("__lrn", LongType, nullable = false),
-        StructField("__grn", LongType, nullable = false),
-        StructField("__tot", LongType, nullable = false)))
-    val targets = spark.createDataFrame(
-      java.util.Arrays.asList(targetRows: _*), targetSchema)
-    val carriers = targets.select(("__pid" +: groupCols).map(col): _*).distinct()
-    val wLocal = Window
-      .partitionBy(col("__pid") +: groupCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-    val hits = joinNullSafe(
-      joinNullSafe(ranged, carriers, "__pid" +: groupCols, "left_semi")
-        .withColumn("__lrn", row_number().over(wLocal).cast(LongType)),
-      targets, "__pid" +: (groupCols :+ "__lrn"))
-      .withColumn(out, col("__grn"))
+      outTotal: String = ""): DataFrame = {
+    // persisted so the count job and the window job do not each
+    // re-scan the source (the ledger budgets assume one scan per
+    // pass); the gate bounds the cached frame
+    val src = graft.CacheScope.scoped(df)
+    val targets = targetTable(
+      src.groupBy(groupCols.map(col): _*).agg(count(lit(1)).as("__n")),
+      ranksOf, DefaultMaxDriverRows)
+    val ranked = src.withColumn(out, row_number().over(over(groupCols, orderCols)).cast(LongType))
+    val joined = joinNullSafe(ranked, targets.withColumnRenamed("__t", out), groupCols :+ out)
     val withTotal =
-      if (outTotal.nonEmpty) hits.withColumn(outTotal, col("__tot")) else hits
-    withTotal.drop("__pid", "__lrn", "__grn", "__tot")
+      if (outTotal.nonEmpty) joined.withColumn(outTotal, col("__tt"))
+      else joined
+    withTotal.drop("__tt")
   }
 
-  /** Measured sort-selection/value-domain crossover for rank
-    * selection (q116's size-adaptive histogram: sort-selection 1.9 s →
-    * 15.9 s from 0.6M → 60M rows; value-domain flat 6.5 → 8.4 s over
-    * the same range — crossover ≈ 25M, threshold kept under it).
+  /** Size-adaptive rank selection: [[valuesAtRanksWindow]] under
+    * [[WindowMaxBytes]], [[valuesAtRanksByValue]] (distinct-value
+    * domain, ~flat under replica scaling) above it — the q116 hybrid
+    * generalized to every quantile/median consumer. Both tiers select
+    * the SAME values (rank→value is tiebreak-invariant), so the
+    * output is byte-identical either side of the gate; `tieCols` only
+    * make the window tier's internal rank deterministic.
+    *
+    * The window tier replaced a row-level sort-selection tier that
+    * q41 and q84 took under the old 64 MB stats ceiling. Alternating
+    * ABA at sf0.1 measured that switch a wash (window mins 1.45/1.54 s
+    * vs sort-selection 1.60/1.53 s, overlapping distributions in two
+    * weather regimes); q116 won every sample on the window tier
+    * (1.08–1.31 s vs 1.41–1.69 s).
+    *
+    * Output schema is the uniform (groupCols…, valueCol, out
+    * [, outTotal]) of the by-value tier on BOTH sides.
     */
-  val SortSelectionMaxRows: Long = 20000000L
+  def valuesAtRanksAdaptive(
+      df: DataFrame,
+      groupCols: Seq[String],
+      valueCol: String,
+      tieCols: Seq[String],
+      ranksOf: Long => Seq[Long],
+      out: String = "rn",
+      outTotal: String = ""): DataFrame =
+    if (windowSized(df)) {
+      val outCols = (groupCols :+ valueCol :+ out) ++
+        (if (outTotal.nonEmpty) Seq(outTotal) else Nil)
+      valuesAtRanksWindow(df, groupCols, valueCol +: tieCols, ranksOf, out, outTotal)
+        .select(outCols.map(col): _*)
+    } else
+      valuesAtRanksByValue(df, groupCols, valueCol, ranksOf, out, outTotal)
 
-  /** [[valuesAtRanks]] computed over the per-distinct-VALUE count
-    * table instead of the row-level range sort — the rank-selection
-    * shape that stays bounded at 100 TB. The output of a rank
-    * selection exposes only VALUES (the value at each target rank),
-    * and the value at rank t is the same whichever tied row a total
-    * order puts at the edge — so the tiebreak columns sort-selection
-    * carries are irrelevant to the result, and the selection can run
+  /** The distributed tier of [[valuesAtRanksAdaptive]]: the rank
+    * selection computed over the per-distinct-VALUE count table
+    * instead of a row-level sort — the shape that stays bounded at
+    * 100 TB. The output of a rank selection exposes only VALUES (the
+    * value at each target rank), and the value at rank t is the same
+    * whichever tied row a total order puts at the edge — so tiebreak
+    * columns are irrelevant to the result, and the selection can run
     * in the value domain: one map-side-combined groupBy(group, v)
     * (shuffle volume = distinct values per map partition, NOT rows),
     * the distributed prefix sum over the distinct-value table
@@ -304,15 +291,16 @@ object DistributedRank {
     * cumulative-count window (cume−cnt, cume] contains t — a
     * broadcast range-join against the tiny target list. Under replica
     * scaling the distinct-value table is INVARIANT while the row
-    * count grows 100×, so this path's cost is ~flat where
-    * sort-selection's full-data range exchange grows linearly
-    * (measured: see [[SortSelectionMaxRows]]).
+    * count grows 100×, so this path's cost is ~flat where a
+    * row-level range sort grows linearly (q116's measurement:
+    * sort-selection 1.9 s → 15.9 s from 0.6M → 60M rows, value-domain
+    * flat 6.5 → 8.4 s).
     *
     * Output: one row per surviving (group, target) with ONLY
     * (groupCols…, valueCol, `out` = rank[, `outTotal` = group row
     * count]) — the interpolation consumers' contract. NULL values
     * form their own (first) rank block and NULL group keys their own
-    * group, exactly like the sort-selection path.
+    * group, exactly like the window tier.
     */
   def valuesAtRanksByValue(
       df: DataFrame,
@@ -320,27 +308,13 @@ object DistributedRank {
       valueCol: String,
       ranksOf: Long => Seq[Long],
       out: String = "rn",
-      outTotal: String = "",
-      maxDriverRows: Int = DefaultMaxDriverRows): DataFrame = {
+      outTotal: String = ""): DataFrame = {
     val vc = graft.CacheScope.scoped(
       df.groupBy((groupCols :+ valueCol).map(col): _*)
         .agg(count(lit(1)).as("__cnt")))
-    valuesAtRanksFromCounts(vc, groupCols, valueCol, "__cnt", ranksOf,
-      out, outTotal, maxDriverRows)
+    valuesAtRanksFromCounts(vc, groupCols, valueCol, "__cnt", ranksOf, out, outTotal)
   }
 
-  /** [[valuesAtRanksByValue]] over a CALLER-SUPPLIED per-(group,
-    * value) count table — the cascade-fusion entry point. `vc` holds
-    * one row per (groupCols…, valueCol) with `cntCol` = that value's
-    * row count; the caller owns its persistence (it is consumed twice
-    * here: group totals + the prefix sum). Cascaded quantiles (q95's
-    * median-of-deviations) derive the SECOND stage's count table from
-    * the first's by pure arithmetic on the value column — counts
-    * merging where two values map to the same derived value — so the
-    * fact is scanned and shuffled exactly once for the whole cascade,
-    * and the second selection's exchange is bounded by DISTINCT
-    * DERIVED VALUES, not rows.
-    */
   /** Driver-side total ordering for a value column type, matching the
     * distributed path's sort semantics exactly (doubles: NaN greatest,
     * −0.0 < 0.0 — scala's TotalOrdering == Spark's nan-safe compare;
@@ -369,6 +343,18 @@ object DistributedRank {
     }
   }
 
+  /** [[valuesAtRanksByValue]] over a CALLER-SUPPLIED per-(group,
+    * value) count table — the cascade-fusion entry point. `vc` holds
+    * one row per (groupCols…, valueCol) with `cntCol` = that value's
+    * row count; the caller owns its persistence (it is consumed twice
+    * here: group totals + the prefix sum). Cascaded quantiles (q95's
+    * median-of-deviations) derive the SECOND stage's count table from
+    * the first's by pure arithmetic on the value column — counts
+    * merging where two values map to the same derived value — so the
+    * fact is scanned and shuffled exactly once for the whole cascade,
+    * and the second selection's exchange is bounded by DISTINCT
+    * DERIVED VALUES, not rows.
+    */
   def valuesAtRanksFromCounts(
       vc: DataFrame,
       groupCols: Seq[String],
@@ -388,7 +374,7 @@ object DistributedRank {
     // the whole selection — group totals, target placement, the
     // cumulative walk — is a scan over ≤1M collected triples, ONE
     // Spark job where the distributed form pays the totals collect,
-    // runningSum's range exchange + offset collect, and the
+    // runningSum's range exchange + offsets, and the
     // broadcast range-join. Under replica scaling the count table is
     // invariant, so this tier keeps firing at 100×; true-scale value
     // domains overflow the probe once (≤1M small rows shipped) and
@@ -470,20 +456,9 @@ object DistributedRank {
       out: String,
       outTotal: String,
       maxDriverRows: Int): DataFrame = {
-    val spark = vcc.sparkSession
-    val totsDf = vcc.groupBy(groupCols.map(col): _*).agg(sum(col("__cnt")).as("__tot"))
-    val tots = collectBounded(totsDf, maxDriverRows, "valuesAtRanksFromCounts")
-    val targetRows = tots.toSeq.flatMap { r =>
-      val total = r.getAs[Long]("__tot")
-      ranksOf(total).filter(k => k >= 1 && k <= total).distinct.sorted
-        .map(k => Row.fromSeq(r.toSeq.dropRight(1) ++ Seq(k, total)))
-    }
-    val targetSchema = StructType(
-      totsDf.schema.fields.dropRight(1) ++ Seq(
-        StructField("__t", LongType, nullable = false),
-        StructField("__tt", LongType, nullable = false)))
-    val targets = spark.createDataFrame(
-      java.util.Arrays.asList(targetRows: _*), targetSchema)
+    val targets = targetTable(
+      vcc.groupBy(groupCols.map(col): _*).agg(sum(col("__cnt")).as("__tot")),
+      ranksOf, maxDriverRows)
     val cum = runningSum(vcc, groupCols, Seq(valueCol), "__cnt", "__cume")
     // null-safe group keys + the rank-window range condition; the
     // target list is groups × ranks — always broadcast-sized
@@ -530,8 +505,8 @@ object DistributedRank {
     * `lo + (h − ⌊h⌋)·(hi − lo)`, h = (n−1)/2 — results are
     * bit-identical across tiers (pinned three ways in
     * DistributedRankSpec). NULL group keys form a group of their own;
-    * NULL values rank first (both mirroring the sort-selection path)
-    * and a median landing on a NULL value yields NULL med/mad.
+    * NULL values rank first (both mirroring the row-level window
+    * form) and a median landing on a NULL value yields NULL med/mad.
     * Output: one row per group — (groupCol, outMed, outMad), doubles.
     */
   def medianMad(
@@ -669,35 +644,9 @@ object DistributedRank {
       .agg(min(col(valueCol)).as(out))
   }
 
-  /** Plan-size ceiling under which dispatch skips the count job
-    * entirely: 64 MB of parquet cannot plausibly hold more than
-    * [[SortSelectionMaxRows]] rows of any real fact (that would be
-    * ~3 bytes/row compressed), so a scan whose optimized-plan
-    * `sizeInBytes` sits below it is sort-selection-sized without
-    * counting. A misjudgment costs performance only — both selection
-    * paths return identical values — so the cheap bound is safe.
-    */
-  val SmallStatsBytes: Long = 64L << 20
-
-  /** Row count FOR PATH DISPATCH over `df`: 0 when the optimized
-    * plan's size statistics already prove the input sort-selection-
-    * sized (no job at all — the common small-SF case), the exact
-    * count otherwise (one metadata-cheap job on a scan; at that size
-    * its cost is noise against either selection path). Callers with
-    * several same-cardinality inputs (q95's cascaded medians: the
-    * deviations frame is a row-preserving broadcast join off the
-    * base) resolve once and pass the result to each
-    * [[valuesAtRanksAdaptive]] call — counting the derived frame
-    * would recompute its join.
-    */
-  def dispatchRows(df: DataFrame): Long = {
-    val statsBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (statsBytes <= SmallStatsBytes) 0L else df.count()
-  }
-
   /** Rank-free global ntile via boundary cuts (the q46 shape, factored
     * here in r13 so the path is directly forceable by a spec instead
-    * of reachable only above q46's 64 MB stats gate):
+    * of reachable only above q46's stats gate):
     * `ntile(k) OVER (ORDER BY value, key)` needs only the k−1 BUCKET
     * BOUNDARIES, never a per-row rank. Aggregate to the per-value
     * count table (map-side combined, replica-invariant), walk it on
@@ -796,136 +745,38 @@ object DistributedRank {
     }
   }
 
-  /** Size-adaptive rank selection: [[valuesAtRanks]] (row-level
-    * range sort, wins while the data fits a few balanced sort
-    * partitions) below [[SortSelectionMaxRows]], [[valuesAtRanksByValue]]
-    * (distinct-value domain, ~flat under replica scaling) above it —
-    * the q116 hybrid generalized to every quantile/median consumer.
-    * Both paths select the SAME values (rank→value is tiebreak-
-    * invariant), so the output is byte-identical either side of the
-    * threshold; `tieCols` only make the sort path's internal rank
-    * deterministic. `totalRows` defaults to [[dispatchRows]] (stats
-    * first, count only when ambiguous); pass it when the caller
-    * already resolved the cardinality.
-    *
-    * Output schema is the uniform (groupCols…, valueCol, out
-    * [, outTotal]) of the by-value path on BOTH sides.
+  /** The type `SUM(valueCol)` produces, which must be exact — long or
+    * decimal (doubles would make a prefix sum depend on partition
+    * boundaries; refuse them rather than be quietly nondeterministic).
     */
-  def valuesAtRanksAdaptive(
-      df: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      tieCols: Seq[String],
-      ranksOf: Long => Seq[Long],
-      out: String = "rn",
-      outTotal: String = "",
-      totalRows: Long = -1L,
-      thresholdRows: Long = SortSelectionMaxRows,
-      maxDriverRows: Int = DefaultMaxDriverRows): DataFrame = {
-    val n0 = if (totalRows >= 0L) totalRows else dispatchRows(df)
-    if (n0 <= thresholdRows) {
-      val outCols = (groupCols :+ valueCol :+ out) ++
-        (if (outTotal.nonEmpty) Seq(outTotal) else Nil)
-      // third tier when the caller KNOWS the row count is under the
-      // window-rank bound: one group-count job + one plain window vs
-      // sort-selection's range exchange + carrier machinery.
-      // Alternating ABA at sf0.1, ≥6 samples per side across two
-      // weather regimes: q116 (this path) won EVERY sample — window
-      // 1.08–1.31 s vs sort-selection 1.41–1.69 s. The stats-proven
-      // branch (n0 == 0, rows only bounded by the 64 MB dispatch
-      // ceiling) measured a wash on q41/q84/q95 (window mins 1.45/
-      // 1.54/3.73 vs 1.60/1.53/4.24, overlapping distributions both
-      // regimes) and stays on sort-selection — the balanced exchange
-      // is the safer default when the actual cardinality is unknown.
-      val windowSized = n0 > 0L && n0 <= WindowRankMaxRows
-      val hits =
-        if (windowSized)
-          valuesAtRanksWindow(df, groupCols, valueCol +: tieCols, ranksOf,
-            out, outTotal, maxDriverRows)
-        else
-          valuesAtRanks(df, groupCols, valueCol +: tieCols, ranksOf, out,
-            outTotal = outTotal, maxDriverRows = maxDriverRows)
-      hits.select(outCols.map(col): _*)
-    } else
-      valuesAtRanksByValue(df, groupCols, valueCol, ranksOf, out,
-        outTotal, maxDriverRows)
-  }
-
-  /** The small tier of [[valuesAtRanksAdaptive]]: rank everything in
-    * a plain window (degenerate tasks are fine at this size) and keep
-    * the driver-built target ranks — one count job over ≤ #groups
-    * rows plus one window job, where sort-selection pays a range
-    * exchange, a persist, and the carrier-sliver machinery that only
-    * pay off once the sort partitions are worth balancing. Same
-    * contract as [[valuesAtRanks]]: `ranksOf` per group count,
-    * out-of-range targets dropped, exactly one row per surviving
-    * (group, target), NULL group keys a group of their own.
-    */
-  private def valuesAtRanksWindow(
-      df: DataFrame,
-      groupCols: Seq[String],
-      orderCols: Seq[String],
-      ranksOf: Long => Seq[Long],
-      out: String,
-      outTotal: String,
-      maxDriverRows: Int): DataFrame = {
-    val spark = df.sparkSession
-    // persisted for the same reason sort-selection persists its
-    // ranged frame: the count job and the window job must not each
-    // re-scan the source (the ledger budgets assume one scan per
-    // pass); the tier guard bounds the cached frame
-    val src = graft.CacheScope.scoped(df)
-    val countsDf = src.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-    val counts = collectBounded(countsDf, maxDriverRows, "valuesAtRanksWindow")
-    val tRows = counts.toSeq.flatMap { r =>
-      val n = r.getAs[Long]("__n")
-      ranksOf(n).distinct.filter(t => t >= 1 && t <= n)
-        .map(t => Row.fromSeq(r.toSeq.dropRight(1) ++ Seq(t, n)))
-    }
-    val tSchema = StructType(
-      countsDf.schema.fields.dropRight(1) ++ Seq(
-        StructField("__t", LongType, nullable = false),
-        StructField("__tt", LongType, nullable = false)))
-    val targets = spark.createDataFrame(
-      java.util.Arrays.asList(tRows: _*), tSchema)
-    val wOrd = Window
-      .partitionBy(groupCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-    val ranked = src.withColumn(out, row_number().over(wOrd).cast(LongType))
-    val renamed = groupCols.foldLeft(targets)(
-      (d, k) => d.withColumnRenamed(k, "__r_" + k))
-    val cond = ((ranked(out) === renamed("__t")) +:
-      groupCols.map(k => ranked(k) <=> renamed("__r_" + k))).reduce(_ && _)
-    val joined = ranked.join(broadcast(renamed), cond)
-      .drop(groupCols.map("__r_" + _): _*)
-    val withTotal =
-      if (outTotal.nonEmpty) joined.withColumn(outTotal, col("__tt"))
-      else joined
-    withTotal.drop("__t", "__tt")
+  private def exactSumType(df: DataFrame, valueCol: String): DataType = {
+    val t = df.select(sum(col(valueCol))).schema.head.dataType
+    require(t.isInstanceOf[DecimalType] || t == LongType,
+      s"runningSum needs an exactly-summable value column (long or decimal); " +
+        s"$valueCol sums to $t")
+    t
   }
 
   /** Distributed exact prefix sum — `SUM(v) OVER (PARTITION BY g
     * ORDER BY ... ROWS UNBOUNDED PRECEDING)` without the single-task-
     * per-group window sort, by the same construction as [[rowNumber]]:
-    * range-partition on (group, order), per-(partition, group) sums
-    * collapse to a driver-side prefix, local running sum + broadcast
-    * offset = exact global running sum. The value column must sum
-    * exactly — LongType or DecimalType (doubles would make the result
-    * depend on partition boundaries; refuse them rather than be
-    * quietly nondeterministic). Inclusive of the current row;
-    * subtract the row's own value for the exclusive form. When
-    * `outTotal` is non-empty the group's full sum (nulls ignored, 0
-    * if all-null) rides along under that name — crossing-point
-    * consumers (weighted median, CDF) need it and the per-partition
-    * sums already on the driver make it free, where a separate
-    * totals frame would cost another scan and join. When `outRank`
-    * is non-empty the row's global 1-based rank under the same
-    * ordering rides along too (crossing-point consumers — coverage
-    * curves, CDF inversion — need "how many rows to reach mass X",
-    * and the per-partition row counts are already on the driver, so
-    * this costs one extra long per offset row instead of a second
-    * [[rowNumber]] exchange over the data).
+    * per-(partition, group) sums prefix over earlier partitions in the
+    * plan, local running sum + broadcast offset = exact global running
+    * sum. The value column must sum exactly ([[exactSumType]]); the
+    * offsets are cast back to that type, so `out` has the type of the
+    * plain window's running sum plus a same-typed offset. Inclusive of
+    * the current row; subtract the row's own value for the exclusive
+    * form. When `outTotal` is non-empty the group's full sum (nulls
+    * ignored, 0 if all-null) rides along under that name —
+    * crossing-point consumers (weighted median, CDF) need it and the
+    * per-partition sums table already holds it, where a separate
+    * totals frame would cost another scan and join. When `outRank` is
+    * non-empty the row's global 1-based rank under the same ordering
+    * rides along too (crossing-point consumers — coverage curves, CDF
+    * inversion — need "how many rows to reach mass X", and the
+    * per-partition row counts sit in the same table, so this costs one
+    * extra long per offset row instead of a second [[rowNumber]]
+    * exchange over the data).
     */
   def runningSum(
       df: DataFrame,
@@ -935,72 +786,27 @@ object DistributedRank {
       out: String = "cum",
       numPartitions: Int = 0,
       outTotal: String = "",
-      outRank: String = "",
-      maxDriverRows: Int = DefaultMaxDriverRows): DataFrame = {
-    val spark = df.sparkSession
-    val sortCols = (groupCols ++ orderCols).map(col)
-    val n = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val ranged = graft.CacheScope.scoped(
-      df.repartitionByRange(n, sortCols: _*)
-        .withColumn("__pid", spark_partition_id()))
-    val sumsDf = ranged
-      .groupBy(col("__pid") +: groupCols.map(col): _*)
-      .agg(sum(col(valueCol)).as("__s"), count(col(valueCol)).as("__c"),
-        count(lit(1)).as("__call"))
-    val sumType = sumsDf.schema("__s").dataType
-    val isDec = sumType.isInstanceOf[org.apache.spark.sql.types.DecimalType]
-    require(isDec || sumType == LongType,
-      s"runningSum needs an exactly-summable value column (long or decimal); " +
-        s"$valueCol sums to $sumType")
-    val sums = collectBounded(sumsDf, maxDriverRows, "runningSum")
+      outRank: String = ""): DataFrame = {
+    val sumType = exactSumType(df, valueCol)
+    val zero = lit(0).cast(sumType)
     // Offsets carry (prior-partition sum, prior-partition non-null
     // count): the count disambiguates SQL's null-until-first-value
     // running-sum semantics — a partition whose local prefix is still
     // all-null must inherit the prior sum iff any prior value exists.
-    val offRows = sums
-      .groupBy(r => groupCols.map(g => r.getAs[Any](g)))
-      .valuesIterator
-      .flatMap { rows =>
-        var accL = 0L
-        var accD = java.math.BigDecimal.ZERO
-        var accC = 0L
-        var accR = 0L
-        val sorted = rows.sortBy(_.getAs[Int]("__pid"))
-        val rowSeq = sorted.map { r =>
-          val off: Any = if (isDec) accD else accL
-          val offC = accC
-          val offR = accR
-          r.getAs[Any]("__s") match {
-            case null => ()
-            case d: java.math.BigDecimal => accD = accD.add(d)
-            case d: scala.math.BigDecimal => accD = accD.add(d.bigDecimal)
-            case l: java.lang.Long => accL += l
-          }
-          accC += r.getAs[Long]("__c")
-          accR += r.getAs[Long]("__call")
-          (r, off, offC, offR)
-        }
-        val total: Any = if (isDec) accD else accL
-        rowSeq.map { case (r, off, offC, offR) =>
-          Row.fromSeq(r.toSeq.dropRight(3) ++ Seq(off, offC, offR, total))
-        }
-      }
-      .toSeq
-    val offSchema = StructType(
-      sumsDf.schema.fields.dropRight(3) ++ Seq(
-        StructField("__off", sumType, nullable = false),
-        StructField("__offcnt", LongType, nullable = false),
-        StructField("__roff", LongType, nullable = false),
-        StructField("__gtot", sumType, nullable = false)))
-    val offsets = spark.createDataFrame(
-      java.util.Arrays.asList(offRows: _*), offSchema)
-    val wRun = Window
-      .partitionBy(col("__pid") +: groupCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = joinNullSafe(ranged, offsets, "__pid" +: groupCols)
-      .withColumn("__lcum", sum(col(valueCol)).over(wRun))
+    val withOffsets = withPartitionOffsets(df, groupCols, orderCols, numPartitions,
+      Seq(sum(col(valueCol)).as("__s"), count(col(valueCol)).as("__c"),
+        count(lit(1)).as("__call"))) { byPid =>
+      val all = byPid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      Seq(
+        coalesce(sum(col("__s")).over(prior(byPid)).cast(sumType), zero).as("__off"),
+        coalesce(sum(col("__c")).over(prior(byPid)), lit(0L)).as("__offcnt"),
+        coalesce(sum(col("__call")).over(prior(byPid)), lit(0L)).as("__roff"),
+        coalesce(sum(col("__s")).over(all).cast(sumType), zero).as("__gtot"))
+    }
+    val wLocal = over("__pid" +: groupCols, orderCols)
+    val cum = withOffsets
+      .withColumn("__lcum", sum(col(valueCol)).over(
+        wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn(out,
         when(col("__lcum").isNotNull, col("__lcum") + col("__off"))
           .otherwise(when(col("__offcnt") > 0, col("__off"))))
@@ -1009,41 +815,63 @@ object DistributedRank {
     val withRank =
       if (outRank.nonEmpty)
         withTotal.withColumn(outRank,
-          row_number().over(Window
-            .partitionBy(col("__pid") +: groupCols.map(col): _*)
-            .orderBy(orderCols.map(col): _*)).cast(LongType) + col("__roff"))
+          row_number().over(wLocal).cast(LongType) + col("__roff"))
       else withTotal
     withRank.drop("__pid", "__off", "__offcnt", "__roff", "__lcum", "__gtot")
   }
 
-  /** Stats-bytes ceiling for [[runningSumAdaptive]]'s window branch.
-    * The prefix-sum consumers feed DERIVED aggregate tables
-    * (distinct-score, distinct-price, sweep points), where a count
-    * job for dispatch would recompute the aggregate itself — so
-    * dispatch is plan-statistics-only: window when the optimizer's
-    * size estimate proves the input small, kernel otherwise (derived
-    * frames inherit their child's size estimate, so a large FACT
-    * behind a small aggregate errs toward the kernel — the direction
-    * that only costs constant overhead, never the one-task cliff).
-    * Sized from the global prefix-sum sweep of RankKernelScale (a
-    * scale main last present at commit fba91a5) — 1M
-    * rows: window 2.6 s vs kernel 5.3 s; 2M: 3.0 vs 5.0; 5M: 6.3 vs
-    * 5.4 (crossover ≈ 3–4M rows ≈ 60 MB at the ~18 B/row measured
-    * fact width) — 32 MB sits ~2× under the crossover.
+  /** The window tier of [[runningSumAdaptive]]. It replicates the
+    * distributed tier's output EXACTLY — `out` is `local-cum + 0` of
+    * the kernel's Add(sumType, sumType) type with SQL's
+    * null-until-first-value semantics, `outTotal` the non-null group
+    * total (0 when all-null), `outRank` the LongType row number. The
+    * result is [[graft.CacheScope]]-scoped like the kernel's internal
+    * persist, keeping the multi-consumer single-source-scan contract;
+    * the gate bounds the cached frame.
     */
-  val WindowPrefixMaxBytes: Long = 32L << 20
+  private[graft] def runningSumWindow(
+      df: DataFrame,
+      groupCols: Seq[String],
+      orderCols: Seq[String],
+      valueCol: String,
+      out: String = "cum",
+      outTotal: String = "",
+      outRank: String = ""): DataFrame = {
+    val zero = lit(0).cast(exactSumType(df, valueCol))
+    // every window expression rides the SAME (partition, order)
+    // spec — Spark groups window expressions by that pair, so cum,
+    // total (unbounded-both frame), and rank all evaluate in ONE
+    // WindowExec over one sort; and the running sum lands in an
+    // intermediate column first so the null-guard below does not
+    // duplicate the aggregate inside the operator
+    val wOrd = over(groupCols, orderCols)
+    val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAll = wOrd.rowsBetween(
+      Window.unboundedPreceding, Window.unboundedFollowing)
+    val withCum = df
+      .withColumn("__lcum", sum(col(valueCol)).over(wRun))
+      .withColumn(out,
+        when(col("__lcum").isNotNull, col("__lcum") + zero))
+    val withTotal =
+      if (outTotal.nonEmpty)
+        withCum.withColumn(outTotal,
+          coalesce(sum(col(valueCol)).over(wAll), zero))
+      else withCum
+    val withRank =
+      if (outRank.nonEmpty)
+        withTotal.withColumn(outRank,
+          row_number().over(wOrd).cast(LongType))
+      else withTotal
+    graft.CacheScope.scoped(withRank.drop("__lcum"))
+  }
 
-  /** Size-adaptive [[runningSum]]: the plain running-sum window when
-    * the optimizer already proves the input below
-    * [[WindowPrefixMaxBytes]], the distributed kernel otherwise.
-    * The window branch replicates the kernel's output EXACTLY —
-    * `out` is `local-cum + 0` of the kernel's Add(sumType, sumType)
-    * type with SQL's null-until-first-value semantics, `outTotal`
-    * the non-null group total (0 when all-null), `outRank` the
-    * LongType row number — so consumers are byte-identical either
-    * side of the dispatch (spec-pinned both sides). The result is
-    * [[graft.CacheScope]]-scoped like the kernel's internal persist,
-    * keeping the multi-consumer single-source-scan contract.
+  /** Size-adaptive [[runningSum]]: [[runningSumWindow]] under
+    * [[WindowMaxBytes]], the distributed kernel above it;
+    * byte-identical either side (spec-pinned). The prefix-sum
+    * consumers feed DERIVED aggregate tables (distinct-score,
+    * distinct-price, sweep points), whose estimates inherit their
+    * child's size — a large fact behind a small aggregate takes the
+    * distributed tier.
     */
   def runningSumAdaptive(
       df: DataFrame,
@@ -1052,67 +880,23 @@ object DistributedRank {
       valueCol: String,
       out: String = "cum",
       outTotal: String = "",
-      outRank: String = "",
-      maxBytes: Long = WindowPrefixMaxBytes,
-      maxDriverRows: Int = DefaultMaxDriverRows): DataFrame = {
-    val statsBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (statsBytes > maxBytes)
+      outRank: String = ""): DataFrame =
+    if (windowSized(df))
+      runningSumWindow(df, groupCols, orderCols, valueCol, out, outTotal, outRank)
+    else
       runningSum(df, groupCols, orderCols, valueCol, out,
-        outTotal = outTotal, outRank = outRank, maxDriverRows = maxDriverRows)
-    else {
-      val sumType = df.select(sum(col(valueCol)).as("__s")).schema.head.dataType
-      require(sumType.isInstanceOf[org.apache.spark.sql.types.DecimalType] ||
-          sumType == LongType,
-        s"runningSum needs an exactly-summable value column (long or decimal); " +
-          s"$valueCol sums to $sumType")
-      val zero = lit(0).cast(sumType)
-      // every window expression rides the SAME (partition, order)
-      // spec — Spark groups window expressions by that pair, so cum,
-      // total (unbounded-both frame), and rank all evaluate in ONE
-      // WindowExec over one sort; and the running sum lands in an
-      // intermediate column first so the null-guard below does not
-      // duplicate the aggregate inside the operator
-      val wOrd = Window
-        .partitionBy(groupCols.map(col): _*)
-        .orderBy(orderCols.map(col): _*)
-      val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = wOrd.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-      val withCum = df
-        .withColumn("__lcum", sum(col(valueCol)).over(wRun))
-        .withColumn(out,
-          when(col("__lcum").isNotNull, col("__lcum") + zero))
-      val withTotal =
-        if (outTotal.nonEmpty)
-          withCum.withColumn(outTotal,
-            coalesce(sum(col(valueCol)).over(wAll), zero))
-        else withCum
-      val withRank =
-        if (outRank.nonEmpty)
-          withTotal.withColumn(outRank,
-            row_number().over(wOrd).cast(LongType))
-        else withTotal
-      // scoped like the kernel's internal persist — the docstring's
-      // multi-consumer single-source-scan contract; the 32 MB stats
-      // ceiling bounds the cached frame
-      graft.CacheScope.scoped(withRank.drop("__lcum"))
-    }
-  }
+        outTotal = outTotal, outRank = outRank)
 
   /** Distributed exact prefix max — `MAX(v) OVER (PARTITION BY g
     * ORDER BY … ROWS UNBOUNDED PRECEDING)` by the [[runningSum]]
     * construction. Unlike the sum, max is exact for ANY orderable
     * type (no rounding to accumulate), so there is no long/decimal
-    * restriction — and the cross-partition offsets need no driver
-    * arithmetic at all: the per-(partition, group) max table is ≤
-    * numPartitions × #groups rows, so its exclusive prefix max is a
-    * window over a broadcast-sized frame, not over the data. Null
-    * semantics match SQL (nulls ignored; null until the first value).
-    * Inclusive of the current row by default; `exclusive = true`
-    * gives `ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING` (null
-    * on each group's first row) — the form dominance sweeps need,
-    * where a row is compared against the envelope of STRICTLY
-    * preceding rows. The skyline/Pareto sweep (q127) and
+    * restriction. Null semantics match SQL (nulls ignored; null until
+    * the first value). Inclusive of the current row by default;
+    * `exclusive = true` gives `ROWS BETWEEN UNBOUNDED PRECEDING AND 1
+    * PRECEDING` (null on each group's first row) — the form dominance
+    * sweeps need, where a row is compared against the envelope of
+    * STRICTLY preceding rows. The skyline/Pareto sweep (q127) and
     * staircase-envelope shapes ride this.
     */
   def runningMax(
@@ -1123,28 +907,16 @@ object DistributedRank {
       out: String = "rmax",
       numPartitions: Int = 0,
       exclusive: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val sortCols = (groupCols ++ orderCols).map(col)
-    val n = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val ranged = graft.CacheScope.scoped(
-      df.repartitionByRange(n, sortCols: _*)
-        .withColumn("__pid", spark_partition_id()))
-    val maxes = ranged
-      .groupBy(col("__pid") +: groupCols.map(col): _*)
-      .agg(max(col(valueCol)).as("__m"))
-    // Exclusive prefix max across partitions, per group — a window
-    // over the tiny per-partition max table (nothing data-sized).
-    val wPrev = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = maxes.withColumn("__off", max(col("__m")).over(wPrev)).drop("__m")
-    val wRun = Window
-      .partitionBy(col("__pid") +: groupCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
+    val wRun = over("__pid" +: groupCols, orderCols)
       .rowsBetween(Window.unboundedPreceding,
         if (exclusive) -1 else Window.currentRow)
-    joinNullSafe(ranged, offsets, "__pid" +: groupCols)
+    // the exclusive prefix max across partitions needs no coalesce:
+    // greatest() skips the NULL offset of a group's first partition
+    val withOffsets = withPartitionOffsets(df, groupCols, orderCols, numPartitions,
+      Seq(max(col(valueCol)).as("__m"))) { byPid =>
+      Seq(max(col("__m")).over(prior(byPid)).as("__off"))
+    }
+    withOffsets
       .withColumn(out, greatest(max(col(valueCol)).over(wRun), col("__off")))
       .drop("__pid", "__off")
   }

@@ -187,11 +187,10 @@ object ExtendedQueries {
         |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       // the oracle's rn-filter solves to: even n → ranks {n/2, n/2+1},
       // odd n → {(n+1)/2}; the adaptive rank selection surfaces
-      // exactly those values — sort-selection (one balanced exchange,
-      // no per-group single-task window) while the table fits the
-      // measured crossover, the distinct-value-domain form (shuffle
-      // bounded by distinct prices, ~flat under replica scaling)
-      // above it; identical values either side (see
+      // exactly those values — a plain window under the kernel's
+      // stats gate, the distinct-value-domain form (shuffle bounded by
+      // distinct prices, ~flat under replica scaling) above it;
+      // identical values either side (see
       // DistributedRank.valuesAtRanksAdaptive).
       val li = Tables(s, dir).lineitem
         .select(col("l_returnflag"), col("l_extendedprice"),

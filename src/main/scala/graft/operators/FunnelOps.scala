@@ -39,9 +39,8 @@ object FunnelOps {
     * exchange and pays the q128-class megamorphic interpreted-eval
     * tax in long suites (100×, events 211 MB: fold 2.3–5.1 s in-suite
     * vs a 1.43 s isolated floor; staged floors 1.635 isolated and is
-    * every-operator codegen). 64 MB = the [[DistributedRank
-    * .SmallStatsBytes]] convention, ~30× above the measured small
-    * side and ~3× below the measured large side.
+    * every-operator codegen). 64 MB sits ~30× above the measured
+    * small side and ~3× below the measured large side.
     */
   val FoldMaxStatsBytes: Long = 64L << 20
 

@@ -12,8 +12,8 @@ import scala.collection.mutable
   * that accumulates the structural census over EVERY driver action a
   * query runs while the ledger is open, not just the one execution of
   * the returned frame. Actions a query fires while BUILDING its result
-  * — q116's `count()` pre-pass and `valuesAtRanks` rank job,
-  * `DistributedRank`'s offset jobs, the iterative loops' per-round
+  * — q116's `count()` pre-pass and window-tier rank job,
+  * `DistributedRank`'s group-totals collects, the iterative loops' per-round
   * `localCheckpoint` materializations — finish before the returned
   * plan exists, so the plan census alone proves nothing about them
   * (q116's plan budget passes trivially: the returned frame is a

@@ -11,7 +11,7 @@ import graft.plans.ScanLedger
   * the hash and the scan ledger of its serial run, and their drains
   * leave no scoped cache behind. q27 and q103 persist the same
   * `TextQueries.lshCandidates` plans; q101 runs its PageRank rounds in
-  * a `TightLoop` scope while q55 plans adaptively beside it.
+  * a `TightLoop` scope while q55 persists its (rf, ls) aggregate beside it.
   */
 class ConcurrentQueriesSpec extends AnyFunSuite {
 

@@ -24,11 +24,16 @@ class PlanQualitySpec extends AnyFunSuite {
     try body finally CacheScope.drain()
 
   /** Queries whose final plan runs a window with no partitionSpec
-    * (one task over the window's whole input) at this suite's scale.
+    * (one task over the window's whole input) at this suite's scale,
+    * each with what bounds that one task's input.
     */
   private val UnpartitionedWindowQueries = Seq(
-    "q112_mixture_waterfill", "q115_zorder_layout", "q118_auc_purchase",
-    "q119_gini_spend", "q127_skyline_parts", "q46_ntile_quartile")
+    "q112_mixture_waterfill", // the catalog-sized (lang, source) domain table
+    "q115_zorder_layout", // DistributedRank.WindowMaxBytes: window tier under the gate
+    "q118_auc_purchase", // DistributedRank.WindowMaxBytes
+    "q119_gini_spend", // DistributedRank.WindowMaxBytes
+    "q127_skyline_parts", // runningMax's per-(partition) max table, ≤ numPartitions rows
+    "q46_ntile_quartile") // DistributedRank.WindowMaxBytes
 
   private def plan(name: String): String =
     drained(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString)
@@ -274,7 +279,7 @@ class PlanQualitySpec extends AnyFunSuite {
   test("q116: histogram is rank-only — returned plan touches no fact data at all") {
     val p = plan("q116_equidepth_hist")
     // the whole histogram derives from the ≤2k−1 rank-rows one
-    // valuesAtRanks pass surfaces (single fact scan, during build);
+    // rank-selection pass surfaces (single fact scan, during build);
     // the returned frame is the ≤k-row driver-assembled result — any
     // FileScan/Window/Join here means the second full-data pass the r7
     // audit flagged has crept back in
@@ -288,7 +293,9 @@ class PlanQualitySpec extends AnyFunSuite {
   test("q120: weighted-median windows are __pid-local (never one task per group); offsets broadcast") {
     val p = plan("q120_weighted_median")
     // every window in the plan must be partitioned by the range
-    // partition id — a windowspec without __pid is a single-task group
+    // partition id — a windowspec without __pid is a single-task group;
+    // the offsets window over the per-(partition, group) table orders
+    // by __pid
     val specs = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
     assert(specs.nonEmpty, s"expected the local running-sum window:\n${p.take(1500)}")
     specs.foreach(l => assert(l.contains("__pid"), s"group-global window:\n$l"))
@@ -316,12 +323,12 @@ class PlanQualitySpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     // minTotal = total cached-relation occurrences referencing the
     // fact across the plan; dropping any one persist lowers it below
-    // the pin (e.g. q126 counts sess's 3 consumers + DistributedRank's
-    // internal ranged cache)
+    // the pin (e.g. q126 counts the persisted sweep frame and sess's
+    // ns leg)
     val factOf = Map(
-      // q126's sweep legs are consumed at build time (runningSum's
-      // counts action); the FINAL plan keeps ranged + the ns leg — 2
-      // cached reads, and dropping the sess persist leaves only 1
+      // q126's sweep legs feed runningSumAdaptive's persisted window
+      // tier; the FINAL plan keeps that cache + the ns leg — 2 cached
+      // reads, and dropping the sess persist leaves only 1
       "q126_peak_concurrency" -> ("events", 2),
       "q128_copurchase_lift" -> ("lineitem", 4),
       "q129_retention_sets" -> ("events", 2))

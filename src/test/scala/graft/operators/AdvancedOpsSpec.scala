@@ -75,4 +75,28 @@ class AdvancedOpsSpec extends AnyFunSuite {
       assert(math.abs(a - e) / e < 0.05, s"approx $a vs exact $e")
     }
   }
+
+  test("q55: the rolled-up sets equal GROUPING SETS, and the () set keeps its row on empty lineitem") {
+    val q55 = graft.SparkEntry.queries("q55_grouping_sets")
+    val dir = "/root/testdata/sf0.001"
+    def groupingSets(table: String) = spark.sql(
+      s"""SELECT COALESCE(l_returnflag,'ALL') AS rf, COALESCE(l_linestatus,'ALL') AS ls,
+         |  CAST(COUNT(*) AS BIGINT) AS n,
+         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+         |FROM parquet.`$table`
+         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin)
+    try {
+      val got = q55(spark, dir).collect().toSeq
+      assert(got.size == 6 && got.toSet == groupingSets(s"$dir/lineitem.parquet").collect().toSet)
+    } finally graft.CacheScope.drain()
+    val empty = java.nio.file.Files.createTempDirectory("q55-empty").toFile
+    try {
+      val table = s"$empty/lineitem.parquet"
+      spark.read.parquet(s"$dir/lineitem.parquet").limit(0).write.parquet(table)
+      // Spark's grouped GROUPING SETS drops the () row SQL keeps
+      assert(groupingSets(table).isEmpty)
+      val got = try q55(spark, empty.toString).collect().toSeq finally graft.CacheScope.drain()
+      assert(got == Seq(org.apache.spark.sql.Row("ALL", "ALL", 0L, null)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(empty)
+  }
 }

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -58,19 +60,19 @@ class DistributedRankSpec extends AnyFunSuite {
     }
     val df = rows.toDF("g", "v", "id")
     for (groups <- Seq(Seq("g"), Seq.empty[String])) {
-      // thresholdRows = 0 forces the distributed kernel, Long.MaxValue
-      // the window path; totalRows pinned so dispatch never counts
-      val viaWindow = DistributedRank.rowNumberAdaptive(
-        df, groups, Seq("v", "id"), "rn",
-        totalRows = rows.size.toLong, thresholdRows = Long.MaxValue)
-      val viaKernel = DistributedRank.rowNumberAdaptive(
-        df, groups, Seq("v", "id"), "rn",
-        totalRows = rows.size.toLong, thresholdRows = 0L)
+      // the two tiers called directly; a test-sized frame is under the
+      // stats gate, so the adaptive entry must pick the window tier
+      val viaWindow = DistributedRank.rowNumberWindow(df, groups, Seq("v", "id"), "rn")
+      val viaKernel = DistributedRank.rowNumber(df, groups, Seq("v", "id"), "rn")
+      val viaGate = DistributedRank.rowNumberAdaptive(df, groups, Seq("v", "id"), "rn")
       assert(viaWindow.schema == viaKernel.schema,
         s"schema drift across the threshold for groups=$groups")
       assert(viaWindow.exceptAll(viaKernel).count() == 0 &&
         viaKernel.exceptAll(viaWindow).count() == 0,
         s"rank drift across the threshold for groups=$groups")
+      assert(!viaGate.queryExecution.analyzed.toString.contains("__pid"),
+        s"the gate did not pick the window tier for groups=$groups")
+      graft.CacheScope.drain()
     }
   }
 
@@ -88,8 +90,8 @@ class DistributedRankSpec extends AnyFunSuite {
         val h = (n - 1) * 0.5
         Seq(math.floor(h).toLong + 1, math.ceil(h).toLong + 1, 1L, n, n + 7)
       }
-      val got = DistributedRank.valuesAtRanks(df, Seq("g"), Seq("v", "id"),
-        ranks, "rn", numPartitions = 3 + trial, outTotal = "n")
+      val got = DistributedRank.valuesAtRanksWindow(df, Seq("g"), Seq("v", "id"),
+        ranks, "rn", outTotal = "n")
       val w = Window.partitionBy(col("g")).orderBy(col("v"), col("id"))
       val nPer = df.groupBy(col("g")).agg(count(lit(1)).as("n"))
       val expect = df
@@ -104,6 +106,7 @@ class DistributedRankSpec extends AnyFunSuite {
       assert(gotSet == expect, s"trial $trial valuesAtRanks mismatch")
       // exactly one row per surviving (group, target) — no dupes
       assert(got.count() == gotSet.size)
+      graft.CacheScope.drain()
     }
   }
 
@@ -156,13 +159,13 @@ class DistributedRankSpec extends AnyFunSuite {
     for (dec <- Seq(false, true); groups <- Seq(Seq("g"), Seq.empty[String])) {
       val base = rows.toDF("g", "ord", "id", "v")
       val df = if (dec) base.withColumn("v", col("v").cast("decimal(12,2)")) else base
-      // maxBytes = 0 forces the kernel, Long.MaxValue the window path
-      val viaWindow = DistributedRank.runningSumAdaptive(
+      // the two tiers of runningSumAdaptive, called directly
+      val viaWindow = DistributedRank.runningSumWindow(
         df, groups, Seq("ord", "id"), "v", "cum",
-        outTotal = "tot", outRank = "rk", maxBytes = Long.MaxValue)
-      val viaKernel = DistributedRank.runningSumAdaptive(
+        outTotal = "tot", outRank = "rk")
+      val viaKernel = DistributedRank.runningSum(
         df, groups, Seq("ord", "id"), "v", "cum",
-        outTotal = "tot", outRank = "rk", maxBytes = 0L)
+        outTotal = "tot", outRank = "rk")
       assert(viaWindow.schema.map(f => (f.name, f.dataType)) ==
         viaKernel.schema.map(f => (f.name, f.dataType)),
         s"type drift across the dispatch for dec=$dec groups=$groups: " +
@@ -175,15 +178,16 @@ class DistributedRankSpec extends AnyFunSuite {
     // all-null group: outTotal is 0 (not null) on both sides
     val nulls = Seq(("a", 1L, 1L, null: java.lang.Long),
       ("a", 2L, 2L, null: java.lang.Long)).toDF("g", "ord", "id", "v")
-    for (mb <- Seq(Long.MaxValue, 0L)) {
-      val r = DistributedRank.runningSumAdaptive(
-          nulls, Seq("g"), Seq("ord", "id"), "v", "cum",
-          outTotal = "tot", maxBytes = mb)
-        .select(col("cum"), col("tot")).collect()
+    for ((name, tier) <- Seq(
+        "window" -> DistributedRank.runningSumWindow(
+          nulls, Seq("g"), Seq("ord", "id"), "v", "cum", outTotal = "tot"),
+        "distributed" -> DistributedRank.runningSum(
+          nulls, Seq("g"), Seq("ord", "id"), "v", "cum", outTotal = "tot"))) {
+      val r = tier.select(col("cum"), col("tot")).collect()
       assert(r.forall(x => x.isNullAt(0) && x.getLong(1) == 0L),
-        s"all-null semantics drift at maxBytes=$mb: ${r.mkString}")
-      graft.CacheScope.drain()
+        s"all-null semantics drift on the $name tier: ${r.mkString}")
     }
+    graft.CacheScope.drain()
   }
 
   test("runningSum outRank equals the plain window row_number") {
@@ -261,9 +265,9 @@ class DistributedRankSpec extends AnyFunSuite {
     val distMax = DistributedRank.runningMax(df, Seq("g"), Seq("v", "id"), "v", "m",
       numPartitions = 5)
     assert(plainMax.exceptAll(distMax).count() == 0 && distMax.exceptAll(plainMax).count() == 0)
-    // valuesAtRanks: the NULL group's median row must surface too
-    val gotMed = DistributedRank.valuesAtRanks(df, Seq("g"), Seq("v", "id"),
-      n => Seq((n + 1) / 2), "rn", numPartitions = 5)
+    // valuesAtRanksWindow: the NULL group's median row must surface too
+    val gotMed = DistributedRank.valuesAtRanksWindow(df, Seq("g"), Seq("v", "id"),
+      n => Seq((n + 1) / 2), "rn")
     // expected via window count, NOT an equi-join on g (which would
     // itself drop the NULL group — the very bug under test)
     val expMed = plainRn
@@ -272,27 +276,63 @@ class DistributedRankSpec extends AnyFunSuite {
       .drop("n")
     assert(gotMed.count() == 4) // 3 non-null groups + the NULL group
     assert(expMed.exceptAll(gotMed).count() == 0 && gotMed.exceptAll(expMed).count() == 0)
+    graft.CacheScope.drain()
   }
 
-  test("maxDriverRows guard fails fast on high-cardinality groups") {
-    import spark.implicits._
-    val df = (1L to 2000L).map(i => (i, i)).toDF("g", "v") // ~2000 groups
-    val e = intercept[IllegalArgumentException] {
-      DistributedRank.rowNumber(df, Seq("g"), Seq("v"), "rn",
-        numPartitions = 4, maxDriverRows = 64)
+  test("kept tiers match plain windows with AQE and codegen off") {
+    // a session clone carries AQE off and whole-stage codegen off, so
+    // every kernel plans and runs under them; the reference windows
+    // run there too
+    val s2 = SparkBridge.cloneSession(spark)
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2.conf.set("spark.sql.codegen.wholeStage", "false")
+    import s2.implicits._
+    val rng = new scala.util.Random(47)
+    // few groups (one hot, a NULL group, ties, null values) and 2,000
+    // groups of 1–7 rows each
+    val few = Seq.tabulate(600) { i =>
+      val g: java.lang.Long =
+        if (i % 13 == 0) null else if (rng.nextInt(4) > 0) 0L else rng.nextInt(3).toLong + 1
+      val v: java.lang.Long = if (rng.nextInt(10) == 0) null else rng.nextInt(25).toLong
+      (g, v, i.toLong)
+    }.toDF("g", "v", "id")
+    val many = Seq.tabulate(8000) { i =>
+      (java.lang.Long.valueOf(i % 2000L), java.lang.Long.valueOf(i % 7L), i.toLong)
+    }.toDF("g", "v", "id")
+    def same(what: String, got: DataFrame, want: DataFrame): Unit =
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, what)
+    for ((input, label) <- Seq(few -> "few groups", many -> "2,000 groups")) {
+      val w = Window.partitionBy(col("g")).orderBy(col("v"), col("id"))
+      val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val rn = input.withColumn("rn", row_number().over(w).cast("long"))
+      same(s"rowNumber, $label", DistributedRank.rowNumber(
+        input, Seq("g"), Seq("v", "id"), "rn", numPartitions = 5), rn)
+      same(s"rowNumberWindow, $label", DistributedRank.rowNumberWindow(
+        input, Seq("g"), Seq("v", "id"), "rn"), rn)
+      val cum = input
+        .withColumn("c", sum(col("v")).over(wRun))
+        .withColumn("t", coalesce(sum(col("v")).over(Window.partitionBy(col("g"))), lit(0L)))
+        .withColumn("k", row_number().over(w).cast("long"))
+      same(s"runningSum, $label", DistributedRank.runningSum(input, Seq("g"),
+        Seq("v", "id"), "v", "c", numPartitions = 5, outTotal = "t", outRank = "k"), cum)
+      same(s"runningSumWindow, $label", DistributedRank.runningSumWindow(input,
+        Seq("g"), Seq("v", "id"), "v", "c", outTotal = "t", outRank = "k"), cum)
+      same(s"runningMax, $label", DistributedRank.runningMax(input, Seq("g"),
+        Seq("v", "id"), "v", "m", numPartitions = 5),
+        input.withColumn("m", max(col("v")).over(wRun)))
+      // rank selection: the values at ranks 1, ⌊(n+1)/2⌋ and n
+      def ranks(n: Long): Seq[Long] = Seq(1L, (n + 1) / 2, n)
+      val want = rn.withColumn("n", count(lit(1)).over(Window.partitionBy(col("g"))))
+        .filter(col("rn") === 1 || col("rn") === col("n") ||
+          col("rn") === expr("(n + 1) div 2"))
+        .select(col("g"), col("v"), col("rn"), col("n"))
+      same(s"valuesAtRanksWindow, $label", DistributedRank.valuesAtRanksWindow(input,
+        Seq("g"), Seq("v", "id"), ranks, "rn", outTotal = "n")
+        .select(col("g"), col("v"), col("rn"), col("n")), want)
+      same(s"valuesAtRanksByValue, $label", DistributedRank.valuesAtRanksByValue(input,
+        Seq("g"), "v", ranks, "rn", outTotal = "n"), want)
+      graft.CacheScope.drain()
     }
-    assert(e.getMessage.contains("cardinality"))
-    val e2 = intercept[IllegalArgumentException] {
-      DistributedRank.runningSum(df, Seq("g"), Seq("v"), "v", "c",
-        numPartitions = 4, maxDriverRows = 64)
-    }
-    assert(e2.getMessage.contains("cardinality"))
-    val e3 = intercept[IllegalArgumentException] {
-      DistributedRank.valuesAtRanks(df, Seq("g"), Seq("v"), n => Seq(1L), "rn",
-        numPartitions = 4, maxDriverRows = 64)
-    }
-    assert(e3.getMessage.contains("cardinality"))
-    graft.CacheScope.drain() // release the scoped frames the aborted builds registered
   }
 
   test("window tier agrees with sort-selection and by-value on ties, nulls, and null groups") {
@@ -313,25 +353,18 @@ class DistributedRankSpec extends AnyFunSuite {
         val h = (n - 1) * 0.5
         Seq(1L, math.floor(h).toLong + 1, math.ceil(h).toLong + 1, n, n + 5)
       }
-      // totalRows known and under the window bound → window tier
+      // a test-sized frame is under the stats gate → window tier; the
+      // by-value tier is the one above it
       val byWindow = DistributedRank.valuesAtRanksAdaptive(df, Seq("g"), "v", Seq("id"),
-        ranks, "rn", outTotal = "n", totalRows = rows.size.toLong)
-      // claimed rows past the window bound, under the threshold → sort-selection
-      val bySort = DistributedRank.valuesAtRanksAdaptive(df, Seq("g"), "v", Seq("id"),
-        ranks, "rn", outTotal = "n",
-        totalRows = DistributedRank.WindowRankMaxRows + 1,
-        thresholdRows = Long.MaxValue)
-      // past the threshold → by-value
-      val byValue = DistributedRank.valuesAtRanksAdaptive(df, Seq("g"), "v", Seq("id"),
-        ranks, "rn", outTotal = "n", totalRows = rows.size.toLong, thresholdRows = 0L)
-      for ((other, name) <- Seq(bySort -> "sort-selection", byValue -> "by-value")) {
-        assert(byWindow.schema.map(f => (f.name, f.dataType)) ==
-          other.schema.map(f => (f.name, f.dataType)),
-          s"trial $trial schema drift window vs $name")
-        assert(byWindow.exceptAll(other).count() == 0 &&
-          other.exceptAll(byWindow).count() == 0,
-          s"trial $trial row drift window vs $name")
-      }
+        ranks, "rn", outTotal = "n")
+      val byValue = DistributedRank.valuesAtRanksByValue(df, Seq("g"), "v",
+        ranks, "rn", outTotal = "n")
+      assert(byWindow.schema.map(f => (f.name, f.dataType)) ==
+        byValue.schema.map(f => (f.name, f.dataType)),
+        s"trial $trial schema drift window vs by-value")
+      assert(byWindow.exceptAll(byValue).count() == 0 &&
+        byValue.exceptAll(byWindow).count() == 0,
+        s"trial $trial row drift window vs by-value")
       graft.CacheScope.drain()
     }
   }
@@ -353,23 +386,23 @@ class DistributedRankSpec extends AnyFunSuite {
         val h = (n - 1) * 0.5
         Seq(1L, math.floor(h).toLong + 1, math.ceil(h).toLong + 1, n, n + 5)
       }
-      val bySort = DistributedRank.valuesAtRanks(df, Seq("g"), Seq("v", "id"),
-          ranks, "rn", numPartitions = 3 + trial, outTotal = "n")
+      val byWindow = DistributedRank.valuesAtRanksWindow(df, Seq("g"), Seq("v", "id"),
+          ranks, "rn", outTotal = "n")
         .select(col("g"), col("v"), col("rn"), col("n"))
       val byValue = DistributedRank.valuesAtRanksByValue(df, Seq("g"), "v",
         ranks, "rn", outTotal = "n")
-      assert(bySort.exceptAll(byValue).count() == 0 &&
-        byValue.exceptAll(bySort).count() == 0, s"trial $trial grouped mismatch")
+      assert(byWindow.exceptAll(byValue).count() == 0 &&
+        byValue.exceptAll(byWindow).count() == 0, s"trial $trial grouped mismatch")
       // exactly one row per surviving (group, target)
-      assert(byValue.count() == bySort.count(), s"trial $trial cardinality")
+      assert(byValue.count() == byWindow.count(), s"trial $trial cardinality")
       // groupless
-      val bySortG = DistributedRank.valuesAtRanks(df, Nil, Seq("v", "id"),
-          ranks, "rn", numPartitions = 4, outTotal = "n")
+      val byWindowG = DistributedRank.valuesAtRanksWindow(df, Nil, Seq("v", "id"),
+          ranks, "rn", outTotal = "n")
         .select(col("v"), col("rn"), col("n"))
       val byValueG = DistributedRank.valuesAtRanksByValue(df, Nil, "v",
         ranks, "rn", outTotal = "n")
-      assert(bySortG.exceptAll(byValueG).count() == 0 &&
-        byValueG.exceptAll(bySortG).count() == 0, s"trial $trial groupless mismatch")
+      assert(byWindowG.exceptAll(byValueG).count() == 0 &&
+        byValueG.exceptAll(byWindowG).count() == 0, s"trial $trial groupless mismatch")
     }
     graft.CacheScope.drain()
   }
@@ -378,24 +411,16 @@ class DistributedRankSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (1L to 400L).map(i => (i % 5, i % 23, i)).toDF("g", "v", "id")
     def ranks(n: Long): Seq[Long] = Seq(1L, (n + 1) / 2, n)
-    // totalRows passed explicitly: auto mode's stats shortcut would
-    // (correctly) route any test-sized frame to the sort path
+    // the window tier (a test-sized frame is under the stats gate)
+    // and the by-value tier above it
     val small = DistributedRank.valuesAtRanksAdaptive(df, Seq("g"), "v", Seq("id"),
-      ranks, "rn", outTotal = "n", totalRows = 400L, thresholdRows = 1000000L)
-    val large = DistributedRank.valuesAtRanksAdaptive(df, Seq("g"), "v", Seq("id"),
-      ranks, "rn", outTotal = "n", totalRows = 400L, thresholdRows = 10L)
+      ranks, "rn", outTotal = "n")
+    val large = DistributedRank.valuesAtRanksByValue(df, Seq("g"), "v",
+      ranks, "rn", outTotal = "n")
     // both sides share the uniform (g, v, rn, n) schema and the rows agree
     assert(small.columns.toSeq == Seq("g", "v", "rn", "n"))
     assert(large.columns.toSeq == Seq("g", "v", "rn", "n"))
     assert(small.exceptAll(large).count() == 0 && large.exceptAll(small).count() == 0)
-    // the middle tier: a claimed row count past the window bound but
-    // under the threshold routes to sort-selection — pin it against
-    // the window tier (`small` above, 400 ≤ WindowRankMaxRows)
-    val sortSel = DistributedRank.valuesAtRanksAdaptive(df, Seq("g"), "v", Seq("id"),
-      ranks, "rn", outTotal = "n",
-      totalRows = DistributedRank.WindowRankMaxRows + 1, thresholdRows = 1000000000L)
-    assert(sortSel.columns.toSeq == Seq("g", "v", "rn", "n"))
-    assert(small.exceptAll(sortSel).count() == 0 && sortSel.exceptAll(small).count() == 0)
     graft.CacheScope.drain()
   }
 
@@ -423,11 +448,11 @@ class DistributedRankSpec extends AnyFunSuite {
       hits.groupBy(col("g")).agg((lo + (max(h) - floor(max(h))) * (hi - lo)).as(out))
     }
     // (a) row-level two-pass
-    val medsA = interp(DistributedRank.valuesAtRanks(df, Seq("g"), Seq("v", "id"),
+    val medsA = interp(DistributedRank.valuesAtRanksWindow(df, Seq("g"), Seq("v", "id"),
       medianRanks, "rn", outTotal = "n"), "v", "med")
     val devsA = df.join(broadcast(medsA), "g")
       .withColumn("dev", abs(col("v") - col("med")))
-    val madsA = interp(DistributedRank.valuesAtRanks(devsA, Seq("g"), Seq("dev", "id"),
+    val madsA = interp(DistributedRank.valuesAtRanksWindow(devsA, Seq("g"), Seq("dev", "id"),
       medianRanks, "rn", outTotal = "n"), "dev", "mad")
     val a = medsA.join(madsA, "g").as[(Int, Double, Double)].collect().toSet
     graft.CacheScope.drain()
@@ -543,9 +568,10 @@ class DistributedRankSpec extends AnyFunSuite {
   test("valuesAtRanks handles the groupless global-quantile shape") {
     import spark.implicits._
     val df = (1L to 101L).map(i => (i % 13, i)).toDF("v", "id")
-    val got = DistributedRank.valuesAtRanks(df, Seq.empty, Seq("v", "id"),
-      n => Seq(1L, (n + 1) / 2, n), "rn", numPartitions = 5, outTotal = "n")
+    val got = DistributedRank.valuesAtRanksWindow(df, Seq.empty, Seq("v", "id"),
+      n => Seq(1L, (n + 1) / 2, n), "rn", outTotal = "n")
       .as[(Long, Long, Long, Long)].collect().toSet
+    graft.CacheScope.drain()
     val sorted = (1L to 101L).map(i => (i % 13, i)).sortBy(identity)
     val expect = Set(1L, 51L, 101L).map { k =>
       (sorted(k.toInt - 1)._1, sorted(k.toInt - 1)._2, k, 101L)

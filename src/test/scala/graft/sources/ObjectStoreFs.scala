@@ -15,9 +15,9 @@ import java.net.URI
   * ([[graft.flight.FlightIo]] — timestamped snapshot writes, newest-
   * snapshot listing, `_SUCCESS` probes, bucket bootstrap) is written
   * against the Hadoop FileSystem API precisely so the same code serves
-  * `file://` locally and `s3a://` on a cluster. This sandbox carries
-  * no hadoop-aws/aws-sdk jars (and has no network egress to fetch
-  * them), so `S3AFileSystem` cannot even classload — instead this
+  * `file://` locally and `s3a://` on a cluster. The build carries
+  * no hadoop-aws/aws-sdk jars, so `S3AFileSystem` cannot even
+  * classload in tests — instead this
   * filesystem plugs into the SAME seam S3A does (`fs.<scheme>.impl` +
   * `FileSystem.get` caching per (scheme, authority) — one instance per
   * bucket, exactly how S3A binds buckets), which lets
