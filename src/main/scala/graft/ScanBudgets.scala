@@ -109,10 +109,6 @@ object ScanBudgets {
     // unigram LM: vocabulary count table (n_tok folds off it, r14)
     // + per-doc apply pass
     "q86_unigram_logprob" -> Map("documents" -> 2),
-    // count-table driver tier (r13): the returned frame is
-    // driver-assembled; the one fact scan is the count-table cache
-    // build under the probe/sketch actions (declared below)
-    "q89_percentile_sketch" -> Map("lineitem" -> 0),
     // bloom build over train split + probe pass + survivor projection
     "q99_bloom_decontam" -> Map("documents" -> 3),
     "q72_decontamination" -> Map("documents" -> 3),
@@ -159,14 +155,13 @@ object ScanBudgets {
     "q108_ref_integrity" -> Map(
       "lineitem" -> 1, "customer" -> 2, "orders" -> 2, "events" -> 1),
 
-    // RETURNED-PLAN-IS-DRIVER-LOCAL class: every file scan these
-    // queries run happens at BUILD time (declared below in
-    // [[buildActionScans]]); the returned frame reads checkpointed /
-    // driver-assembled rows only, so the plan census must find ZERO
-    // scans — an explicit 0 budget makes the census guard as tight as
-    // the dedicated plan specs (PlanQualitySpec's q116 rank-only test)
-    "q69_neardup_components" -> Map("documents" -> 0),
-    "q116_equidepth_hist" -> Map("lineitem" -> 0)
+    // RETURNED-PLAN-IS-DRIVER-LOCAL class: every file scan this
+    // query runs happens at BUILD time (declared below in
+    // [[buildActionScans]]); the returned frame reads checkpointed
+    // rows only, so the plan census must find ZERO scans — an explicit
+    // 0 budget makes the census guard as tight as ScanLedgerSpec's q69
+    // case
+    "q69_neardup_components" -> Map("documents" -> 0)
   )
 
   /** File scans run at BUILD time via a query's own driver actions —
@@ -182,11 +177,6 @@ object ScanBudgets {
     *    `count()` — its build plan is the SELF-JOIN pair derivation,
     *    so the one-time materialization charges both sides' scans.
     *    Rounds read the cache; the returned labels read checkpoints.
-    *  - RANK-PASS (q116): the scale-adaptive histogram runs its fact
-    *    scans as build actions — the row-count pre-pass that sizes
-    *    the buckets, then ONE data pass for the rank selection (the
-    *    window tier's group-count collect reads the persisted input
-    *    its window then re-reads) — and returns a driver-local table.
     *  - MODEL-ACTION (q99): `stat.bloomFilter` is a driver-side
     *    aggregate action — the bloom model's eval-gram scan runs at
     *    build, on top of the returned plan's three budgeted scans.
@@ -201,13 +191,7 @@ object ScanBudgets {
     // + both gram-profile verify sides (3) cached once at build
     "q103_retention_lsh" -> Map("documents" -> 3),
     // MODEL-ACTION: bloom build aggregate scans the eval split once
-    "q99_bloom_decontam" -> Map("documents" -> 1),
-    // COUNT-TABLE driver tier (r13): the (flag, price) count-table
-    // cache materializes once under the probe collect; the sketch
-    // action re-reads the cache (ledger dedups the build)
-    "q89_percentile_sketch" -> Map("lineitem" -> 1),
-    // RANK-PASS: count pre-pass + one data pass; returned plan scans 0
-    "q116_equidepth_hist" -> Map("lineitem" -> 2)
+    "q99_bloom_decontam" -> Map("documents" -> 1)
   )
 
   private def annotateOne(d: QueryDef): QueryDef = {

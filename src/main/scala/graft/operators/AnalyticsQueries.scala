@@ -465,34 +465,33 @@ object AnalyticsQueries {
       // rank-interpolation (the q41 median technique generalized to
       // any p): rank values per group, keep only the ≤2 rows each
       // percentile interpolates between, aggregate them back into
-      // lo + frac·(hi − lo). Ranking goes through [[DistributedRank]]
-      // — a plain `PARTITION BY l_returnflag` window sorts each of
-      // the 3 groups in ONE task (measured 5.5× time at 10× data);
-      // the distributed rank keeps tasks bounded (measured ~2× at
-      // 10×). The built-in exact `percentile` is worse still
+      // lo + frac·(hi − lo). The built-in exact `percentile` is worse
       // (ObjectHashAggregate buffering every value, 2.5× at sf0.1).
       val ps = Seq(0.25 -> "p25", 0.50 -> "p50", 0.75 -> "p75", 0.95 -> "p95")
       val li = Tables(s, dir).lineitem
         .select(col("l_returnflag"), col("l_extendedprice"),
           col("l_orderkey"), col("l_linenumber"))
+      // h = (n−1)·p in double; the target ranks ⌊h⌋+1 and ⌈h⌉+1 and
+      // the interpolation below evaluate the SAME expression, so the
+      // rows a percentile needs are exactly the rows the selection keeps
+      def h(n: org.apache.spark.sql.Column, p: Double) = (n - 1).cast(DoubleType) * lit(p)
       // the adaptive rank selection surfaces ONLY the ≤2 rows each
-      // percentile interpolates between (plus the group count as `n`):
-      // a plain window under the kernel's stats gate, the
-      // distinct-value-domain form (shuffle bounded by
+      // percentile interpolates between (plus the group count as `n`)
+      // in one lazy plan: a single window pass under the kernel's
+      // stats gate, the distinct-value-domain form (shuffle bounded by
       // distinct prices — ~flat under replica scaling, measured
       // 21.1 → ~7 s at 100×) above it; identical values either side.
       val hits = DistributedRank.valuesAtRanksAdaptive(li,
         Seq("l_returnflag"),
         "l_extendedprice", Seq("l_orderkey", "l_linenumber"),
-        n => ps.flatMap { case (p, _) =>
-          val hp = (n - 1) * p
-          Seq(math.floor(hp).toLong + 1, math.ceil(hp).toLong + 1)
-        }, "rn", outTotal = "n")
-      def h(p: Double) = (col("n") - 1).cast(DoubleType) * lit(p)
+        n => array(ps.flatMap { case (p, _) =>
+          Seq(floor(h(n, p)) + 1, ceil(h(n, p)) + 1)
+        }: _*), "rn", outTotal = "n")
       def interp(p: Double, name: String) = {
-        val lo = min(when(col("rn") === floor(h(p)).cast("long") + 1, col("l_extendedprice")))
-        val hi = min(when(col("rn") === ceil(h(p)).cast("long") + 1, col("l_extendedprice")))
-        (lo + (max(h(p)) - floor(max(h(p)))) * (hi - lo)).cast("float").as(name)
+        val hp = h(col("n"), p)
+        val lo = min(when(col("rn") === floor(hp) + 1, col("l_extendedprice")))
+        val hi = min(when(col("rn") === ceil(hp) + 1, col("l_extendedprice")))
+        (lo + (max(hp) - floor(max(hp))) * (hi - lo)).cast("float").as(name)
       }
       hits
         .groupBy(col("l_returnflag"))
@@ -597,22 +596,22 @@ object AnalyticsQueries {
     // different engine value-for-value, but its Greenwald–Khanna
     // contract is deterministic — every returned value must hold a
     // rank within n/accuracy of p·n. The sketch is exercised for real
-    // (percentile_approx ingests all n prices), and the bound checks
+    // (every one of the n prices is inserted), and the bound checks
     // come from the q84/q95 (flag, price) COUNT TABLE instead of a
     // second fact scan + broadcast join-back (r13, the r12 verdict's
     // named fix — the re-rank pass re-paid the whole scan for counts
-    // the count table already held): ONE map-side-combined fact scan
-    // builds the table; the sketch ([[graft.functions
+    // the count table already held). ONE map-side-combined fact scan
+    // builds the cached table; the sketch ([[graft.functions
     // .GkQuantileWeighted]] — the same QuantileSummaries machinery
     // percentile_approx runs, fed (value, multiplicity) rows; an
     // explode(sequence) re-expansion measured 4.2–9.0 s of generator
-    // and GC overhead for the identical inserts) consumes the cached
-    // table, and the rank intervals count(<v)/count(≤v) fold on the
-    // driver from the same collected table (replica-invariant, so the
-    // tier keeps firing at 100×). GK's bound holds for ANY insert
-    // order, so grouping equal values back-to-back cannot flip a
-    // boolean. Wider value domains (probe > 1M distinct) fall back to
-    // the two-scan join-back form.
+    // and GC overhead for the identical inserts) consumes it, and is
+    // joined back (broadcast, one row per flag) to the same table,
+    // whose count-weighted sums give each output's exact rank interval
+    // count(<v)/count(≤v). One lazy plan over one scan at every scale:
+    // the table is replica-invariant and bounded by distinct prices.
+    // GK's bound holds for ANY insert order, so grouping equal values
+    // back-to-back cannot flip a boolean.
     // A sketch regression (wrong merge, bad accuracy plumbing) flips
     // a boolean and breaks the hash. Exact companion: q84.
     // r15 gap probe (verdict item 5, PROBE_q89_r15.json,
@@ -634,94 +633,49 @@ object AnalyticsQueries {
       """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
         |  TRUE AS ok25, TRUE AS ok50, TRUE AS ok75, TRUE AS ok95
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
+      import s.implicits._
       val acc = 1000 // rank error ≤ n/1000 per the percentile_approx contract
       val ps = Seq(0.25 -> "25", 0.50 -> "50", 0.75 -> "75", 0.95 -> "95")
-      val li = Tables(s, dir).lineitem.select(col("l_returnflag"), col("l_extendedprice"))
-      def sketch(rows: org.apache.spark.sql.DataFrame) =
-        rows.groupBy(col("l_returnflag"))
-          .agg(percentile_approx(
-            col("l_extendedprice"),
-            array(ps.map(p => lit(p._1)): _*), lit(acc)).as("ap"))
+      val vc = CacheScope.scoped(
+        Tables(s, dir).lineitem
+          .groupBy(col("l_returnflag"), col("l_extendedprice"))
+          .agg(count(lit(1)).as("__cnt")))
+      // weighted sketch over the cached count table (no second parquet
+      // scan, no multiset re-expansion); NULL prices (absent here, but
+      // defensively) count toward n and never reach the sketch or the
+      // comparisons, and a flag whose prices are all NULL has no sketch
+      // row, so the left join leaves its lt/le at 0
+      val sketch = vc.filter(col("l_extendedprice").isNotNull)
+        .as[(String, Double, Long)]
+        .groupByKey(_._1).mapValues(r => (r._2, r._3))
+        .agg(new graft.functions.GkQuantileWeighted(ps.map(_._1), acc)
+          .toColumn.name("ap"))
+        .toDF("l_returnflag", "ap")
       // Exact rank interval of each sketch output: with ties the value v
       // occupies ranks [count(<v)+1, count(<=v)]; the guarantee holds iff
       // that interval overlaps [(p - 1/acc)·n - 1, (p + 1/acc)·n + 1].
       // The ±1 covers the sketch's integer rank targeting (observed:
       // rank error 2.0 vs ε·n = 1.962 at sf0.001 — truncation, not a
       // contract breach).
-      def okFlags(n: Long, lt: Array[Long], le: Array[Long]): Seq[Boolean] =
-        ps.zipWithIndex.map { case ((p, _), i) =>
-          val loBound = (p - 1.0 / acc) * n.toDouble - 1
-          val hiBound = (p + 1.0 / acc) * n.toDouble + 1
-          (lt(i) + 1).toDouble <= hiBound && le(i).toDouble >= loBound
-        }
-      val maxDriverRows = DistributedRank.DefaultMaxDriverRows
-      val vc = CacheScope.scoped(
-        li.groupBy(col("l_returnflag"), col("l_extendedprice"))
-          .agg(count(lit(1)).as("__cnt")))
-      val probe = vc.limit(maxDriverRows + 1).collect()
-      if (probe.length <= maxDriverRows) {
-        // weighted sketch over the cached count table (no second
-        // parquet scan, no multiset re-expansion); nulls (absent
-        // here, but defensively) contribute to n and never to the
-        // sketch or the comparisons — matching the join-back form
-        import s.implicits._
-        val skRows = vc.filter(col("l_extendedprice").isNotNull)
-          .as[(String, Double, Long)]
-          .groupByKey(_._1).mapValues(r => (r._2, r._3))
-          .agg(new graft.functions.GkQuantileWeighted(ps.map(_._1), acc)
-            .toColumn.name("ap"))
-          .collect()
-          .map { case (rf, ap) => rf -> ap }.toMap
-        val out = probe.groupBy(_.getString(0)).toSeq.map { case (rf, rows) =>
-          val n = rows.iterator.map(_.getLong(2)).sum
-          // a group whose prices are all NULL never reaches the sketch:
-          // lt/le stay 0, matching the join-back form's null-ap sums
-          val ap = skRows.get(rf).orNull
-          val lt = new Array[Long](ps.size)
-          val le = new Array[Long](ps.size)
-          if (ap != null) rows.foreach { r =>
-            if (!r.isNullAt(1)) {
-              val v = r.getDouble(1); val c = r.getLong(2)
-              var i = 0
-              while (i < ps.size) {
-                if (v < ap(i)) lt(i) += c
-                if (v <= ap(i)) le(i) += c
-                i += 1
-              }
-            }
-          }
-          val oks = okFlags(n, lt, le)
-          org.apache.spark.sql.Row.fromSeq(rf +: n +: oks)
-        }
-        val schema = org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.types.StructField("l_returnflag",
-            org.apache.spark.sql.types.StringType) +:
-          org.apache.spark.sql.types.StructField("n", LongType, nullable = false) +:
-          ps.map { case (_, nm) => org.apache.spark.sql.types.StructField(
-            s"ok$nm", org.apache.spark.sql.types.BooleanType, nullable = false) })
-        s.createDataFrame(java.util.Arrays.asList(out: _*), schema)
-          .orderBy(col("l_returnflag"))
-      } else {
-        // distributed fallback: sketch over the raw fact, exact
-        // re-rank via the broadcast join-back (the pre-r13 form)
-        val agg0 = li.join(broadcast(sketch(li)), "l_returnflag")
-          .groupBy(col("l_returnflag"))
-          .agg(
-            count(lit(1)).as("n"),
-            ps.zipWithIndex.flatMap { case ((_, nm), i) =>
-              Seq(
-                sum(when(col("l_extendedprice") < col("ap")(i), 1L).otherwise(0L)).as(s"lt$nm"),
-                sum(when(col("l_extendedprice") <= col("ap")(i), 1L).otherwise(0L)).as(s"le$nm"))
-            }: _*)
-        val checks = ps.map { case (p, nm) =>
-          val loBound = (lit(p) - lit(1.0) / acc) * col("n").cast(DoubleType) - 1
-          val hiBound = (lit(p) + lit(1.0) / acc) * col("n").cast(DoubleType) + 1
-          ((col(s"lt$nm") + 1).cast(DoubleType) <= hiBound &&
-            col(s"le$nm").cast(DoubleType) >= loBound).as(s"ok$nm")
-        }
-        agg0.select(col("l_returnflag") +: col("n") +: checks: _*)
-          .orderBy(col("l_returnflag"))
+      def rowsWhere(hit: org.apache.spark.sql.Column) =
+        sum(when(hit, col("__cnt")).otherwise(0L))
+      val agg0 = DistributedRank.joinNullSafe(vc, sketch, Seq("l_returnflag"), "left")
+        .groupBy(col("l_returnflag"))
+        .agg(
+          sum(col("__cnt")).as("n"),
+          ps.zipWithIndex.flatMap { case ((_, nm), i) =>
+            Seq(
+              rowsWhere(col("l_extendedprice") < col("ap")(i)).as(s"lt$nm"),
+              rowsWhere(col("l_extendedprice") <= col("ap")(i)).as(s"le$nm"))
+          }: _*)
+      val checks = ps.map { case (p, nm) =>
+        val loBound = (lit(p) - lit(1.0) / acc) * col("n").cast(DoubleType) - 1
+        val hiBound = (lit(p) + lit(1.0) / acc) * col("n").cast(DoubleType) + 1
+        ((col(s"lt$nm") + 1).cast(DoubleType) <= hiBound &&
+          col(s"le$nm").cast(DoubleType) >= loBound).as(s"ok$nm")
       }
+      agg0.select(col("l_returnflag") +: col("n") +: checks: _*)
+        .orderBy(col("l_returnflag"))
     },
 
     // ------------------------------------------------------------------
@@ -743,18 +697,12 @@ object AnalyticsQueries {
         |FROM lineitem l JOIN m ON l.l_returnflag = m.l_returnflag
         |GROUP BY l.l_returnflag, m.med ORDER BY l.l_returnflag""".stripMargin) { (s, dir) =>
       // the whole MAD cascade is ONE kernel over the distinct
-      // (flag, price) count table ([[DistributedRank.medianMad]],
-      // r12): the only fact scan and the only fact-sized exchange is
-      // the map-side-combined groupBy building that table; the
-      // cascade then runs on the driver when the table limit-collects
-      // under 1M rows (one Spark job for the whole query — the r11
-      // form paid 4 jobs of range-exchange + carrier machinery and
-      // read 4 columns for tiebreaks a value-domain selection never
-      // needs), and falls back to the distributed
-      // valuesAtRanksFromCounts cascade (both selections bounded by
-      // distinct values, never rows) on wider value domains. Under
-      // replica scaling the count table is invariant, so the driver
-      // tier keeps firing at 100×.
+      // (flag, price) count table ([[DistributedRank.medianMad]]):
+      // the only fact scan and the only fact-sized exchange is the
+      // map-side-combined groupBy building that table; both medians
+      // are valuesAtRanksFromCounts selections over it (bounded by
+      // distinct values, never rows, and read no tiebreak columns a
+      // value-domain selection never needs), all in one lazy plan.
       DistributedRank.medianMad(
         Tables(s, dir).lineitem
           .select(col("l_returnflag"), col("l_extendedprice")),
@@ -775,29 +723,29 @@ object AnalyticsQueries {
     // columns the rank order carries are irrelevant — the value at
     // rank t is the same whichever tied row ntile puts at the edge.
     // That licenses two single-scan plans, chosen by
-    // [[DistributedRank.valuesAtRanksAdaptive]]'s plan-stats gate; a
-    // metadata-cheap count(*) pre-pass (parquet answers it from
-    // row-group stats, no column pages read) sizes the buckets:
+    // [[DistributedRank.valuesAtRanksAdaptive]]'s plan-stats gate:
     //   - window (small): [[DistributedRank.valuesAtRanksWindow]]
-    //     over the single projected column — one group-count job and
-    //     one plain window. Measured 1.08–1.31 s at sf0.1.
+    //     over the single projected column — one groupless window
+    //     computes n and every rank in one sort.
     //   - value-domain (large): map-side-combined groupBy(v) (shuffle
     //     carries one row per distinct value per map partition, not
     //     one per row), exact prefix sum over the distinct-value table
-    //     ([[DistributedRank.runningSum]]), then the ≤2k−1 value-blocks
-    //     where bucket start/end ranks cross the cumulative count,
-    //     found by a broadcast range-join against the 31-row target
-    //     table (an OR-chain predicate of 31 branches measured 9×
-    //     slower than the join — it defeats codegen).
+    //     ([[DistributedRank.runningSumAdaptive]]), then the ≤2k−1
+    //     value-blocks where bucket start/end ranks cross the
+    //     cumulative count, found by a broadcast range-join against the
+    //     ≤2k-row target table (an OR-chain predicate of 31 branches
+    //     measured 9× slower than the join — it defeats codegen).
+    // Either way the ≤2k−1 hit rows carry n, and one conditional
+    // aggregate over them lays the k buckets out, so the histogram is
+    // one lazy plan over one fact scan.
     // r8 measured the row-level path against the value domain
     // (sort-selection 1.9 s→15.9 s from 0.6M→60M rows; value-domain
     // flat 6.5→8.4 s); the 32 MB gate (≈ 1.8M rows) keeps sf0.1 on
     // the window and 100× (60M rows) on the value domain. The r7
     // audit flagged the original two-scan form (boundary pass +
-    // bucket-assign pass, 14.6× at 100×); the hybrid runs 100× of
-    // sf0.1 at ~8.4 s vs sf0.1's 1.9 s — a ~4.4× factor, and at a
-    // true 100 TB the value-domain path's shuffle stays bounded by
-    // per-partition distinct values. Driver assembly is ≤k rows.
+    // bucket-assign pass, 14.6× at 100×); at a true 100 TB the
+    // value-domain path's shuffle stays bounded by per-partition
+    // distinct values.
     QueryDef.sql(
       "q116_equidepth_hist",
       """WITH r AS (
@@ -807,42 +755,42 @@ object AnalyticsQueries {
         |SELECT CAST(bucket AS INTEGER) AS bucket, CAST(COUNT(*) AS BIGINT) AS n,
         |  MIN(v) AS lo, MAX(v) AS hi
         |FROM r GROUP BY bucket ORDER BY bucket""".stripMargin) { (s, dir) =>
-      import s.implicits._
       val k = 16
-      // SQL ntile bucket ends: q = n/k, r = n%k; the first r buckets
-      // hold q+1 rows, the rest q (same arithmetic as q46). Bucket i
-      // spans ranks [end(i-1)+1, end(i)].
-      def bucketEnds(n: Long): IndexedSeq[Long] = {
-        val q = n / k; val r = n % k
-        (1L to k).map(i => if (i <= r) i * (q + 1) else r * (q + 1) + (i - r) * q)
+      type C = org.apache.spark.sql.Column
+      // SQL ntile bucket ends: q = n div k, r = n mod k; the first r
+      // buckets hold q+1 rows, the rest q (same arithmetic as q46), so
+      // bucket i ends at rank end(i) = i·q + min(i, r) and spans
+      // [end(i−1)+1, end(i)]
+      def div(n: C) = call_function("div", n, lit(k))
+      def end(n: C, i: Int) = div(n) * i + least(lit(i.toLong), n % k)
+      // the target ranks are every end(i) and end(i)+1. The ends form two
+      // arithmetic runs, 0..r(q+1) by q+1 and r(q+1)..n by q, so the
+      // targets are four `sequence`s: the window tier evaluates them per
+      // row, and the 2k ranks unrolled compile past HotSpot's 8,000-byte
+      // JIT limit, leaving that filter interpreted (a 4-core sf0.1
+      // probe: ~10 s unrolled vs ~1 s). Ranks 0 and n+1 select nothing.
+      def targets(n: C) = {
+        val q = div(n); val m = (n % k) * (q + 1)
+        concat(sequence(lit(0L), m, q + 1), sequence(m, n, q),
+          sequence(lit(1L), m + 1, q + 1), sequence(m + 1, n + 1, q))
       }
-      def ranksOf(n: Long): Seq[Long] = {
-        val ends = bucketEnds(n)
-        (ends ++ (1L +: ends.init.map(_ + 1))).filter(t => t >= 1 && t <= n).distinct
-      }
-      def histFrom(n: Long, valueAt: Long => Double) = {
-        val q = n / k; val r = n % k
-        val ends = bucketEnds(n); val starts = 1L +: ends.init.map(_ + 1)
-        (1 to k).flatMap { i =>
-          val cnt = if (i <= r) q + 1 else q
-          if (cnt == 0L) None // ntile leaves trailing buckets empty when n < k
-          else Some((i, cnt, valueAt(starts(i - 1)), valueAt(ends(i - 1))))
-        }.toDF("bucket", "n", "lo", "hi").orderBy(col("bucket"))
-      }
-      val fact = Tables(s, dir).lineitem.select(col("l_extendedprice").as("v"))
-      val n0 = fact.count() // row-group-stats count, no column pages
-      if (n0 == 0L) Seq.empty[(Int, Long, Double, Double)].toDF("bucket", "n", "lo", "hi")
-      else {
-        // both histogram paths (window small, value-domain large)
-        // route through the kernel's stats gate; ≤2k−1 rank-rows come
-        // back, bounded by k, not n
-        val hits = DistributedRank.valuesAtRanksAdaptive(
-            fact, Nil, "v", Nil, ranksOf, "rn")
-          .select(col("rn"), col("v"))
-          .collect()
-        val byRank = hits.map(h => h.getAs[Long]("rn") -> h.getAs[Double]("v")).toMap
-        histFrom(n0, byRank)
-      }
+      val hits = DistributedRank.valuesAtRanksAdaptive(
+        Tables(s, dir).lineitem.select(col("l_extendedprice").as("v")),
+        Nil, "v", Nil, targets, "rn", outTotal = "n")
+      // each bucket's lo/hi is the value at its start/end rank; an
+      // empty input leaves n NULL and ntile leaves trailing buckets
+      // empty when n < k, so both drop at the count filter
+      val n = col("n")
+      def at(rank: C) = min(when(col("rn") === rank, col("v")))
+      hits
+        .agg(max(n).as("n"), (1 to k).flatMap(i => Seq(
+          at(end(n, i - 1) + 1).as(s"lo$i"), at(end(n, i)).as(s"hi$i"))): _*)
+        .select(explode(array((1 to k).map(i => struct(
+          lit(i).as("bucket"), (end(n, i) - end(n, i - 1)).as("n"),
+          col(s"lo$i").as("lo"), col(s"hi$i").as("hi"))): _*)).as("b"))
+        .select(col("b.bucket"), col("b.n"), col("b.lo"), col("b.hi"))
+        .filter(col("n") > 0)
+        .orderBy(col("bucket"))
     },
 
     // ------------------------------------------------------------------

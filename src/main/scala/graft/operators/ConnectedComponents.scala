@@ -43,7 +43,7 @@ object ConnectedComponents {
     * co-partitioned tie errs toward the tier whose cost cannot
     * degrade. Memory at the bound is a non-issue: two long edge
     * arrays + sorted id array + int parents ≈ 25 MB, the same order
-    * as a [[DistributedRank.DefaultMaxDriverRows]] driver probe.
+    * as DistributedRank's 1M-row driver probe in `ntileByCuts`.
     */
   val MaxDriverEdges: Long = 500000L
 

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, LongType}
 
 /** Distributed exact ranking for LOW-CARDINALITY groups.
   *
@@ -44,17 +44,20 @@ import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructField,
   * [[WindowMaxBytes]]: the plain window form below it, the distributed
   * form above it. Both emit identical bytes; DistributedRankSpec calls
   * each tier directly and pins them equal.
+  *
+  * Rank selections take their targets as a COLUMN function: `ranksOf`
+  * maps the group-total column n to an array column of 1-based target
+  * ranks, plain arithmetic on n, so every selection is one lazy plan
+  * and building it runs no job. Only [[ntileByCuts]] walks a collected
+  * table on the driver.
   */
 object DistributedRank {
 
-  /** Hard bound on rows a kernel pulls to the driver: the probe that
-    * decides [[valuesAtRanksFromCounts]]' and [[medianMad]]'s driver
-    * tiers, and the per-group totals that driver-side `ranksOf`
-    * closures need. The limit(+1) keeps the driver safe even on the
-    * failing path: at most `maxDriverRows + 1` small rows ever
-    * materialize.
+  /** Hard bound on the distinct values [[ntileByCuts]] collects. The
+    * limit(+1) keeps the driver safe even on the failing path: at most
+    * `DefaultMaxDriverRows + 1` small rows ever materialize.
     */
-  val DefaultMaxDriverRows: Int = 1 << 20
+  private val DefaultMaxDriverRows: Int = 1 << 20
 
   /** The one size gate: inputs whose optimized-plan `sizeInBytes` is
     * at most this take each adaptive kernel's plain window tier, larger
@@ -89,15 +92,14 @@ object DistributedRank {
     * usingColumns join this replaces. Right key columns are renamed
     * away and dropped so the output keeps the left side's columns.
     */
-  private def joinNullSafe(
+  private[graft] def joinNullSafe(
       left: DataFrame,
       right: DataFrame,
       keys: Seq[String],
       joinType: String = "inner"): DataFrame = {
     val renamed = keys.foldLeft(right)((d, k) => d.withColumnRenamed(k, "__r_" + k))
     val cond = keys.map(k => left(k) <=> renamed("__r_" + k)).reduce(_ && _)
-    val j = left.join(broadcast(renamed), cond, joinType)
-    if (joinType == "left_semi") j else j.drop(keys.map("__r_" + _): _*)
+    left.join(broadcast(renamed), cond, joinType).drop(keys.map("__r_" + _): _*)
   }
 
   /** The offset construction every distributed kernel shares (steps
@@ -183,64 +185,38 @@ object DistributedRank {
     if (windowSized(df)) rowNumberWindow(df, groupCols, orderCols, out)
     else rowNumber(df, groupCols, orderCols, out)
 
-  /** The (groupCols…, `__t`, `__tt`) target table: each group's
-    * in-range target ranks `ranksOf(total)`, with the total, from
-    * `totals` = (groupCols…, total: long). `ranksOf` is driver code, so
-    * the totals are collected — bounded by `maxDriverRows`, which
-    * fails fast on a high-cardinality grouping.
-    */
-  private def targetTable(
-      totals: DataFrame,
-      ranksOf: Long => Seq[Long],
-      maxDriverRows: Int): DataFrame = {
-    val tots = totals.limit(maxDriverRows + 1).collect()
-    require(tots.length <= maxDriverRows,
-      s"DistributedRank: more than $maxDriverRows groups — group cardinality " +
-        "too high for driver-side target ranks; use a plain window over " +
-        "partitionBy instead")
-    val rows = tots.toSeq.flatMap { r =>
-      val total = r.getLong(r.length - 1)
-      ranksOf(total).filter(k => k >= 1 && k <= total).distinct.sorted
-        .map(k => Row.fromSeq(r.toSeq.dropRight(1) ++ Seq(k, total)))
-    }
-    val schema = StructType(
-      totals.schema.fields.dropRight(1) ++ Seq(
-        StructField("__t", LongType, nullable = false),
-        StructField("__tt", LongType, nullable = false)))
-    totals.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
-
-  /** The window tier of [[valuesAtRanksAdaptive]]: rank everything in
-    * a plain window (degenerate tasks are fine under the gate) and keep
-    * the rows at the driver-built target ranks — one group-count job
-    * plus one window job. `ranksOf` maps a group's row count n to its
-    * 1-based target ranks (out-of-range targets are dropped). Output =
-    * the input columns plus `out` = the row's rank within its group —
-    * plus, when `outTotal` is non-empty, the group's row count under
-    * that name; exactly one row per surviving (group, target). NULL
-    * group keys form a group of their own; same total-order contract
-    * on `orderCols` as [[rowNumber]].
+  /** The window tier of [[valuesAtRanksAdaptive]]: one window pass
+    * ranks every row and counts its group over the same (group, order)
+    * window — one sort, so degenerate tasks are fine under the gate —
+    * and keeps the rows whose rank is in `ranksOf(n)`. `ranksOf` maps
+    * the group's row-count column n to an array column of 1-based
+    * target ranks; targets outside 1..n and duplicates select nothing
+    * extra. Output = the input columns plus `out` = the row's rank
+    * within its group — plus, when `outTotal` is non-empty, the
+    * group's row count under that name; exactly one row per surviving
+    * (group, target). NULL group keys form a group of their own; same
+    * total-order contract on `orderCols` as [[rowNumber]]. `ranksOf` is
+    * evaluated on every row here, so keep its code compact: a stage
+    * whose generated method passes HotSpot's 8,000-byte limit is never
+    * JIT-compiled (q116's targets are four `sequence`s for that reason).
     */
   private[graft] def valuesAtRanksWindow(
       df: DataFrame,
       groupCols: Seq[String],
       orderCols: Seq[String],
-      ranksOf: Long => Seq[Long],
+      ranksOf: Column => Column,
       out: String = "rn",
       outTotal: String = ""): DataFrame = {
-    // persisted so the count job and the window job do not each
-    // re-scan the source (the ledger budgets assume one scan per
-    // pass); the gate bounds the cached frame
-    val src = graft.CacheScope.scoped(df)
-    val targets = targetTable(
-      src.groupBy(groupCols.map(col): _*).agg(count(lit(1)).as("__n")),
-      ranksOf, DefaultMaxDriverRows)
-    val ranked = src.withColumn(out, row_number().over(over(groupCols, orderCols)).cast(LongType))
-    val joined = joinNullSafe(ranked, targets.withColumnRenamed("__t", out), groupCols :+ out)
-    val withTotal =
-      if (outTotal.nonEmpty) joined.withColumn(outTotal, col("__tt"))
-      else joined
-    withTotal.drop("__tt")
+    // count(*) over the whole group frame shares the row_number's
+    // (partition, order) spec, so both evaluate in ONE WindowExec
+    val w = over(groupCols, orderCols)
+    val n = if (outTotal.nonEmpty) outTotal else "__n"
+    val hits = df
+      .withColumn(out, row_number().over(w).cast(LongType))
+      .withColumn(n, count(lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .filter(array_contains(ranksOf(col(n)), col(out)))
+    if (outTotal.nonEmpty) hits else hits.drop(n)
   }
 
   /** Size-adaptive rank selection: [[valuesAtRanksWindow]] under
@@ -249,14 +225,8 @@ object DistributedRank {
     * generalized to every quantile/median consumer. Both tiers select
     * the SAME values (rank→value is tiebreak-invariant), so the
     * output is byte-identical either side of the gate; `tieCols` only
-    * make the window tier's internal rank deterministic.
-    *
-    * The window tier replaced a row-level sort-selection tier that
-    * q41 and q84 took under the old 64 MB stats ceiling. Alternating
-    * ABA at sf0.1 measured that switch a wash (window mins 1.45/1.54 s
-    * vs sort-selection 1.60/1.53 s, overlapping distributions in two
-    * weather regimes); q116 won every sample on the window tier
-    * (1.08–1.31 s vs 1.41–1.69 s).
+    * make the window tier's internal rank deterministic. Either tier
+    * is one lazy plan: building it runs no job.
     *
     * Output schema is the uniform (groupCols…, valueCol, out
     * [, outTotal]) of the by-value tier on BOTH sides.
@@ -266,7 +236,7 @@ object DistributedRank {
       groupCols: Seq[String],
       valueCol: String,
       tieCols: Seq[String],
-      ranksOf: Long => Seq[Long],
+      ranksOf: Column => Column,
       out: String = "rn",
       outTotal: String = ""): DataFrame =
     if (windowSized(df)) {
@@ -286,15 +256,11 @@ object DistributedRank {
     * columns are irrelevant to the result, and the selection can run
     * in the value domain: one map-side-combined groupBy(group, v)
     * (shuffle volume = distinct values per map partition, NOT rows),
-    * the distributed prefix sum over the distinct-value table
-    * ([[runningSum]]), and the value at rank t = the value whose
-    * cumulative-count window (cume−cnt, cume] contains t — a
-    * broadcast range-join against the tiny target list. Under replica
-    * scaling the distinct-value table is INVARIANT while the row
-    * count grows 100×, so this path's cost is ~flat where a
-    * row-level range sort grows linearly (q116's measurement:
-    * sort-selection 1.9 s → 15.9 s from 0.6M → 60M rows, value-domain
-    * flat 6.5 → 8.4 s).
+    * then [[valuesAtRanksFromCounts]]. Under replica scaling the
+    * distinct-value table is INVARIANT while the row count grows
+    * 100×, so this path's cost is ~flat where a row-level range sort
+    * grows linearly (q116's measurement: sort-selection 1.9 s →
+    * 15.9 s from 0.6M → 60M rows, value-domain flat 6.5 → 8.4 s).
     *
     * Output: one row per surviving (group, target) with ONLY
     * (groupCols…, valueCol, `out` = rank[, `outTotal` = group row
@@ -306,7 +272,7 @@ object DistributedRank {
       df: DataFrame,
       groupCols: Seq[String],
       valueCol: String,
-      ranksOf: Long => Seq[Long],
+      ranksOf: Column => Column,
       out: String = "rn",
       outTotal: String = ""): DataFrame = {
     val vc = graft.CacheScope.scoped(
@@ -315,153 +281,42 @@ object DistributedRank {
     valuesAtRanksFromCounts(vc, groupCols, valueCol, "__cnt", ranksOf, out, outTotal)
   }
 
-  /** Driver-side total ordering for a value column type, matching the
-    * distributed path's sort semantics exactly (doubles: NaN greatest,
-    * −0.0 < 0.0 — scala's TotalOrdering == Spark's nan-safe compare;
-    * Comparable types by compareTo). Types without a pinned match
-    * (strings under collation, intervals, …) return None and stay on
-    * the distributed path.
-    */
-  private def driverValueOrdering(
-      dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case DoubleType =>
-        Some(Ordering.Double.TotalOrdering.on((x: Any) => x.asInstanceOf[Double]))
-      case FloatType =>
-        Some(Ordering.Float.TotalOrdering.on((x: Any) => x.asInstanceOf[Float]))
-      case LongType | IntegerType | ShortType | ByteType =>
-        Some(Ordering.by((x: Any) => x.asInstanceOf[Number].longValue()))
-      case _: DecimalType =>
-        Some(Ordering.by((x: Any) => x.asInstanceOf[java.math.BigDecimal]))
-      case DateType =>
-        Some(Ordering.by((x: Any) => x.asInstanceOf[java.sql.Date]))
-      case TimestampType | TimestampNTZType =>
-        Some(Ordering.fromLessThan((a: Any, b: Any) =>
-          a.asInstanceOf[Comparable[Any]].compareTo(b) < 0))
-      case _ => None
-    }
-  }
-
-  /** [[valuesAtRanksByValue]] over a CALLER-SUPPLIED per-(group,
-    * value) count table — the cascade-fusion entry point. `vc` holds
-    * one row per (groupCols…, valueCol) with `cntCol` = that value's
-    * row count; the caller owns its persistence (it is consumed twice
-    * here: group totals + the prefix sum). Cascaded quantiles (q95's
-    * median-of-deviations) derive the SECOND stage's count table from
-    * the first's by pure arithmetic on the value column — counts
-    * merging where two values map to the same derived value — so the
-    * fact is scanned and shuffled exactly once for the whole cascade,
-    * and the second selection's exchange is bounded by DISTINCT
-    * DERIVED VALUES, not rows.
+  /** The rank selection over a CALLER-SUPPLIED per-(group, value)
+    * count table — the cascade-fusion entry point. `vc` holds one row
+    * per (groupCols…, valueCol) with `cntCol` = that value's row
+    * count; the caller owns its persistence (it is consumed twice
+    * here). Everything is in the plan: the group totals, their target
+    * ranks `explode(array_distinct(ranksOf(total)))` kept to
+    * 1 ≤ t ≤ total, the cumulative count walk over the value order
+    * ([[runningSumAdaptive]], behind the one [[WindowMaxBytes]] gate),
+    * and a broadcast range-join picking the value whose window
+    * (cume − cnt, cume] contains each target. Cascaded quantiles
+    * (q95's median-of-deviations) derive the SECOND stage's count
+    * table from the first's by pure arithmetic on the value column —
+    * counts merging where two values map to the same derived value —
+    * so the fact is scanned and shuffled exactly once for the whole
+    * cascade, and the second selection's exchange is bounded by
+    * DISTINCT DERIVED VALUES, not rows.
     */
   def valuesAtRanksFromCounts(
       vc: DataFrame,
       groupCols: Seq[String],
       valueCol: String,
       cntCol: String,
-      ranksOf: Long => Seq[Long],
+      ranksOf: Column => Column,
       out: String = "rn",
-      outTotal: String = "",
-      maxDriverRows: Int = DefaultMaxDriverRows): DataFrame = {
-    val spark = vc.sparkSession
+      outTotal: String = ""): DataFrame = {
     require(cntCol == "__cnt" || !vc.columns.contains("__cnt"),
       s"valuesAtRanksFromCounts: renaming $cntCol would collide with an " +
         "existing __cnt column — drop or rename it first")
     val vcc = if (cntCol == "__cnt") vc else vc.withColumnRenamed(cntCol, "__cnt")
-    // ---- DRIVER tier (r12, the q95 medianMad generalization): when
-    // the count table itself limit-collects under the driver bound,
-    // the whole selection — group totals, target placement, the
-    // cumulative walk — is a scan over ≤1M collected triples, ONE
-    // Spark job where the distributed form pays the totals collect,
-    // runningSum's range exchange + offsets, and the
-    // broadcast range-join. Under replica scaling the count table is
-    // invariant, so this tier keeps firing at 100×; true-scale value
-    // domains overflow the probe once (≤1M small rows shipped) and
-    // take the distributed path below. Values are SELECTED, never
-    // computed, so tier choice cannot change a single bit
-    // (DistributedRankSpec pins equality both sides).
-    val ordOpt = driverValueOrdering(vcc.schema(valueCol).dataType)
-    val probed =
-      if (ordOpt.isEmpty) None
-      else {
-        val rows = vcc.limit(maxDriverRows + 1).collect()
-        if (rows.length > maxDriverRows) None
-        else {
-          val ord = ordOpt.get
-          val schema = vcc.schema
-          val gIdx = groupCols.map(schema.fieldIndex)
-          val vI = schema.fieldIndex(valueCol)
-          val cI = schema.fieldIndex("__cnt")
-          val rowOrd = new Ordering[Row] {
-            def compare(a: Row, b: Row): Int = {
-              val an = a.isNullAt(vI); val bn = b.isNullAt(vI)
-              if (an && bn) 0 else if (an) -1 else if (bn) 1
-              else ord.compare(a.get(vI), b.get(vI))
-            }
-          }
-          val outRows = rows
-            .groupBy(r => gIdx.map(i => r.get(i)))
-            .valuesIterator
-            .flatMap { rs =>
-              val sorted = rs.sorted(rowOrd)
-              val total = sorted.iterator.map(_.getLong(cI)).sum
-              val targets =
-                ranksOf(total).filter(k => k >= 1 && k <= total).distinct.sorted
-              val hits = Seq.newBuilder[Row]
-              var acc = 0L
-              var i = 0
-              var remaining = targets
-              while (remaining.nonEmpty && i < sorted.length) {
-                val r = sorted(i)
-                acc += r.getLong(cI)
-                val (here, later) = remaining.span(_ <= acc)
-                here.foreach { k =>
-                  hits += Row.fromSeq(gIdx.map(r.get) ++
-                    Seq(r.get(vI), k) ++
-                    (if (outTotal.nonEmpty) Seq(total) else Nil))
-                }
-                remaining = later
-                i += 1
-              }
-              hits.result()
-            }
-            .toSeq
-          val outSchema = StructType(
-            gIdx.map(schema.fields) ++ Seq(
-              schema.fields(vI),
-              StructField(out, LongType, nullable = false)) ++
-              (if (outTotal.nonEmpty)
-                Seq(StructField(outTotal, LongType, nullable = false))
-              else Nil))
-          Some(spark.createDataFrame(
-            java.util.Arrays.asList(outRows: _*), outSchema)
-            .toDF((groupCols :+ valueCol :+ out) ++
-              (if (outTotal.nonEmpty) Seq(outTotal) else Nil): _*))
-        }
-      }
-    probed.getOrElse(valuesAtRanksFromCountsDistributed(
-      vcc, groupCols, valueCol, ranksOf, out, outTotal, maxDriverRows))
-  }
-
-  /** The distributed tier of [[valuesAtRanksFromCounts]]: totals
-    * collect → target table → [[runningSum]] prefix → broadcast
-    * range-join against the target list.
-    */
-  private def valuesAtRanksFromCountsDistributed(
-      vcc: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      ranksOf: Long => Seq[Long],
-      out: String,
-      outTotal: String,
-      maxDriverRows: Int): DataFrame = {
-    val targets = targetTable(
-      vcc.groupBy(groupCols.map(col): _*).agg(sum(col("__cnt")).as("__tot")),
-      ranksOf, maxDriverRows)
-    val cum = runningSum(vcc, groupCols, Seq(valueCol), "__cnt", "__cume")
-    // null-safe group keys + the rank-window range condition; the
-    // target list is groups × ranks — always broadcast-sized
+    // the target list is groups × ranks — always broadcast-sized
+    val targets = vcc.groupBy(groupCols.map(col): _*).agg(sum(col("__cnt")).as("__tt"))
+      .select(groupCols.map(col) ++ Seq(
+        explode(array_distinct(ranksOf(col("__tt")))).as("__t"), col("__tt")): _*)
+      .filter(col("__t") >= 1 && col("__t") <= col("__tt"))
+    val cum = runningSumAdaptive(vcc, groupCols, Seq(valueCol), "__cnt", "__cume")
+    // null-safe group keys + the rank-window range condition
     val renamed = groupCols.foldLeft(targets)((d, k) => d.withColumnRenamed(k, "__r_" + k))
     val rangeCond = col("__t") > col("__cume") - col("__cnt") &&
       col("__t") <= col("__cume")
@@ -476,35 +331,19 @@ object DistributedRank {
   }
 
   /** Cascaded exact median + median-absolute-deviation per group — the
-    * q95 shape as ONE kernel over the per-(group, value) count table.
+    * q95 shape as ONE kernel over the per-(group, value) count table:
+    * the fact is aggregated to its distinct (group, value) count table
+    * (ONE map-side-combined exchange — the only fact-sized shuffle and
+    * the only fact scan), the median is a [[valuesAtRanksFromCounts]]
+    * selection over it, and the deviations' count table derives from
+    * it by arithmetic (two values folding onto one deviation merge
+    * counts) for the second selection — both bounded by distinct
+    * values, never rows, and both in the plan.
     *
-    * Both tiers aggregate the fact to its distinct (group, value)
-    * count table first (ONE map-side-combined exchange — the only
-    * fact-sized shuffle either way, and the only fact scan: the probe
-    * materializes the persisted table, the fallback reuses it), then
-    * select by rank in the value domain, where the result is
-    * tiebreak-invariant and the cascade's second stage derives by
-    * arithmetic (two values folding onto one deviation merge counts):
-    *
-    *   - DRIVER tier (count table limit-collects under
-    *     `maxDriverRows`): the whole cascade — cumulative-count walk
-    *     to the interpolated median, deviation fold, second walk —
-    *     runs on the collected table. One Spark job for the whole
-    *     query; the selection arithmetic on ≤1M (group, value, cnt)
-    *     triples is microseconds against any cluster job's constants.
-    *     Under replica scaling the count table is INVARIANT, so this
-    *     tier keeps firing as rows grow 100× (measured: the 100×
-    *     corpus collects the same ~sf0.1-sized table).
-    *   - DISTRIBUTED tier (wider value domains — true-scale facts
-    *     where distinct values grow with data): the
-    *     [[valuesAtRanksFromCounts]] cascade, both selections bounded
-    *     by distinct values, never rows.
-    *
-    * Interpolation is the linear `quantile_cont` form at p=0.5, both
-    * tiers evaluating the IDENTICAL double expression
-    * `lo + (h − ⌊h⌋)·(hi − lo)`, h = (n−1)/2 — results are
-    * bit-identical across tiers (pinned three ways in
-    * DistributedRankSpec). NULL group keys form a group of their own;
+    * Interpolation is the linear `quantile_cont` form at p=0.5, the
+    * double expression `lo + (h − ⌊h⌋)·(hi − lo)`, h = (n−1)/2 —
+    * DistributedRankSpec pins it bit-identical to the row-level
+    * two-pass cascade. NULL group keys form a group of their own;
     * NULL values rank first (both mirroring the row-level window
     * form) and a median landing on a NULL value yields NULL med/mad.
     * Output: one row per group — (groupCol, outMed, outMad), doubles.
@@ -514,99 +353,28 @@ object DistributedRank {
       groupCol: String,
       valueCol: String,
       outMed: String = "med",
-      outMad: String = "mad",
-      maxDriverRows: Int = DefaultMaxDriverRows): DataFrame = {
-    val spark = df.sparkSession
-    require(df.schema(valueCol).dataType == org.apache.spark.sql.types.DoubleType,
+      outMad: String = "mad"): DataFrame = {
+    require(df.schema(valueCol).dataType == DoubleType,
       s"medianMad interpolates in double; cast $valueCol to double first")
+    val g = Seq(groupCol)
+    def h(n: Column): Column = (n - 1).cast(DoubleType) * lit(0.5)
+    def median(counts: DataFrame, v: String, out: String): DataFrame = {
+      val hits = valuesAtRanksFromCounts(counts, g, v, "__cnt",
+        n => array(floor(h(n)) + 1, ceil(h(n)) + 1), "rn", outTotal = "n")
+      val hn = h(col("n"))
+      val lo = min(when(col("rn") === floor(hn) + 1, col(v)))
+      val hi = min(when(col("rn") === ceil(hn) + 1, col(v)))
+      hits.groupBy(col(groupCol))
+        .agg((lo + (max(hn) - floor(max(hn))) * (hi - lo)).as(out))
+    }
     val vc = graft.CacheScope.scoped(
       df.groupBy(col(groupCol), col(valueCol)).agg(count(lit(1)).as("__cnt")))
-    val probe = vc.limit(maxDriverRows + 1).collect()
-    if (probe.length <= maxDriverRows) {
-      // ---- driver tier: the cascade over the collected count table
-      def interpolate(sorted: Array[(java.lang.Double, Long)], n: Long): java.lang.Double = {
-        def valueAt(target: Long): java.lang.Double = {
-          var acc = 0L; var i = 0
-          while (i < sorted.length) {
-            acc += sorted(i)._2
-            if (target <= acc) return sorted(i)._1
-            i += 1
-          }
-          null
-        }
-        if (n <= 0L) return null
-        val h = (n - 1).toDouble * 0.5
-        val lo = valueAt(math.floor(h).toLong + 1)
-        val hi = valueAt(math.ceil(h).toLong + 1)
-        if (lo == null || hi == null) null
-        // the distributed interp's exact expression order — bit parity
-        else Double.box(lo + (h - math.floor(h)) * (hi - lo))
-      }
-      val nullsFirst = Ordering.by[(java.lang.Double, Long), (Int, Double)] {
-        case (v, _) => if (v == null) (0, 0.0) else (1, v.doubleValue())
-      }
-      val outRows = probe
-        .groupBy(r => r.get(0))
-        .valuesIterator
-        .map { rs =>
-          val vals = rs.map { r =>
-            val v: java.lang.Double =
-              if (r.isNullAt(1)) null else Double.box(r.getDouble(1))
-            (v, r.getLong(2))
-          }.sorted(nullsFirst)
-          val n = vals.iterator.map(_._2).sum
-          val med = interpolate(vals, n)
-          val mad =
-            if (med == null) null
-            else {
-              val fold = new java.util.HashMap[java.lang.Double, Long]
-              vals.foreach { case (v, c) =>
-                val d: java.lang.Double =
-                  if (v == null) null
-                  else Double.box(math.abs(v.doubleValue() - med.doubleValue()))
-                fold.merge(d, c, (a: Long, b: Long) => a + b)
-              }
-              val devs = fold.entrySet().iterator()
-              val buf = Array.newBuilder[(java.lang.Double, Long)]
-              while (devs.hasNext) { val e = devs.next(); buf += ((e.getKey, e.getValue)) }
-              interpolate(buf.result().sorted(nullsFirst), n)
-            }
-          Row(rs.head.get(0), med, mad)
-        }
-        .toSeq
-      val schema = StructType(Seq(
-        vc.schema.head,
-        StructField(outMed, org.apache.spark.sql.types.DoubleType, nullable = true),
-        StructField(outMad, org.apache.spark.sql.types.DoubleType, nullable = true)))
-      spark.createDataFrame(java.util.Arrays.asList(outRows: _*), schema)
-    } else {
-      // ---- distributed tier: the fused valuesAtRanksFromCounts cascade
-      def medianRanks(n: Long): Seq[Long] = {
-        val h = (n - 1) * 0.5
-        Seq(math.floor(h).toLong + 1, math.ceil(h).toLong + 1)
-      }
-      def interp(hits: DataFrame, v: String, out: String) = {
-        val h = (col("n") - 1).cast(org.apache.spark.sql.types.DoubleType) * lit(0.5)
-        val lo = min(when(col("rn") === floor(h).cast("long") + 1, col(v)))
-        val hi = min(when(col("rn") === ceil(h).cast("long") + 1, col(v)))
-        hits.groupBy(col(groupCol))
-          .agg((lo + (max(h) - floor(max(h))) * (hi - lo)).as(out))
-      }
-      val m = interp(valuesAtRanksFromCounts(vc, Seq(groupCol), valueCol,
-        "__cnt", medianRanks, "rn", outTotal = "n",
-        maxDriverRows = maxDriverRows), valueCol, outMed)
-      val vcDev = graft.CacheScope.scoped(
-        vc.join(broadcast(m), Seq(groupCol))
-          .select(col(groupCol),
-            abs(col(valueCol) - col(outMed)).as("__dev"), col("__cnt"))
-          .groupBy(col(groupCol), col("__dev"))
-          .agg(sum(col("__cnt")).as("__cnt")))
-      val d = interp(valuesAtRanksFromCounts(vcDev, Seq(groupCol), "__dev",
-        "__cnt", medianRanks, "rn", outTotal = "n",
-        maxDriverRows = maxDriverRows), "__dev", outMad)
-      m.join(d, Seq(groupCol))
-        .select(col(groupCol), col(outMed), col(outMad))
-    }
+    val med = median(vc, valueCol, outMed)
+    val devs = graft.CacheScope.scoped(
+      joinNullSafe(vc, med, g)
+        .groupBy(col(groupCol), abs(col(valueCol) - col(outMed)).as("__dev"))
+        .agg(sum(col("__cnt")).as("__cnt")))
+    joinNullSafe(med, median(devs, "__dev", outMad), g)
   }
 
   /** Weighted median over a per-(group, value) WEIGHT table: the
@@ -659,7 +427,7 @@ object DistributedRank {
     * `ORDER BY keyCol` with no post-assignment exchange.
     *
     * Returns None — caller falls back to the exact rank form — when:
-    *   - the value domain overflows `maxDriverRows` distinct values,
+    *   - the value domain overflows `DefaultMaxDriverRows` distinct values,
     *     or contains NULLs (rank semantics for NULL ordering stay with
     *     the window form);
     *   - the input is tiny (n < 4k: duplicate cut ranks possible);
@@ -680,12 +448,11 @@ object DistributedRank {
       valueCol: String,
       keyCol: String,
       k: Int,
-      outCol: String,
-      maxDriverRows: Int = DefaultMaxDriverRows): Option[DataFrame] = {
+      outCol: String): Option[DataFrame] = {
     val vc = graft.CacheScope.scoped(
       df.groupBy(col(valueCol)).agg(count(lit(1)).as("__cnt")))
-    val probe = vc.limit(maxDriverRows + 1).collect()
-    if (probe.length > maxDriverRows || probe.exists(_.isNullAt(0))) None
+    val probe = vc.limit(DefaultMaxDriverRows + 1).collect()
+    if (probe.length > DefaultMaxDriverRows || probe.exists(_.isNullAt(0))) None
     else {
       val sorted = probe.sortBy(_.getDouble(0))
       val n = sorted.iterator.map(_.getLong(1)).sum

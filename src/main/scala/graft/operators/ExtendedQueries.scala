@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -186,18 +187,20 @@ object ExtendedQueries {
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       // the oracle's rn-filter solves to: even n → ranks {n/2, n/2+1},
-      // odd n → {(n+1)/2}; the adaptive rank selection surfaces
-      // exactly those values — a plain window under the kernel's
-      // stats gate, the distinct-value-domain form (shuffle bounded by
-      // distinct prices, ~flat under replica scaling) above it;
-      // identical values either side (see
+      // odd n → {(n+1)/2}, i.e. {(n+1) div 2, n div 2 + 1} (one rank
+      // twice when n is odd). The adaptive rank selection surfaces
+      // exactly those values in one lazy plan — a single window pass
+      // under the kernel's stats gate, the distinct-value-domain form
+      // (shuffle bounded by distinct prices, ~flat under replica
+      // scaling) above it; identical values either side (see
       // DistributedRank.valuesAtRanksAdaptive).
       val li = Tables(s, dir).lineitem
         .select(col("l_returnflag"), col("l_extendedprice"),
           col("l_orderkey"), col("l_linenumber"))
+      def div2(n: Column) = call_function("div", n, lit(2))
       DistributedRank.valuesAtRanksAdaptive(li, Seq("l_returnflag"),
         "l_extendedprice", Seq("l_orderkey", "l_linenumber"),
-        n => if (n % 2 == 0) Seq(n / 2, n / 2 + 1) else Seq((n + 1) / 2), "rn")
+        n => array(div2(n + 1), div2(n) + 1), "rn")
         .groupBy(col("l_returnflag"))
         .agg((dbl(sum(dec2(col("l_extendedprice")))) / count(lit(1))).as("median_price"))
         .orderBy(col("l_returnflag"))

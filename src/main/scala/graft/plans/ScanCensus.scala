@@ -22,8 +22,8 @@ import scala.collection.mutable
   * plan's FileScan too, double-counting every shared subtree).
   *
   * Blind spot, by design: scans a query runs at BUILD time via its own
-  * driver actions (e.g. q116's rank-selection pass, DistributedRank's
-  * group-totals collects) finish before the returned plan exists — those are
+  * driver actions (e.g. q69's adjacency materialization, q99's bloom
+  * model) finish before the returned plan exists — those are
   * counted by the job-level [[ScanLedger]] (r9), which accumulates
   * this census over EVERY action a query runs, not just the returned
   * plan's.

@@ -12,13 +12,12 @@ import scala.collection.mutable
   * that accumulates the structural census over EVERY driver action a
   * query runs while the ledger is open, not just the one execution of
   * the returned frame. Actions a query fires while BUILDING its result
-  * — q116's `count()` pre-pass and window-tier rank job,
-  * `DistributedRank`'s group-totals collects, the iterative loops' per-round
-  * `localCheckpoint` materializations — finish before the returned
-  * plan exists, so the plan census alone proves nothing about them
-  * (q116's plan budget passes trivially: the returned frame is a
-  * driver-local table). The ledger sees each of those actions as its
-  * own `QueryExecution` and sums their scans.
+  * — q99's bloom-model aggregate, `ntileByCuts`' count-table probe,
+  * the iterative loops' per-round `localCheckpoint` materializations —
+  * finish before the returned plan exists, so the plan census alone
+  * proves nothing about them (q69's plan budget passes trivially: the
+  * returned frame reads checkpoints). The ledger sees each of those
+  * actions as its own `QueryExecution` and sums their scans.
   *
   * Cached relations are deduplicated ACROSS actions with one shared
   * identity set: a persisted subtree's file scan runs once, at first

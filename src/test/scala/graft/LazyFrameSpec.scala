@@ -4,13 +4,14 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.operators.DistributedRank
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{array, col, lit}
 import org.apache.spark.sql.graftbridge.SparkBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Building a frame runs no Spark job: the rank kernels compute their
-  * offsets in the plan and q55 rolls its grouping sets up in the plan,
-  * so the caller's one action is the only one.
+  * offsets and rank targets in the plan, and q55 rolls its grouping
+  * sets up in the plan, so the caller's one action is the only one.
   */
 class LazyFrameSpec extends AnyFunSuite {
 
@@ -40,6 +41,7 @@ class LazyFrameSpec extends AnyFunSuite {
       (s"g${rng.nextInt(3)}", rng.nextInt(40).toLong, i.toLong, rng.nextInt(9).toLong)
     }.toDF("g", "ord", "id", "v")
     val order = Seq("ord", "id")
+    def ranks(n: Column): Column = array(lit(1L), n)
     val builds = Seq[(String, () => DataFrame)](
       "rowNumberAdaptive" -> (() => DistributedRank.rowNumberAdaptive(df, Seq("g"), order)),
       "rowNumberWindow" -> (() => DistributedRank.rowNumberWindow(df, Seq("g"), order)),
@@ -50,20 +52,37 @@ class LazyFrameSpec extends AnyFunSuite {
         df, Seq("g"), order, "v", outTotal = "t", outRank = "k")),
       "runningSum" -> (() => DistributedRank.runningSum(
         df, Seq("g"), order, "v", outTotal = "t", outRank = "k")),
-      "runningMax" -> (() => DistributedRank.runningMax(df, Nil, order, "v")))
+      "runningMax" -> (() => DistributedRank.runningMax(df, Nil, order, "v")),
+      "valuesAtRanksWindow" -> (() => DistributedRank.valuesAtRanksWindow(
+        df, Seq("g"), order, ranks, outTotal = "n")),
+      "valuesAtRanksByValue" -> (() => DistributedRank.valuesAtRanksByValue(
+        df, Seq("g"), "v", ranks, outTotal = "n")),
+      "valuesAtRanksAdaptive" -> (() => DistributedRank.valuesAtRanksAdaptive(
+        df, Seq("g"), "v", order, ranks, outTotal = "n")),
+      "valuesAtRanksFromCounts" -> (() => DistributedRank.valuesAtRanksFromCounts(
+        df.groupBy(col("g"), col("v")).count(), Seq("g"), "v", "count", ranks,
+        outTotal = "n")),
+      "medianMad" -> (() => DistributedRank.medianMad(
+        df.withColumn("v", col("v").cast("double")), "g", "v")))
     val started =
       try builds.map { case (name, build) => name -> jobsWhile(build()) }
       finally CacheScope.drain()
     assert(started.forall(_._2 == 0), s"jobs started while building: $started")
   }
 
-  test("q55 builds without a job beyond reading its table") {
-    // Tables reads parquet without a declared schema, so opening
-    // lineitem runs Spark's schema job; q55 itself must add none
-    val read = jobsWhile(Tables(spark, dir).lineitem)
-    val q55 =
-      try jobsWhile(SparkEntry.queries("q55_grouping_sets")(spark, dir))
-      finally CacheScope.drain()
-    assert(q55 == read, s"q55 started $q55 jobs while building; reading lineitem starts $read")
+  // Tables reads parquet without a declared schema, so opening
+  // lineitem runs Spark's schema job; each query, which reads only
+  // lineitem, must add none
+  for (name <- Seq("q41_exact_median", "q55_grouping_sets", "q84_percentiles",
+      "q89_percentile_sketch", "q95_mad_robust", "q116_equidepth_hist")) {
+    val q = name.takeWhile(_ != '_')
+    test(s"$q builds without a job beyond reading its table") {
+      val read = jobsWhile(Tables(spark, dir).lineitem)
+      val built =
+        try jobsWhile(SparkEntry.queries(name)(spark, dir))
+        finally CacheScope.drain()
+      assert(built == read,
+        s"$q started $built jobs while building; reading lineitem starts $read")
+    }
   }
 }

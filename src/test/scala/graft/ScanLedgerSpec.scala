@@ -12,7 +12,7 @@ import graft.plans.ScanLedger
   * — against the declared plan budget plus the per-query
   * build-action allowances in [[ScanBudgets.buildActionScans]]. The
   * plan census alone passes trivially for queries whose returned
-  * frame is driver-local (q116) or checkpoint-fed (q69); this guard
+  * frame is checkpoint-fed (q69); this guard
   * counts what those queries actually read.
   */
 class ScanLedgerSpec extends AnyFunSuite {
@@ -46,10 +46,10 @@ class ScanLedgerSpec extends AnyFunSuite {
       s"over-budget job-level scans (fix the plan or justify in ScanBudgets.buildActionScans):\n${failures.mkString("\n")}")
   }
 
-  test("q116: the real scan count is pre-count + ONE data pass — not the trivially-zero plan census") {
+  test("q116: ONE lineitem scan across all jobs — no pre-count, no build-time rank pass") {
     val counts = ledgerCounts("q116_equidepth_hist")
-    assert(counts.getOrElse("lineitem", 0) == 2,
-      s"q116 should run exactly 2 lineitem scans (count pre-pass + rank pass), saw $counts")
+    assert(counts.getOrElse("lineitem", 0) == 1,
+      s"q116 should run exactly 1 lineitem scan (the rank pass), saw $counts")
   }
 
   test("q69: both scans happen at adjacency materialization; the returned plan reads checkpoints only") {

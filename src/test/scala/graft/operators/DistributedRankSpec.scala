@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.functions._
@@ -10,6 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class DistributedRankSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
+
+  /** Integer division, SQL's `div`. */
+  private def div(n: Column, d: Long): Column = call_function("div", n, lit(d))
+
+  /** The median-straddling ranks ⌊h⌋+1 and ⌈h⌉+1, h = (n−1)/2. */
+  private def medianRanks(n: Column): Seq[Column] = {
+    val h = (n - 1).cast("double") * lit(0.5)
+    Seq(floor(h) + 1, ceil(h) + 1)
+  }
 
   test("rowNumber equals the plain window rank exactly (total order)") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
@@ -91,7 +100,7 @@ class DistributedRankSpec extends AnyFunSuite {
         Seq(math.floor(h).toLong + 1, math.ceil(h).toLong + 1, 1L, n, n + 7)
       }
       val got = DistributedRank.valuesAtRanksWindow(df, Seq("g"), Seq("v", "id"),
-        ranks, "rn", outTotal = "n")
+        n => array(medianRanks(n) ++ Seq(lit(1L), n, n + 7): _*), "rn", outTotal = "n")
       val w = Window.partitionBy(col("g")).orderBy(col("v"), col("id"))
       val nPer = df.groupBy(col("g")).agg(count(lit(1)).as("n"))
       val expect = df
@@ -267,7 +276,7 @@ class DistributedRankSpec extends AnyFunSuite {
     assert(plainMax.exceptAll(distMax).count() == 0 && distMax.exceptAll(plainMax).count() == 0)
     // valuesAtRanksWindow: the NULL group's median row must surface too
     val gotMed = DistributedRank.valuesAtRanksWindow(df, Seq("g"), Seq("v", "id"),
-      n => Seq((n + 1) / 2), "rn")
+      n => array(div(n + 1, 2)), "rn")
     // expected via window count, NOT an equi-join on g (which would
     // itself drop the NULL group — the very bug under test)
     val expMed = plainRn
@@ -321,7 +330,7 @@ class DistributedRankSpec extends AnyFunSuite {
         Seq("v", "id"), "v", "m", numPartitions = 5),
         input.withColumn("m", max(col("v")).over(wRun)))
       // rank selection: the values at ranks 1, ⌊(n+1)/2⌋ and n
-      def ranks(n: Long): Seq[Long] = Seq(1L, (n + 1) / 2, n)
+      def ranks(n: Column): Column = array(lit(1L), div(n + 1, 2), n)
       val want = rn.withColumn("n", count(lit(1)).over(Window.partitionBy(col("g"))))
         .filter(col("rn") === 1 || col("rn") === col("n") ||
           col("rn") === expr("(n + 1) div 2"))
@@ -331,6 +340,31 @@ class DistributedRankSpec extends AnyFunSuite {
         .select(col("g"), col("v"), col("rn"), col("n")), want)
       same(s"valuesAtRanksByValue, $label", DistributedRank.valuesAtRanksByValue(input,
         Seq("g"), "v", ranks, "rn", outTotal = "n"), want)
+      val counts = graft.CacheScope.scoped(
+        input.groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
+      same(s"valuesAtRanksFromCounts, $label", DistributedRank.valuesAtRanksFromCounts(
+        counts, Seq("g"), "v", "c", ranks, "rn", outTotal = "n"), want)
+      // medianMad: the row-level two-pass cascade over plain windows
+      val dbl = input.withColumn("v", col("v").cast("double"))
+      def medianOf(rows: DataFrame, v: String, out: String): DataFrame = {
+        val h = (col("n") - 1).cast("double") * lit(0.5)
+        val lo = min(when(col("rn") === floor(h) + 1, col(v)))
+        val hi = min(when(col("rn") === ceil(h) + 1, col(v)))
+        rows
+          .withColumn("rn", row_number().over(
+            Window.partitionBy(col("g")).orderBy(col(v), col("id"))))
+          .withColumn("n", count(lit(1)).over(Window.partitionBy(col("g"))))
+          .groupBy(col("g")).agg((lo + (max(h) - floor(max(h))) * (hi - lo)).as(out))
+      }
+      def onGroup(left: DataFrame, right: DataFrame): DataFrame = {
+        val r = right.withColumnRenamed("g", "rg")
+        left.join(broadcast(r), col("g") <=> col("rg")).drop("rg")
+      }
+      val med = medianOf(dbl, "v", "med")
+      val devs = onGroup(dbl, med).withColumn("dev", abs(col("v") - col("med")))
+      same(s"medianMad, $label",
+        DistributedRank.medianMad(dbl.select(col("g"), col("v")), "g", "v"),
+        onGroup(med, medianOf(devs, "dev", "mad")))
       graft.CacheScope.drain()
     }
   }
@@ -349,10 +383,7 @@ class DistributedRankSpec extends AnyFunSuite {
         (g, v, i.toLong)
       }
       val df = rows.toDF("g", "v", "id")
-      def ranks(n: Long): Seq[Long] = {
-        val h = (n - 1) * 0.5
-        Seq(1L, math.floor(h).toLong + 1, math.ceil(h).toLong + 1, n, n + 5)
-      }
+      def ranks(n: Column): Column = array(lit(1L) +: medianRanks(n) :+ n :+ (n + 5): _*)
       // a test-sized frame is under the stats gate → window tier; the
       // by-value tier is the one above it
       val byWindow = DistributedRank.valuesAtRanksAdaptive(df, Seq("g"), "v", Seq("id"),
@@ -382,10 +413,7 @@ class DistributedRankSpec extends AnyFunSuite {
         (g, v, i.toLong)
       }
       val df = rows.toDF("g", "v", "id")
-      def ranks(n: Long): Seq[Long] = {
-        val h = (n - 1) * 0.5
-        Seq(1L, math.floor(h).toLong + 1, math.ceil(h).toLong + 1, n, n + 5)
-      }
+      def ranks(n: Column): Column = array(lit(1L) +: medianRanks(n) :+ n :+ (n + 5): _*)
       val byWindow = DistributedRank.valuesAtRanksWindow(df, Seq("g"), Seq("v", "id"),
           ranks, "rn", outTotal = "n")
         .select(col("g"), col("v"), col("rn"), col("n"))
@@ -410,7 +438,7 @@ class DistributedRankSpec extends AnyFunSuite {
   test("valuesAtRanksAdaptive picks identical values either side of the threshold") {
     import spark.implicits._
     val df = (1L to 400L).map(i => (i % 5, i % 23, i)).toDF("g", "v", "id")
-    def ranks(n: Long): Seq[Long] = Seq(1L, (n + 1) / 2, n)
+    def ranks(n: Column): Column = array(lit(1L), div(n + 1, 2), n)
     // the window tier (a test-sized frame is under the stats gate)
     // and the by-value tier above it
     val small = DistributedRank.valuesAtRanksAdaptive(df, Seq("g"), "v", Seq("id"),
@@ -437,10 +465,7 @@ class DistributedRankSpec extends AnyFunSuite {
       (i % 3, rng.nextInt(40).toDouble * 1.25, i.toLong)
     }
     val df = rows.toDF("g", "v", "id")
-    def medianRanks(n: Long): Seq[Long] = {
-      val h = (n - 1) * 0.5
-      Seq(math.floor(h).toLong + 1, math.ceil(h).toLong + 1)
-    }
+    def ranks(n: Column): Column = array(medianRanks(n): _*)
     def interp(hits: org.apache.spark.sql.DataFrame, v: String, out: String) = {
       val h = (col("n") - 1).cast("double") * lit(0.5)
       val lo = min(when(col("rn") === floor(h).cast("long") + 1, col(v)))
@@ -449,52 +474,43 @@ class DistributedRankSpec extends AnyFunSuite {
     }
     // (a) row-level two-pass
     val medsA = interp(DistributedRank.valuesAtRanksWindow(df, Seq("g"), Seq("v", "id"),
-      medianRanks, "rn", outTotal = "n"), "v", "med")
+      ranks, "rn", outTotal = "n"), "v", "med")
     val devsA = df.join(broadcast(medsA), "g")
       .withColumn("dev", abs(col("v") - col("med")))
     val madsA = interp(DistributedRank.valuesAtRanksWindow(devsA, Seq("g"), Seq("dev", "id"),
-      medianRanks, "rn", outTotal = "n"), "dev", "mad")
+      ranks, "rn", outTotal = "n"), "dev", "mad")
     val a = medsA.join(madsA, "g").as[(Int, Double, Double)].collect().toSet
     graft.CacheScope.drain()
     // (b) fused value-domain cascade
     val vc = graft.CacheScope.scoped(
       df.groupBy(col("g"), col("v")).agg(count(lit(1)).as("__cnt")))
     val medsB = interp(DistributedRank.valuesAtRanksFromCounts(vc, Seq("g"), "v",
-      "__cnt", medianRanks, "rn", outTotal = "n"), "v", "med")
+      "__cnt", ranks, "rn", outTotal = "n"), "v", "med")
     val vcDev = graft.CacheScope.scoped(
       vc.join(broadcast(medsB), "g")
         .select(col("g"), abs(col("v") - col("med")).as("dev"), col("__cnt"))
         .groupBy(col("g"), col("dev")).agg(sum(col("__cnt")).as("__cnt")))
     val madsB = interp(DistributedRank.valuesAtRanksFromCounts(vcDev, Seq("g"), "dev",
-      "__cnt", medianRanks, "rn", outTotal = "n"), "dev", "mad")
+      "__cnt", ranks, "rn", outTotal = "n"), "dev", "mad")
     val b = medsB.join(madsB, "g").as[(Int, Double, Double)].collect().toSet
     graft.CacheScope.drain()
     assert(a == b)
     assert(a.size == 3)
 
-    // (c) the medianMad kernel, BOTH tiers, pinned against (a): the
-    // driver tier (count table collects under the bound) and the
-    // distributed tier (bound forced below the ~120-row count table
-    // but above every internal offset/total collect) must emit the
+    // (c) the medianMad kernel, pinned against (a): it must emit the
     // exact same interpolated doubles as the row-level cascade.
-    val src = df.select(col("g"), col("v"))
-    val cDriver = DistributedRank.medianMad(src, "g", "v")
+    val c = DistributedRank.medianMad(df.select(col("g"), col("v")), "g", "v")
       .as[(Int, Double, Double)].collect().toSet
     graft.CacheScope.drain()
-    val cDist = DistributedRank.medianMad(src, "g", "v", maxDriverRows = 100)
-      .as[(Int, Double, Double)].collect().toSet
-    graft.CacheScope.drain()
-    assert(cDriver == a)
-    assert(cDist == a)
+    assert(c == a)
   }
 
-  test("valuesAtRanksFromCounts: driver tier == distributed tier (nulls, long values)") {
+  test("valuesAtRanksFromCounts == the row-level window tier (nulls, long values, a NULL group)") {
     import spark.implicits._
     // long values + null values + a null group key; ranks at the
-    // edges and middle. maxDriverRows=500 forces the distributed tier
-    // (the ~2000-distinct-value probe overflows it) while every
-    // internal collect of that tier — group totals, per-partition
-    // offsets, targets — stays comfortably under it.
+    // edges and middle. The count-table kernel must select the same
+    // (group, value, rank, total) rows as the window over the rows
+    // the table counts.
     val rng = new scala.util.Random(11)
     val df = Seq.tabulate(3000) { i =>
       (if (i % 7 == 0) None else Some(i % 3),
@@ -502,16 +518,16 @@ class DistributedRankSpec extends AnyFunSuite {
     }.toDF("g", "v")
     val vc = graft.CacheScope.scoped(
       df.groupBy(col("g"), col("v")).agg(count(lit(1)).as("__cnt")))
-    def ranks(n: Long): Seq[Long] = Seq(1L, (n + 1) / 2, n)
-    val viaDriver = DistributedRank.valuesAtRanksFromCounts(vc, Seq("g"), "v",
+    def ranks(n: Column): Column = array(lit(1L), div(n + 1, 2), n)
+    val viaCounts = DistributedRank.valuesAtRanksFromCounts(vc, Seq("g"), "v",
       "__cnt", ranks, "rn", outTotal = "n")
       .collect().map(_.toSeq).toSet
-    val viaDist = DistributedRank.valuesAtRanksFromCounts(vc, Seq("g"), "v",
-      "__cnt", ranks, "rn", outTotal = "n", maxDriverRows = 500)
+    val viaWindow = DistributedRank.valuesAtRanksWindow(df, Seq("g"), Seq("v"),
+      ranks, "rn", outTotal = "n")
       .collect().map(_.toSeq).toSet
     graft.CacheScope.drain()
-    assert(viaDriver.nonEmpty)
-    assert(viaDriver == viaDist)
+    assert(viaCounts.size == 12) // 3 groups + the NULL group, 3 ranks each
+    assert(viaCounts == viaWindow)
   }
 
   test("weightedMedian: distributed tier == window form (decimal weights, ties, all-NULL group)") {
@@ -546,7 +562,7 @@ class DistributedRankSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("medianMad driver tier: null values rank first, null group is its own group") {
+  test("medianMad: null values rank first, null group is its own group") {
     import spark.implicits._
     // null-heavy group x: median lands on nulls -> null med/mad; group
     // y: clean odd count; the null GROUP gets its own row
@@ -569,7 +585,7 @@ class DistributedRankSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (1L to 101L).map(i => (i % 13, i)).toDF("v", "id")
     val got = DistributedRank.valuesAtRanksWindow(df, Seq.empty, Seq("v", "id"),
-      n => Seq(1L, (n + 1) / 2, n), "rn", outTotal = "n")
+      n => array(lit(1L), div(n + 1, 2), n), "rn", outTotal = "n")
       .as[(Long, Long, Long, Long)].collect().toSet
     graft.CacheScope.drain()
     val sorted = (1L to 101L).map(i => (i % 13, i)).sortBy(identity)
