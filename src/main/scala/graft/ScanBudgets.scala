@@ -1,10 +1,11 @@
 package graft
 
 /** Per-query file-scan budgets above the suite default of ONE scan per
-  * table per execution — the annotated-exception list behind
+  * table per execution — the one budget, checked against the plan by
   * PlanQualitySpec's suite-wide [[graft.plans.ScanCensus]] guard (r8,
   * promoting the r7 ScanAudit sweep, a dev main last present at
-  * commit fba91a5, to CI). Every entry
+  * commit fba91a5, to CI) and against every job a query runs by
+  * ScanLedgerSpec and Verify's [[graft.plans.ScanLedger]]. Every entry
   * says WHY the extra scan is the designed plan and not the q128
   * defect class (a shared shuffle subtree whose persist was dropped).
   *
@@ -109,8 +110,9 @@ object ScanBudgets {
     // unigram LM: vocabulary count table (n_tok folds off it, r14)
     // + per-doc apply pass
     "q86_unigram_logprob" -> Map("documents" -> 2),
-    // bloom build over train split + probe pass + survivor projection
-    "q99_bloom_decontam" -> Map("documents" -> 3),
+    // bloom model (a scalar subquery over the eval split) + probe
+    // pass + exact-verify eval grams + survivor projection
+    "q99_bloom_decontam" -> Map("documents" -> 4),
     "q72_decontamination" -> Map("documents" -> 3),
     // PQ codebook training sliver + encode pass
     "q105_pq_encode" -> Map("embeddings" -> 2),
@@ -155,53 +157,15 @@ object ScanBudgets {
     "q108_ref_integrity" -> Map(
       "lineitem" -> 1, "customer" -> 2, "orders" -> 2, "events" -> 1),
 
-    // RETURNED-PLAN-IS-DRIVER-LOCAL class: every file scan this
-    // query runs happens at BUILD time (declared below in
-    // [[buildActionScans]]); the returned frame reads checkpointed
-    // rows only, so the plan census must find ZERO scans — an explicit
-    // 0 budget makes the census guard as tight as ScanLedgerSpec's q69
-    // case
-    "q69_neardup_components" -> Map("documents" -> 0)
-  )
-
-  /** File scans run at BUILD time via a query's own driver actions —
-    * the [[graft.plans.ScanLedger]] counts the plan census cannot see
-    * (the actions finish before the returned plan exists). Sized by
-    * a LedgerAudit sweep at sf0.001 (r9; a dev main last present at
-    * commit fba91a5 — Verify's `scan_ledger.json` now carries the
-    * same counts); ScanLedgerSpec
-    * enforces ledger ≤ plan budget + these, suite-wide. Justifications:
-    *
-    *  - ADJACENCY-MATERIALIZE (components queries): the persisted
-    *    symmetric edge cache materializes under the loop-sizing
-    *    `count()` — its build plan is the SELF-JOIN pair derivation,
-    *    so the one-time materialization charges both sides' scans.
-    *    Rounds read the cache; the returned labels read checkpoints.
-    *  - MODEL-ACTION (q99): `stat.bloomFilter` is a driver-side
-    *    aggregate action — the bloom model's eval-gram scan runs at
-    *    build, on top of the returned plan's three budgeted scans.
-    */
-  val buildActionScans: Map[String, Map[String, Int]] = Map(
-    // ADJACENCY-MATERIALIZE: pair self-join (2 doc scans) cached once
+    // Components queries (SELF-JOIN class): the edge plan is the input
+    // of the deferred closure ([[graft.plans.Deferred]]), which runs
+    // over the executed edge rows and scans nothing itself.
+    // q69: both gram-profile sides of the pair self-join
     "q69_neardup_components" -> Map("documents" -> 2),
-    // ADJACENCY-MATERIALIZE: same 2; the quality-scored retention leg
-    // is the returned plan's one budgeted scan
-    "q77_cluster_retention" -> Map("documents" -> 2),
-    // ADJACENCY-MATERIALIZE over LSH candidates: banded-candidate scan
-    // + both gram-profile verify sides (3) cached once at build
-    "q103_retention_lsh" -> Map("documents" -> 3),
-    // MODEL-ACTION: bloom build aggregate scans the eval split once
-    "q99_bloom_decontam" -> Map("documents" -> 1)
+    // q77: the same 2 + the quality-scored retention leg
+    "q77_cluster_retention" -> Map("documents" -> 3),
+    // q103: banded-candidate scan + both gram-profile verify sides +
+    // the quality-scored retention leg
+    "q103_retention_lsh" -> Map("documents" -> 4)
   )
-
-  private def annotateOne(d: QueryDef): QueryDef = {
-    val withPlan = budgets.get(d.name).fold(d)(b => d.withScanBudget(b.toSeq: _*))
-    buildActionScans.get(withPlan.name)
-      .fold(withPlan)(b => withPlan.withBuildActionScans(b.toSeq: _*))
-  }
-
-  /** Apply to a registry: queries not listed keep the default of 1
-    * plan scan per table and 0 build-action scans.
-    */
-  def annotate(defs: Seq[QueryDef]): Seq[QueryDef] = defs.map(annotateOne)
 }

@@ -11,9 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** Full registry incl. scan budgets — PlanQualitySpec's suite-wide
-    * ScanCensus guard iterates this, not just the name->run map. */
-  lazy val defs: Seq[QueryDef] = ScanBudgets.annotate(
+  /** Full registry — PlanQualitySpec's suite-wide ScanCensus guard
+    * iterates this, not just the name->run map. */
+  lazy val defs: Seq[QueryDef] = (
     operators.RelationalQueries.all ++
       operators.EventQueries.all ++
       operators.TextQueries.all ++

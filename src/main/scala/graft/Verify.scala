@@ -12,16 +12,12 @@ object Verify {
     // as Bench); the driver never sets it, so its runs stay complete
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // Job-level scan ledger per query (r9): every action a query runs
-    // — dump write, rank/offset pre-passes, adjacency
-    // materializations — has its file scans counted and checked
-    // against the declared budgets (plan budget + build actions).
-    // Emitted as scan_ledger.json next to the dumps; an over-budget
-    // query WARNs here (ScanLedgerSpec is the hard gate) so a driver
-    // run still completes while leaving the evidence.
-    // name -> (counts, over-budget subset); the over-budget map makes
-    // the artifact self-describing (r9 nit: the WARN went only to
-    // stderr, so the committed json could not show whether a budget
-    // fired). tools/oracle_check.py re-checks it offline.
+    // — the dump write and any job its kernels start — has its file
+    // scans counted and checked against the query's scan budget.
+    // name -> (counts, over-budget subset), emitted as scan_ledger.json
+    // next to the dumps; an over-budget query WARNs here (ScanLedgerSpec
+    // is the hard gate, tools/oracle_check.py re-checks it offline) so
+    // a driver run still completes while leaving the evidence.
     val ledgers = scala.collection.mutable.TreeMap[String, (Map[String, Int], Map[String, Int])]()
     SparkEntry.defs
       .filter(d => only.forall(_.contains(d.name)))
@@ -36,11 +32,11 @@ object Verify {
           d.build(s, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         }
-        val over = counts.filter { case (t, c) => c > d.ledgerBudget(t) }
+        val over = counts.filter { case (t, c) => c > d.scanBudget(t) }
         ledgers(name) = (counts, over)
         over.foreach { case (t, c) =>
           System.err.println(
-            s"[verify] $name OVER-BUDGET: $t scanned ${c}x across all jobs, budget ${d.ledgerBudget(t)}")
+            s"[verify] $name OVER-BUDGET: $t scanned ${c}x across all jobs, budget ${d.scanBudget(t)}")
         }
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

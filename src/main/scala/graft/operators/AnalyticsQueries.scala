@@ -700,7 +700,7 @@ object AnalyticsQueries {
       // (flag, price) count table ([[DistributedRank.medianMad]]):
       // the only fact scan and the only fact-sized exchange is the
       // map-side-combined groupBy building that table; both medians
-      // are valuesAtRanksFromCounts selections over it (bounded by
+      // are picked off cumulative count walks over it (bounded by
       // distinct values, never rows, and read no tiebreak columns a
       // value-domain selection never needs), all in one lazy plan.
       DistributedRank.medianMad(

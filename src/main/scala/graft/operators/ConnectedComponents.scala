@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Connected components over an undirected edge list — the cluster-
   * assignment step a dedup pipeline runs after pair generation
@@ -60,42 +60,49 @@ object ConnectedComponents {
   /** Size-adaptive connected components: `edges` must have two
     * integral columns naming node ids; returns (node, label) for every
     * node incident to an edge, label = min node id reachable, in the
-    * endpoints' wider id type. Dispatch is stats-first: an edge plan
-    * the optimizer already proves under [[SmallEdgeStatsBytes]] is
-    * limit-collected directly (one job, no checkpoint); otherwise the
-    * list is materialized once through the local-contraction pre-pass
-    * (checkpoint + observed exact count, one scan) and dispatched on
-    * the contracted count. Below [[MaxDriverEdges]] the closure runs as
-    * driver-side union-find over the collected pair table (a dedup
-    * graph's edge set is pair-pipeline output — orders of magnitude
-    * smaller than the corpus — so at certification scales this is the
-    * common case), above it as the O(log n)-round alternating-star
-    * loop. Both tiers emit the IDENTICAL (node, component-min) labels
-    * in the identical column types ([[ConnectedComponentsSpec]] pins
-    * equality on chains, cliques, random graphs, and both sides of the
-    * bound), so a misjudged bound costs only constants, never bytes.
+    * endpoints' wider id type. The id type is checked while the frame
+    * is built; the closure runs when the frame executes
+    * ([[graft.plans.Deferred]]), over the executed edge rows.
+    * Dispatch is stats-first: an edge plan the optimizer already
+    * proves under [[SmallEdgeStatsBytes]] is limit-collected directly
+    * (one job, no checkpoint); otherwise the list is materialized once
+    * through the local-contraction pre-pass (checkpoint + observed
+    * exact count, one scan) and dispatched on the contracted count.
+    * Below [[MaxDriverEdges]] the closure runs as driver-side
+    * union-find over the collected pair table (a dedup graph's edge
+    * set is pair-pipeline output — orders of magnitude smaller than
+    * the corpus — so at certification scales this is the common
+    * case), above it as the O(log n)-round alternating-star loop. Both
+    * tiers emit the IDENTICAL (node, component-min) labels in the
+    * identical column types ([[ConnectedComponentsSpec]] pins equality
+    * on chains, cliques, random graphs, and both sides of the bound),
+    * so a misjudged bound costs only constants, never bytes.
     */
   def run(edges: DataFrame): DataFrame = {
     val sel = endpoints(edges)
     val idType = nodeIdType(sel)
-    val statsBytes = sel.queryExecution.optimizedPlan.stats.sizeInBytes
-    val probed =
-      if (statsBytes <= SmallEdgeStatsBytes) {
-        val rows = sel.limit(MaxDriverEdges.toInt + 1).collect()
-        if (rows.length <= MaxDriverEdges) Some(unionFindRows(sel, rows, idType))
-        else None // stats under-estimated: fall through, pay one re-scan
-      } else None
-    probed.getOrElse {
-      // ONE materialization job: the caller's pair plan runs straight
-      // into the per-partition contraction (r12 fusion — the r11 form
-      // checkpointed the raw 2-column list, then read it back for a
-      // contraction + distinct round-trip). Dispatch is on the
-      // CONTRACTED count (≤ min(edges, nodes)): the driver tier
-      // collects star edges the cluster already forested, so the
-      // bound stays a driver-memory bound while more graphs qualify.
-      val (canon0, cCount) = materializeContracted(sel, idType)
-      if (cCount <= MaxDriverEdges) driverUnionFind(canon0, cCount)
-      else alternatingFrom(canon0, cCount)._1
+    // never null: both tiers reject null ids
+    val labels = StructType(Seq("node", "label").map(StructField(_, idType, nullable = false)))
+    graft.plans.Deferred.frame(sel, labels) { sel =>
+      val statsBytes = sel.queryExecution.optimizedPlan.stats.sizeInBytes
+      val probed =
+        if (statsBytes <= SmallEdgeStatsBytes) {
+          val rows = sel.limit(MaxDriverEdges.toInt + 1).collect()
+          if (rows.length <= MaxDriverEdges) Some(unionFindRows(sel, rows, idType))
+          else None // stats under-estimated: fall through, pay one re-scan
+        } else None
+      probed.getOrElse {
+        // ONE materialization job: the caller's pair plan runs straight
+        // into the per-partition contraction (r12 fusion — the r11 form
+        // checkpointed the raw 2-column list, then read it back for a
+        // contraction + distinct round-trip). Dispatch is on the
+        // CONTRACTED count (≤ min(edges, nodes)): the driver tier
+        // collects star edges the cluster already forested, so the
+        // bound stays a driver-memory bound while more graphs qualify.
+        val (canon0, cCount) = materializeContracted(sel, idType)
+        if (cCount <= MaxDriverEdges) driverUnionFind(canon0, cCount)
+        else alternatingFrom(canon0, cCount)._1
+      }
     }
   }
 

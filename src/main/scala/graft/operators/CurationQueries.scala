@@ -4,9 +4,13 @@ import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.WordShingles
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Corpus-curation stages a production training-data pipeline runs
   * between raw crawl and tokenized batches: eval-set decontamination,
@@ -367,12 +371,13 @@ object CurationQueries {
 
     // ------------------------------------------------------------------
     // q99 — decontamination at scale: the bloom semi-join form of q72.
-    // The eval set's distinct 8-grams build ONE driver-side bloom
-    // filter (public `df.stat.bloomFilter` sketch — a distributed
-    // aggregate, never a collect of the grams), broadcast once per
-    // executor; the corpus's gram stream probes it MAP-SIDE via the
-    // codegen'd [[graft.functions.BloomMightContain]] predicate, so at
-    // 100 TB virtually every clean gram dies before the shuffle — the
+    // The eval set's distinct 8-grams build ONE bloom filter in the
+    // plan — Spark's own `BloomFilterAggregate` over xxhash64(gram), a
+    // scalar subquery that completes before the first probed row — and
+    // the corpus's gram stream probes it MAP-SIDE with
+    // `BloomFilterMightContain` on the same hash (how
+    // `InjectRuntimeFilter` probes non-long keys), so at 100 TB
+    // virtually every clean gram dies before the shuffle — the
     // exact-verify join then sees only candidates (where the ~1% false
     // positives die too, keeping the output EXACT: it hash-matches the
     // plain-SQL oracle, which has no bloom at all). Different eval
@@ -397,10 +402,13 @@ object CurationQueries {
       // sized for the corpus ceiling, not the observed count (a count
       // job would double-scan the eval side); ~1.2 MB at 1M/1% — noise
       // next to a broadcast join side
-      val bloom = evalGrams.stat.bloomFilter("s", 1 << 20, 0.01)
-      val bc = s.sparkContext.broadcast(bloom)
+      val items = 1L << 20
+      val model = evalGrams.select(SparkBridge.column(new BloomFilterAggregate(
+        SparkBridge.expression(xxhash64(col("s"))), Literal(items),
+        Literal(BloomFilter.optimalNumOfBits(items, 0.01))).toAggregateExpression()))
       val candidates = shingleRows(d, col("doc_id") % 7 =!= 0)
-        .filter(graft.functions.BloomMightContain(col("s"), bc))
+        .filter(SparkBridge.column(BloomFilterMightContain(
+          SparkBridge.expression(model.scalar()), SparkBridge.expression(xxhash64(col("s"))))))
       val hits = candidates.join(evalGrams, "s")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).cast(IntegerType).as("shared"))

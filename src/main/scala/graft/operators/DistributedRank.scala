@@ -282,21 +282,15 @@ object DistributedRank {
   }
 
   /** The rank selection over a CALLER-SUPPLIED per-(group, value)
-    * count table — the cascade-fusion entry point. `vc` holds one row
-    * per (groupCols…, valueCol) with `cntCol` = that value's row
-    * count; the caller owns its persistence (it is consumed twice
-    * here). Everything is in the plan: the group totals, their target
-    * ranks `explode(array_distinct(ranksOf(total)))` kept to
-    * 1 ≤ t ≤ total, the cumulative count walk over the value order
+    * count table. `vc` holds one row per (groupCols…, valueCol) with
+    * `cntCol` = that value's row count; the caller owns its
+    * persistence (it is consumed twice here). Everything is in the
+    * plan: the group totals, their target ranks
+    * `explode(array_distinct(ranksOf(total)))` kept to 1 ≤ t ≤ total,
+    * the cumulative count walk over the value order
     * ([[runningSumAdaptive]], behind the one [[WindowMaxBytes]] gate),
     * and a broadcast range-join picking the value whose window
-    * (cume − cnt, cume] contains each target. Cascaded quantiles
-    * (q95's median-of-deviations) derive the SECOND stage's count
-    * table from the first's by pure arithmetic on the value column —
-    * counts merging where two values map to the same derived value —
-    * so the fact is scanned and shuffled exactly once for the whole
-    * cascade, and the second selection's exchange is bounded by
-    * DISTINCT DERIVED VALUES, not rows.
+    * (cume − cnt, cume] contains each target.
     */
   def valuesAtRanksFromCounts(
       vc: DataFrame,
@@ -334,11 +328,14 @@ object DistributedRank {
     * q95 shape as ONE kernel over the per-(group, value) count table:
     * the fact is aggregated to its distinct (group, value) count table
     * (ONE map-side-combined exchange — the only fact-sized shuffle and
-    * the only fact scan), the median is a [[valuesAtRanksFromCounts]]
-    * selection over it, and the deviations' count table derives from
-    * it by arithmetic (two values folding onto one deviation merge
-    * counts) for the second selection — both bounded by distinct
-    * values, never rows, and both in the plan.
+    * the only fact scan), the median is picked off its cumulative
+    * count walk ([[runningSumAdaptive]]) and attached to every row of
+    * the table by a window over the group, and the deviations' count
+    * table derives from that by arithmetic (two values folding onto one
+    * deviation merge counts) for the second selection — both bounded by
+    * distinct values, never rows, and both in the plan. Windows keep
+    * their input's size estimate where a join back would multiply it,
+    * so the second walk is gated on the count table's size.
     *
     * Interpolation is the linear `quantile_cont` form at p=0.5, the
     * double expression `lo + (h − ⌊h⌋)·(hi − lo)`, h = (n−1)/2 —
@@ -356,25 +353,32 @@ object DistributedRank {
       outMad: String = "mad"): DataFrame = {
     require(df.schema(valueCol).dataType == DoubleType,
       s"medianMad interpolates in double; cast $valueCol to double first")
-    val g = Seq(groupCol)
-    def h(n: Column): Column = (n - 1).cast(DoubleType) * lit(0.5)
-    def median(counts: DataFrame, v: String, out: String): DataFrame = {
-      val hits = valuesAtRanksFromCounts(counts, g, v, "__cnt",
-        n => array(floor(h(n)) + 1, ceil(h(n)) + 1), "rn", outTotal = "n")
-      val hn = h(col("n"))
-      val lo = min(when(col("rn") === floor(hn) + 1, col(v)))
-      val hi = min(when(col("rn") === ceil(hn) + 1, col(v)))
-      hits.groupBy(col(groupCol))
-        .agg((lo + (max(hn) - floor(max(hn))) * (hi - lo)).as(out))
+    val byGroup = Window.partitionBy(col(groupCol))
+    // `counts` (group, v, __cnt, …) with its group's median of v as
+    // `out`: ranks ⌊h⌋+1 and ⌈h⌉+1 each fall in exactly one row's
+    // cumulative window (cume − cnt, cume]
+    def withMedian(counts: DataFrame, v: String, out: String): DataFrame = {
+      val cum = runningSumAdaptive(counts, Seq(groupCol), Seq(v), "__cnt", "__cume")
+      val hn = (col("__n") - 1).cast(DoubleType) * lit(0.5)
+      def at(rank: Column): Column =
+        min(when(rank > col("__cume") - col("__cnt") && rank <= col("__cume"), col(v)))
+          .over(byGroup)
+      cum.withColumn("__n", sum(col("__cnt")).over(byGroup))
+        .withColumn("__lo", at(floor(hn) + 1))
+        .withColumn("__hi", at(ceil(hn) + 1))
+        .withColumn(out, col("__lo") + (hn - floor(hn)) * (col("__hi") - col("__lo")))
+        .drop("__cume", "__n", "__lo", "__hi")
     }
     val vc = graft.CacheScope.scoped(
       df.groupBy(col(groupCol), col(valueCol)).agg(count(lit(1)).as("__cnt")))
-    val med = median(vc, valueCol, outMed)
     val devs = graft.CacheScope.scoped(
-      joinNullSafe(vc, med, g)
+      withMedian(vc, valueCol, outMed)
         .groupBy(col(groupCol), abs(col(valueCol) - col(outMed)).as("__dev"))
-        .agg(sum(col("__cnt")).as("__cnt")))
-    joinNullSafe(med, median(devs, "__dev", outMad), g)
+        // one median per group: max carries it through the regrouping
+        .agg(sum(col("__cnt")).as("__cnt"), max(col(outMed)).as(outMed)))
+    withMedian(devs, "__dev", outMad)
+      .groupBy(col(groupCol))
+      .agg(max(col(outMed)).as(outMed), max(col(outMad)).as(outMad))
   }
 
   /** Weighted median over a per-(group, value) WEIGHT table: the

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Fixed-point integer PageRank — damping 0.85, rank mass carried as
   * a scaled integer (`Unit` = 10^12 = one unit of rank) in
@@ -70,6 +70,9 @@ object PageRank {
     * the caller can't vouch for symmetry (directed graphs would need
     * a separate in-degree pass to bound safely; decimal is always
     * safe). `forceDecimal` pins the fallback for the equality spec.
+    * Either way the frame declares (node, v DECIMAL(38,0)) — the long
+    * rounds cast to it as they emit, the same integers — and the rounds
+    * run when the frame executes ([[graft.plans.Deferred]]).
     */
   def fixedPoint(edges: DataFrame, iters: Int, checkpointEvery: Int = 10,
       symmetric: Boolean = false, forceDecimal: Boolean = false): DataFrame = {
@@ -86,85 +89,80 @@ object PageRank {
     // shave: q101 5.3 → 3.9 s at sf0.1).
     val dec = DecimalType(38, 0)
     val sel = edges.select(col("a"), col("b"))
-    // SNAPSHOT the parsed edge list first — one eager localCheckpoint
-    // BEFORE the loop scope (r14, the bucketed-q101 fix): every plan
-    // built past this line sees a block-backed LogicalRDD, never the
-    // source scan, so the source LAYOUT cannot shape the loop. In r13
-    // the loop derived from the 64-file sort-trusted bucketed catalog
-    // scan and re-planned against its shape every round (~15
-    // re-derivations at ~6 cores average parallelism, 38 → 154 s at
-    // 100×); a checkpoint is layout-blind and its one build job reads
-    // the source exactly once, same scan ledger as before. It also
-    // buys an EXACT row count read off the checkpointed blocks — the
-    // loop partitions now size from the real edge cardinality
-    // (partsForRows) instead of the scan-shape byte estimate.
-    val cp = sel.localCheckpoint()
-    val parts = TightLoop.partsForRows(cp.sparkSession, cp.count())
-    // The whole iteration executes HERE, inside a TightLoop scope (AQE
-    // off + data-sized partitions), as ONE job ending in an eager
-    // localCheckpoint: under AQE the caller's action ran every
-    // exchange as its own scheduling round-trip (probe-measured 19
-    // jobs for 5 rounds — more wall in stage latency than in compute),
-    // and AQE's runtime broadcast conversion is unwanted here anyway
-    // (nothing node-count-sized may broadcast). Inside the scope the
-    // round join is exchange-free by construction — v comes out of the
-    // previous round's groupBy hash-split exactly like the cached edge
-    // layout — so the per-round cost is the single destination-sum
-    // exchange.
-    TightLoop.scoped(cp, parts) { cp =>
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("a"))
-      val e = graft.CacheScope.scoped(
-        cp.repartition(col("a")).withColumn("d", count(lit(1)).over(w)))
-      // Numeric width for the rounds: measure max degree off the
-      // cached edge table (materializes the cache one job early —
-      // the loop job then reads it back; same total work) and take
-      // the long path iff the closed-form bound clears. The decimal
-      // fallback is the always-safe width.
-      val useLong = symmetric && !forceDecimal && {
-        val m = e.agg(max(col("d"))).head().getAs[Any](0)
-        longSafe(if (m == null) 0L else m.asInstanceOf[Long], iters)
-      }
-      // init: every node with out-edges starts at rank 1.0; distinct
-      // over the cached layout needs no exchange (already hash-split on a)
-      val init0 = e.select(col("a").as("node")).distinct()
-      var v =
-        if (useLong) init0.select(col("node"), lit(Unit0).as("v"))
-        else init0.select(col("node"), lit(Unit0).cast(dec).as("v"))
-      var prevCp: DataFrame = null
-      for (k <- 1 to iters) {
-        val joined = v.join(e, col("node") === col("a"))
-        v =
-          if (useLong)
-            // `div` (IntegralDivide), NOT floor(v/d): long `/` is
-            // double division in Spark SQL and a 2^44-scale quotient
-            // can round across the floor; div is the exact integer op
-            joined.groupBy(col("b"))
-              .agg(sum(expr("v div d")).as("s"))
-              .select(col("b").as("node"),
-                expr(s"(${15 * Unit0} + 85 * s) div 100").as("v"))
-          else
-            joined.groupBy(col("b"))
-              // floor over the exact rational = integer division for the
-              // non-negative operands here; both engines agree exactly
-              .agg(sum(floor(col("v") / col("d")).cast(dec)).as("s"))
-              .select(col("b").as("node"),
-                floor((lit(15 * Unit0).cast(dec) + lit(85).cast(dec) * col("s")) / 100)
-                  .cast(dec).as("v"))
-        // deep iteration counts: truncate lineage so round N's plan
-        // does not embed rounds 1..N-1 (the q69 components discipline)
-        if (k % checkpointEvery == 0 && k < iters) {
-          v = v.localCheckpoint()
+    val ranks = new StructType().add("node", sel.schema("b").dataType).add("v", dec)
+    graft.plans.Deferred.frame(sel, ranks) { sel =>
+      // ONE eager localCheckpoint of the input before the loop scope:
+      // the count and the rounds read its blocks, so the input's rows
+      // are computed once, and the EXACT row count sizes the loop
+      // partitions (partsForRows) instead of a byte estimate.
+      val cp = sel.localCheckpoint()
+      val parts = TightLoop.partsForRows(cp.sparkSession, cp.count())
+      // The whole iteration executes HERE, inside a TightLoop scope (AQE
+      // off + data-sized partitions), as ONE job ending in an eager
+      // localCheckpoint: under AQE the caller's action ran every
+      // exchange as its own scheduling round-trip (probe-measured 19
+      // jobs for 5 rounds — more wall in stage latency than in compute),
+      // and AQE's runtime broadcast conversion is unwanted here anyway
+      // (nothing node-count-sized may broadcast). Inside the scope the
+      // round join is exchange-free by construction — v comes out of the
+      // previous round's groupBy hash-split exactly like the cached edge
+      // layout — so the per-round cost is the single destination-sum
+      // exchange.
+      TightLoop.scoped(cp, parts) { cp =>
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("a"))
+        val e = cp.repartition(col("a")).withColumn("d", count(lit(1)).over(w)).persist()
+        // the edge cache lives for the rounds only: the result is an
+        // eager checkpoint whose blocks free via ContextCleaner once the
+        // consumer's execution drops them
+        try {
+          // Numeric width for the rounds: measure max degree off the
+          // cached edge table (materializes the cache one job early —
+          // the loop job then reads it back; same total work) and take
+          // the long path iff the closed-form bound clears. The decimal
+          // fallback is the always-safe width.
+          val useLong = symmetric && !forceDecimal && {
+            val m = e.agg(max(col("d"))).head().getAs[Any](0)
+            longSafe(if (m == null) 0L else m.asInstanceOf[Long], iters)
+          }
+          // init: every node with out-edges starts at rank 1.0; distinct
+          // over the cached layout needs no exchange (already hash-split on a)
+          val init0 = e.select(col("a").as("node")).distinct()
+          var v =
+            if (useLong) init0.select(col("node"), lit(Unit0).as("v"))
+            else init0.select(col("node"), lit(Unit0).cast(dec).as("v"))
+          var prevCp: DataFrame = null
+          for (k <- 1 to iters) {
+            val joined = v.join(e, col("node") === col("a"))
+            v =
+              if (useLong)
+                // `div` (IntegralDivide), NOT floor(v/d): long `/` is
+                // double division in Spark SQL and a 2^44-scale quotient
+                // can round across the floor; div is the exact integer op
+                joined.groupBy(col("b"))
+                  .agg(sum(expr("v div d")).as("s"))
+                  .select(col("b").as("node"),
+                    expr(s"(${15 * Unit0} + 85 * s) div 100").as("v"))
+              else
+                joined.groupBy(col("b"))
+                  // floor over the exact rational = integer division for the
+                  // non-negative operands here; both engines agree exactly
+                  .agg(sum(floor(col("v") / col("d")).cast(dec)).as("s"))
+                  .select(col("b").as("node"),
+                    floor((lit(15 * Unit0).cast(dec) + lit(85).cast(dec) * col("s")) / 100)
+                      .cast(dec).as("v"))
+            // deep iteration counts: truncate lineage so round N's plan
+            // does not embed rounds 1..N-1 (the q69 components discipline)
+            if (k % checkpointEvery == 0 && k < iters) {
+              v = v.localCheckpoint()
+              if (prevCp != null) prevCp.unpersist(blocking = false)
+              prevCp = v
+            }
+          }
+          val out = v.localCheckpoint()
           if (prevCp != null) prevCp.unpersist(blocking = false)
-          prevCp = v
-        }
-      }
-      val out = v.localCheckpoint()
-      if (prevCp != null) prevCp.unpersist(blocking = false)
-      // the checkpointed result's blocks free via ContextCleaner once
-      // the caller drops the frame (Bench GCs between queries); the
-      // cached edge frame is CacheScope-registered for the caller's
-      // post-action drain()
-      (out, ())
-    }._1
+          (out.select(col("node"), col("v").cast(dec).as("v")), ())
+        } finally e.unpersist(blocking = false)
+      }._1
+    }
   }
 }

@@ -73,7 +73,7 @@ object TightLoop {
     val loop = SparkBridge.cloneSession(input.sparkSession)
     loop.conf.set("spark.sql.adaptive.enabled", "false")
     loop.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    val (out, extra) = body(SparkBridge.rebind(loop, input))
-    (SparkBridge.rebind(input.sparkSession, out), extra)
+    val (out, extra) = body(SparkBridge.ofPlan(loop, SparkBridge.logicalPlan(input)))
+    (SparkBridge.ofPlan(input.sparkSession, SparkBridge.logicalPlan(out)), extra)
   }
 }

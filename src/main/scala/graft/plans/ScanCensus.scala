@@ -21,12 +21,9 @@ import scala.collection.mutable
   * *text* cannot give (an `InMemoryTableScan` line prints its cached
   * plan's FileScan too, double-counting every shared subtree).
   *
-  * Blind spot, by design: scans a query runs at BUILD time via its own
-  * driver actions (e.g. q69's adjacency materialization, q99's bloom
-  * model) finish before the returned plan exists — those are
-  * counted by the job-level [[ScanLedger]] (r9), which accumulates
-  * this census over EVERY action a query runs, not just the returned
-  * plan's.
+  * Kernels that run when the frame runs ([[Deferred]]) read their
+  * input's executed rows, so that input's scans are in this plan too.
+  * [[ScanLedger]] sums this census over every action a query runs.
   */
 object ScanCensus {
 
@@ -65,10 +62,14 @@ object ScanCensus {
   /** Visits every node one execution of `root` would run: descends
     * through the AQE wrapper and subquery plans, and into each
     * distinct cached relation's build plan once (`seenCaches`
-    * remembers the ones already walked).
+    * remembers the ones already walked). Subqueries that compute the
+    * same plan (an inferred copy of a filter carries its subquery
+    * along) are walked once: Spark reuses a repeated subquery, so it
+    * runs once.
     */
   def foreachNode(root: SparkPlan, seenCaches: mutable.Set[AnyRef])(
       visit: SparkPlan => Unit): Unit = {
+    val seenSubqueries = mutable.Set[SparkPlan]()
     def walk(n: SparkPlan): Unit = {
       visit(n)
       n match {
@@ -80,7 +81,7 @@ object ScanCensus {
         case _ => ()
       }
       n.children.foreach(walk)
-      n.subqueries.foreach(walk)
+      n.subqueries.foreach(q => if (seenSubqueries.add(q.canonicalized)) walk(q))
     }
     walk(root)
   }

@@ -7,17 +7,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.collection.mutable
 
-/** Job-level file-scan ledger — closes the [[ScanCensus]] build-time
-  * blind spot (r8 verdict item 4 / r9 task): a `QueryExecutionListener`
-  * that accumulates the structural census over EVERY driver action a
-  * query runs while the ledger is open, not just the one execution of
-  * the returned frame. Actions a query fires while BUILDING its result
-  * — q99's bloom-model aggregate, `ntileByCuts`' count-table probe,
-  * the iterative loops' per-round `localCheckpoint` materializations —
-  * finish before the returned plan exists, so the plan census alone
-  * proves nothing about them (q69's plan budget passes trivially: the
-  * returned frame reads checkpoints). The ledger sees each of those
-  * actions as its own `QueryExecution` and sums their scans.
+/** Job-level file-scan ledger: a `QueryExecutionListener` that
+  * accumulates the structural [[ScanCensus]] over EVERY driver action
+  * a query runs while the ledger is open, not just the one execution
+  * of the returned frame — including actions a kernel fires while the
+  * frame runs ([[Deferred]]; they read executed rows and checkpoints,
+  * never files) and any a query fires while it is built (`ntileByCuts`'
+  * count-table probe above its size gate). The ledger sees each of
+  * those actions as its own `QueryExecution` and sums their scans, so
+  * a query whose ledger exceeds its plan census is one that scans at
+  * build time.
   *
   * Cached relations are deduplicated ACROSS actions with one shared
   * identity set: a persisted subtree's file scan runs once, at first
@@ -36,7 +35,6 @@ import scala.collection.mutable
 final class ScanLedger extends QueryExecutionListener {
   private val seenCaches = mutable.Set[AnyRef]()
   private val acc = mutable.Map[String, Int]().withDefaultValue(0)
-  private var actionCount = 0
 
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
     record(qe)
@@ -48,7 +46,6 @@ final class ScanLedger extends QueryExecutionListener {
     record(qe)
 
   private def record(qe: QueryExecution): Unit = synchronized {
-    actionCount += 1
     ScanCensus.tableScans(qe.executedPlan, seenCaches).foreach {
       case (t, c) => acc(t) = acc(t) + c
     }
@@ -56,9 +53,6 @@ final class ScanLedger extends QueryExecutionListener {
 
   /** table -> file scans actually run across all recorded actions. */
   def counts: Map[String, Int] = synchronized { acc.toMap }
-
-  /** Number of driver actions the ledger observed. */
-  def actions: Int = synchronized { actionCount }
 }
 
 object ScanLedger {

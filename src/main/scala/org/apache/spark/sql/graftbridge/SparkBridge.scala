@@ -4,20 +4,25 @@ import java.io.File
 import java.util.concurrent.{CompletableFuture, ExecutorService}
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** The one shim into Spark's `private[spark]` and `private[sql]`
   * members. Only the package placement is ours; every accessor is one
   * Spark's own code or tests use:
   *   - Column↔Expression conversions, to expose custom Catalyst
   *     expressions (e.g. `graft.functions.Float32Dot`) as `Column`s;
-  *   - session cloning and rebinding a frame's plan into another
-  *     session, which give a query its own conf and listeners while it
-  *     shares the SparkContext, the cache and the registered functions
+  *   - session cloning and binding a logical plan to a session, which
+  *     give a query its own conf and listeners while it shares the
+  *     SparkContext, the cache and the registered functions
   *     ([[graft.operators.TightLoop]], [[graft.plans.ScanLedger]]);
+  *   - a frame over an executed child's RDD and a frame's rows as an
+  *     RDD ([[graft.plans.Deferred]]);
   *   - running a body on a pool thread with the caller's active
   *     session and local properties, as Spark's broadcast futures do
   *     ([[graft.flight.FlightPipeline]]'s concurrent layer writes);
@@ -35,14 +40,30 @@ object SparkBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
-  /** `df`'s plan as a frame of `spark`: planned and run under that
+  def logicalPlan(df: DataFrame): LogicalPlan =
+    df.asInstanceOf[classic.Dataset[_]].logicalPlan
+
+  /** `plan` as a frame of `spark`: planned and run under that
     * session's conf and listeners. A cached subtree stays cached, since
     * the cache belongs to the shared state.
     */
-  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
-    classic.Dataset.ofRows(
-      spark.asInstanceOf[classic.SparkSession],
-      df.asInstanceOf[classic.Dataset[_]].logicalPlan)
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A frame over `rdd`'s `output` rows whose plan reports `stats`. */
+  def ofRDD(spark: SparkSession, output: Seq[Attribute], rdd: RDD[InternalRow],
+      stats: Statistics): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(s, LogicalRDD(output, rdd)(s, Some(stats)))
+  }
+
+  /** `df`'s rows, prepared under an SQL execution of its own, so the
+    * adaptive stages it runs first report there, not to the caller's.
+    */
+  def toRdd(df: DataFrame): RDD[InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("deferred"))(qe.toRdd)
+  }
 
   /** `body` submitted to `exec` under the caller's active session and
     * a copy of its local properties (job group, description, scheduler

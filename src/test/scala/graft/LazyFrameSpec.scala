@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.operators.DistributedRank
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
@@ -10,20 +8,23 @@ import org.apache.spark.sql.graftbridge.SparkBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Building a frame runs no Spark job: the rank kernels compute their
-  * offsets and rank targets in the plan, and q55 rolls its grouping
-  * sets up in the plan, so the caller's one action is the only one.
+  * offsets and rank targets in the plan, q55 rolls its grouping sets
+  * up in the plan, the graph loops run when their frame runs
+  * ([[graft.plans.Deferred]]) and q99's bloom model is a subquery, so
+  * the caller's one action is the only one.
   */
 class LazyFrameSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  /** Spark jobs started while `build` runs. */
-  private def jobsWhile(build: => DataFrame): Int = {
+  /** The call sites of the Spark jobs started while `build` runs. */
+  private def jobSitesWhile(build: => DataFrame): Seq[String] = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(job: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        sites.add(job.stageInfos.map(_.name).mkString(" / "))
     }
     SparkBridge.waitUntilEmpty(sc)
     sc.addSparkListener(listener)
@@ -31,8 +32,11 @@ class LazyFrameSpec extends AnyFunSuite {
       build
       SparkBridge.waitUntilEmpty(sc)
     } finally sc.removeSparkListener(listener)
-    jobs.get
+    sites.toArray(Array.empty[String]).toSeq
   }
+
+  /** Spark jobs started while `build` runs. */
+  private def jobsWhile(build: => DataFrame): Int = jobSitesWhile(build).size
 
   test("both tiers of the adaptive rank kernels and the distributed kernels build without a job") {
     import spark.implicits._
@@ -83,6 +87,22 @@ class LazyFrameSpec extends AnyFunSuite {
         finally CacheScope.drain()
       assert(built == read,
         s"$q started $built jobs while building; reading lineitem starts $read")
+    }
+  }
+
+  // the deferred graph loops and q99's in-plan bloom model: opening a
+  // table runs Spark's parquet schema job (Tables reads without a
+  // declared schema); building must start no other
+  for (name <- Seq("q69_neardup_components", "q77_cluster_retention",
+      "q91_order_chain_components", "q99_bloom_decontam", "q101_pagerank_orders",
+      "q103_retention_lsh")) {
+    val q = name.takeWhile(_ != '_')
+    test(s"$q builds with no job but its tables' schema reads") {
+      val sites =
+        try jobSitesWhile(SparkEntry.queries(name)(spark, dir))
+        finally CacheScope.drain()
+      val others = sites.filterNot(_.startsWith("parquet at Tables.scala"))
+      assert(others.isEmpty, s"$q started jobs beyond schema reads while building: $others")
     }
   }
 }

@@ -2,6 +2,9 @@ package graft
 
 import graft.flight.FlightModel.{Airline, Airport, Flight}
 import graft.flight.FlightEtl
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.SparkBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-quality regression guards: these assert the *physical plan*
@@ -263,18 +266,51 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!liScan.contains("l_shipdate") && !liScan.contains("l_quantity"), liScan)
   }
 
+  /** The executed plan of `name`'s one action and of every action its
+    * kernels run while it executes (the deferred closures' jobs and
+    * loop rounds), captured by a listener on a session clone.
+    */
+  private def executedPlans(name: String): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val session = SparkBridge.cloneSession(spark)
+    session.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    drained(SparkEntry.queries(name)(session, dir).write.format("noop").mode("overwrite").save())
+    SparkBridge.waitUntilEmpty(spark.sparkContext)
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
   test("q69: components iteration never degenerates to cartesian/nested-loop joins") {
-    val p = plan("q69_neardup_components")
-    assert(!p.contains("CartesianProduct"), s"cartesian in components plan:\n${p.take(1500)}")
-    assert(!p.contains("BroadcastNestedLoopJoin"), s"nested loop:\n${p.take(1500)}")
+    val ps = executedPlans("q69_neardup_components")
+    // the closure's input is the pair self-join itself, not a checkpoint
+    assert(ps.exists(p => p.contains("Deferred") && p.contains("Join")),
+      s"no executed plan joins below the closure:\n${ps.mkString("\n").take(3000)}")
+    ps.foreach { p =>
+      assert(!p.contains("CartesianProduct"), s"cartesian in components plan:\n${p.take(1500)}")
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"nested loop:\n${p.take(1500)}")
+    }
   }
 
   test("q101: PageRank final plan — co-partitioned joins only, no cartesian, no single-partition exchange") {
-    val p = plan("q101_pagerank_orders")
-    assert(!p.contains("CartesianProduct"), s"cartesian in pagerank plan:\n${p.take(1500)}")
-    assert(!p.contains("BroadcastNestedLoopJoin"))
-    // the rank frame must never collapse to one partition mid-iteration
-    assert(!p.contains("Exchange SinglePartition"), s"single-partition exchange:\n${p.take(2000)}")
+    val ps = executedPlans("q101_pagerank_orders")
+    // the rounds are the plans that join (ranks onto the edge table);
+    // the edge count and the max-degree probe are one-row aggregates
+    val rounds = ps.filter(_.contains("Join"))
+    assert(rounds.nonEmpty, s"no round plan among:\n${ps.mkString("\n").take(3000)}")
+    ps.foreach { p =>
+      assert(!p.contains("CartesianProduct"), s"cartesian in pagerank plan:\n${p.take(1500)}")
+      assert(!p.contains("BroadcastNestedLoopJoin"))
+    }
+    // the rank frame must never collapse to one partition mid-iteration:
+    // no operator may require all rows in one partition (the loop's own
+    // repartition is data-sized, so at this scale it is one partition)
+    (rounds ++ ps.filter(_.contains("Deferred"))).foreach { p =>
+      assert(!p.contains("Exchange SinglePartition, ENSURE_REQUIREMENTS"),
+        s"single-partition exchange:\n${p.take(2000)}")
+    }
   }
 
   test("q116: histogram is one lazy plan — one lineitem scan, no driver-local rows") {
@@ -398,7 +434,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // The same pass names the queries whose final plan holds a
     // WindowExec with no partitionSpec (Spark's "No Partition Defined"
     // warning: all rows through one task), walked the census's way.
-    // Windows a kernel runs at build time are in no final plan.
+    // Windows a deferred kernel runs are in its own plans, not this one.
     val unpartitioned = Seq.newBuilder[String]
     val failures = SparkEntry.defs.flatMap { d =>
       val (counts, globalWindow) = drained {

@@ -4,16 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.ScanLedger
 
-/** Job-level scan-budget guard (r9) — closes the plan census's
-  * build-time blind spot: every registered query is EXECUTED (noop
-  * write) under a [[graft.plans.ScanLedger]], which sums the file
-  * scans of every driver action the query fires — rank/offset jobs,
-  * pre-counts, adjacency materializations, model-building aggregates
-  * — against the declared plan budget plus the per-query
-  * build-action allowances in [[ScanBudgets.buildActionScans]]. The
-  * plan census alone passes trivially for queries whose returned
-  * frame is checkpoint-fed (q69); this guard
-  * counts what those queries actually read.
+/** Job-level scan-budget guard (r9): every registered query is
+  * EXECUTED (noop write) under a [[graft.plans.ScanLedger]], which
+  * sums the file scans of every driver action the query fires —
+  * including the jobs its kernels run while the frame runs — against
+  * the declared budget in [[ScanBudgets]]. No query scans while it is
+  * built, so the ledger must equal the plan census of the frame's one
+  * action: a ledger above the census is a build-time scan.
   */
 class ScanLedgerSpec extends AnyFunSuite {
 
@@ -29,21 +26,27 @@ class ScanLedgerSpec extends AnyFunSuite {
     finally CacheScope.drain()
   }
 
-  test("suite-wide: no query's actions file-scan any table beyond plan budget + declared build actions") {
+  test("suite-wide: every query's ledger equals its plan census") {
     val failures = SparkEntry.defs.flatMap { d =>
       spark.catalog.clearCache()
-      val counts =
+      val (census, counts) =
         try ScanLedger.measure(spark) { s =>
-          d.run(s, dir).write.format("noop").mode("overwrite").save()
-        }._2
+          val df = d.run(s, dir)
+          val census = plans.ScanCensus.tableScans(df)
+          df.write.format("noop").mode("overwrite").save()
+          census
+        }
         finally CacheScope.drain()
-      counts.collect {
-        case (t, c) if c > d.ledgerBudget(t) =>
-          s"${d.name}: $t scanned ${c}x across all jobs, ledger budget ${d.ledgerBudget(t)}"
+      val unequal =
+        if (counts == census) Nil
+        else Seq(s"${d.name}: ledger $counts across all jobs, plan census $census")
+      unequal ++ counts.collect {
+        case (t, c) if c > d.scanBudget(t) =>
+          s"${d.name}: $t scanned ${c}x across all jobs, budget ${d.scanBudget(t)}"
       }
     }
     assert(failures.isEmpty,
-      s"over-budget job-level scans (fix the plan or justify in ScanBudgets.buildActionScans):\n${failures.mkString("\n")}")
+      s"build-time or over-budget scans (fix the plan or justify in ScanBudgets):\n${failures.mkString("\n")}")
   }
 
   test("q116: ONE lineitem scan across all jobs — no pre-count, no build-time rank pass") {
@@ -52,16 +55,16 @@ class ScanLedgerSpec extends AnyFunSuite {
       s"q116 should run exactly 1 lineitem scan (the rank pass), saw $counts")
   }
 
-  test("q69: both scans happen at adjacency materialization; the returned plan reads checkpoints only") {
+  test("q69: the pair self-join's two scans are in the plan") {
     val counts = ledgerCounts("q69_neardup_components")
     assert(counts.getOrElse("documents", 0) == 2,
-      s"q69 should scan documents exactly twice (pair self-join, cached once), saw $counts")
-    // and the plan census of a fresh build agrees it sees none of them
+      s"q69 should scan documents exactly twice (the pair self-join), saw $counts")
+    // the closure reads the executed pairs: the returned plan holds both
     val d = SparkEntry.defs.find(_.name == "q69_neardup_components").get
     val plan =
       try plans.ScanCensus.tableScans(d.run(spark, dir))
       finally CacheScope.drain()
-    assert(plan.getOrElse("documents", 0) == 0, s"returned plan should be scan-free, saw $plan")
+    assert(plan == counts, s"plan census $plan, ledger $counts")
   }
 
   test("the ledger dedups a cached relation across the actions that read it") {

@@ -2,11 +2,14 @@ package graft.functions
 
 import graft.TestSpark
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GreaterThan, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, BoundReference, GreaterThan, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.GeneratePredicate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards against codegen variable-name collisions in the custom kernels.
@@ -59,32 +62,17 @@ class CodegenPredicateSpec extends AnyFunSuite {
     assert(!pred.eval(miss))
   }
 
-  test("BloomMightContain compiles as a generated predicate; one-sided error holds") {
-    import org.apache.spark.unsafe.types.UTF8String
-    val bloom = org.apache.spark.util.sketch.BloomFilter.create(1000, 0.01)
-    (0 until 100).foreach(i => bloom.putString(s"member-$i"))
-    val bc = spark.sparkContext.broadcast(bloom)
-    val expr = BloomMightContain(
-      BoundReference(0, StringType, nullable = false), bc)
-    val pred = GeneratePredicate.generate(expr) // throws on codegen failure
-    pred.initialize(0)
-    // no false negatives, ever
-    (0 until 100).foreach { i =>
-      assert(pred.eval(InternalRow(UTF8String.fromString(s"member-$i"))))
-    }
-    // fpp 1% on 10k non-members: a handful may pass, most must not
-    val fp = (0 until 10000).count(i =>
-      pred.eval(InternalRow(UTF8String.fromString(s"absent-$i"))))
-    assert(fp < 300, s"false-positive count $fp way above the 1% design point")
-  }
-
   test("bloom prefilter + exact verify equals the exact semi-join") {
     import spark.implicits._
     val corpus = (0 until 500).map(i => (i.toLong, s"gram-${i % 50}")).toDF("id", "s")
     val evalSet = Seq("gram-3", "gram-7", "gram-11").toDF("s")
-    val bloom = evalSet.stat.bloomFilter("s", 1000, 0.01)
-    val bc = spark.sparkContext.broadcast(bloom)
-    val viaBloom = corpus.filter(BloomMightContain(col("s"), bc))
+    // the q99 form: Spark's bloom aggregate as a scalar subquery,
+    // probed with BloomFilterMightContain on the same xxhash64
+    val model = evalSet.select(SparkBridge.column(new BloomFilterAggregate(
+      SparkBridge.expression(xxhash64(col("s"))), Literal(1000L),
+      Literal(BloomFilter.optimalNumOfBits(1000L, 0.01))).toAggregateExpression()))
+    val viaBloom = corpus.filter(SparkBridge.column(BloomFilterMightContain(
+        SparkBridge.expression(model.scalar()), SparkBridge.expression(xxhash64(col("s"))))))
       .join(evalSet, "s").select("id").as[Long].collect().sorted
     val exact = corpus.join(evalSet, "s").select("id").as[Long].collect().sorted
     assert(viaBloom.sameElements(exact))

@@ -2,6 +2,10 @@ package graft.operators
 
 import graft.TestSpark
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.SparkBridge
+import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixed-point PageRank invariants: exact hand-checked arithmetic on a
@@ -21,28 +25,38 @@ class PageRankSpec extends AnyFunSuite {
   private def ranks(df: DataFrame): Map[Long, Long] =
     try df.collect()
       .map(r => r.getLong(0) -> r.getDecimal(1).longValueExact()).toMap
-    finally graft.CacheScope.drain() // fixedPoint scopes its edge/degree caches
-
-  /** Width-tolerant reader: the long fast path emits LongType where
-    * the decimal fallback emits DECIMAL(38,0) — same integers.
-    */
-  private def ranksAny(df: DataFrame): Map[Long, Long] =
-    try df.collect().map(r => r.getLong(0) -> (r.get(1) match {
-      case d: java.math.BigDecimal => d.longValueExact()
-      case l: java.lang.Long => l.longValue()
-    })).toMap
     finally graft.CacheScope.drain()
+
+  /** Ranks plus whether the rounds ran in long arithmetic: the long
+    * path's integer division (`div`) shows in the executed round plans,
+    * captured by a listener on a session clone the frame runs in.
+    */
+  private def ranksAndWidth(edges: DataFrame, iters: Int,
+      forceDecimal: Boolean = false): (Map[Long, Long], Boolean) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val s = SparkBridge.cloneSession(spark)
+    s.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    val df = PageRank.fixedPoint(SparkBridge.ofPlan(s, SparkBridge.logicalPlan(edges)), iters,
+      symmetric = true, forceDecimal = forceDecimal)
+    assert(df.schema("v").dataType == DecimalType(38, 0))
+    val r = ranks(df)
+    SparkBridge.waitUntilEmpty(spark.sparkContext)
+    (r, plans.toArray(Array.empty[String]).exists(_.contains(" div ")))
+  }
 
   test("long-width rounds equal the decimal rounds bit-for-bit") {
     val g = sym((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (2L, 4L), (5L, 6L))
-    val fast = PageRank.fixedPoint(g, 7, symmetric = true)
-    assert(fast.schema("v").dataType == org.apache.spark.sql.types.LongType,
-      "low-degree symmetric graph must take the long path")
-    val fastR = ranksAny(fast)
-    val slowR = ranksAny(PageRank.fixedPoint(g, 7, symmetric = true, forceDecimal = true))
+    val (fastR, fastLong) = ranksAndWidth(g, 7)
+    assert(fastLong, "low-degree symmetric graph must take the long path")
+    val (slowR, slowLong) = ranksAndWidth(g, 7, forceDecimal = true)
+    assert(!slowLong)
     assert(fastR == slowR)
     // hand-checked round-1 values still hold through the long path
-    val one = ranksAny(PageRank.fixedPoint(sym((1L, 2L), (2L, 3L)), 1, symmetric = true))
+    val one = ranksAndWidth(sym((1L, 2L), (2L, 3L)), 1)._1
     assert(one == Map(1L -> 575000000000L, 2L -> 1850000000000L, 3L -> 575000000000L))
   }
 
@@ -89,7 +103,7 @@ class PageRankSpec extends AnyFunSuite {
     // its blocks are reclaimed by the ContextCleaner once the frame is
     // unreachable (the frame was a temporary inside ranks()) — the
     // same lifecycle Bench relies on with its System.gc() between
-    // queries. CacheScope-drained edge caches unpersist explicitly.
+    // queries. The edge cache unpersists when the rounds end.
     val deadline = System.nanoTime() + 20e9.toLong
     def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     while (leaked.nonEmpty && System.nanoTime() < deadline) {

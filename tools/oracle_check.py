@@ -6,6 +6,8 @@ Mimics the driver: run each oracle SQL in DuckDB over the same parquet
 tables, sort columns by name, compare row count / schema / values.
 Then re-checks Verify's scan_ledger.json, when present: every query
 with a non-empty `over_budget` object is listed, followed by a count.
+Exits 0 when every query matches and none is over budget, else 1, so
+a script can gate on it.
 """
 import os, sys, json, math
 import duckdb
@@ -74,4 +76,7 @@ if os.path.exists(ledger_path):
             flagged += 1
             print(f'{name:<28} OVER-BUDGET {json.dumps(over, sort_keys=True)}')
     print(f"{flagged} over-budget quer{'y' if flagged == 1 else 'ies'} in {ledger_path}")
+else:
+    flagged = 0
 print(f'== {n_ok}/{len(oracle)} OK ==')
+sys.exit(0 if n_ok == len(oracle) and flagged == 0 else 1)
