@@ -24,7 +24,8 @@ package graft
   *    two passes cannot fuse; the model side reads fewer columns than
   *    a persist would have to materialize.
   *  - EXPLODE-RECOMPUTE: the shared subtree is a map-side explode
-  *    (token/gram stream). Measured at the 100× probe (README, q110):
+  *    (token/gram stream). Measured at the 100× probe (q110, recorded
+  *    in README at commit 06f4923):
   *    persisting the exploded stream is SLOWER than recomputing it
   *    (13.7 s vs 9.9 s) — persist pays only for shuffle/dedup
   *    subtrees, so the plan deliberately re-explodes per consumer.
@@ -130,8 +131,8 @@ object ScanBudgets {
     // consumer (cov + join-back); measured no-persist decision
     "q100_span_dedup" -> Map("documents" -> 3),
     "q104_span_strip" -> Map("documents" -> 3),
-    // bigram stream: c2/c1/vocab models + per-doc apply (the README's
-    // measured 13.7 s vs 9.9 s no-persist case)
+    // bigram stream: c2/c1/vocab models + per-doc apply (the measured
+    // 13.7 s vs 9.9 s no-persist case, see EXPLODE-RECOMPUTE above)
     "q110_bigram_logprob" -> Map("documents" -> 4),
     // per-source token totals + λ water-fill model + sampling pass
     "q112_mixture_waterfill" -> Map("documents" -> 4),

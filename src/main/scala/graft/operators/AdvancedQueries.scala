@@ -481,8 +481,9 @@ object AdvancedQueries {
     // q91 — connected components on a CHAIN-shaped graph (each
     // customer's orders linked consecutively by date): the worst case
     // for min-label propagation (rounds = chain length), run through
-    // [[ConnectedComponents.run]] — driver union-find below the
-    // bounded-collect tier, else the small-star/large-star variant
+    // [[ConnectedComponents.run]] — driver union-find while the
+    // contracted edge count is at most `MaxDriverEdges`, else the
+    // small-star/large-star variant
     // whose round count is O(log n) regardless of diameter. The
     // oracle exploits that the chains are per-customer
     // by construction, so the transitive closure collapses to a

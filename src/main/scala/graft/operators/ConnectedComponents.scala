@@ -10,11 +10,12 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType,
   * does every doc belong to", i.e. the transitive closure).
   *
   * [[run]] is the one entry point, size-adaptive in the
-  * [[DistributedRank]] dispatch pattern: a bounded pair table (the
+  * [[DistributedRank]] dispatch pattern: every execution first runs a
+  * local-contraction pre-pass; a bounded contracted pair table (the
   * dedup norm — pairs are pipeline OUTPUT, far smaller than the
-  * corpus) labels via driver union-find in one collect; everything
-  * else runs a local-contraction pre-pass and then the alternating
-  * small-star / large-star loop, whose round count is O(log n)
+  * corpus) then labels via driver union-find in one collect, and
+  * anything larger runs the alternating small-star / large-star
+  * loop, whose round count is O(log n)
   * regardless of component diameter (Kiveris et al., "Connected
   * Components in MapReduce and Beyond", SoCC'14 — public algorithm,
   * re-derived here as DataFrame plans). Min-label propagation needs
@@ -47,32 +48,22 @@ object ConnectedComponents {
     */
   val MaxDriverEdges: Long = 500000L
 
-  /** Plan-stats ceiling under which [[run]] skips the
-    * checkpoint entirely and probes with a bounded limit-collect (ONE
-    * job — the sf0.1 q91 shape, where the checkpoint materialization
-    * was ~1/3 of the query's wall). Above it — or when pair-pipeline
-    * estimates inflate (they overshoot, never undershoot, so
-    * inflation errs toward the safe checkpoint path) — the edge list
-    * is checkpointed first and the probe cost is never paid twice.
-    */
-  val SmallEdgeStatsBytes: Long = 64L << 20
-
   /** Size-adaptive connected components: `edges` must have two
     * integral columns naming node ids; returns (node, label) for every
     * node incident to an edge, label = min node id reachable, in the
     * endpoints' wider id type. The id type is checked while the frame
     * is built; the closure runs when the frame executes
     * ([[graft.plans.Deferred]]), over the executed edge rows.
-    * Dispatch is stats-first: an edge plan the optimizer already
-    * proves under [[SmallEdgeStatsBytes]] is limit-collected directly
-    * (one job, no checkpoint); otherwise the list is materialized once
-    * through the local-contraction pre-pass (checkpoint + observed
-    * exact count, one scan) and dispatched on the contracted count.
-    * Below [[MaxDriverEdges]] the closure runs as driver-side
-    * union-find over the collected pair table (a dedup graph's edge
-    * set is pair-pipeline output — orders of magnitude smaller than
-    * the corpus — so at certification scales this is the common
-    * case), above it as the O(log n)-round alternating-star loop. Both
+    * One gate, two tiers: each execution runs the caller's pair plan
+    * straight into the local-contraction pre-pass and materializes the
+    * per-partition star forest once ([[TightLoop.materialize]]: one
+    * job, one computation of every input row, the exact contracted
+    * count observed on that same job). Dispatch is on that CONTRACTED
+    * count (≤ min(edges, nodes)): at most [[MaxDriverEdges]] runs
+    * driver-side union-find over the collected checkpoint (the driver
+    * collects star edges the cluster already forested, so the bound
+    * stays a driver-memory bound while more graphs qualify); above it
+    * the certify-then-star loop runs over the same checkpoint. Both
     * tiers emit the IDENTICAL (node, component-min) labels in the
     * identical column types ([[ConnectedComponentsSpec]] pins equality
     * on chains, cliques, random graphs, and both sides of the bound),
@@ -81,38 +72,13 @@ object ConnectedComponents {
   def run(edges: DataFrame): DataFrame = {
     val sel = endpoints(edges)
     val idType = nodeIdType(sel)
-    // never null: both tiers reject null ids
+    // never null: the contraction pre-pass both tiers share rejects null ids
     val labels = StructType(Seq("node", "label").map(StructField(_, idType, nullable = false)))
     graft.plans.Deferred.frame(sel, labels) { sel =>
-      val statsBytes = sel.queryExecution.optimizedPlan.stats.sizeInBytes
-      val probed =
-        if (statsBytes <= SmallEdgeStatsBytes) {
-          val rows = sel.limit(MaxDriverEdges.toInt + 1).collect()
-          if (rows.length <= MaxDriverEdges) Some(unionFindRows(sel, rows, idType))
-          else None // stats under-estimated: fall through, pay one re-scan
-        } else None
-      probed.getOrElse {
-        // ONE materialization job: the caller's pair plan runs straight
-        // into the per-partition contraction (r12 fusion — the r11 form
-        // checkpointed the raw 2-column list, then read it back for a
-        // contraction + distinct round-trip). Dispatch is on the
-        // CONTRACTED count (≤ min(edges, nodes)): the driver tier
-        // collects star edges the cluster already forested, so the
-        // bound stays a driver-memory bound while more graphs qualify.
-        val (canon0, cCount) = materializeContracted(sel, idType)
-        if (cCount <= MaxDriverEdges) driverUnionFind(canon0, cCount)
-        else alternatingFrom(canon0, cCount)._1
-      }
+      val (canon0, cCount) = TightLoop.materialize(localContract(sel, idType))
+      if (cCount <= MaxDriverEdges) unionFindRows(canon0, canon0.collect(), idType)
+      else alternatingFrom(canon0, cCount)._1
     }
-  }
-
-  /** Driver tier over an already-materialized edge list: collect the
-    * (bounded) pair table and label via [[unionFindRows]].
-    */
-  private[graft] def driverUnionFind(raw: DataFrame, edgeCount: Long): DataFrame = {
-    require(edgeCount <= Int.MaxValue,
-      s"driverUnionFind: $edgeCount edges cannot index an int array")
-    unionFindRows(raw, raw.collect(), nodeIdType(raw))
   }
 
   /** The distributed tier of [[run]] whatever the edge count —
@@ -123,7 +89,7 @@ object ConnectedComponents {
     */
   private[graft] def starLoop(edges: DataFrame): (DataFrame, Int) = {
     val sel = endpoints(edges)
-    val (canon0, cCount) = materializeContracted(sel, nodeIdType(sel))
+    val (canon0, cCount) = TightLoop.materialize(localContract(sel, nodeIdType(sel)))
     alternatingFrom(canon0, cCount)
   }
 
@@ -214,8 +180,6 @@ object ConnectedComponents {
     var i = 0
     while (i < m) {
       val r = collected(i)
-      require(!r.isNullAt(0) && !r.isNullAt(1),
-        "ConnectedComponents: null node id — edge endpoints must be non-null")
       as(i) = r.get(0).asInstanceOf[Number].longValue()
       bs(i) = r.get(1).asInstanceOf[Number].longValue()
       i += 1
@@ -263,27 +227,6 @@ object ConnectedComponents {
         col("label").cast(nodeType).as("label"))
   }
 
-  /** Materialize the caller's pair plan STRAIGHT INTO the local-
-    * contraction pre-pass — one job, one scan of the (possibly
-    * expensive) pair pipeline, and the checkpoint holds the
-    * per-partition star forest instead of the raw list (r12: the r11
-    * flow checkpointed raw, then paid a second pass + a distinct
-    * exchange to contract it). The contracted count (≤ min(edges,
-    * nodes), observed free on the materialization) is the dispatch
-    * and loop-sizing cardinality. Contraction preserves connectivity
-    * exactly (a spanning forest of each partition's edge subset keeps
-    * the union's components) and self-loop-only nodes survive as
-    * explicit (x, x) marker rows (see [[partitionForest]]), so no
-    * raw-list consumer remains.
-    */
-  private def materializeContracted(sel: DataFrame, nodeType: DataType): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val canon0 = localContract(sel, nodeType)
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
-    (canon0, obs.get("n").asInstanceOf[Long])
-  }
-
   /** Local-contraction pre-pass (r11): per-partition union-find over
     * the edges each task already holds, emitting that partition's
     * spanning forest as (node, partition-local min-root) star edges —
@@ -293,7 +236,10 @@ object ConnectedComponents {
     * arrive co-partitioned by their natural key (q91's per-customer
     * chains ride the orders window's custkey hash) and degrades to
     * the uncontracted round count — never worse — when edges are
-    * scattered. This is the per-partition imperative tier
+    * scattered. Contraction preserves connectivity exactly (a
+    * spanning forest of each partition's edge subset keeps the
+    * union's components). A null id fails the job here, for both
+    * tiers. This is the per-partition imperative tier
     * mapPartitions exists for: the same local-contraction step the
     * MapReduce-CC literature runs before alternation (Kiveris et al.
     * §6 "optimizations").
@@ -301,7 +247,9 @@ object ConnectedComponents {
   private def localContract(e: DataFrame, nodeType: DataType): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    e.select(col("a").cast(LongType).as("a"), col("b").cast(LongType).as("b"))
+    def id(c: String) = coalesce(col(c).cast(LongType),
+      raise_error(lit("ConnectedComponents: null node id — edge endpoints must be non-null")))
+    e.select(id("a").as("a"), id("b").as("b"))
       .as[(Long, Long)]
       .mapPartitions(partitionForest _)
       .toDF("a", "b")
@@ -457,8 +405,7 @@ object ConnectedComponents {
     // hence 2× the checkpointed count.
     // The body's `canon0` is the edge checkpoint rebound into the loop
     // session; `e` comes back bound to the caller's.
-    val loopState = if (certified) (canon0, 0) else TightLoop.scoped(
-      canon0, TightLoop.partsForRows(canon0.sparkSession, 2L * cCount)) { canon0 =>
+    val loopState = if (certified) (canon0, 0) else TightLoop.scoped(canon0, 2L * cCount) { canon0 =>
       // the distinct canonicalizes duplicate edges (cross-partition
       // duplicate forest edges) and lays the loop input out at the
       // TightLoop partition count

@@ -63,7 +63,7 @@ object DistributedRank {
     * at most this take each adaptive kernel's plain window tier, larger
     * ones its distributed tier. Reading plan statistics runs no job.
     * Sized from the global sweeps of RankKernelScale (a scale main last
-    * present at commit fba91a5; its table is in README): row_number
+    * present at commit fba91a5; README's DistributedRank section): row_number
     * 1M rows window 1.1 s vs kernel 1.9 s, 2M 2.3 vs 2.0, 5M 7.5 vs
     * 3.3; running sum 1M 2.6 vs 5.3, 2M 3.0 vs 5.0, 5M 6.3 vs 5.4. At
     * the measured ~18 B/row fact width 32 MB is ≈ 1.8M rows, at or

@@ -22,11 +22,18 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   * holds 10^38 — no realizable graph reaches it.
   *
   * Per round: one equi-join of ranks onto the degree-carrying edge
-  * table (co-partitioned on node — the edges persist pre-hashed with
-  * their out-degree folded onto each row), one partial-aggregated sum
-  * onto destinations — a single hash-partitioned shuffle, nothing
-  * node-count-sized ever broadcast by construction (AQE may still
-  * choose to at toy scale), so round cost is linear in |E|.
+  * table (the edges persist pre-hashed on node with their out-degree
+  * folded onto each row), one partial-aggregated sum onto
+  * destinations, so round cost is linear in |E|. How the join runs
+  * depends on scale, because the rounds plan statically (AQE off,
+  * [[TightLoop]]) and the static planner broadcasts any side
+  * estimated under `spark.sql.autoBroadcastJoinThreshold` (10 MB by
+  * default). Captured q101 round plans: at sf0.001 and sf0.1 the join
+  * is a BroadcastHashJoin that broadcasts the previous round's rank
+  * frame — node-count-sized, estimated small off the materialized
+  * edge cache — every round; at 10× it is a SortMergeJoin with no
+  * exchange on either side, the ranks coming out of the previous
+  * round's hash split and the edges out of the cache's.
   *
   * Contract: `edges(a, b)` is the directed edge list; nodes without
   * in-edges drop out after round 1 (feed a symmetric edge list for
@@ -91,24 +98,23 @@ object PageRank {
     val sel = edges.select(col("a"), col("b"))
     val ranks = new StructType().add("node", sel.schema("b").dataType).add("v", dec)
     graft.plans.Deferred.frame(sel, ranks) { sel =>
-      // ONE eager localCheckpoint of the input before the loop scope:
-      // the count and the rounds read its blocks, so the input's rows
-      // are computed once, and the EXACT row count sizes the loop
-      // partitions (partsForRows) instead of a byte estimate.
-      val cp = sel.localCheckpoint()
-      val parts = TightLoop.partsForRows(cp.sparkSession, cp.count())
+      // ONE job materializes the input before the loop scope: the
+      // rounds read the checkpoint's blocks, so the input's rows are
+      // computed once, and the EXACT row count observed on that job
+      // sizes the loop partitions instead of a byte estimate.
+      val (cp, rows) = TightLoop.materialize(sel)
       // The whole iteration executes HERE, inside a TightLoop scope (AQE
       // off + data-sized partitions), as ONE job ending in an eager
       // localCheckpoint: under AQE the caller's action ran every
       // exchange as its own scheduling round-trip (probe-measured 19
-      // jobs for 5 rounds — more wall in stage latency than in compute),
-      // and AQE's runtime broadcast conversion is unwanted here anyway
-      // (nothing node-count-sized may broadcast). Inside the scope the
-      // round join is exchange-free by construction — v comes out of the
-      // previous round's groupBy hash-split exactly like the cached edge
-      // layout — so the per-round cost is the single destination-sum
-      // exchange.
-      TightLoop.scoped(cp, parts) { cp =>
+      // jobs for 5 rounds — more wall in stage latency than in compute).
+      // Inside the scope a shuffled round join is exchange-free by
+      // construction — v comes out of the previous round's groupBy
+      // hash-split exactly like the cached edge layout — so the
+      // per-round cost is the single destination-sum exchange; where the
+      // rank frame is estimated under the broadcast threshold (sf0.1 and
+      // below) the static planner broadcasts it instead (see above).
+      TightLoop.scoped(cp, rows) { cp =>
         val w = org.apache.spark.sql.expressions.Window.partitionBy(col("a"))
         val e = cp.repartition(col("a")).withColumn("d", count(lit(1)).over(w)).persist()
         // the edge cache lives for the rounds only: the result is an

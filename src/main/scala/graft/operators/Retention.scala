@@ -7,8 +7,9 @@ import org.apache.spark.sql.types.IntegerType
 
 /** Cluster retention: collapse near-dup PAIRS into a kept corpus.
   * Components via the size-adaptive closure
-  * ([[ConnectedComponents.run]] — driver union-find under the
-  * bounded-collect tier, alternating stars above it), then each
+  * ([[ConnectedComponents.run]] — driver union-find while the
+  * contracted edge count is at most `MaxDriverEdges`, alternating
+  * stars above it), then each
   * cluster keeps exactly one
   * member — the best `scoreCol` (id tiebreak); docs in no pair keep
   * themselves.

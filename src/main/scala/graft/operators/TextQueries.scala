@@ -544,9 +544,9 @@ object TextQueries {
     // ------------------------------------------------------------------
     // q69 — dedup cluster assignment: connected components over the
     // q29 near-dup pair graph (size-adaptive — see
-    // [[ConnectedComponents.run]]; a pair table this side of
-    // the bounded-collect tier labels via driver union-find in one
-    // pass). Pairs say "a ~ b"; retention policy
+    // [[ConnectedComponents.run]]; a pair table that contracts to at
+    // most `MaxDriverEdges` edges labels via driver union-find in one
+    // collect). Pairs say "a ~ b"; retention policy
     // needs the transitive closure. The oracle computes the same
     // closure with a recursive CTE (min reachable id per node).
     QueryDef.sql(

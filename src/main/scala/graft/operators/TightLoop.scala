@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graftbridge.SparkBridge
 
 /** Execution scope for driver-driven iterative loops (components,
@@ -19,14 +20,15 @@ import org.apache.spark.sql.graftbridge.SparkBridge
   * exactly what this scope sets, replicating AQE's coalescing
   * statically from the loop input's row count.
   *
-  * At scale nothing is lost: [[partsForRows]] grows partitions
-  * linearly with that count and caps at the session's configured
-  * shuffle parallelism (the cluster-sized setting), and the AQE
-  * features that matter to these loops' plans do not apply inside a
-  * round anyway — window/aggregate exchanges get no skew mitigation
-  * from AQE (OptimizeSkewedJoin only rewrites joins), and the
-  * co-partitioned round joins must NOT be broadcast-converted (that
-  * is the q101 "nothing node-count-sized broadcast" discipline).
+  * At scale nothing is lost: [[scoped]] grows partitions linearly
+  * with that count and caps them at the session's configured shuffle
+  * parallelism (the cluster-sized setting), and window/aggregate
+  * exchanges get no skew mitigation from AQE anyway (OptimizeSkewedJoin
+  * only rewrites joins). Joins inside a round are planned statically,
+  * so a side estimated under `spark.sql.autoBroadcastJoinThreshold`
+  * is broadcast: q101's PageRank rounds broadcast the rank frame at
+  * sf0.001 and sf0.1 and run exchange-free sort-merge joins at 10×
+  * (see [[PageRank]]).
   *
   * Contract: the scope is the loop's own session. [[scoped]] runs
   * the body on a clone of the input frame's session (the clone shares
@@ -37,42 +39,60 @@ import org.apache.spark.sql.graftbridge.SparkBridge
   * planned concurrently on other threads keep their own settings, and
   * a loop inside a loop is a clone of a clone. The body must derive
   * every frame it plans from the input it is handed: a frame of the
-  * caller's session would plan with AQE on.
+  * caller's session would plan with AQE on. The clone is made here,
+  * by the tiers that loop, and not per kernel execution: a fresh
+  * clone plans its first query 40–90 ms slower than a warm session,
+  * and cloning on every execution made q91's driver tier slower
+  * (sf0.1, 4 cores: 1,548 → 1,795 ms median, slower in 6 of 7
+  * alternating pairs).
   */
 object TightLoop {
 
-  /** Partition count for the loop's exchanges from an EXACT row
-    * count (the loop input is materialized anyway and a count is
-    * free — an observe on an existing checkpoint, or a cache-warming
-    * count), capped at the session's shuffle parallelism. Optimizer
-    * byte estimates through explode/join-heavy pair pipelines inflate
-    * by orders of magnitude (q77's LSH pair plan estimated 41 GB for
-    * a ~20k-row edge list, driving the loop to the slow
-    * many-tiny-partitions configuration). 120k edge rows per
-    * partition measured best on q91 (270k-row symmetric chain set:
-    * 1 part 4.7 s, 3 parts 2.8 s — enough parallelism to overlap the
-    * round's sorts while tasks stay ~20-40 ms).
+  /** Loop-input rows per partition: 120k measured best on q91
+    * (270k-row symmetric chain set: 1 part 4.7 s, 3 parts 2.8 s —
+    * enough parallelism to overlap the round's sorts while tasks stay
+    * ~20-40 ms).
     */
-  def partsForRows(
-      spark: SparkSession,
-      rows: Long,
-      rowsPerPartition: Long = 120000L): Int = {
+  private[operators] val RowsPerPartition = 120000L
+
+  /** The one input protocol of both graph loops: `df` materialized
+    * once as an eager local checkpoint, with its EXACT row count
+    * observed on that same job. The count picks the kernel's tier and
+    * sizes [[scoped]]; every later action reads the checkpoint's
+    * blocks, so the input's rows are computed once per execution.
+    */
+  def materialize(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val cp = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    (cp, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** Partition count for the loop's exchanges from an exact row count,
+    * capped at the session's shuffle parallelism. Optimizer byte
+    * estimates through explode/join-heavy pair pipelines inflate by
+    * orders of magnitude (q77's LSH pair plan estimated 41 GB for a
+    * ~20k-row edge list, driving the loop to the slow
+    * many-tiny-partitions configuration), so the loop never sizes
+    * from them.
+    */
+  private def partsForRows(spark: SparkSession, rows: Long): Int = {
     val cap = spark.sessionState.conf.numShufflePartitions
-    ((rows + rowsPerPartition - 1) / rowsPerPartition)
+    ((rows + RowsPerPartition - 1) / RowsPerPartition)
       .min(cap.toLong).max(1L).toInt
   }
 
   /** Run `body` on `input` rebound into a clone of its session with
-    * AQE off and `parts` shuffle partitions. The frame the body returns
-    * (the loop's result, normally an eager checkpoint) is rebound to
-    * `input`'s session before it leaves the scope, so downstream
-    * plans get the caller's conf; `A` carries anything else the loop
-    * reports, such as its round count.
+    * AQE off and shuffle partitions sized from `rows`, the loop's
+    * exact input row count (see [[materialize]]). The frame the body
+    * returns (the loop's result, normally an eager checkpoint) is
+    * rebound to `input`'s session before it leaves the scope, so
+    * downstream plans get the caller's conf; `A` carries anything else
+    * the loop reports, such as its round count.
     */
-  def scoped[A](input: DataFrame, parts: Int)(body: DataFrame => (DataFrame, A)): (DataFrame, A) = {
+  def scoped[A](input: DataFrame, rows: Long)(body: DataFrame => (DataFrame, A)): (DataFrame, A) = {
     val loop = SparkBridge.cloneSession(input.sparkSession)
     loop.conf.set("spark.sql.adaptive.enabled", "false")
-    loop.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    loop.conf.set("spark.sql.shuffle.partitions", partsForRows(input.sparkSession, rows).toString)
     val (out, extra) = body(SparkBridge.ofPlan(loop, SparkBridge.logicalPlan(input)))
     (SparkBridge.ofPlan(input.sparkSession, SparkBridge.logicalPlan(out)), extra)
   }

@@ -30,10 +30,13 @@ final case class Deferred(
 }
 
 /** Runs the kernel over the child's executed rows, wrapped as a frame
-  * that reports the child's logical statistics: every size gate in the
-  * kernel decides as it would over the child's plan, and the kernel
-  * never re-plans the child. The kernel's rows are returned
-  * positionally under the declared output.
+  * that reports the child's logical statistics, so the kernel never
+  * re-plans the child. No kernel gate reads those statistics (both
+  * graph kernels dispatch on an exact count observed while they
+  * materialize their input, see [[graft.operators.TightLoop.materialize]]),
+  * but plans the kernel builds over the rows are costed from them, so
+  * they still steer the kernel's own join planning. The kernel's rows
+  * are returned positionally under the declared output.
   */
 final case class DeferredExec(
     child: SparkPlan,

@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
   *   - session cloning and binding a logical plan to a session, which
   *     give a query its own conf and listeners while it shares the
   *     SparkContext, the cache and the registered functions
-  *     ([[graft.operators.TightLoop]], [[graft.plans.ScanLedger]]);
+  *     ([[graft.operators.TightLoop.scoped]]'s loop session,
+  *     [[graft.plans.ScanLedger]]);
   *   - a frame over an executed child's RDD and a frame's rows as an
   *     RDD ([[graft.plans.Deferred]]);
   *   - running a body on a pool thread with the caller's active

@@ -297,7 +297,7 @@ class PlanQualitySpec extends AnyFunSuite {
   test("q101: PageRank final plan — co-partitioned joins only, no cartesian, no single-partition exchange") {
     val ps = executedPlans("q101_pagerank_orders")
     // the rounds are the plans that join (ranks onto the edge table);
-    // the edge count and the max-degree probe are one-row aggregates
+    // the max-degree probe is a one-row aggregate
     val rounds = ps.filter(_.contains("Join"))
     assert(rounds.nonEmpty, s"no round plan among:\n${ps.mkString("\n").take(3000)}")
     ps.foreach { p =>

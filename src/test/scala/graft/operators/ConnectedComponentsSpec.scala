@@ -136,22 +136,32 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val n = 512L
     val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
     val want = (1L to n).map(_ -> 1L).toMap
-    // force each tier regardless of the bound: the driver tier
-    // directly, the distributed tier via starLoop
-    val (raw, cnt) = {
-      val obs = org.apache.spark.sql.Observation()
-      val r = edges.select($"a", $"b")
-        .observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .localCheckpoint()
-      (r, obs.get("n").asInstanceOf[Long])
-    }
-    val viaDriver = ConnectedComponents.driverUnionFind(raw, cnt)
+    // 511 edges ≤ MaxDriverEdges → run takes the driver tier; starLoop
+    // forces the distributed tier
+    val viaDriver = ConnectedComponents.run(edges)
       .as[(Long, Long)].collect().toMap
     val viaStar = ConnectedComponents.starLoop(edges)._1
       .as[(Long, Long)].collect().toMap
     assert(viaDriver == want)
     assert(viaStar == want)
+  }
+
+  test("an input of more than MaxDriverEdges rows is computed once per execution") {
+    // a small plan estimate (~8 MB over spark.range) with more rows
+    // than MaxDriverEdges, contracting to a handful of edges: the
+    // contraction job is the only pass over the input
+    val rows = ConnectedComponents.MaxDriverEdges + 1
+    val computed = spark.sparkContext.longAccumulator("cc-input-rows")
+    val counted = org.apache.spark.sql.functions.udf { (_: Long) =>
+      computed.add(1); 1L
+    }.asNondeterministic()
+    val edges = spark.range(rows)
+      .select(counted($"id").as("a"), org.apache.spark.sql.functions.lit(2L).as("b"))
+    val labels = ConnectedComponents.run(edges)
+    assert(labels.as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 1L))
+    assert(computed.value == rows, s"${computed.value} input rows computed for $rows")
+    assert(labels.count() == 2L)
+    assert(computed.value == 2 * rows, s"${computed.value} input rows computed over two executions")
   }
 
   test("non-integral ids are rejected with their type named") {
