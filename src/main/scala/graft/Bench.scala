@@ -2,7 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.SparkBridge
 
 /** Shared timing kernel for [[Bench]] (the driver's one-JSON-line
   * contract) and [[BenchServe]] (the interleaved engine/DuckDB pair
@@ -96,49 +98,6 @@ private[graft] object BenchKernel {
     try SparkEntry.queries(name)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     finally CacheScope.drain()
-
-  /** Per-query IO accounting (r11 regime fields): shuffle bytes
-    * written + spill across the tasks of a timing window. Registered
-    * once per session; [[timeOnce]] snapshots the monotone totals
-    * before and after each timed run. `unreported` counts task-end
-    * events that arrived without metrics: when it moves inside a
-    * window, that window's input/CPU totals are incomplete.
-    */
-  private final class TaskIoListener extends org.apache.spark.scheduler.SparkListener {
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
-    val spill = new java.util.concurrent.atomic.AtomicLong()
-    // r13 suite-tax attribution triple: source bytes read, task wall,
-    // task CPU. In-suite inflation with flat task_cpu and inflated
-    // (run − cpu) points at IO/scheduling; inflated cpu at JIT/GC/
-    // allocation state — the discriminator three rounds of "suite
-    // state tax" labels lacked.
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong()
-    val taskRunMs = new java.util.concurrent.atomic.AtomicLong()
-    val taskCpuMs = new java.util.concurrent.atomic.AtomicLong()
-    val unreported = new java.util.concurrent.atomic.AtomicLong()
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m == null) unreported.incrementAndGet(): Unit
-      else {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-        bytesRead.addAndGet(m.inputMetrics.bytesRead)
-        taskRunMs.addAndGet(m.executorRunTime)
-        taskCpuMs.addAndGet(m.executorCpuTime / 1000000L): Unit
-      }
-    }
-  }
-  private val ioListener = new TaskIoListener
-  // keyed to the CONTEXT, not a one-shot boolean: a second session in
-  // the same JVM (tools, specs) must re-register on its own bus or
-  // every regime row would silently read zero deltas
-  private val ioContext =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.SparkContext](null)
-  private def ensureIoListener(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    if (ioContext.getAndSet(sc) ne sc) sc.addSparkListener(ioListener)
-  }
 
   /** Suite-level regime accumulators — aggregated into the bench
     * line's `regime_all_runs` object so the committed artifact records
@@ -243,11 +202,11 @@ private[graft] object BenchKernel {
     val sc = spark.sparkContext
     val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
     var prev = Long.MaxValue
-    var bytes = org.apache.spark.sql.graftbridge.SparkBridge.diskUsage(sc)._2
+    var bytes = SparkBridge.diskUsage(sc)._2
     while (bytes > (1L << 30) && bytes < prev && System.nanoTime() < deadline) {
       prev = bytes
       Thread.sleep(500)
-      bytes = org.apache.spark.sql.graftbridge.SparkBridge.diskUsage(sc)._2
+      bytes = SparkBridge.diskUsage(sc)._2
     }
   }
 
@@ -255,8 +214,9 @@ private[graft] object BenchKernel {
     * time (r15, verdict item 3): enough for [[stormSignature]] to
     * decide in-process whether a PAIR of timings hides a storm even
     * when their wall clocks agree. `taskCpuMs` and `inputMb` read −1
-    * when the window's IO accounting went unreported (a task-end
-    * event without metrics, or a listener-bus flush that timed out).
+    * when the window's IO accounting went unreported (a failed or
+    * killed task in the window, or a listener-bus flush that timed
+    * out).
     */
   final case class Timing(
       sec: Double, taskCpuMs: Long, inputMb: Long,
@@ -313,6 +273,11 @@ private[graft] object BenchKernel {
       totals: RegimeTotals = null): Double =
     timeOnceDetail(spark, sfDir, name, totals).sec
 
+  /** Flushes the listener bus; false when the flush timed out. */
+  private def flush(sc: SparkContext): Boolean =
+    try { SparkBridge.waitUntilEmpty(sc); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
+
   /** One timed execution with the full between-timing hygiene;
     * sec = −1.0 on failure. Every timing appends one regime row
     * (shuffle write, spill, process sys-time share, host iowait share,
@@ -324,7 +289,7 @@ private[graft] object BenchKernel {
       sfDir: String,
       name: String,
       totals: RegimeTotals = null): Timing = {
-    ensureIoListener(spark)
+    val sc = spark.sparkContext
     // queries that persist() intermediates (q53 clusters/bandRows)
     // register them in the plan-canonicalized CacheManager — without
     // this the repeat run reads round-1 caches and times nothing
@@ -338,6 +303,18 @@ private[graft] object BenchKernel {
     // the timed window (no-op when the MaxHeapFreeRatio pin held)
     HeapPin.regrow()
     settleScratch(spark)
+    // per-query IO accounting (r11/r13 regime fields): shuffle write,
+    // spill, source bytes read, task wall and task CPU of the window's
+    // tasks, as Spark's status store sums them per stage. In-suite
+    // inflation with flat task_cpu and inflated (run − cpu) points at
+    // IO/scheduling; inflated cpu at JIT/GC/allocation state. The
+    // listener bus is async: flush it on both sides of the window so
+    // every earlier stage sits under the watermark and every stage of
+    // this window is complete in the store. A flush that times out, or
+    // a failed or killed task in the window, leaves the totals
+    // incomplete, so the timing goes on with input/CPU unreported.
+    val flushed0 = flush(sc)
+    val mark = SparkBridge.stageTotals(sc, -1).lastStageId
     val cpu0 = cpuTimes
     val gc0 = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
@@ -350,23 +327,12 @@ private[graft] object BenchKernel {
     val jit0 = Option(java.lang.management.ManagementFactory.getCompilationMXBean)
       .filter(_.isCompilationTimeMonitoringSupported).map(_.getTotalCompilationTime).getOrElse(-1L)
     val cls0 = java.lang.management.ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount
-    val sw0 = ioListener.shuffleWrite.get()
-    val sp0 = ioListener.spill.get()
-    val br0 = ioListener.bytesRead.get()
-    val tr0 = ioListener.taskRunMs.get()
-    val tc0 = ioListener.taskCpuMs.get()
-    val ur0 = ioListener.unreported.get()
     val t0 = System.nanoTime()
     val ok = try { exec(spark, sfDir, name); true } catch { case _: Throwable => false }
     val dt = (System.nanoTime() - t0) / 1e9
-    // the listener bus is async: drain it so the window's last tasks'
-    // shuffle/spill bytes land in THIS query's row, not the next one's;
-    // a timeout leaves the window's IO totals incomplete, so the
-    // timing goes on with input/CPU marked unreported
-    val flushed =
-      try { org.apache.spark.sql.graftbridge.SparkBridge.waitUntilEmpty(spark.sparkContext); true }
-      catch { case _: java.util.concurrent.TimeoutException => false }
-    val reported = flushed && ioListener.unreported.get() == ur0
+    val flushed = flushed0 && flush(sc)
+    val io = SparkBridge.stageTotals(sc, mark)
+    val reported = flushed && io.failedTasks == 0
     val cpu1 = cpuTimes
     val gc1 = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
@@ -383,8 +349,8 @@ private[graft] object BenchKernel {
     val codeCacheMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
       .asScala.filter(_.getName.startsWith("CodeHeap"))
       .map(_.getUsage.getUsed).sum / (1 << 20)
-    val swMb = (ioListener.shuffleWrite.get() - sw0) / (1 << 20)
-    val spMb = (ioListener.spill.get() - sp0) / (1 << 20)
+    val swMb = io.shuffleWriteBytes / (1 << 20)
+    val spMb = io.spillBytes / (1 << 20)
     def d(k: String): Long =
       if (cpu0(k) < 0 || cpu1(k) < 0) -1 else cpu1(k) - cpu0(k)
     val (du, ds) = (d("proc_utime_ms"), d("proc_stime_ms"))
@@ -393,9 +359,9 @@ private[graft] object BenchKernel {
     val sysShare = if (du + ds <= 0) -1.0 else ds.toDouble / (du + ds)
     val ioShare = if (dtot <= 0) -1.0 else dio.toDouble / dtot
     val stealShare = if (dtot <= 0 || dsteal < 0) -1.0 else dsteal.toDouble / dtot
-    val brMb = if (reported) (ioListener.bytesRead.get() - br0) / (1 << 20) else -1L
-    val trMs = ioListener.taskRunMs.get() - tr0
-    val tcMs = if (reported) ioListener.taskCpuMs.get() - tc0 else -1L
+    val brMb = if (reported) io.inputBytes / (1 << 20) else -1L
+    val trMs = io.runMs
+    val tcMs = if (reported) io.cpuNs / 1000000L else -1L
     regimeLine(s"""{"q":"$name","ok":$ok,"sec":${f"$dt%.3f"},""" +
       s""""shuffle_write_mb":$swMb,"spill_mb":$spMb,""" +
       f""""sys_share":$sysShare%.3f,"host_iowait_share":$ioShare%.3f,""" +

@@ -4,8 +4,8 @@ package graft
   * table per execution — the one budget, checked against the plan by
   * PlanQualitySpec's suite-wide [[graft.plans.ScanCensus]] guard (r8,
   * promoting the r7 ScanAudit sweep, a dev main last present at
-  * commit fba91a5, to CI) and against every job a query runs by
-  * ScanLedgerSpec and Verify's [[graft.plans.ScanLedger]]. Every entry
+  * commit fba91a5, to CI) and by Verify's scan ledger, which is the
+  * same census of the frame each dump writes. Every entry
   * says WHY the extra scan is the designed plan and not the q128
   * defect class (a shared shuffle subtree whose persist was dropped).
   *
@@ -73,8 +73,8 @@ object ScanBudgets {
     // dominance self-join (skyline): candidate vs challenger sides
     "q127_skyline_parts" -> Map("part" -> 2),
 
-    // size-adaptive funnel (r17): the census and the ledger resolve
-    // the one-scan fold tier, so its budget stays at 1. The staged
+    // size-adaptive funnel (r17): the census resolves the one-scan
+    // fold tier, so its budget stays at 1. The staged
     // tier (≥64 MB estimated events) pays one pruned type-filtered
     // scan per stage — view/click/purchase minima cascade, each
     // min-aggregated map-side before its |users|-sized exchange —
@@ -86,11 +86,15 @@ object ScanBudgets {
     // MODEL+APPLY class ----------------------------------------------
     // histogram boundaries derived, then rows bucketed
     "q40_price_buckets" -> Map("orders" -> 2),
-    // MODEL+APPLY with two model slivers: the per-price count table,
-    // the boundary tie blocks (pushed-IN-filter sliver), then the
-    // assignment pass — the rank-free ntile (r12); the third "scan"
-    // reads ~one tie block per boundary, never the table
-    "q46_ntile_quartile" -> Map("orders" -> 3),
+    // the global row count n (model) broadcast onto the rank pass
+    // (apply): the window-rank form under DistributedRank's
+    // WindowMaxBytes gate, which the test corpora and a 10× replica
+    // all take (orders' estimate stays under it). Above the gate the
+    // plan is ntileByCuts' one assignment scan; its per-price
+    // count-table probe and boundary tie-block read run while the
+    // query builds, so this census, which counts only the plan's
+    // scans, does not see them (NtileCutsSpec pins that path)
+    "q46_ntile_quartile" -> Map("orders" -> 2),
     // LSH band signatures (persisted, spec-pinned) + corpus text
     // rescan for the exact-verify tier and survivor output
     "q53_neardup_pipeline" -> Map("documents" -> 3),

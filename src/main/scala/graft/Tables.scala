@@ -24,12 +24,16 @@ final class Tables(spark: SparkSession, dir: String) {
   def part: DataFrame       = t("part")
   def orders: DataFrame     = t("orders")
   def lineitem: DataFrame   = t("lineitem")
-  /** The driver's `events.parquet` carries TIMESTAMP(NANOS), which
-    * Spark 4 rejects outright; read nanos as long and rebuild a micros
-    * TimestampType (integer `div` keeps it exact — the data is
-    * micro-precision). Files already written with micro timestamps
-    * (e.g. re-exported snapshots) come back as TimestampType and pass
-    * through untouched — the branch keys off the actual read schema.
+  /** `events.ts` as a micros TimestampType, whichever parquet
+    * timestamp the file stores; the branch keys off the actual read
+    * schema. The test corpora (sf0.001, sf0.01 and sf0.1, see
+    * TESTDATA.md) and `tools/make_sfbig.py`'s replicas store INT64
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads as
+    * TimestampNTZType: the NTZ branch. A TIMESTAMP(NANOS) file, which
+    * Spark 4 rejects outright, is read as long under `nanosAsLong`
+    * and rebuilt as micros (integer `div` keeps it exact for
+    * micro-precision data); a UTC-adjusted micros file comes back as
+    * TimestampType and passes through untouched.
     */
   def events: DataFrame = {
     import org.apache.spark.sql.functions._

@@ -11,13 +11,15 @@ object Verify {
     // optional comma-separated subset for local iteration (same knob
     // as Bench); the driver never sets it, so its runs stay complete
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // Job-level scan ledger per query (r9): every action a query runs
-    // — the dump write and any job its kernels start — has its file
-    // scans counted and checked against the query's scan budget.
-    // name -> (counts, over-budget subset), emitted as scan_ledger.json
-    // next to the dumps; an over-budget query WARNs here (ScanLedgerSpec
-    // is the hard gate, tools/oracle_check.py re-checks it offline) so
-    // a driver run still completes while leaving the evidence.
+    // Scan ledger per query: the plan census of the frame each dump
+    // writes ([[plans.ScanCensus]]: every file scan one execution runs,
+    // deferred kernels' inputs included; the reads q46 makes while it
+    // builds above its size gate are not, see ScanBudgets), checked
+    // against the query's scan budget. name -> (counts, over-budget
+    // subset), emitted as scan_ledger.json next to the dumps; an
+    // over-budget query WARNs here (PlanQualitySpec is the hard gate,
+    // tools/oracle_check.py re-checks it offline) so a driver run still
+    // completes while leaving the evidence.
     val ledgers = scala.collection.mutable.TreeMap[String, (Map[String, Int], Map[String, Int])]()
     SparkEntry.defs
       .filter(d => only.forall(_.contains(d.name)))
@@ -28,15 +30,14 @@ object Verify {
       // entries across all ~132 dumps — bound each query to its own
       spark.catalog.clearCache()
       try {
-        val (_, counts) = plans.ScanLedger.measure(spark) { s =>
-          d.build(s, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-        }
+        val out = d.build(spark, sfDir).coalesce(1)
+        val counts = plans.ScanCensus.tableScans(out)
+        out.write.mode("overwrite").parquet(s"$outDir/$name")
         val over = counts.filter { case (t, c) => c > d.scanBudget(t) }
         ledgers(name) = (counts, over)
         over.foreach { case (t, c) =>
           System.err.println(
-            s"[verify] $name OVER-BUDGET: $t scanned ${c}x across all jobs, budget ${d.scanBudget(t)}")
+            s"[verify] $name OVER-BUDGET: $t scanned ${c}x, budget ${d.scanBudget(t)}")
         }
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

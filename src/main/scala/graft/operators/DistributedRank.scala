@@ -446,6 +446,14 @@ object DistributedRank {
     * `df` must be exactly (keyCol: long, valueCol: double) — the q46
     * projection. NtileCutsSpec pins multiset equality against the
     * ntile window form on clean, tied, and duplicated-full-key inputs.
+    *
+    * The count-table probe and the tie-block read are driver actions
+    * that run while the caller BUILDS its frame: q46 above
+    * [[WindowMaxBytes]] is the one query that reads at build.
+    * [[graft.plans.ScanCensus]] counts only the returned plan's scans
+    * (the one assignment scan), so neither read shows in the census or
+    * in Verify's scan ledger, and PlanQualitySpec's build guard never
+    * sees them: at its sf0.001 scale q46 is under the gate.
     */
   def ntileByCuts(
       df: DataFrame,

@@ -23,52 +23,46 @@ import scala.collection.mutable
   *
   * Kernels that run when the frame runs ([[Deferred]]) read their
   * input's executed rows, so that input's scans are in this plan too.
-  * [[ScanLedger]] sums this census over every action a query runs.
+  * This census is the scan ledger `graft.Verify` writes: no query
+  * reads a file while it is built, except q46 above its size gate
+  * (`DistributedRank.ntileByCuts`, see [[graft.ScanBudgets]]), whose
+  * build-time reads it does not see.
   */
 object ScanCensus {
 
   private val TableRe = "([a-z_0-9]+)\\.parquet".r
 
   /** table name -> number of file scans one execution would run. */
-  def tableScans(df: DataFrame): Map[String, Int] =
-    tableScans(df.queryExecution.executedPlan, mutable.Set[AnyRef]())
-
-  /** Plan-level census with a CALLER-OWNED cached-relation dedup set:
-    * [[ScanLedger]] accumulates one census per driver action and a
-    * cached build plan's scan must count once per ledger scope (the
-    * cache materializes once), not once per action that reads it.
-    */
-  def tableScans(
-      root: SparkPlan,
-      seenCaches: mutable.Set[AnyRef]): Map[String, Int] = {
+  def tableScans(df: DataFrame): Map[String, Int] = {
     val hits = mutable.Buffer[String]()
-    foreachNode(root, seenCaches) {
-      case f: FileSourceScanExec =>
-        // one hit per scan node per distinct table under its roots;
-        // catalog tables (`saveAsTable` output, read through
-        // `spark.table`) have plain directory roots with no .parquet
-        // component — name those by their table identifier so they
-        // stay ledger-visible
-        val byPath = f.relation.location.rootPaths
-          .flatMap(p => TableRe.findFirstMatchIn(p.toString).map(_.group(1)))
-          .distinct
-        hits ++= (if (byPath.nonEmpty) byPath
-                  else f.tableIdentifier.map(_.table).toSeq)
+    foreachNode(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => hits ++= tablesOf(f)
       case _ => ()
     }
     hits.groupBy(identity).view.mapValues(_.size).toMap
   }
 
+  /** The distinct tables under one scan node's roots: one hit each.
+    * Catalog tables (`saveAsTable` output, read through `spark.table`)
+    * have plain directory roots with no .parquet component — they are
+    * named by their table identifier so they stay census-visible.
+    */
+  def tablesOf(f: FileSourceScanExec): Seq[String] = {
+    val byPath = f.relation.location.rootPaths
+      .flatMap(p => TableRe.findFirstMatchIn(p.toString).map(_.group(1)))
+      .distinct
+    if (byPath.nonEmpty) byPath else f.tableIdentifier.map(_.table).toSeq
+  }
+
   /** Visits every node one execution of `root` would run: descends
     * through the AQE wrapper and subquery plans, and into each
-    * distinct cached relation's build plan once (`seenCaches`
-    * remembers the ones already walked). Subqueries that compute the
-    * same plan (an inferred copy of a filter carries its subquery
-    * along) are walked once: Spark reuses a repeated subquery, so it
-    * runs once.
+    * distinct cached relation's build plan once. Subqueries that
+    * compute the same plan (an inferred copy of a filter carries its
+    * subquery along) are walked once: Spark reuses a repeated
+    * subquery, so it runs once.
     */
-  def foreachNode(root: SparkPlan, seenCaches: mutable.Set[AnyRef])(
-      visit: SparkPlan => Unit): Unit = {
+  def foreachNode(root: SparkPlan)(visit: SparkPlan => Unit): Unit = {
+    val seenCaches = mutable.Set[AnyRef]()
     val seenSubqueries = mutable.Set[SparkPlan]()
     def walk(n: SparkPlan): Unit = {
       visit(n)

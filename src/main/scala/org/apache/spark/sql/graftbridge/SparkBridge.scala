@@ -18,18 +18,19 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
   *   - Column↔Expression conversions, to expose custom Catalyst
   *     expressions (e.g. `graft.functions.Float32Dot`) as `Column`s;
   *   - session cloning and binding a logical plan to a session, which
-  *     give a query its own conf and listeners while it shares the
-  *     SparkContext, the cache and the registered functions
-  *     ([[graft.operators.TightLoop.scoped]]'s loop session,
-  *     [[graft.plans.ScanLedger]]);
+  *     give a query its own conf while it shares the SparkContext, the
+  *     cache and the registered functions
+  *     ([[graft.operators.TightLoop.scoped]]'s loop session);
   *   - a frame over an executed child's RDD and a frame's rows as an
   *     RDD ([[graft.plans.Deferred]]);
   *   - running a body on a pool thread with the caller's active
   *     session and local properties, as Spark's broadcast futures do
   *     ([[graft.flight.FlightPipeline]]'s concurrent layer writes);
-  *   - the listener-bus flush, and what is ON DISK in the
-  *     block-manager local dirs (leftover shuffle/spill files), which
-  *     `graft.BenchKernel.settleScratch` waits on between timings.
+  *   - the listener-bus flush, the per-stage task totals Spark's own
+  *     status store keeps, and what is ON DISK in the block-manager
+  *     local dirs (leftover shuffle/spill files): `graft.BenchKernel`
+  *     reads a timing window's task totals from the first two and
+  *     waits on the third between timings.
   */
 object SparkBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -83,14 +84,35 @@ object SparkBridge {
 
   /** Block until the async listener bus has delivered everything
     * posted so far; throws `TimeoutException` after `timeoutMs`.
-    * Listeners otherwise race their reader: a census read right after
-    * the last action can precede that action's
-    * `SparkListenerSQLExecutionEnd` ([[graft.plans.ScanLedger]]), and
-    * the last tasks' metrics can leak into the next query's bench
-    * regime row. Spark's own test suites use this same flush.
+    * Listeners otherwise race their reader: the status store can still
+    * lack a window's last task ends, which would then count toward the
+    * next query's bench regime row. Spark's own test suites use this
+    * same flush.
     */
   def waitUntilEmpty(sc: SparkContext, timeoutMs: Long = 10000L): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** Task totals over every attempt of the stages numbered above
+    * `after`, as Spark's `AppStatusListener` summed them per stage:
+    * shuffle bytes written, memory + disk bytes spilled, input bytes,
+    * executor run time (ms) and CPU time (ns), and failed + killed
+    * tasks. `lastStageId` is the highest stage id the store holds
+    * (`after` when it holds none above it), the watermark for the
+    * next window. Complete only once the listener bus is flushed, and
+    * only while the window's stages fit the store's retention
+    * (`spark.ui.retainedStages`, 1000 by default).
+    */
+  def stageTotals(sc: SparkContext, after: Int): StageTotals =
+    sc.statusStore.stageList(null).filter(_.stageId > after)
+      .foldLeft(StageTotals(after)) { (t, s) =>
+        StageTotals(math.max(t.lastStageId, s.stageId),
+          t.shuffleWriteBytes + s.shuffleWriteBytes,
+          t.spillBytes + s.memoryBytesSpilled + s.diskBytesSpilled,
+          t.inputBytes + s.inputBytes,
+          t.runMs + s.executorRunTime,
+          t.cpuNs + s.executorCpuTime,
+          t.failedTasks + s.numFailedTasks + s.numKilledTasks)
+      }
 
   /** (file count, total bytes) under the scratch dirs. */
   def diskUsage(sc: SparkContext): (Long, Long) = {
@@ -107,3 +129,13 @@ object SparkBridge {
     (files, bytes)
   }
 }
+
+/** [[SparkBridge.stageTotals]]' sums; see there. */
+final case class StageTotals(
+    lastStageId: Int,
+    shuffleWriteBytes: Long = 0,
+    spillBytes: Long = 0,
+    inputBytes: Long = 0,
+    runMs: Long = 0,
+    cpuNs: Long = 0,
+    failedTasks: Long = 0)

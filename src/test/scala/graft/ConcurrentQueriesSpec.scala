@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.ScanLedger
+import graft.plans.ScanCensus
 
 /** Two queries on two threads of one session: each gets the rows,
-  * the hash and the scan ledger of its serial run, and their drains
+  * the hash and the plan census of its serial run, and their drains
   * leave no scoped cache behind. q27 and q103 persist the same
   * `TextQueries.lshCandidates` plans; q101 runs its PageRank rounds in
   * a `TightLoop` scope while q55 persists its (rf, ls) aggregate beside it.
@@ -26,12 +26,15 @@ class ConcurrentQueriesSpec extends AnyFunSuite {
     (r.getLong(0), r.getDecimal(1))
   }
 
-  /** The library-caller contract under a ledger: build, one action, drain. */
+  /** The library-caller contract: build, one action, drain; with the
+    * frame's plan census.
+    */
   private def runOne(name: String): ((Long, java.math.BigDecimal), Map[String, Int]) = {
     val d = SparkEntry.defs.find(_.name == name).get
-    ScanLedger.measure(spark) { s =>
-      try fingerprint(d.build(s, dir)) finally CacheScope.drain()
-    }
+    try {
+      val df = d.build(spark, dir)
+      (fingerprint(df), ScanCensus.tableScans(df))
+    } finally CacheScope.drain()
   }
 
   private def concurrently(a: String, b: String): Unit = {
@@ -55,7 +58,7 @@ class ConcurrentQueriesSpec extends AnyFunSuite {
         case e: Throwable => fail(s"$n failed on its thread", e)
         case (fp, counts) =>
           assert(fp == serial(n)._1, s"$n: concurrent rows/hash differ from the serial run")
-          assert(counts == serial(n)._2, s"$n: concurrent scan ledger differs from the serial run")
+          assert(counts == serial(n)._2, s"$n: concurrent plan census differs from the serial run")
       }
     }
     assert(spark.sharedState.cacheManager.isEmpty,

@@ -1,10 +1,8 @@
 package graft
 
 import graft.operators.DistributedRank
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{array, col, lit}
-import org.apache.spark.sql.graftbridge.SparkBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Building a frame runs no Spark job: the rank kernels compute their
@@ -18,25 +16,8 @@ class LazyFrameSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  /** The call sites of the Spark jobs started while `build` runs. */
-  private def jobSitesWhile(build: => DataFrame): Seq[String] = {
-    val sc = spark.sparkContext
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(job: SparkListenerJobStart): Unit =
-        sites.add(job.stageInfos.map(_.name).mkString(" / "))
-    }
-    SparkBridge.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      build
-      SparkBridge.waitUntilEmpty(sc)
-    } finally sc.removeSparkListener(listener)
-    sites.toArray(Array.empty[String]).toSeq
-  }
-
   /** Spark jobs started while `build` runs. */
-  private def jobsWhile(build: => DataFrame): Int = jobSitesWhile(build).size
+  private def jobsWhile(build: => DataFrame): Int = TestSpark.jobSitesWhile(build)._2.size
 
   test("both tiers of the adaptive rank kernels and the distributed kernels build without a job") {
     import spark.implicits._
@@ -99,9 +80,9 @@ class LazyFrameSpec extends AnyFunSuite {
     val q = name.takeWhile(_ != '_')
     test(s"$q builds with no job but its tables' schema reads") {
       val sites =
-        try jobSitesWhile(SparkEntry.queries(name)(spark, dir))
+        try TestSpark.jobSitesWhile(SparkEntry.queries(name)(spark, dir))._2
         finally CacheScope.drain()
-      val others = sites.filterNot(_.startsWith("parquet at Tables.scala"))
+      val others = sites.filterNot(TestSpark.isSchemaRead)
       assert(others.isEmpty, s"$q started jobs beyond schema reads while building: $others")
     }
   }

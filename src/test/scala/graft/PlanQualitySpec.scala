@@ -284,6 +284,12 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q69: components iteration never degenerates to cartesian/nested-loop joins") {
+    // the closure reads the executed pairs, so the returned plan holds
+    // both sides of the pair self-join and no other documents scan
+    val scans = drained(plans.ScanCensus.tableScans(
+      SparkEntry.queries("q69_neardup_components")(spark, dir)))
+    assert(scans == Map("documents" -> 2),
+      s"q69 should scan documents exactly twice (the pair self-join), saw $scans")
     val ps = executedPlans("q69_neardup_components")
     // the closure's input is the pair self-join itself, not a checkpoint
     assert(ps.exists(p => p.contains("Deferred") && p.contains("Join")),
@@ -316,8 +322,8 @@ class PlanQualitySpec extends AnyFunSuite {
   test("q116: histogram is one lazy plan — one lineitem scan, no driver-local rows") {
     val d = SparkEntry.defs.find(_.name == "q116_equidepth_hist").get
     val (p, scans) = drained {
-      val plan = d.run(spark, dir).queryExecution.executedPlan
-      (plan.toString, plans.ScanCensus.tableScans(plan, scala.collection.mutable.Set[AnyRef]()))
+      val df = d.run(spark, dir)
+      (df.queryExecution.executedPlan.toString, plans.ScanCensus.tableScans(df))
     }
     // the whole histogram derives from the ≤2k−1 rank-rows one
     // rank-selection pass surfaces, laid out into buckets in the same
@@ -438,14 +444,14 @@ class PlanQualitySpec extends AnyFunSuite {
     val unpartitioned = Seq.newBuilder[String]
     val failures = SparkEntry.defs.flatMap { d =>
       val (counts, globalWindow) = drained {
-        val plan = d.run(spark, dir).queryExecution.executedPlan
+        val df = d.run(spark, dir)
         var global = false
-        plans.ScanCensus.foreachNode(plan, scala.collection.mutable.Set[AnyRef]()) {
+        plans.ScanCensus.foreachNode(df.queryExecution.executedPlan) {
           case w: org.apache.spark.sql.execution.window.WindowExec
               if w.partitionSpec.isEmpty => global = true
           case _ => ()
         }
-        (plans.ScanCensus.tableScans(plan, scala.collection.mutable.Set[AnyRef]()), global)
+        (plans.ScanCensus.tableScans(df), global)
       }
       if (globalWindow) unpartitioned += d.name
       counts.collect {
@@ -459,13 +465,23 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("no query plan contains a collect-driven loop (Exchange-only shuffles)") {
-    // structural smoke over every registered query at tiny SF: the plan
-    // tree must build lazily without driver-side actions
-    SparkEntry.queries.keys.foreach { name =>
+    // every registered query builds lazily: building it starts no Spark
+    // job but Tables' parquet schema reads (opening a table infers its
+    // schema), so every file scan it runs is in its plan, where the
+    // census above counts it. q46 reads at build only above its size
+    // gate, never at this scale (NtileCutsSpec forces that path). Each
+    // query then executes once (noop write), so a plan that builds but
+    // fails to run fails here.
+    val failures = SparkEntry.defs.flatMap { d =>
+      spark.catalog.clearCache()
       drained {
-        val df = SparkEntry.queries(name)(spark, dir)
-        assert(df.queryExecution.logical != null, name)
+        val (df, sites) = TestSpark.jobSitesWhile(d.run(spark, dir))
+        val others = sites.filterNot(TestSpark.isSchemaRead)
+        df.write.format("noop").mode("overwrite").save()
+        if (others.isEmpty) Nil
+        else Seq(s"${d.name} started jobs while building: ${others.mkString("; ")}")
       }
     }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

@@ -1,26 +1,85 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.graftbridge.SparkBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.ScanLedger
+import scala.collection.mutable
 
-/** Job-level scan-budget guard (r9): every registered query is
-  * EXECUTED (noop write) under a [[graft.plans.ScanLedger]], which
-  * sums the file scans of every driver action the query fires —
-  * including the jobs its kernels run while the frame runs — against
-  * the declared budget in [[ScanBudgets]]. No query scans while it is
-  * built, so the ledger must equal the plan census of the frame's one
-  * action: a ledger above the census is a build-time scan.
+/** Verify's scan ledger (`scan_ledger.json`) is the plan census of the
+  * frame it writes ([[plans.ScanCensus]]). That holds only if the one
+  * action of that frame runs every file scan the query fires: none at
+  * build, none in a kernel's own jobs. This spec checks it against the
+  * actions themselves: each query is EXECUTED (noop write) on a clone
+  * of the session carrying [[ActionScans]], which sums the file scans
+  * of every action run on that clone or on the loop sessions cloned
+  * from it, and the sum must equal the census and stay in budget.
   */
 class ScanLedgerSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
+  /** Sums the file scans of every action it hears, walking each
+    * executed plan the way [[plans.ScanCensus.foreachNode]] does, but
+    * with one cached-relation set across actions: a persisted subtree
+    * scans once, when first materialized, and later actions read its
+    * blocks.
+    */
+  private final class ActionScans extends QueryExecutionListener {
+    private val seenCaches = mutable.Set[AnyRef]()
+    private val acc = mutable.Map[String, Int]().withDefaultValue(0)
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      record(qe.executedPlan)
+
+    // a failed action may have scanned before it died
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      record(qe.executedPlan)
+
+    private def record(root: SparkPlan): Unit = synchronized {
+      val seenSubqueries = mutable.Set[SparkPlan]()
+      def walk(n: SparkPlan): Unit = {
+        n match {
+          case f: FileSourceScanExec =>
+            plans.ScanCensus.tablesOf(f).foreach(t => acc(t) = acc(t) + 1)
+          case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
+          case im: InMemoryTableScanExec =>
+            val cb = im.relation.cacheBuilder
+            if (seenCaches.add(cb)) walk(cb.cachedPlan)
+          case _ => ()
+        }
+        n.children.foreach(walk)
+        n.subqueries.foreach(q => if (seenSubqueries.add(q.canonicalized)) walk(q))
+      }
+      walk(root)
+    }
+
+    def counts: Map[String, Int] = synchronized { acc.toMap }
+  }
+
+  /** `body`'s result and the file scans of every action it fired. The
+    * body builds on the session it is handed, a clone of the shared one,
+    * so actions of other suites on the shared session are not counted;
+    * the bus is flushed before the counts are read.
+    */
+  private def measure[A](body: SparkSession => A): (A, Map[String, Int]) = {
+    val scans = new ActionScans
+    val session = SparkBridge.cloneSession(spark)
+    session.listenerManager.register(scans)
+    val out = body(session)
+    SparkBridge.waitUntilEmpty(spark.sparkContext)
+    (out, scans.counts)
+  }
+
   private def ledgerCounts(name: String): Map[String, Int] = {
     val d = SparkEntry.defs.find(_.name == name).get
     spark.catalog.clearCache()
-    try ScanLedger.measure(spark) { s =>
+    try measure { s =>
       d.run(s, dir).write.format("noop").mode("overwrite").save()
     }._2
     finally CacheScope.drain()
@@ -30,7 +89,7 @@ class ScanLedgerSpec extends AnyFunSuite {
     val failures = SparkEntry.defs.flatMap { d =>
       spark.catalog.clearCache()
       val (census, counts) =
-        try ScanLedger.measure(spark) { s =>
+        try measure { s =>
           val df = d.run(s, dir)
           val census = plans.ScanCensus.tableScans(df)
           df.write.format("noop").mode("overwrite").save()
@@ -39,14 +98,14 @@ class ScanLedgerSpec extends AnyFunSuite {
         finally CacheScope.drain()
       val unequal =
         if (counts == census) Nil
-        else Seq(s"${d.name}: ledger $counts across all jobs, plan census $census")
+        else Seq(s"${d.name}: $counts scanned across all actions, plan census $census")
       unequal ++ counts.collect {
         case (t, c) if c > d.scanBudget(t) =>
-          s"${d.name}: $t scanned ${c}x across all jobs, budget ${d.scanBudget(t)}"
+          s"${d.name}: $t scanned ${c}x, budget ${d.scanBudget(t)}"
       }
     }
     assert(failures.isEmpty,
-      s"build-time or over-budget scans (fix the plan or justify in ScanBudgets):\n${failures.mkString("\n")}")
+      s"scans outside the plan or over budget (fix the plan or justify in ScanBudgets):\n${failures.mkString("\n")}")
   }
 
   test("q116: ONE lineitem scan across all jobs — no pre-count, no build-time rank pass") {
@@ -64,47 +123,6 @@ class ScanLedgerSpec extends AnyFunSuite {
     val plan =
       try plans.ScanCensus.tableScans(d.run(spark, dir))
       finally CacheScope.drain()
-    assert(plan == counts, s"plan census $plan, ledger $counts")
-  }
-
-  test("the ledger dedups a cached relation across the actions that read it") {
-    import org.apache.spark.sql.functions._
-    spark.catalog.clearCache()
-    val (_, counts) = ScanLedger.measure(spark) { s =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), length(col("text")).as("len")).persist()
-      docs.count() // materializes: ONE real file scan
-      docs.agg(sum(col("len"))).collect() // cache read, no scan
-      docs.filter(col("len") > 10).count() // cache read, no scan
-      docs.unpersist(blocking = false)
-    }
-    assert(counts.getOrElse("documents", 0) == 1,
-      s"three actions over one cached scan must ledger as 1, saw $counts")
-  }
-
-  test("a ledger open around a loop counts the loop's actions") {
-    import org.apache.spark.sql.functions._
-    spark.catalog.clearCache()
-    val (rounds, counts) = ScanLedger.measure(spark) { s =>
-      val docs = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"))
-      // the loop session is a clone of the ledger's: its checkpoint
-      // job (the documents scan) must land in this ledger
-      val (out, n) = operators.TightLoop.scoped(docs, 2) { in =>
-        (in.distinct().localCheckpoint(), 1)
-      }
-      assert(out.count() > 0)
-      n
-    }
-    assert(rounds == 1)
-    assert(counts.getOrElse("documents", 0) == 1,
-      s"the loop's checkpoint scan should ledger as 1, saw $counts")
-  }
-
-  test("a ledger counts only its own session's actions") {
-    val (_, counts) = ScanLedger.measure(spark) { _ =>
-      // an action on the shared session is another query's, not this one's
-      spark.read.parquet(s"$dir/part.parquet").count()
-    }
-    assert(counts.isEmpty, s"the shared session's scan leaked into the ledger: $counts")
+    assert(plan == counts, s"plan census $plan, scans across all actions $counts")
   }
 }

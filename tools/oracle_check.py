@@ -4,10 +4,10 @@
 Usage: oracle_check.py [sf_dir] [verify_out_dir]
 Mimics the driver: run each oracle SQL in DuckDB over the same parquet
 tables, sort columns by name, compare row count / schema / values.
-Then re-checks Verify's scan_ledger.json, when present: every query
-with a non-empty `over_budget` object is listed, followed by a count.
-Exits 0 when every query matches and none is over budget, else 1, so
-a script can gate on it.
+Then re-checks Verify's scan_ledger.json: every query with a non-empty
+`over_budget` object is listed, followed by a count. Exits 0 when every
+query matches and none is over budget, else 1, so a script can gate on
+it; a missing scan_ledger.json is a failure too.
 """
 import os, sys, json, math
 import duckdb
@@ -67,9 +67,10 @@ for name in sorted(oracle):
         print(f'{name}: OK ({len(exp)} rows)')
 
 ledger_path = f'{out_dir}/scan_ledger.json'
-if os.path.exists(ledger_path):
+has_ledger = os.path.exists(ledger_path)
+flagged = 0
+if has_ledger:
     ledger = json.load(open(ledger_path))
-    flagged = 0
     for name in sorted(ledger):
         over = ledger[name].get('over_budget', {})
         if over:
@@ -77,6 +78,6 @@ if os.path.exists(ledger_path):
             print(f'{name:<28} OVER-BUDGET {json.dumps(over, sort_keys=True)}')
     print(f"{flagged} over-budget quer{'y' if flagged == 1 else 'ies'} in {ledger_path}")
 else:
-    flagged = 0
+    print(f'MISSING {ledger_path}: the scan budgets cannot be checked')
 print(f'== {n_ok}/{len(oracle)} OK ==')
-sys.exit(0 if n_ok == len(oracle) and flagged == 0 else 1)
+sys.exit(0 if n_ok == len(oracle) and has_ledger and flagged == 0 else 1)
