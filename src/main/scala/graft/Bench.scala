@@ -216,7 +216,10 @@ private[graft] object BenchKernel {
     * when their wall clocks agree. `taskCpuMs` and `inputMb` read −1
     * when the window's IO accounting went unreported (a failed or
     * killed task in the window, or a listener-bus flush that timed
-    * out).
+    * out). `inputMb` misses parquet column-chunk reads: Parquet's
+    * default vectored reads run off the task thread, unseen by Hadoop's
+    * thread-local FS statistics (sf0.1 lineitem: 11,894 B on, 463,416 B
+    * off), so parquet scans take [[stormSignature]]'s zero-input arm.
     */
   final case class Timing(
       sec: Double, taskCpuMs: Long, inputMb: Long,

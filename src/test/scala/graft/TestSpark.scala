@@ -37,9 +37,4 @@ object TestSpark {
       } finally sc.removeSparkListener(listener)
     (out, sites.toArray(Array.empty[String]).toSeq)
   }
-
-  /** Whether a job call site is `Tables`' parquet schema read, the one
-    * job opening a table starts (it reads without a declared schema).
-    */
-  def isSchemaRead(site: String): Boolean = site.startsWith("parquet at Tables.scala")
 }
